@@ -80,10 +80,11 @@ object Bench {
     // ALSO write a cpu-count-suffixed copy next to the default dump: the
     // driver's 8-cpu scaling run overwrites BENCH_OUT.json after the
     // 32-cpu run (single shared path), which emptied PERF_r17's per-query
-    // comparison — the suffixed file survives both runs. Additive only:
-    // stdout line, BENCH_OUT.json, and env override behave exactly as
-    // before (r17 verdict next-round #3).
-    if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT")) writeOut(s"BENCH_OUT_c$cpus.json")
+    // comparison — the suffixed file survives both runs, so it is the
+    // dump the summary line's queries_full names. BENCH_OUT.json and the
+    // env override behave as before.
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_OUT_c$cpus.json")
+    if (fullPath != outPath) writeOut(fullPath)
     // The driver keeps only a ~2000-char stdout tail; with 140+ queries the
     // full line overflows it and arrives front-truncated (unparseable,
     // BENCH_r{3..6}.json "parsed": null). Emit a complete compact summary
@@ -92,7 +93,7 @@ object Bench {
     val failed = results.collect { case (k, v, _, _) if v < 0 => s"\"$k\"" }
     val slow = results.filter(_._2 >= 0).sortBy(-_._2).take(10)
       .map { case (k, v, _, _) => f""""$k":${v}%.3f""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":[${failed.mkString(",")}],"slowest":$slow,"queries_full":"$outPath"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":[${failed.mkString(",")}],"slowest":$slow,"queries_full":"$fullPath"}""")
     spark.stop()
     // end-of-run temp hygiene: drop THIS process's layout/index scratch
     // (pathTag embeds the pid, so other concurrent runs' files are never
@@ -101,17 +102,22 @@ object Bench {
     cleanOwnTempDirs()
   }
 
-  /** Delete /tmp/graft_* directories stamped with this process's pid by
+  /** Delete graft_* directories under the scratch roots (/tmp,
+    * java.io.tmpdir, …) stamped with this process's pid by
     * [[SessionMemo.pathTag]]. Best-effort: a failure to clean must never
     * fail the bench. */
   private[graft] def cleanOwnTempDirs(): Unit = {
     val pidTag = s"_p${ProcessHandle.current().pid()}"
-    val tmp = java.nio.file.Paths.get("/tmp")
-    val st = try java.nio.file.Files.list(tmp) catch { case _: Throwable => return }
-    try st.forEach { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("graft_") && n.endsWith(pidTag))
-        try TempHygiene.deleteRecursively(p) catch { case _: Throwable => () }
-    } finally st.close()
+    TempHygiene.scratchRoots.foreach { root =>
+      val tmp = java.nio.file.Paths.get(root)
+      try {
+        val st = java.nio.file.Files.list(tmp)
+        try st.forEach { p =>
+          val n = p.getFileName.toString
+          if (n.startsWith("graft_") && n.endsWith(pidTag))
+            try TempHygiene.deleteRecursively(p) catch { case _: Throwable => () }
+        } finally st.close()
+      } catch { case _: Throwable => () }
+    }
   }
 }

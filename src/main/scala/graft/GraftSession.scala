@@ -42,13 +42,9 @@ object GraftSession {
     // against the tz-independent epoch-ms oracle (round-7 ADVICE).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     graft.plans.GraftExtensions.registerFunctions(spark)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.FuseCosine))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.FuseCosine
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.MetricPrefixPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.MetricPrefixPruning
+    val have = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations =
+      have ++ graft.plans.GraftExtensions.optimizerRules.filterNot(have.contains)
     spark
   }
 }

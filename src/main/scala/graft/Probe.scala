@@ -97,12 +97,14 @@ object Probe {
           val build = (t1 - t0) / 1e9
           val act = (t2 - t1) / 1e9
           val cur = best.get(key)
+          // the two minima are tracked independently: a new minimum
+          // action time must not replace a smaller build time seen earlier
+          val minBuild = cur.fold(build)(c => math.min(c._1, build))
           if (cur.forall(_._2 > act))
-            best(key) = (build, act, after._1 - before._1,
+            best(key) = (minBuild, act, after._1 - before._1,
               after._2 - before._2, after._3 - before._3,
               (after._4 - before._4) / 1e9)
-          else if (cur.exists(_._1 > build))
-            best(key) = best(key).copy(_1 = build)
+          else best(key) = cur.get.copy(_1 = minBuild)
         } catch { case e: Throwable =>
           System.err.println(s"[probe] $key FAILED: ${e.getMessage}")
         }

@@ -6,10 +6,11 @@ import java.nio.file.attribute.FileTime
 /** Scratch-space hygiene shared by every entry point.
   *
   * The engine's layout/index operators write throwaway artifacts under
-  * `/tmp/graft*` and managed bucketed tables under the warehouse, tagged
-  * with the owning pid ([[SessionMemo.pathTag]]) so concurrent JVMs never
-  * collide. The tag also means a crashed or killed process's artifacts
-  * match no later process's cleanup pass — without a reaper they
+  * `/tmp/graft*` (and `graft_*` under `java.io.tmpdir`) and managed
+  * bucketed tables under the warehouse, tagged with the owning pid
+  * ([[SessionMemo.pathTag]]) so concurrent JVMs never collide. The tag
+  * also means a crashed or killed process's artifacts match no later
+  * process's cleanup pass — without a reaper they
   * accumulate without bound (the r11 driver-bench stall was diagnosed as
   * exactly this disk pressure; round 13 found 1,991 orphan dirs / 5.6 GB
   * in /tmp and 64 stale warehouse tables from 12 rounds of runs).
@@ -89,6 +90,12 @@ object TempHygiene {
     n
   }
 
+  /** Where the engine's `graft_*` scratch lands: `/tmp`, `/dev/shm` and
+    * `java.io.tmpdir` (index layouts), without duplicates. */
+  def scratchRoots: Seq[String] =
+    (Seq("/tmp", "/dev/shm") :+ System.getProperty("java.io.tmpdir"))
+      .map(d => Paths.get(d).toAbsolutePath.normalize.toString).distinct
+
   @volatile private var swept = false
 
   /** Reap orphan scratch artifacts left by processes that no longer
@@ -99,7 +106,7 @@ object TempHygiene {
     if (swept) return
     swept = true
     try {
-      val nTmp = Seq("/tmp", "/dev/shm").map(d =>
+      val nTmp = scratchRoots.map(d =>
         sweepDir(Paths.get(d), Seq("graft_", "graft-"),
           name => name.startsWith("graft_pair_store"))).sum
       // stale managed bucketed tables: the catalog of the process that

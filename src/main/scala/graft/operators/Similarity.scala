@@ -1364,19 +1364,6 @@ object Similarity {
         (col("cell_n").cast("double") * k / col("n_vectors")).as("imbalance"))
   }
 
-  /** Persistent metric-index search end-to-end (A14 + the README story as
-    * ONE oracle-checked path): the corpus's portable SimHash fingerprints
-    * are written hive-partitioned by their 8-bit prefix (write-once), and
-    * `hash @ probe ≤ 12` is answered through the IN-list PARTITION prune
-    * (every partition within prefix-distance 12 — a lower bound of the
-    * full distance, so the prune is exact) plus the codegen hamming64
-    * verify on surviving rows. The oracle brute-forces the same
-    * threshold over the replayed portable hash in DuckDB — proving the
-    * pruned scan loses nothing. The probe is a 1-row driver scalar (the
-    * bounded-collect pattern the PQ sidecars use). At 100 TB: 12-16
-    * prefix bits, the layout pass amortizes across every subsequent
-    * threshold/k-NN query — the reference's emtree trade
-    * (src/storage/index.rs). */
   /** Write-once simhash index layout + probe hash, shared by
     * q_metric_index AND q_metric_transparent (r17 optimization): both
     * keys index the SAME relation at the same bits, so per-query (and
@@ -1384,8 +1371,11 @@ object Similarity {
     * bucketedJoin write-once doctrine applies verbatim (an index is an
     * amortized artifact; the stress harness evicts the memo so scale
     * receipts still price the build). The probe is a 1-row scalar of the
-    * same corpus scan, memoized with the layout. */
-  private def metricLayoutAndProbe(s: SparkSession, d: String): (String, Option[Long]) =
+    * same corpus scan, memoized with the layout, and the layout relation
+    * is resolved once here, so later queries skip partition discovery and
+    * schema inference. None when the corpus has no probe row (incl. the
+    * empty corpus, whose layout has no readable footer). */
+  private def metricLayoutAndProbe(s: SparkSession, d: String): Option[(DataFrame, Long)] =
     graft.SessionMemo.of(s, d, "metric_index_layout") {
       val hashed = Tables.documents(s, d).select(col("doc_id"),
         call_function("simhash64", split(col("text"), " ")).as("h"))
@@ -1396,30 +1386,40 @@ object Similarity {
       // OWN dir; the losing entry is an orphaned pid-tagged temp dir the
       // end-of-run sweep deletes (the nanoTime lands BEFORE pathTag so
       // the dir still ends with _p<pid> for the liveness reaper).
-      val path = s"/tmp/graft_metric_index_${System.nanoTime()}_" +
-        graft.SessionMemo.pathTag(d)
+      val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+        s"graft_metric_index_${System.nanoTime()}_" +
+          graft.SessionMemo.pathTag(d)).toString
       graft.sources.MetricIndex.writeIndexed(hashed, path, "h", bits = 6)
       val probeRow = hashed.filter(col("doc_id") === 0)
         .select(col("h")).limit(1).collect()
-      (path, probeRow.headOption.map(_.getLong(0)))
+      probeRow.headOption.map(r => (s.read.parquet(path), r.getLong(0)))
     }
 
-  private def metricIndexSearch(s: SparkSession, d: String): DataFrame = {
-    val (path, probeOpt) = metricLayoutAndProbe(s, d)
-    if (probeOpt.isEmpty)
-      // empty corpus → empty result with the query's schema (no probe to
-      // search for, and the empty layout has no readable footer)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", LongType, nullable = false),
-          StructField("dist", IntegerType, nullable = false))))
-    else {
-      val probe = probeOpt.get
-      graft.sources.MetricIndex.thresholdQuery(s, path, "h", probe,
-          maxDist = 2, bits = 6)
+  /** Empty result with the metric keys' schema (no probe to search for). */
+  private def noMetricHits(s: SparkSession): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("doc_id", LongType, nullable = false),
+        StructField("dist", IntegerType, nullable = false))))
+
+  /** Persistent metric-index search end-to-end (A14 + the README story as
+    * ONE oracle-checked path): the corpus's portable SimHash fingerprints
+    * are written hive-partitioned by their 6-bit prefix (write-once), and
+    * `hash @ probe ≤ 2` is answered through the IN-list PARTITION prune
+    * (every partition within prefix-distance 2 — a lower bound of the
+    * full distance, so the prune is exact) plus the codegen hamming64
+    * verify on surviving rows. The oracle brute-forces the same
+    * threshold over the replayed portable hash in DuckDB — proving the
+    * pruned scan loses nothing. The probe is a 1-row collected scalar (the
+    * bounded-collect pattern the PQ sidecars use). At 100 TB: 12-16
+    * prefix bits, the layout pass amortizes across every subsequent
+    * threshold/k-NN query — the reference's emtree trade
+    * (src/storage/index.rs). */
+  private def metricIndexSearch(s: SparkSession, d: String): DataFrame =
+    metricLayoutAndProbe(s, d).fold(noMetricHits(s)) { case (layout, probe) =>
+      graft.sources.MetricIndex.thresholdQuery(layout, "h", probe, maxDist = 2)
         .select(col("doc_id"),
           call_function("hamming64", col("h"), lit(probe)).cast("int").as("dist"))
     }
-  }
 
   /** The TRANSPARENT metric-index path (r9): the same layout as
     * q_metric_index, but queried with NO index API — a bare
@@ -1430,20 +1430,13 @@ object Similarity {
     * thresholdQuery — proven by the shared brute-force oracle. This is
     * the engine-native form of the reference's index: the USER writes the
     * predicate; the optimizer finds the index. */
-  private def metricTransparent(s: SparkSession, d: String): DataFrame = {
-    val (path, probeOpt) = metricLayoutAndProbe(s, d)
-    if (probeOpt.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", LongType, nullable = false),
-          StructField("dist", IntegerType, nullable = false))))
-    else {
-      val probe = probeOpt.get
-      s.read.parquet(path)
+  private def metricTransparent(s: SparkSession, d: String): DataFrame =
+    metricLayoutAndProbe(s, d).fold(noMetricHits(s)) { case (layout, probe) =>
+      layout
         .filter(call_function("hamming64", col("h"), lit(probe)) <= 2)
         .select(col("doc_id"),
           call_function("hamming64", col("h"), lit(probe)).cast("int").as("dist"))
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_metric_transparent" -> metricTransparent _,

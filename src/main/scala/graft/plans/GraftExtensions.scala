@@ -21,12 +21,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.definitions.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => FuseCosine)
-    ext.injectOptimizerRule(_ => MetricPrefixPruning)
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
   }
 }
 
 object GraftExtensions {
+  /** graft's Catalyst rewrites, in the order they are installed. */
+  val optimizerRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
+    Seq(FuseCosine, MetricPrefixPruning, LocalSort)
+
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
       "", "", "", "", "", "", "built-in")

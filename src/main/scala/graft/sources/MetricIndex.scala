@@ -1,8 +1,9 @@
 package graft.sources
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Persistent metric-index layout for hash fingerprints: the parquet
@@ -70,45 +71,80 @@ object MetricIndex {
     out.toSeq
   }
 
+  /** The prefix width a layout was written with, read back from its
+    * self-describing prefix column (`h_prefix__h__6` → 6). */
+  def bitsOf(layout: DataFrame, hashCol: String): Int =
+    (1 to 63).find(b => layout.columns.contains(prefixColumn(hashCol, b)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"not a metric layout over $hashCol: ${layout.columns.mkString(", ")}"))
+
   /** `SELECT ... WHERE hash @ probe <= maxDist` over an indexed layout:
     * IN-list partition filter (file pruning, exact) + codegen Hamming
-    * verify on the surviving rows. */
-  def thresholdQuery(spark: SparkSession, path: String, hashCol: String,
-      probe: Long, maxDist: Int, bits: Int = 8): DataFrame = {
-    val candidates = prefixesWithin(probe >>> (64 - bits), bits, maxDist)
-    spark.read.parquet(path)
-      .filter(col(prefixColumn(hashCol, bits)).isin(candidates: _*))
-      .filter(call_function("hamming64", col(hashCol).cast("long"), lit(probe)) <= maxDist)
+    * verify on the surviving rows. `layout` is the layout relation as
+    * `spark.read.parquet(path)` resolves it; callers that query a layout
+    * repeatedly resolve it once and pass the same relation every time, so
+    * partition discovery and schema inference are paid once — the
+    * partition filter still prunes through the relation's file index. */
+  def thresholdQuery(layout: DataFrame, hashCol: String, probe: Long,
+      maxDist: Int): DataFrame = {
+    val bits = bitsOf(layout, hashCol)
+    withinPrefixBall(layout, hashCol, probe, maxDist, bits)
+      .filter(hamming(hashCol, probe) <= maxDist)
       .drop(prefixColumn(hashCol, bits))
   }
 
+  private def hamming(hashCol: String, probe: Long): Column =
+    call_function("hamming64", col(hashCol).cast("long"), lit(probe))
+
+  /** The partitions whose prefix lies within `radius` of the probe's: the
+    * only ones that can hold a row at Hamming distance ≤ `radius`. */
+  private def withinPrefixBall(layout: DataFrame, hashCol: String,
+      probe: Long, radius: Int, bits: Int): DataFrame =
+    layout.filter(col(prefixColumn(hashCol, bits))
+      .isin(prefixesWithin(probe >>> (64 - bits), bits, radius): _*))
+
+  /** Radius of the first k-NN ball: the probe's own prefix and its
+    * `bits` one-bit neighbours, a small fraction of the layout. */
+  private val FirstRadius = 1
+
   /** Index-backed k-NN — what the reference's emtree actually exists for:
-    * nearest hashes WITHOUT a full corpus scan. Radius doubling: run the
-    * pruned [[thresholdQuery]] at growing radii until ≥ k rows survive,
-    * then rank those. Each probe costs one pruned scan plus a scalar
-    * count (an index interrogation, not a data collect); radii double, so
-    * the loop runs O(log maxRadius) times and total scan work is within
-    * ~2× the final radius's pruned scan. Correctness: the ball that
-    * yielded ≥ k rows contains the true top k (every excluded row is
-    * farther than every included one), so ranking inside it equals the
-    * full-scan answer — the spec asserts exact parity. Past
-    * `maxPruneDist` the prefix IN-list stops paying (the partition count
-    * approaches 2^bits), so the fallback is the full-scan TakeOrdered,
-    * same as the unindexed path. */
-  def knnQuery(spark: SparkSession, path: String, hashCol: String,
-      probe: Long, k: Int, bits: Int = 8, maxPruneDist: Int = 8): DataFrame = {
+    * nearest hashes, ranked by `(dist, hash)`, in at most two bounded
+    * top-k scans of the layout and no count probes.
+    *
+    *  1. Top-k over the prefix ball of radius r = [[FirstRadius]] (the
+    *     partitions whose prefix is within r of the probe's). If it
+    *     yields k rows whose k-th distance D is ≤ r, the answer is
+    *     exact: every row outside the ball is farther than r ≥ D.
+    *  2. Otherwise the k candidates bound the true k-th distance by D, so
+    *     one more top-k over the rows within D — the prefix ball of D
+    *     when D < bits, else the whole layout (also when the first scan
+    *     found fewer than k rows) — is exact, ties at D included: every
+    *     row at distance ≤ D lies inside that ball.
+    *
+    * Each scan is a TakeOrdered collect of ≤ k rows; the answer comes back
+    * as a local relation, so the caller's action runs no further job (an
+    * ORDER BY on top sorts the rows in memory: [[graft.plans.LocalSort]]). */
+  def knnQuery(layout: DataFrame, hashCol: String, probe: Long,
+      k: Int): DataFrame = {
     require(k > 0, s"knnQuery requires k > 0, got $k")
-    def ranked(df: DataFrame): DataFrame = df
-      .withColumn("dist",
-        call_function("hamming64", col(hashCol).cast("long"), lit(probe)))
+    val bits = bitsOf(layout, hashCol)
+    def topK(df: DataFrame): DataFrame = df
+      .drop(prefixColumn(hashCol, bits))
+      .withColumn("dist", hamming(hashCol, probe))
       .orderBy(col("dist"), col(hashCol))
       .limit(k)
-    var radius = 1
-    while (radius <= maxPruneDist) {
-      val ball = thresholdQuery(spark, path, hashCol, probe, radius, bits)
-      if (ball.count() >= k) return ranked(ball)
-      radius *= 2
+    val first = topK(withinPrefixBall(layout, hashCol, probe, FirstRadius, bits))
+    val candidates = first.collect()
+    // the k-th distance found, when the first ball held k rows
+    val kth = if (candidates.length < k) None
+      else Some(candidates.last.getAs[Int]("dist"))
+    val answer = kth match {
+      case Some(d) if d <= FirstRadius => candidates
+      case Some(d) if d < bits =>
+        topK(withinPrefixBall(layout, hashCol, probe, d, bits)
+          .filter(hamming(hashCol, probe) <= d)).collect()
+      case _ => topK(layout).collect()
     }
-    ranked(spark.read.parquet(path).drop(prefixColumn(hashCol, bits)))
+    layout.sparkSession.createDataFrame(answer.toSeq.asJava, first.schema)
   }
 }

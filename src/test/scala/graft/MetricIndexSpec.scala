@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -22,7 +24,7 @@ class MetricIndexSpec extends SparkTestBase {
     MetricIndex.writeIndexed(hashed, dir, "h", bits = 8)
 
     val probe = hashed.filter(col("doc_id") === 0).head().getLong(1)
-    val q = MetricIndex.thresholdQuery(spark, dir, "h", probe, maxDist = 3, bits = 8)
+    val q = MetricIndex.thresholdQuery(spark.read.parquet(dir), "h", probe, maxDist = 3)
 
     // exactness: identical doc_id set as the unindexed brute-force scan
     val expected = hashed
@@ -130,7 +132,7 @@ class MetricIndexSpec extends SparkTestBase {
       .map { case (h, i) => (i.toLong, h) }.toDF("doc_id", "h")
     MetricIndex.writeIndexed(hashed, dir, "h", bits = 8)
 
-    val got = MetricIndex.knnQuery(spark, dir, "h", base, k = 5)
+    val got = MetricIndex.knnQuery(spark.read.parquet(dir), "h", base, k = 5)
       .select(col("h"), col("dist")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq
     val expected = hashed
@@ -144,7 +146,7 @@ class MetricIndexSpec extends SparkTestBase {
     // the ball that resolved the query (radius 2: the planted cluster has
     // >= 5 members within distance 2) reads a pruned file selection —
     // C(8, <=2) = 37 candidate prefixes of the layout's partitions
-    val ball = MetricIndex.thresholdQuery(spark, dir, "h", base, 2, bits = 8)
+    val ball = MetricIndex.thresholdQuery(spark.read.parquet(dir), "h", base, 2)
     val scan = ball.queryExecution.executedPlan.collect {
       case f: FileSourceScanExec => f
     }.head
@@ -152,6 +154,118 @@ class MetricIndexSpec extends SparkTestBase {
       .select(MetricIndex.prefixColumn("h", 8)).distinct().count()
     assert(scan.selectedPartitions.partitionCount < totalParts,
       s"${scan.selectedPartitions.partitionCount} of $totalParts partitions read")
+  }
+
+  /** Write `hashes` as an 8-bit layout; return (layout relation, the
+    * brute-force k-NN of `probe` ranked by (dist, h)). */
+  private def layoutAndOracle(hashes: Seq[Long], probe: Long, k: Int)
+      : (org.apache.spark.sql.DataFrame, Seq[(Long, Int)]) = {
+    val dir = Files.createTempDirectory("graft-mindex-knn").toString + "/docs"
+    val s2 = spark
+    import s2.implicits._
+    MetricIndex.writeIndexed(hashes.zipWithIndex
+      .map { case (h, i) => (i.toLong, h) }.toDF("doc_id", "h"), dir, "h", bits = 8)
+    val oracle = hashes.map(h => (h, java.lang.Long.bitCount(h ^ probe)))
+      .sortBy { case (h, d) => (d, h) }.take(k)
+    (spark.read.parquet(dir), oracle)
+  }
+
+  private def knn(layout: org.apache.spark.sql.DataFrame, probe: Long,
+      k: Int): Seq[(Long, Int)] =
+    MetricIndex.knnQuery(layout, "h", probe, k)
+      .select(col("h"), col("dist")).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSeq
+
+  test("kNN over unclustered random hashes takes the full-layout fallback and stays exact") {
+    GraftSession.prepare(spark)
+    val rnd = new scala.util.Random(17)
+    val hashes = Seq.fill(500)(rnd.nextLong())
+    val probe = hashes(3)
+    val (layout, oracle) = layoutAndOracle(hashes, probe, 5)
+    // the 5th-nearest random hash sits far past the 8 prefix bits
+    assert(oracle.last._2 >= 8, s"not a fallback case: $oracle")
+    assert(knn(layout, probe, 5) == oracle)
+  }
+
+  test("kNN with k larger than the table returns every row, ranked") {
+    GraftSession.prepare(spark)
+    val rnd = new scala.util.Random(5)
+    val hashes = Seq.fill(20)(rnd.nextLong())
+    val (layout, oracle) = layoutAndOracle(hashes, hashes.head, 50)
+    assert(oracle.size == 20)
+    assert(knn(layout, hashes.head, 50) == oracle)
+  }
+
+  test("kNN ties at the k-th distance that straddle the first ball's edge rank by hash") {
+    GraftSession.prepare(spark)
+    val base = 0x5a5a3c3c0f0f55aaL // top bit clear
+    // four rows at distance 2: two differ only in low bits (inside the
+    // radius-1 prefix ball), two flip two PREFIX bits incl. the sign bit
+    // (prefix distance 2, outside that ball, and smaller as signed longs
+    // — so they win the hash tie-break)
+    val inside = Seq(base ^ 3L, base ^ 5L)
+    val outside = Seq(base ^ (3L << 62), base ^ ((1L << 63) | (1L << 60)))
+    val rnd = new scala.util.Random(11)
+    val hashes = Seq(base) ++ inside ++ outside ++ Seq.fill(200)(rnd.nextLong())
+    val (layout, oracle) = layoutAndOracle(hashes, base, 3)
+    assert(oracle == Seq((base, 0)) ++ outside.sorted.map((_, 2)),
+      s"tie set does not straddle the first ball: $oracle")
+    assert(knn(layout, base, 3) == oracle)
+  }
+
+  test("kNN whose first ball is empty falls back to the whole layout") {
+    GraftSession.prepare(spark)
+    val rnd = new scala.util.Random(23)
+    // every hash has prefix 0x00; the probe's prefix 0xFF is 8 bits away,
+    // so the radius-1 prefix ball holds no rows
+    val hashes = Seq.fill(100)(rnd.nextLong() >>> 8)
+    val probe = 0xFF00000000000000L | (hashes.head & 0xFFFFL)
+    val (layout, oracle) = layoutAndOracle(hashes, probe, 4)
+    assert(knn(layout, probe, 4) == oracle)
+  }
+
+  test("a repeated metric_knn on one session runs at most 3 jobs, none a listing or schema job") {
+    GraftSession.prepare(spark)
+    val s2 = spark
+    import s2.implicits._
+    val rnd = new scala.util.Random(3)
+    val es = new graft.sql.EmdriveSession(spark)
+    // 500 random hashes: the 6-bit layout has 64 prefix directories, and
+    // no small ball holds the 10 nearest
+    es.register("knn_hashes", Seq.tabulate(500)(i => (i.toLong, rnd.nextLong()))
+      .toDF("doc_id", "h"))
+    // ORDER BY over the k-NN answer (a local relation) runs no job
+    val stmt =
+      "SELECT h, dist FROM metric_knn(knn_hashes, doc_id, h, 7, 10) ORDER BY dist, h;"
+    val first = es.sql(stmt).collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+
+    // job descriptions and stage names of every job the second statement
+    // runs; a sentinel job marks the end (the listener bus is in order)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val sentinel = s"sentinel-${System.nanoTime()}"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          e.stageInfos.map(_.name).mkString(";")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val second = try {
+      val out = es.sql(stmt).collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      spark.sparkContext.setJobDescription(sentinel)
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.asScala.exists(_._1 == sentinel) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val ran = jobs.asScala.toSeq.filterNot(_._1 == sentinel)
+    assert(second == first)
+    assert(ran.size <= 3, s"${ran.size} jobs: ${ran.mkString("\n")}")
+    assert(!ran.exists { case (desc, stages) =>
+      desc.startsWith("Listing leaf files") || stages.contains("parquet at") },
+      s"listing or schema job: ${ran.mkString("\n")}")
   }
 
   test("prefixesWithin enumerates exactly the prefixes a match can live in") {

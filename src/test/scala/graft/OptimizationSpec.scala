@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Relational}
@@ -81,13 +85,18 @@ class OptimizationSpec extends SparkTestBase {
   test("q_weighted_median plans ONE data exchange and ONE window after the r18 share-the-exchange rewrite") {
     GraftSession.prepare(spark)
     val df = SparkEntry.queries("q_weighted_median")(spark, sfDir)
-    val p = df.queryExecution.executedPlan.toString
-    def count(sub: String) =
-      p.sliding(sub.length).count(_ == sub)
+    val plan = df.queryExecution.executedPlan
+    // count plan NODES (through the adaptive wrapper and into subqueries),
+    // not substrings of the plan's text
+    val helper = new AdaptiveSparkPlanHelper {}
+    val hashExchanges = helper.collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    val windows = helper.collectWithSubqueries(plan) { case w: WindowExec => w }
     // one hash-partitioned data exchange (the broadcast of `part` is a
-    // BroadcastExchange, counted separately) and one fused Window node
-    assert(count("Exchange hashpartitioning") == 1,
-      s"expected 1 data exchange:\n$p")
-    assert(count("Window") == 1, s"expected 1 fused Window:\n$p")
+    // BroadcastExchangeExec, not counted) and one fused Window node
+    assert(hashExchanges.size == 1, s"expected 1 data exchange:\n$plan")
+    assert(windows.size == 1, s"expected 1 fused Window:\n$plan")
   }
 }

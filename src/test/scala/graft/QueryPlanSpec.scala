@@ -195,6 +195,24 @@ class QueryPlanSpec extends SparkTestBase {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  test("ORDER BY over a local relation sorts its rows in memory, in Spark's order") {
+    GraftSession.prepare(spark)
+    val s2 = spark
+    import s2.implicits._
+    import org.apache.spark.sql.functions.col
+    val local = Seq[(Option[Int], String)]((Some(2), "b"), (None, "a"),
+      (Some(2), "a"), (Some(-1), "z"), (None, "c"), (Some(7), "a"))
+      .toDF("n", "s")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("n").desc_nulls_last, col("s")).select(col("s"), col("n"))
+    val q = sorted(local)
+    assert(q.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      q.queryExecution.optimizedPlan.toString)
+    // same rows in the same order as the distributed sort of the same data
+    assert(q.collect().toSeq == sorted(local.repartition(3)).collect().toSeq)
+  }
+
   test("global top-k plans as TakeOrderedAndProject (no full sort)") {
     val p = plan("q_topk_global")
     assert(p.contains("TakeOrderedAndProject"), p)
