@@ -112,37 +112,29 @@ object Stress {
     // key-skew profile (key-cardinality shuffle + single-row percentile)
     "q_rolling_7d", "q_js_div", "q_key_skew")
 
-  def main(args: Array[String]): Unit = {
-    TempHygiene.sweepOrphans()
-    // SPARK_GRAFT_STRESS_ALL=1 sweeps the ENTIRE query registry (one run
-    // per scale instead of min-of-2 — this mode is a super-linearity
-    // red-flag sweep across every key, not a precision benchmark; the
-    // headline set keeps the careful timing)
-    val all = sys.env.get("SPARK_GRAFT_STRESS_ALL").contains("1")
+  /** Session confs for [[Harness.session]]. At ×100 a cpus-partition
+    * shuffle puts ~100× the per-task state of the bench runs in flight at
+    * once; more, smaller partitions is exactly what
+    * spark.sql.shuffle.partitions exists for (a cluster would run
+    * thousands), so SPARK_GRAFT_SHUFFLE overrides it as N grows. A big heap
+    * (needed for the ×100 shuffles) means organic GC almost never runs —
+    * and ContextCleaner only deletes finished queries' shuffle files when
+    * their RDDs get collected, so a multi-query session can exhaust DISK on
+    * stale shuffle files long before it exhausts memory. Aggressive
+    * periodic GC keeps the cleaner live; the timed-key loop also forces one
+    * between keys. */
+  def confs: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_SHUFFLE").map("spark.sql.shuffle.partitions" -> _).toSeq :+
+      ("spark.cleaner.periodicGC.interval" -> "30s")
+
+  /** Time `keys` (the headline set when empty) at ×1 and ×N. `everyKey`
+    * sweeps the ENTIRE query registry with one run per scale instead of
+    * min-of-2 — a super-linearity red-flag sweep across every key, not a
+    * precision benchmark; the headline set keeps the careful timing. */
+  def sweep(spark: SparkSession, keys: Seq[String], everyKey: Boolean): Unit = {
     val n = sys.env.get("SPARK_GRAFT_STRESS_N").flatMap(_.toIntOption).getOrElse(10)
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val src = Harness.sfDir("/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIR", s"/tmp/graft_stress_x$n")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // At ×100 a 32-partition shuffle puts ~100× the per-task state of the
-    // bench runs in flight at once; more, smaller partitions is exactly
-    // what spark.sql.shuffle.partitions exists for (a cluster would run
-    // thousands). Overridable so the harness scales with N.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // A big heap (needed for the ×100 shuffles) means organic GC almost
-      // never runs — and ContextCleaner only deletes finished queries'
-      // shuffle files when their RDDs get collected, so a multi-query
-      // session can exhaust DISK on stale shuffle files long before it
-      // exhausts memory. Aggressive periodic GC keeps the cleaner live;
-      // time() also forces one between queries.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.prepare(spark)
 
     replicate(spark, src, dst, n)
     val rows = Tables.all.map(t => t -> Tables(spark, dst, t).count()).toMap
@@ -162,98 +154,67 @@ object Stress {
     val DecomposedKeys = Set("q_ntile", "q_rfm")
     val matDir = s"/tmp/graft_stress_mat_${SessionMemo.pathTag(dst)}"
 
-    def time(dir: String, name: String): (Double, Long) = {
-      // price the full BUILD every run: session-registry artifacts
-      // (component labels, ANN indexes) amortize steady-state sessions,
-      // but a scaling measurement that reused them would hide exactly the
-      // build cost this harness exists to expose. ON-DISK artifacts
-      // (PairStore's persisted pair graph) deliberately survive eviction:
-      // write-once/read-many IS their production plan, so the sweep
-      // prices the build once (the first consumer) and the read path
-      // everywhere else — set SPARK_GRAFT_PAIR_STORE=off to price every
-      // key's raw build instead
-      SessionMemo.evictAll()
-      val t0 = System.nanoTime()
-      val rows = SparkEntry.queries(name)(spark, dir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.gc() // let ContextCleaner reclaim the finished query's shuffle files
-      (dt, rows)
-    }
-    // warmup on the small side. SPARK_GRAFT_STRESS_KEYS=a,b,… pins an
-    // explicit subset (e.g. re-receipting one round's new operators at
-    // ×100 without paying for the whole registry)
-    val keysEnv = sys.env.get("SPARK_GRAFT_STRESS_KEYS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val queriesToRun = keysEnv.getOrElse(
-      if (all) SparkEntry.queries.keys.toSeq.sorted else Headline)
-    val runs = if (all) 1 else 2
-    // warm-up failures must not kill the sweep either (same isolation as
-    // the timed loop): a broken first-sorted key costs its own slot below,
-    // not the whole 260-key receipt
-    queriesToRun.take(2).foreach(q =>
-      try time(src, q)
-      catch { case e: Throwable =>
-        System.err.println(s"[stress] warm-up $q failed: ${e.getMessage}") })
+    // an explicit subset re-receipts e.g. one round's new operators at
+    // ×100 without paying for the whole registry
+    val queriesToRun = Harness.resolve(
+      if (everyKey) SparkEntry.queries.keys.toSeq.sorted
+      else if (keys.nonEmpty) keys else Headline)
+    val runs = if (everyKey) 1 else 2
+    Harness.warmUp(spark, src)
     // materialization timing: the same registered plan, fully written
     // out (see DecomposedKeys above) — min-of-`runs` like the count path
-    def matTime(dir: String, name: String): Double =
+    def matTime(dir: String, name: String, fn: Harness.Query): Double =
       Seq.fill(runs) {
         SessionMemo.evictAll()
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir)
-          .write.mode("overwrite").parquet(s"$matDir/$name")
+        fn(spark, dir).write.mode("overwrite").parquet(s"$matDir/$name")
         val dt = (System.nanoTime() - t0) / 1e9
         System.gc()
         dt
       }.min
-    // a single failing key must not kill a 260-key sweep: record the
-    // error in its slot (the receipt reader treats a missing ratio as a
-    // loud red) and keep sweeping
-    val timed: Seq[Either[(String, String),
-        (String, Double, Double, Long, Long, Option[(Double, Double)])]] =
-      queriesToRun.map { q =>
-        try {
-          val (base, baseRows) = Seq.fill(runs)(time(src, q)).minBy(_._1)
-          val (big, bigRows) = Seq.fill(runs)(time(dst, q)).minBy(_._1)
-          val mat =
-            if (!DecomposedKeys(q)) None
-            else Some((matTime(src, q), matTime(dst, q)))
-          Right((q, base, big, baseRows, bigRows, mat))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[stress] $q failed: ${e.getMessage}")
-            Left((q, Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("[\"\\\\\n\r\t]", " ").take(160)))
-        }
+    // Every run prices the full BUILD (`fresh`): session-registry artifacts
+    // (component labels, ANN indexes) amortize steady-state sessions, but a
+    // scaling measurement that reused them would hide exactly the build
+    // cost this harness exists to expose. ON-DISK artifacts (PairStore's
+    // persisted pair graph) deliberately survive eviction: write-once/
+    // read-many IS their production plan, so the sweep prices the build
+    // once (the first consumer) and the read path everywhere else — set
+    // SPARK_GRAFT_PAIR_STORE=off to price every key's raw build instead.
+    // A failing key records its cause in its slot (the receipt reader
+    // treats a missing ratio as a loud red) and the sweep keeps going.
+    val qs = queriesToRun.map { case (q, fn) =>
+      val timed = for {
+        b <- Harness.timeKey(spark, src, fn, runs, fresh = true)
+        g <- Harness.timeKey(spark, dst, fn, runs, fresh = true)
+        mat <- Harness.attempt(
+          if (DecomposedKeys(q)) Some((matTime(src, q, fn), matTime(dst, q, fn))) else None)
+      } yield (b, g, mat)
+      // result rows ride along: under constant-density replication the ×N
+      // row count vs ×1 is a free recall/structure check (a near-dup query
+      // that held recall returns ≈N× the pairs; one that silently lost it
+      // shows up right here, next to its wall-clock ratio). Output-scaling
+      // keys additionally carry sec-per-million-output-rows at both scales
+      // (flat-or-falling = linear row work, the scale-healthy shape) and,
+      // for DecomposedKeys, the reduced-sink plan-cost pair.
+      timed match {
+        case Right((base, big, plan)) =>
+          val (b, g, br, gr) = (base.best, big.best, base.rows, big.rows)
+          val spm =
+            if (br > 0 && gr > 0 && gr >= 10 * br)
+              f""",\"s_per_mrow_x1\":${b * 1e6 / br}%.4f,\"s_per_mrow_x$n\":${g * 1e6 / gr}%.4f"""
+            else ""
+          val pl = plan.fold("") { case (p1, pn) =>
+            f""",\"mat_x1\":$p1%.3f,\"mat_x$n\":$pn%.3f,\"mat_ratio\":${pn / p1}%.2f"""
+          }
+          f"""\"$q\":{\"x1\":$b%.3f,\"x$n\":$g%.3f,\"ratio\":${g / b}%.2f,\"rows_x1\":$br,\"rows_x$n\":$gr$spm$pl}"""
+        case Left(cause) =>
+          System.err.println(s"[stress] $q failed: $cause")
+          s"""\"$q\":{\"error\":${Harness.json(cause)}}"""
       }
-    // result rows ride along: under constant-density replication the ×N
-    // row count vs ×1 is a free recall/structure check (a near-dup query
-    // that held recall returns ≈N× the pairs; one that silently lost it
-    // shows up right here, next to its wall-clock ratio). Output-scaling
-    // keys additionally carry sec-per-million-output-rows at both scales
-    // (flat-or-falling = linear row work, the scale-healthy shape) and,
-    // for DecomposedKeys, the reduced-sink plan-cost pair.
-    val qs = timed.map {
-      case Right((q, b, g, br, gr, plan)) =>
-        val spm =
-          if (br > 0 && gr > 0 && gr >= 10 * br)
-            f""",\"s_per_mrow_x1\":${b * 1e6 / br}%.4f,\"s_per_mrow_x$n\":${g * 1e6 / gr}%.4f"""
-          else ""
-        val pl = plan.fold("") { case (p1, pn) =>
-          f""",\"mat_x1\":$p1%.3f,\"mat_x$n\":$pn%.3f,\"mat_ratio\":${pn / p1}%.2f"""
-        }
-        f"""\"$q\":{\"x1\":$b%.3f,\"x$n\":$g%.3f,\"ratio\":${g / b}%.2f,\"rows_x1\":$br,\"rows_x$n\":$gr$spm$pl}"""
-      case Left((q, msg)) => s"""\"$q\":{\"error\":\"$msg\"}"""
     }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"stress","n":$n,"src":"$src","rows":{${
-        rows.toSeq.sortBy(_._1).map { case (t, c) => s"\"$t\":$c" }.mkString(",")
-      }},"queries":$qs}"""
-    println(line)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "STRESS_OUT.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    spark.stop()
+    Harness.emit(
+      s"""{"metric":"stress","n":$n,"src":"$src","rows":${
+        Harness.obj(rows.toSeq.sortBy(_._1))},"queries":$qs}""",
+      "SPARK_GRAFT_STRESS_OUT", "STRESS_OUT.json")
   }
 }

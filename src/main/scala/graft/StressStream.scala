@@ -33,7 +33,7 @@ import graft.streaming.{StreamDoc, StreamEvent, StreamOps}
   * HARD-ASSERTS the state bounds — a leak (eviction regression, unbounded
   * bucket growth) fails the run, not just a number in a report.
   *
-  * This is a harness main, not library code: it materializes the feed
+  * This is a harness mode, not library code: it materializes the feed
   * corpus on the driver because it IS the stream generator (MemoryStream
   * is driver-fed by construction) — the measured operators never collect.
   */
@@ -47,22 +47,13 @@ object StressStream {
         s""""out_rows":$outRows,"state_rows":$stateLast,"state_rows_max":$stateMax}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    TempHygiene.sweepOrphans()
+  /** Run on a session with `spark.sql.streaming.metricsEnabled` (see
+    * [[Harness.main]]). */
+  def run(spark: SparkSession): Unit = {
     val n = sys.env.get("SPARK_GRAFT_STRESS_N").flatMap(_.toIntOption).getOrElse(10)
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val src = Harness.sfDir("/root/testdata/sf0.1")
     val chunks = 20 // same micro-batch COUNT at both scales: per-batch
                     // overhead constant, batch SIZE carries the ×N
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.prepare(spark)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -158,19 +149,14 @@ object StressStream {
     require(fnN.stateMax <= fnBound,
       s"funnel state ${fnN.stateMax} exceeds user bound $fnBound")
 
-    val line =
+    Harness.emit(
       s"""{"metric":"stress_stream","n":$n,"src":"$src","chunks":$chunks,""" +
         s""""d7_neardup":{"x1":${nd1.json},"x$n":${ndN.json},""" +
         f""""throughput_ratio":${ndN.rowsPerSec / nd1.rowsPerSec}%.2f,""" +
         s""""state_bound":$ndBound,"state_ok":true},""" +
         s""""d13_funnel":{"x1":${fn1.json},"x$n":${fnN.json},""" +
         f""""throughput_ratio":${fnN.rowsPerSec / fn1.rowsPerSec}%.2f,""" +
-        s""""state_bound":$fnBound,"state_ok":true}}"""
-    println(line)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "STRESS_STREAM_OUT.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    spark.stop()
+        s""""state_bound":$fnBound,"state_ok":true}}""",
+      "SPARK_GRAFT_STRESS_OUT", "STRESS_STREAM_OUT.json")
   }
 }

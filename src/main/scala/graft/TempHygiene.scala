@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, LinkOption, Path, Paths}
 import java.nio.file.attribute.FileTime
 
+import scala.util.control.NonFatal
+
 /** Scratch-space hygiene shared by every entry point.
   *
   * The engine's layout/index operators write throwaway artifacts under
@@ -21,7 +23,7 @@ import java.nio.file.attribute.FileTime
   *  - untagged entries (random-suffix `Files.createTempDirectory` dirs
   *    from test suites; since r14 the stream-replay harness pid-tags its
   *    dirs too, so only suites land here): deleted when their mtime is
-  *    older than `SPARK_GRAFT_TMP_MAX_AGE_H` (default 12 h) — a live
+  *    older than 12 h — a live
   *    JVM's memoized dirs are never at risk because every dir a live
   *    process may still read carries its pid;
   *  - `/tmp/graft_pair_store` is NEVER swept: the persisted pair graph is
@@ -48,47 +50,34 @@ object TempHygiene {
 
   private val PidTag = ".*_p(\\d+)$".r
 
-  /** True when the entry's embedded `_p<pid>` names a process that no
-    * longer exists; false for live pids AND for untagged names. */
-  private def deadPidTagged(name: String): Boolean = name match {
-    case PidTag(pid) =>
-      pid.toLongOption.exists(p => ProcessHandle.of(p).isEmpty)
-    case _ => false
-  }
-
   private def olderThan(p: Path, cutoff: FileTime): Boolean =
     try Files.getLastModifiedTime(p, LinkOption.NOFOLLOW_LINKS)
       .compareTo(cutoff) < 0
-    catch { case _: Throwable => false }
+    catch { case NonFatal(_) => false }
 
-  private def maxAgeHours: Long =
-    sys.env.get("SPARK_GRAFT_TMP_MAX_AGE_H").flatMap(_.toLongOption)
-      .getOrElse(12L)
+  /** Age past which an untagged scratch entry counts as orphaned. */
+  private val MaxAgeHours = 12L
 
-  /** Sweep one directory: delete children matching `prefixes` that are
-    * either dead-pid-tagged or (untagged and older than the age cutoff),
-    * skipping `exclude` names. */
-  private def sweepDir(dir: Path, prefixes: Seq[String],
-      exclude: String => Boolean): Int = {
-    if (!Files.isDirectory(dir)) return 0
-    val cutoff = FileTime.fromMillis(
-      System.currentTimeMillis() - maxAgeHours * 3600L * 1000L)
+  /** Delete the children of `dir` (if it is a directory) that `reap`
+    * selects by name and path; returns how many were deleted. Never
+    * throws. */
+  private def sweepDir(dir: Path)(reap: (String, Path) => Boolean): Int = {
     var n = 0
-    val st = try Files.list(dir) catch { case _: Throwable => return 0 }
-    try st.forEach { p =>
-      val name = p.getFileName.toString
-      if (prefixes.exists(name.startsWith) && !exclude(name)) {
-        val reap =
-          if (PidTag.matches(name)) deadPidTagged(name)
-          else olderThan(p, cutoff)
-        if (reap) {
-          try { deleteRecursively(p); n += 1 }
-          catch { case _: Throwable => () }
-        }
-      }
-    } finally st.close()
+    try {
+      val st = Files.list(dir)
+      try st.forEach { p =>
+        if (reap(p.getFileName.toString, p))
+          try { deleteRecursively(p); n += 1 } catch { case NonFatal(_) => () }
+      } finally st.close()
+    } catch { case NonFatal(_) => () }
     n
   }
+
+  /** A new directory `<base>/<prefix><random>_p<pid>`: the pid tag makes
+    * [[sweepOrphans]] reap it only once this process is gone. */
+  def pidTaggedDir(base: Path, prefix: String): Path =
+    Files.createDirectories(base.resolve(
+      s"$prefix${java.util.UUID.randomUUID().toString.take(8)}_p${ProcessHandle.current().pid()}"))
 
   /** Where the engine's `graft_*` scratch lands: `/tmp`, `/dev/shm` and
     * `java.io.tmpdir` (index layouts), without duplicates. */
@@ -105,18 +94,33 @@ object TempHygiene {
   def sweepOrphans(warehouseDir: String = "spark-warehouse"): Unit = {
     if (swept) return
     swept = true
-    try {
-      val nTmp = scratchRoots.map(d =>
-        sweepDir(Paths.get(d), Seq("graft_", "graft-"),
-          name => name.startsWith("graft_pair_store"))).sum
-      // stale managed bucketed tables: the catalog of the process that
-      // created them died with it, so the FILES are the only handle left —
-      // prefix-match and reap like any other scratch (r12 ADVICE, medium)
-      val nWh = sweepDir(Paths.get(warehouseDir),
-        Seq("b_orders_", "b_lineitem_"), _ => false)
-      if (nTmp + nWh > 0)
-        System.err.println(
-          s"[graft] reaped $nTmp orphan /tmp dirs, $nWh stale warehouse tables")
-    } catch { case _: Throwable => () }
+    val cutoff = FileTime.fromMillis(
+      System.currentTimeMillis() - MaxAgeHours * 3600L * 1000L)
+    // matching `prefixes`, and either tagged with the pid of a process
+    // that no longer exists, or untagged and older than the age cutoff
+    def orphan(prefixes: String*)(name: String, p: Path): Boolean =
+      prefixes.exists(name.startsWith) && (name match {
+        case PidTag(pid) => pid.toLongOption.exists(ProcessHandle.of(_).isEmpty)
+        case _ => olderThan(p, cutoff)
+      })
+    val nTmp = scratchRoots.map(d => sweepDir(Paths.get(d))((name, p) =>
+      !name.startsWith("graft_pair_store") && orphan("graft_", "graft-")(name, p))).sum
+    // stale managed bucketed tables: the catalog of the process that
+    // created them died with it, so the FILES are the only handle left —
+    // prefix-match and reap like any other scratch (r12 ADVICE, medium)
+    val nWh = sweepDir(Paths.get(warehouseDir))(orphan("b_orders_", "b_lineitem_"))
+    if (nTmp + nWh > 0)
+      System.err.println(
+        s"[graft] reaped $nTmp orphan /tmp dirs, $nWh stale warehouse tables")
+  }
+
+  /** Delete this process's own pid-tagged `graft_*` scratch under the
+    * [[scratchRoots]]; other runs' files are never touched. The r11 driver
+    * bench left tens of thousands of temp files across /tmp, the prime
+    * suspect for the h→l stall's disk pressure. Never throws. */
+  def cleanOwn(): Unit = {
+    val pidTag = s"_p${ProcessHandle.current().pid()}"
+    scratchRoots.foreach(d => sweepDir(Paths.get(d))((name, _) =>
+      name.startsWith("graft_") && name.endsWith(pidTag)))
   }
 }

@@ -1,57 +1,35 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    TempHygiene.sweepOrphans()
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // dev-only subset run (comma-separated keys): restricts BOTH the query
-    // dump and the oracle json so dev/oracle_check.py grades just the
-    // subset. The driver never sets this — full surface by default.
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_VERIFY_KEYS").map(_.split(",").map(_.trim).toSet)
-    def keep(name: String): Boolean = only.forall(_.contains(name))
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Harness.run() { spark =>
+      new java.io.File(outDir).mkdirs()
+      // dev-only subset run (comma-separated keys): restricts BOTH the query
+      // dump and the oracle json so dev/oracle_check.py grades just the
+      // subset. The driver never sets this — full surface by default.
+      val only: Option[Set[String]] =
+        sys.env.get("SPARK_GRAFT_VERIFY_KEYS").map(_.split(",").map(_.trim).toSet)
+      def keep(name: String): Boolean = only.forall(_.contains(name))
+      val failed = SparkEntry.queries.filter(kv => keep(kv._1)).toSeq.flatMap { case (name, fn) =>
+        Harness.attempt(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")).left.toOption.map { cause =>
+          System.err.println(s"[verify] $name failed: $cause")
+          name
+        }
       }
+      // a throwing query must not be silently absent from the compare (the
+      // round-6 events regression hid exactly this way): persist the failure
+      // list for dev/oracle_check.py to turn into a hard gate failure
+      Files.writeString(Paths.get(s"$outDir/failed.txt"),
+        failed.sorted.mkString("", "\n", if (failed.isEmpty) "" else "\n"))
+      val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+        .map { case (k, v) => s"${Harness.json(k)}: ${Harness.json(v)}" }.mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     }
-    // a throwing query must not be silently absent from the compare (the
-    // round-6 events regression hid exactly this way): persist the failure
-    // list for dev/oracle_check.py to turn into a hard gate failure
-    Files.writeString(Paths.get(s"$outDir/failed.txt"),
-      failed.sorted.mkString("", "\n", if (failed.isEmpty) "" else "\n"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

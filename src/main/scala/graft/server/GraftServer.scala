@@ -204,18 +204,8 @@ final class GraftServer(es: EmdriveSession, port: Int = 0,
   private def errMsg(e: Throwable): String =
     Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
 
-  private def errJson(kind: String, message: String): String = {
-    val esc = message.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    s"""{"type":"$kind","message":"$esc"}"""
-  }
+  private def errJson(kind: String, message: String): String =
+    s"""{"type":"$kind","message":${graft.Harness.json(message)}}"""
 }
 
 /** Standalone entry point: serve the testdata tables over HTTP.

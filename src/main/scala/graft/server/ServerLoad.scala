@@ -7,15 +7,14 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
 import org.apache.spark.sql.SparkSession
 
-import graft.GraftSession
 import graft.sql.EmdriveSession
 
 /** Serving-layer load harness: measured throughput and backpressure for
   * [[GraftServer]] under concurrent clients — the operational twin of
   * ServerSpec's correctness coverage (r7 verdict #6).
   *
-  * Shape: one live server over the sf corpus, `conc` client threads each
-  * firing `perClient` POSTs of a MIXED workload (r10 verdict #7): a
+  * Shape: one live server over the sf corpus, `Clients` client threads each
+  * firing `PerClient` POSTs of a MIXED workload (r10 verdict #7): a
   * maxRows-capped scan, a grouped aggregate, a filtered projection, a
   * system-catalog read (iterating the catalog WHILE other clients mutate
   * it), and per-client DML — each client owns a `load_<c>` table it
@@ -31,24 +30,14 @@ import graft.sql.EmdriveSession
   * steady-state QPS as one JSON line (driver convention;
   * dev/server_load.json).
   *
-  * Run: `sbt "runMain graft.server.ServerLoad"` (env: SPARK_GRAFT_SF_DIR,
-  * SPARK_GRAFT_LOAD_CONC, SPARK_GRAFT_LOAD_N).
+  * Run: `sbt "runMain graft.Harness load"` (env: SPARK_GRAFT_SF_DIR).
   */
 object ServerLoad {
-  def main(args: Array[String]): Unit = {
-    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val conc = sys.env.get("SPARK_GRAFT_LOAD_CONC").flatMap(_.toIntOption).getOrElse(32)
-    val perClient = sys.env.get("SPARK_GRAFT_LOAD_N").flatMap(_.toIntOption).getOrElse(25)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.prepare(spark)
+  private val Clients = 32
+  private val PerClient = 25
 
+  def run(spark: SparkSession): Unit = {
+    val sf = graft.Harness.sfDir("/root/testdata/sf0.01")
     val es = new EmdriveSession(spark)
     es.register("documents", graft.sources.Tables.documents(spark, sf))
     val server = new GraftServer(es, maxRows = 1000)
@@ -65,13 +54,13 @@ object ServerLoad {
       "SELECT COUNT(*) AS n FROM system.columns;")
 
     val client = HttpClient.newHttpClient()
-    def fire(q: String): (Int, Int, Long) = {
+    def fire(q: String): (Int, String, Long) = {
       val t0 = System.nanoTime()
       val resp = client.send(
         HttpRequest.newBuilder(url)
           .POST(HttpRequest.BodyPublishers.ofString(q)).build(),
         HttpResponse.BodyHandlers.ofString())
-      (resp.statusCode(), resp.body().length, System.nanoTime() - t0)
+      (resp.statusCode(), resp.body(), System.nanoTime() - t0)
     }
 
     fire(queries.head) // warm the plan cache / JIT before timing
@@ -79,10 +68,10 @@ object ServerLoad {
     val latencies = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val bad = new AtomicInteger(0)
     val empty = new AtomicInteger(0)
-    val pool = Executors.newFixedThreadPool(conc)
-    val done = new CountDownLatch(conc)
+    val pool = Executors.newFixedThreadPool(Clients)
+    val done = new CountDownLatch(Clients)
     val t0 = System.nanoTime()
-    (0 until conc).foreach { c =>
+    (0 until Clients).foreach { c =>
       pool.execute { () =>
         try {
           // each client owns a table: CREATE first, INSERT every 5th
@@ -91,13 +80,13 @@ object ServerLoad {
             s"CREATE TABLE load_$c (k UINT32 PRIMARY KEY, v STRING(16));")
           if (cs != 200) bad.incrementAndGet(): Unit
           latencies.add(cdt): Unit
-          (0 until perClient).foreach { i =>
+          (0 until PerClient).foreach { i =>
             val q =
               if (i % 5 == 4) s"INSERT INTO load_$c (k, v) VALUES ($i, 'w$i');"
               else queries((c + i) % queries.length)
-            val (status, len, dt) = fire(q)
+            val (status, body, dt) = fire(q)
             if (status != 200) bad.incrementAndGet(): Unit
-            if (len <= 2 && !q.startsWith("INSERT"))
+            if (body.length <= 2 && !q.startsWith("INSERT"))
               empty.incrementAndGet(): Unit // "[]" = dropped rows
             latencies.add(dt): Unit
           }
@@ -110,13 +99,9 @@ object ServerLoad {
 
     // every client's DML landed exactly: no lost or duplicated writes
     // under the serialized-catalog contract
-    val dmlBad = (0 until conc).count { c =>
-      val resp = client.send(
-        HttpRequest.newBuilder(url).POST(HttpRequest.BodyPublishers
-          .ofString(s"SELECT COUNT(*) AS n FROM load_$c;")).build(),
-        HttpResponse.BodyHandlers.ofString())
-      resp.statusCode() != 200 ||
-        !resp.body().contains(s""""n":${perClient / 5}""")
+    val dmlBad = (0 until Clients).count { c =>
+      val (status, body, _) = fire(s"SELECT COUNT(*) AS n FROM load_$c;")
+      status != 200 || !body.contains(s""""n":${PerClient / 5}""")
     }
     // the read-only GET refuses every write-statement class (r10 gap:
     // only CREATE/INSERT were refused; UPDATE/DELETE/CTAS/MERGE now too)
@@ -142,19 +127,14 @@ object ServerLoad {
     val ls = latencies.toArray(Array.empty[java.lang.Long]).map(_.toLong).sorted
     def pct(p: Double): Double =
       if (ls.isEmpty) 0.0 else ls(((ls.length - 1) * p).toInt) / 1e6
-    val total = conc * (perClient + 1) // +1: each client's CREATE
+    val total = Clients * (PerClient + 1) // +1: each client's CREATE
     val line =
-      f"""{"metric":"server_load","sf":"$sf","concurrency":$conc,""" +
+      f"""{"metric":"server_load","sf":"$sf","concurrency":$Clients,""" +
         f""""requests":$total,"non200":${bad.get()},"empty":${empty.get()},""" +
         f""""dml_clients_bad":$dmlBad,"get_writes_accepted":$getAccepted,""" +
         f""""wall_sec":$wall%.2f,"qps":${total / wall}%.1f,""" +
         f""""p50_ms":${pct(0.50)}%.1f,"p95_ms":${pct(0.95)}%.1f,"p99_ms":${pct(0.99)}%.1f}"""
-    println(line)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_LOAD_OUT", "dev/server_load.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    spark.stop()
+    graft.Harness.emit(line, "SPARK_GRAFT_LOAD_OUT", "dev/server_load.json")
     // a dropped or errored response under saturation is a FAILURE of the
     // backpressure contract, not a statistic — and so is a lost write or
     // a write accepted by the read-only endpoint

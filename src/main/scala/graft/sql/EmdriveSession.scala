@@ -140,7 +140,12 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
     val cur = EmdriveSession.indexPaths.get(key)
     if (cur != null) cur._2
     else {
-      val p = java.nio.file.Files.createTempDirectory(s"graft_${kind}_idx").toString
+      // pid-tagged name (ends `_p<pid>`): TempHygiene reaps it only once
+      // this process is gone. An untagged dir is age-swept after 12 h by
+      // any later graft process's startup sweep, which would delete a
+      // long-lived server's live index.
+      val p = graft.TempHygiene.pidTaggedDir(java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir")), s"graft_${kind}_idx").toString
       build(p)
       EmdriveSession.indexPaths.putIfAbsent(key, (p, spark.read.parquet(p)))
       EmdriveSession.indexPaths.get(key)._2

@@ -26,12 +26,9 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
   private[sql] def aliasCols(df: DataFrame, alias: Option[String]): DataFrame =
     alias.fold(df)(a => df.toDF(df.columns.map(c => s"$a.$c").toIndexedSeq: _*))
 
-  /** STRING_AGG per-group size cap (values per group). Env-tunable via
-    * SPARK_GRAFT_STRING_AGG_MAX for corpora with legitimately huge
-    * groups; the default is generous for any analytic concat. */
-  private[sql] val StringAggMaxGroup: Long =
-    sys.env.get("SPARK_GRAFT_STRING_AGG_MAX").flatMap(_.toLongOption)
-      .getOrElse(1000000L)
+  /** STRING_AGG per-group size cap (values per group): generous for any
+    * analytic concat. */
+  private[sql] val StringAggMaxGroup: Long = 1000000L
 
   /** The C-style (DuckDB-spelled) strftime/strptime format string
     * translated to Spark's java.time pattern at parse time; only the

@@ -83,10 +83,7 @@ object StreamQueries {
     * SessionMemo (r13 ADVICE, medium). */
   private def tempDir(prefix: String, base: Path = scratchBase): Path = {
     cleanupHook
-    val name = s"$prefix${java.util.UUID.randomUUID().toString.take(8)}" +
-      s"_p${ProcessHandle.current().pid()}"
-    val p = base.resolve(name)
-    Files.createDirectories(p)
+    val p = graft.TempHygiene.pidTaggedDir(base, prefix)
     tempDirs.add(p)
     p
   }
@@ -142,16 +139,8 @@ object StreamQueries {
       batch: DataFrame, ordCol: String, mode: String, nChunks: Int = 2,
       extra: Seq[DataFrame] = Nil, stageKey: String = null)(
       build: DataFrame => DataFrame): DataFrame = {
-    val dbg = sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val t = System.nanoTime()
-      System.err.println(f"[stream-debug] $key $tag ${(t - t0) / 1e9}%.3f s")
-      t0 = t
-    }
     val (chunks, schemaJson) = stageChunks(s, dir,
       Option(stageKey).getOrElse(key), batch, ordCol, nChunks)
-    lap("stage")
     val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val watch = tempDir(s"graft_watch_$key")
@@ -185,28 +174,18 @@ object StreamQueries {
     // join (real per-row state work parallelizes), 8 paid double the
     // fixed cost on the small keys for no measurable speedup; 4 is the
     // measured middle (r13 family sweeps: ~10 % under the 8-partition
-    // runs). Env-tunable for experiments.
-    val streamParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .flatMap(_.toIntOption).getOrElse(4)
+    // runs; r17 re-measured 2 vs 4 at parity).
+    val streamParts = 4
     val shufKey = "spark.sql.shuffle.partitions"
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val retainKey = "spark.sql.streaming.minBatchesToRetain"
-    // state-store provider, env-tunable for A/B (r17 verdict next-round
-    // #2): "rocksdb" swaps in the RocksDB provider for the replay scope.
-    // Measured r18 (interleaved family A/B): RocksDB pays JNI + native
-    // store open/commit per (partition × batch) and LOST ~2× on this
-    // bounded replay's tiny batches, so the HDFS-backed default stands —
-    // a production deployment with large keyed state would flip this env.
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val provider = sys.env.get("SPARK_GRAFT_STREAM_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other
-    }
+    // The state store stays Spark's HDFS-backed default. Measured r18
+    // (interleaved family A/B): RocksDB pays JNI + native store
+    // open/commit per (partition × batch) and lost 1.24× on this bounded
+    // replay's tiny batches.
     val prevShuffle = s.conf.get(shufKey)
     val prevNd = s.conf.get(ndKey)
     val prevRetain = s.conf.getOption(retainKey)
-    val prevProvider = s.conf.getOption(providerKey)
     // conf mutations live INSIDE the try whose finally restores them — a
     // failure between the two sets must not leak replay-scoped conf into
     // the rest of the session
@@ -228,45 +207,20 @@ object StreamQueries {
       // the bounded replay keeps ≤ a handful of batches, so the minimal
       // retention floor costs nothing and trims per-batch log purges
       s.conf.set(retainKey, "2")
-      provider.foreach(s.conf.set(providerKey, _))
       // Trigger.AvailableNow: the query drains every staged file (still
       // one per micro-batch under maxFilesPerTrigger) and STOPS ITSELF —
       // no processAllAvailable poll loop and no extra empty-batch probe
       // at the end of the replay
-      lap("setup")
-      val listener = if (!dbg) None else Some {
-        val l = new org.apache.spark.scheduler.SparkListener {
-          val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.put(js.jobId, System.nanoTime()): Unit
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val t0j = jobs.remove(je.jobId)
-            System.err.println(f"[stream-debug] $key job ${je.jobId} " +
-              f"${(System.nanoTime() - t0j) / 1e9}%.3f s")
-          }
-        }
-        s.sparkContext.addSparkListener(l); l
-      }
       val q = build(stream).writeStream.format("memory").queryName(sink)
         .outputMode(mode)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", watch.resolve("ckpt").toString)
         .start()
-      lap("start")
       try q.awaitTermination() finally q.stop()
-      lap("drain")
-      if (dbg) q.recentProgress.foreach(p =>
-        System.err.println(s"[stream-debug] $key batch ${p.batchId} " +
-          s"rows=${p.numInputRows} durations=${p.durationMs}"))
-      listener.foreach(s.sparkContext.removeSparkListener(_))
     } finally {
       s.conf.set(shufKey, prevShuffle)
       s.conf.set(ndKey, prevNd)
       prevRetain.fold(s.conf.unset(retainKey))(s.conf.set(retainKey, _))
-      if (provider.isDefined)
-        prevProvider.fold(s.conf.unset(providerKey))(s.conf.set(providerKey, _))
     }
     // The memory sink holds its rows on the DRIVER heap, and the
     // nanoTime-suffixed sink tables of past runs are otherwise never
@@ -283,15 +237,13 @@ object StreamQueries {
     // OOM pressure the spill originally fixed. The spill goes to real
     // disk (java.io.tmpdir), never the tmpfs scratch, so a large result
     // doesn't cost RAM twice.
-    val localMax = sys.env.get("SPARK_GRAFT_STREAM_LOCAL_MAX")
-      .flatMap(_.toLongOption).getOrElse(2000000L)
+    val localMax = 2000000
     // ONE driver read instead of count-then-collect (r17 optimization —
     // the count was a separate job per replayed key): probe localMax+1
     // rows; coming up short proves the full result fits the
     // LocalRelation path, otherwise fall through to the parquet spill.
-    val probeMax = math.min(localMax, Int.MaxValue.toLong - 1L).toInt
-    val rows = s.table(sink).limit(probeMax + 1).collect()
-    val result = if (rows.length <= probeMax) {
+    val rows = s.table(sink).limit(localMax + 1).collect()
+    val result = if (rows.length <= localMax) {
       val outSchema = s.table(sink).schema
       s.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
     } else {
@@ -301,7 +253,6 @@ object StreamQueries {
       s.table(sink).write.mode("overwrite").parquet(out)
       s.read.parquet(out)
     }
-    lap("collect")
     s.catalog.dropTempView(sink)
     // the manager's terminated-query bookkeeping pins the stopped query
     // (and through it the sink's rows) until reset

@@ -268,6 +268,31 @@ class MetricIndexSpec extends SparkTestBase {
       s"listing or schema job: ${ran.mkString("\n")}")
   }
 
+  test("a SQL metric index layout is pid-tagged, so another process's startup sweep keeps it") {
+    GraftSession.prepare(spark)
+    val s2 = spark
+    import s2.implicits._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def layouts(): Set[String] = {
+      val st = Files.list(tmp)
+      try st.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_metric_idx")).toSet
+      finally st.close()
+    }
+    val before = layouts()
+    val es = new graft.sql.EmdriveSession(spark)
+    es.register("pid_hashes",
+      Seq.tabulate(50)(i => (i.toLong, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "h"))
+    assert(es.sql(
+      "SELECT doc_id, dist FROM metric_search(pid_hashes, doc_id, h, 0, 64);").count() == 50)
+    val created = layouts() -- before
+    assert(created.nonEmpty)
+    // TempHygiene.sweepOrphans deletes untagged graft_* dirs older than
+    // 12 h; a pid-tagged one only once its process is gone
+    val tag = s"_p${ProcessHandle.current().pid()}"
+    assert(created.forall(_.endsWith(tag)), created)
+  }
+
   test("prefixesWithin enumerates exactly the prefixes a match can live in") {
     val probe = 0xA5L
     val within2 = MetricIndex.prefixesWithin(probe, 8, 2)
