@@ -32,6 +32,8 @@ object GraftSession {
 
   /** Apply graft settings/functions to an externally-created session (the
     * driver's Verify/Bench build their own session without our extension).
+    * Physical rules cannot be added after the session is built, so such a
+    * session runs without [[graft.plans.ParameterizeLiterals]].
     */
   def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -11,7 +11,8 @@ import graft.functions.{CcCandidates, CcValid, CdcChunks, CharShingles, ContentF
 
 /** SparkSessionExtensions entry point: injects graft's native Catalyst
   * expressions into the SQL function registry, so `spark.sql` and
-  * `call_function` can use them like built-ins (codegen included).
+  * `call_function` can use them like built-ins (codegen included), plus
+  * graft's optimizer rules and the physical [[ParameterizeLiterals]] rule.
   *
   * Register with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or post-hoc via [[GraftExtensions.registerFunctions]].
@@ -22,6 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    // physical only: a session built without the extension (the bare
+    // Verify/Bench session) has no hook to add it later and keeps its plans
+    ext.injectColumnar(_ => ParameterizeLiterals.Hook)
   }
 }
 

@@ -47,6 +47,12 @@ import graft.sql.{EmdriveSession, EmdriveSql}
 final class GraftServer(es: EmdriveSession, port: Int = 0,
     maxRows: Int = 10000, workers: Int = 8, host: String = "127.0.0.1") {
 
+  // The JDK server writes headers and body as two sends; without
+  // TCP_NODELAY the second waits for the client's delayed ACK (~40 ms per
+  // response). The JDK reads its own switch once, when the first server is
+  // built, so it is set before `create` unless the JVM already chose.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
   private val http = HttpServer.create(new InetSocketAddress(host, port), 0)
   private val pool = new ThreadPoolExecutor(workers, workers, 60, TimeUnit.SECONDS,
     new LinkedBlockingQueue[Runnable](100),

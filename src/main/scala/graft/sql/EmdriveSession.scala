@@ -89,12 +89,16 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       .orElse(Some(tableDir).filter(complete))
   }
 
-  /** Write-through hook: after a successful catalog swap, persist the
-    * table under the session's data directory (no-op for in-memory
-    * sessions). Runs AFTER eager domain validation, so a failed statement
-    * never reaches disk. */
-  private def persistIfDurable(name: String): Unit =
-    dataDir.foreach(dir => save(name, s"$dir/$name"))
+  /** Install `rel` as table `name` and return the installed relation.
+    * A durable session writes it under its data directory FIRST and
+    * installs the generation it wrote only once the write succeeded, so a
+    * statement whose save throws leaves the catalog as it was; an
+    * in-memory session installs at once. Callers run eager domain
+    * validation before this, so a failed statement never reaches disk. */
+  private def commit(name: String, rel: DataFrame): DataFrame = {
+    catalog(name) = dataDir.fold(rel)(dir => writeGeneration(rel, s"$dir/$name"))
+    catalog(name)
+  }
 
 
   /** DML targets must be TABLES: writing "into" a view would silently
@@ -508,13 +512,21 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
     * the immediately-previous one survives the publish, so a reader that
     * planned against it finishes its scan; only generations two saves back
     * (and the legacy in-place layout, once two gens exist) are dropped. */
-  def save(name: String, path: String): Unit = {
+  def save(name: String, path: String): Unit =
+    catalog(name) = writeGeneration(table(name), path)
+
+  /** Write `df` as a new generation under `path`, publish it (the
+    * protocol above) and return the relation reading it back. The read
+    * takes the schema that was just written, so it runs no schema-inference
+    * job over the new files (boot restore and `open`, which do not know
+    * the schema, keep inference; both yield the same schema). */
+  private def writeGeneration(df: DataFrame, path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val gen = new Path(target, f"gen-${System.currentTimeMillis()}%020d-" +
       java.util.UUID.randomUUID().toString)
-    table(name).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(gen.toString)
     // publish: pointer tmp-write + rename (a reader of CURRENT sees either
     // the old or the new generation name, never a partial file)
@@ -526,7 +538,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
     finally out.close()
     if (fs.exists(ptr)) fs.delete(ptr, false): Unit
     require(fs.rename(ptrTmp, ptr), s"save: rename $ptrTmp -> $ptr failed")
-    catalog(name) = spark.read.parquet(gen.toString)
+    val written = spark.read.schema(df.schema).parquet(gen.toString)
     // deferred cleanup: keep the new generation and the most recent other
     // complete one; everything older (plus any crashed tmp debris and the
     // legacy root-level layout once a previous gen exists) is unreachable
@@ -544,6 +556,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         .map(_.getPath).filter(p => p.getName.startsWith("part-") ||
           p.getName == "_SUCCESS")
         .foreach(p => fs.delete(p, false): Unit)
+    written
   }
 
   /** Attach a previously saved table, resolving the live generation the
@@ -805,13 +818,12 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
 
     case CreateTable(name, ifNotExists, schema) =>
       require(!views.contains(name), s"a view named $name exists")
-      if (!catalog.contains(name) || !ifNotExists) {
-        require(ifNotExists || !catalog.contains(name), s"table exists: $name")
-        catalog(name) = spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), schema)
-        persistIfDurable(name)
+      if (catalog.contains(name) && ifNotExists) catalog(name)
+      else {
+        require(!catalog.contains(name), s"table exists: $name")
+        commit(name, spark.createDataFrame(
+          java.util.Collections.emptyList[Row](), schema))
       }
-      catalog(name)
 
     case Insert(name, cols, rows) =>
       requireTable(name, "INSERT")
@@ -833,9 +845,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         spark.range(1).select(projected.toIndexedSeq: _*)
       }
       val appended = batches.reduce(_ unionByName _)
-      catalog(name) = target.unionByName(appended)
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, target.unionByName(appended))
 
     case InsertSelect(name, cols, chain) =>
       requireTable(name, "INSERT")
@@ -860,19 +870,15 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         if (named.contains(f.name)) guardedCast(col(f.name), f).as(f.name, f.metadata)
         else defaultCol(f).as(f.name, f.metadata)
       }
-      catalog(name) = target.unionByName(
-        renamed.select(projected.toIndexedSeq: _*))
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, target.unionByName(
+        renamed.select(projected.toIndexedSeq: _*)))
 
     case CreateAs(name, ifNotExists, chain) =>
       requireTable(name, "CREATE TABLE AS")
       if (catalog.contains(name) && ifNotExists) catalog(name)
       else {
         require(!catalog.contains(name), s"table exists: $name")
-        catalog(name) = lowerChain(chain)
-        persistIfDurable(name)
-        catalog(name)
+        commit(name, lowerChain(chain))
       }
 
     // ALTER TABLE (r15): schema evolution as catalog rewrites. ADD
@@ -889,10 +895,8 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       require(field.nullable,
         s"ADD COLUMN ${field.name}: existing rows have no value — " +
           "declare it NULLABLE(…)")
-      catalog(name) = t.select(t.columns.map(qcol(t, _)) :+
-        lit(null).cast(field.dataType).as(field.name, field.metadata): _*)
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, t.select(t.columns.map(qcol(t, _)) :+
+        lit(null).cast(field.dataType).as(field.name, field.metadata): _*))
 
     case AlterDrop(name, c) =>
       requireTable(name, "ALTER TABLE")
@@ -906,26 +910,20 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         !f.metadata.contains("graft.metricKey"),
         s"cannot drop key column $c (PRIMARY/METRIC KEY)")
       require(t.columns.length > 1, "cannot drop the last column")
-      catalog(name) = t.drop(c)
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, t.drop(c))
 
     case AlterRename(name, from, to) =>
       requireTable(name, "ALTER TABLE")
       val t = table(name)
       require(t.columns.contains(from), s"unknown column: $from")
       require(!t.columns.contains(to), s"column exists: $to")
-      catalog(name) = t.withColumnRenamed(from, to)
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, t.withColumnRenamed(from, to))
 
     // TRUNCATE (r15): DELETE-without-WHERE spelled the ANSI way — the
     // schema (and its declared-type metadata) survives, the rows go
     case TruncateStmt(name) =>
       requireTable(name, "TRUNCATE")
-      catalog(name) = table(name).limit(0)
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, table(name).limit(0))
 
     // COPY t TO 'path' (r16): distributed egress — the relation (table
     // or view) writes as a DIRECTORY of part files in the named format,
@@ -992,20 +990,16 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         domainViolation(col(f.name), f).map(f.name -> _)), "COPY")
       val projected = schema.fields.map(f =>
         guardedCast(col(f.name), f).as(f.name, f.metadata))
-      catalog(name) = target.unionByName(
-        src.select(projected.toIndexedSeq: _*))
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, target.unionByName(
+        src.select(projected.toIndexedSeq: _*)))
 
     case Delete(name, where, None) =>
       requireTable(name, "DELETE")
       val t = table(name)
       // keep = NOT coalesce(pred, false): a NULL predicate KEEPS the row
       // (ANSI three-valued DELETE); no WHERE truncates
-      catalog(name) = where.fold(t.limit(0))(pr =>
-        t.filter(!coalesce(predCol(t, pr), lit(false))))
-      persistIfDurable(name)
-      catalog(name)
+      commit(name, where.fold(t.limit(0))(pr =>
+        t.filter(!coalesce(predCol(t, pr), lit(false)))))
 
     // DELETE … USING (r15): delete the target rows with AT LEAST ONE
     // source match — ONE anti join (keep = no match; a NULL predicate is
@@ -1025,11 +1019,9 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       // the predicate lowers to unbound qualified refs, resolvable by
       // the join itself (disjoint aliased name spaces on the two sides)
       val cond = predCol(ta.crossJoin(sb), pr)
-      catalog(name) = ta.join(sb, cond, "left_anti")
+      commit(name, ta.join(sb, cond, "left_anti")
         .select(t.schema.fields.map(f =>
-          qref(s"$name.${f.name}").as(f.name, f.metadata)).toIndexedSeq: _*)
-      persistIfDurable(name)
-      catalog(name)
+          qref(s"$name.${f.name}").as(f.name, f.metadata)).toIndexedSeq: _*))
 
     case Delete(_, None, Some(_)) => throw new IllegalArgumentException(
       "DELETE … USING requires a WHERE join predicate")
@@ -1072,15 +1064,13 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
           val f = schema.fields.find(_.name == c).get
           domainViolation(operandCol(joined, o), f).map(v => c -> (matched && v))
         }, "UPDATE")
-      catalog(name) = joined.select(schema.fields.map { f =>
+      commit(name, joined.select(schema.fields.map { f =>
         setMap.get(f.name) match {
           case Some(o) => when(matched, guardedCast(operandCol(joined, o), f))
             .otherwise(qref(s"$name.${f.name}")).as(f.name, f.metadata)
           case None => qref(s"$name.${f.name}").as(f.name, f.metadata)
         }
-      }.toIndexedSeq: _*)
-      persistIfDurable(name)
-      catalog(name)
+      }.toIndexedSeq: _*))
 
     case Update(name, sets, where, None) =>
       requireTable(name, "UPDATE")
@@ -1102,15 +1092,13 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         }, "UPDATE")
       // ANSI UPDATE: every SET expression reads the OLD row — all new
       // values computed in ONE projection, cast back to declared types
-      catalog(name) = t.select(schema.fields.map { f =>
+      commit(name, t.select(schema.fields.map { f =>
         setMap.get(f.name) match {
           case Some(o) => when(cond, guardedCast(operandCol(t, o), f))
             .otherwise(col(f.name)).as(f.name, f.metadata)
           case None => col(f.name)
         }
-      }.toIndexedSeq: _*)
-      persistIfDurable(name)
-      catalog(name)
+      }.toIndexedSeq: _*))
 
     case Merge(tName, tAlias, sName, sAlias, ons, matchedSets, matchedDelete,
         notMatched) =>
@@ -1204,9 +1192,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       }
       val result = inserted.foldLeft(untouched.unionByName(matchedOut))(
         _ unionByName _)
-      catalog(tName) = result
-      persistIfDurable(tName)
-      catalog(tName)
+      commit(tName, result)
 
     case sel: Select => lowerSelect(sel)
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -41,25 +39,25 @@ class ClusteringSpec extends SparkTestBase {
 
   test("2-D box query skips row groups on the z-ordered layout") {
     GraftSession.prepare(spark)
-    val base = Files.createTempDirectory("graft-zorder").toString
     val orders = Tables.orders(spark, "/root/testdata/sf0.01")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+    withTempDir("graft-zorder") { base =>
+      // small row groups so test-sized data spans many of them
+      Clustering.writeZOrdered(orders, s"$base/zord",
+        col("o_custkey"), (col("o_totalprice") / 1000).cast("long"),
+        numFiles = 4, blockSize = 32 * 1024)
+      orders.orderBy(col("o_orderkey")) // key-ordered = unclustered for the box dims
+        .repartitionByRange(4, col("o_orderkey"))
+        .write.mode("overwrite").option("parquet.block.size", (32 * 1024).toString)
+        .parquet(s"$base/linear")
 
-    // small row groups so test-sized data spans many of them
-    Clustering.writeZOrdered(orders, s"$base/zord",
-      col("o_custkey"), (col("o_totalprice") / 1000).cast("long"),
-      numFiles = 4, blockSize = 32 * 1024)
-    orders.orderBy(col("o_orderkey")) // key-ordered = unclustered for the box dims
-      .repartitionByRange(4, col("o_orderkey"))
-      .write.mode("overwrite").option("parquet.block.size", (32 * 1024).toString)
-      .parquet(s"$base/linear")
-
-    val (nZ, readZ) = boxRowsRead(s"$base/zord")
-    val (nL, readL) = boxRowsRead(s"$base/linear")
-    assert(nZ == nL, s"layouts must agree on results: $nZ vs $nL")
-    assert(nZ > 0)
-    // the clustered layout reads a fraction of what the linear one does
-    assert(readZ * 2 <= readL,
-      s"expected >=2x row-group skipping: zordered read $readZ rows, linear $readL")
+      val (nZ, readZ) = boxRowsRead(s"$base/zord")
+      val (nL, readL) = boxRowsRead(s"$base/linear")
+      assert(nZ == nL, s"layouts must agree on results: $nZ vs $nL")
+      assert(nZ > 0)
+      // the clustered layout reads a fraction of what the linear one does
+      assert(readZ * 2 <= readL,
+        s"expected >=2x row-group skipping: zordered read $readZ rows, linear $readL")
+    }
   }
 }

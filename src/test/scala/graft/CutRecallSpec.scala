@@ -23,19 +23,20 @@ class CutRecallSpec extends SparkTestBase {
 
   /** Write a synthetic corpus with the driver documents schema into a temp
     * dir laid out like a testdata SF dir, so production queries run on it
-    * unmodified via SparkEntry.queries(name)(spark, dir). */
-  private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cut").toString
-    val s = spark
-    import s.implicits._
-    rows.toDF("doc_id", "text")
-      .withColumn("lang", lit("en"))
-      .withColumn("source", lit("synth"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(4)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
+    * unmodified via SparkEntry.queries(name)(spark, dir); the dir is
+    * deleted once `body` returns. */
+  private def withDocs[T](rows: Seq[(Long, String)])(body: String => T): T =
+    withTempDir("graft_cut") { dir =>
+      val s = spark
+      import s.implicits._
+      rows.toDF("doc_id", "text")
+        .withColumn("lang", lit("en"))
+        .withColumn("source", lit("synth"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      body(dir)
+    }
 
   test("WordMaxDf: boilerplate shingle over the cut is pruned; survivors use post-cut denominators") {
     GraftSession.prepare(spark)
@@ -54,23 +55,24 @@ class CutRecallSpec extends SparkTestBase {
       2001L -> "alpha beta gamma delta epsilon eta",
       3000L -> "shared boilerplate phrase here pq pr ps pt",
       3001L -> "shared boilerplate phrase here pq pr ps pu")
-    val dir = writeDocs(docs)
-    val got = SparkEntry.queries("q_dedup_jaccard")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(got.keySet == Set((2000L, 2001L), (3000L, 3001L)), s"pairs: ${got.keySet}")
-    assert(math.abs(got((2000L, 2001L)) - 0.6) < 1e-12)
-    assert(math.abs(got((3000L, 3001L)) - 0.6) < 1e-12, // NOT 5/7: cut semantics
-      s"post-cut jaccard ${got((3000L, 3001L))}")
+    withDocs(docs) { dir =>
+      val got = SparkEntry.queries("q_dedup_jaccard")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(got.keySet == Set((2000L, 2001L), (3000L, 3001L)), s"pairs: ${got.keySet}")
+      assert(math.abs(got((2000L, 2001L)) - 0.6) < 1e-12)
+      assert(math.abs(got((3000L, 3001L)) - 0.6) < 1e-12, // NOT 5/7: cut semantics
+        s"post-cut jaccard ${got((3000L, 3001L))}")
 
-    // Candidate pruning is real, not cosmetic: at threshold 0 the cut
-    // leaves exactly the 2 genuine pairs, while uncut the two boilerplate
-    // shingles connect all 1052 carriers pairwise (1052·1051/2 pairs) plus
-    // the clean pair.
-    val shingled = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), call_function("word_shingles", col("text"), lit(3)).as("sh"))
-    assert(Dedup.jaccardPairs(shingled, 0.0).count() == 2L)
-    assert(Dedup.jaccardPairs(shingled, 0.0, maxDf = Int.MaxValue).count() ==
-      1052L * 1051L / 2 + 1)
+      // Candidate pruning is real, not cosmetic: at threshold 0 the cut
+      // leaves exactly the 2 genuine pairs, while uncut the two boilerplate
+      // shingles connect all 1052 carriers pairwise (1052·1051/2 pairs) plus
+      // the clean pair.
+      val shingled = spark.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id"), call_function("word_shingles", col("text"), lit(3)).as("sh"))
+      assert(Dedup.jaccardPairs(shingled, 0.0).count() == 2L)
+      assert(Dedup.jaccardPairs(shingled, 0.0, maxDf = Int.MaxValue).count() ==
+        1052L * 1051L / 2 + 1)
+    }
   }
 
   /** In-test oracle: char-n-gram Jaccard over df-pruned gram sets — an
@@ -98,18 +100,19 @@ class CutRecallSpec extends SparkTestBase {
     val docs = boiler ++ Seq(
       7000L -> (prefix + "zzzz aaaa bbbb cccc"),
       7001L -> (prefix + "zzzz aaaa bbbb dddd"))
-    val dir = writeDocs(docs)
-    val expected = ngramCutOracle(docs, n = 5, maxDf = 100, thr = 0.5)
-    val expectedUncut = ngramCutOracle(docs, n = 5, maxDf = Int.MaxValue, thr = 0.5)
-    // the synthetic boilerplate really crosses the threshold and really
-    // changes outcomes — otherwise this test would prove nothing
-    assert(expected != expectedUncut)
-    val got = SparkEntry.queries("q_dedup_ngram")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(got.keySet == expected.keySet,
-      s"spark=${got.keySet.size} oracle=${expected.keySet.size} " +
-        s"diff=${expected.keySet.diff(got.keySet).take(5)}")
-    got.foreach { case (k, j) => assert(math.abs(j - expected(k)) < 1e-12, s"$k: $j") }
+    withDocs(docs) { dir =>
+      val expected = ngramCutOracle(docs, n = 5, maxDf = 100, thr = 0.5)
+      val expectedUncut = ngramCutOracle(docs, n = 5, maxDf = Int.MaxValue, thr = 0.5)
+      // the synthetic boilerplate really crosses the threshold and really
+      // changes outcomes — otherwise this test would prove nothing
+      assert(expected != expectedUncut)
+      val got = SparkEntry.queries("q_dedup_ngram")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(got.keySet == expected.keySet,
+        s"spark=${got.keySet.size} oracle=${expected.keySet.size} " +
+          s"diff=${expected.keySet.diff(got.keySet).take(5)}")
+      got.foreach { case (k, j) => assert(math.abs(j - expected(k)) < 1e-12, s"$k: $j") }
+    }
   }
 
   test("WindowMaxDf: boilerplate 15-token window over the cut yields no pairs; unique runs do") {
@@ -122,12 +125,13 @@ class CutRecallSpec extends SparkTestBase {
     val run = (1 to 16).map(k => s"r$k").mkString(" ")
     val docs = (0L until 110L).map(i => i -> s"u$i $para v$i") ++ Seq(
       5000L -> s"p5000 $run", 5001L -> s"q5001 $run")
-    val dir = writeDocs(docs)
-    val got = SparkEntry.queries("q_window_dedup")(spark, dir)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    // if the cut were dropped, the boilerplate window alone would add
-    // 110·109/2 = 5995 pairs here
-    assert(got == Map((5000L, 5001L) -> 2L), s"got $got")
+    withDocs(docs) { dir =>
+      val got = SparkEntry.queries("q_window_dedup")(spark, dir)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
+      // if the cut were dropped, the boilerplate window alone would add
+      // 110·109/2 = 5995 pairs here
+      assert(got == Map((5000L, 5001L) -> 2L), s"got $got")
+    }
   }
 
   test("LshMaxPerBucket: a 1010-doc identical-text bucket is skipped; exact dedup owns it") {
@@ -143,14 +147,15 @@ class CutRecallSpec extends SparkTestBase {
     val docs = (0L until 1010L).map(i => i -> same) ++ Seq(
       6000L -> base,
       6001L -> ((1 to 19).map(k => s"w$k").mkString(" ") + " wX"))
-    val dir = writeDocs(docs)
-    val got = SparkEntry.queries("q_minhash_lsh")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(got.keySet == Set((6000L, 6001L)), s"pairs: ${got.keySet}")
-    assert(math.abs(got((6000L, 6001L)) - 17.0 / 19.0) < 1e-12)
-    // ...and the identical mass is indeed caught by the exact path
-    val exact = SparkEntry.queries("q_dedup_exact")(spark, dir).collect()
-    assert(exact.exists(_.getLong(1) == 1010L))
+    withDocs(docs) { dir =>
+      val got = SparkEntry.queries("q_minhash_lsh")(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(got.keySet == Set((6000L, 6001L)), s"pairs: ${got.keySet}")
+      assert(math.abs(got((6000L, 6001L)) - 17.0 / 19.0) < 1e-12)
+      // ...and the identical mass is indeed caught by the exact path
+      val exact = SparkEntry.queries("q_dedup_exact")(spark, dir).collect()
+      assert(exact.exists(_.getLong(1) == 1010L))
+    }
   }
 
   test("banded range join equals the naive quadratic join on a dense synthetic corpus") {
@@ -159,28 +164,29 @@ class CutRecallSpec extends SparkTestBase {
     // orders at gaps 0, 1, 29, 30, 31, 59, 60 days across band edges —
     // the banding must neither drop an in-window pair that spans a band
     // boundary nor double-count one that shares two bands
-    val dir = java.nio.file.Files.createTempDirectory("graft_range").toString
-    val s2 = spark
-    import s2.implicits._
-    val rows = for {
-      cust <- 0L until 40L
-      k <- 0 until 6
-    } yield (cust * 10 + k, cust,
-      java.sql.Timestamp.valueOf(
-        java.time.LocalDate.of(1995, 1, 1)
-          .plusDays(cust * 3 + Seq(0, 1, 29, 30, 31, 60)(k))
-          .atStartOfDay()))
-    rows.toDF("o_orderkey", "o_custkey", "o_orderdate")
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val got = SparkEntry.queries("q_range_join")(spark, dir)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val naive = (for {
-      (ka, ca, ta) <- rows; (kb, cb, tb) <- rows
-      if ca == cb && ka < kb
-      gap = math.abs(ta.getTime - tb.getTime) / 86400000L if gap <= 30
-    } yield (ka, kb, gap)).toSet
-    assert(got == naive, s"got=${got.size} naive=${naive.size} " +
-      s"missing=${naive.diff(got).take(5)} extra=${got.diff(naive).take(5)}")
+    withTempDir("graft_range") { dir =>
+      val s2 = spark
+      import s2.implicits._
+      val rows = for {
+        cust <- 0L until 40L
+        k <- 0 until 6
+      } yield (cust * 10 + k, cust,
+        java.sql.Timestamp.valueOf(
+          java.time.LocalDate.of(1995, 1, 1)
+            .plusDays(cust * 3 + Seq(0, 1, 29, 30, 31, 60)(k))
+            .atStartOfDay()))
+      rows.toDF("o_orderkey", "o_custkey", "o_orderdate")
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      val got = SparkEntry.queries("q_range_join")(spark, dir)
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      val naive = (for {
+        (ka, ca, ta) <- rows; (kb, cb, tb) <- rows
+        if ca == cb && ka < kb
+        gap = math.abs(ta.getTime - tb.getTime) / 86400000L if gap <= 30
+      } yield (ka, kb, gap)).toSet
+      assert(got == naive, s"got=${got.size} naive=${naive.size} " +
+        s"missing=${naive.diff(got).take(5)} extra=${got.diff(naive).take(5)}")
+    }
   }
 
   test("SRP-LSH recall floor vs brute-force exact cosine pairs at sf0.001") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,51 +16,53 @@ class EmdriveSurfaceSpec extends SparkTestBase {
 
   test("reference story: CREATE TABLE -> INSERT -> metric threshold search") {
     GraftSession.prepare(spark)
-    val dir = Files.createTempDirectory("graft-story").toString + "/photos"
+    withTempDir("graft-story") { tmp =>
+      val dir = tmp + "/photos"
 
-    // CREATE TABLE photos (id UUID PRIMARY KEY, added TIMESTAMP,
-    //   caption NULLABLE(STRING(80)), phash UINT64 METRIC KEY)
-    val (name, schema) = SchemaMapper.parseCreateTable(
-      """CREATE TABLE photos (
-        |  id UUID PRIMARY KEY,
-        |  added TIMESTAMP,
-        |  caption NULLABLE(STRING(80)),
-        |  phash UINT64 METRIC KEY
-        |)""".stripMargin)
-    assert(name == "photos")
+      // CREATE TABLE photos (id UUID PRIMARY KEY, added TIMESTAMP,
+      //   caption NULLABLE(STRING(80)), phash UINT64 METRIC KEY)
+      val (name, schema) = SchemaMapper.parseCreateTable(
+        """CREATE TABLE photos (
+          |  id UUID PRIMARY KEY,
+          |  added TIMESTAMP,
+          |  caption NULLABLE(STRING(80)),
+          |  phash UINT64 METRIC KEY
+          |)""".stripMargin)
+      assert(name == "photos")
 
-    // INSERT INTO photos VALUES (ULID(), NOW(), caption, hash) — ids and
-    // timestamps generated executor-side, the phash from the caption
-    val captions = Seq("a small cat sat on a warm mat in the sun", "a small cat sat on the warm mat in the sun", "sunset over the stormy winter sea")
-    import scala.jdk.CollectionConverters._
-    val src = spark.createDataFrame(
-      captions.map(Row(_)).asJava,
-      StructType(Seq(StructField("caption", StringType, nullable = true))))
-    val rows = src.select(
-      call_function("ulid").as("id"),
-      now().as("added"),
-      col("caption"),
-      call_function("simhash64", split(col("caption"), " "))
-        .cast(DecimalType(20, 0)).as("phash"))
-    rows.write.parquet(dir)
+      // INSERT INTO photos VALUES (ULID(), NOW(), caption, hash) — ids and
+      // timestamps generated executor-side, the phash from the caption
+      val captions = Seq("a small cat sat on a warm mat in the sun", "a small cat sat on the warm mat in the sun", "sunset over the stormy winter sea")
+      import scala.jdk.CollectionConverters._
+      val src = spark.createDataFrame(
+        captions.map(Row(_)).asJava,
+        StructType(Seq(StructField("caption", StringType, nullable = true))))
+      val rows = src.select(
+        call_function("ulid").as("id"),
+        now().as("added"),
+        col("caption"),
+        call_function("simhash64", split(col("caption"), " "))
+          .cast(DecimalType(20, 0)).as("phash"))
+      rows.write.parquet(dir)
 
-    // SELECT id, caption FROM photos WHERE phash @ probe < 16
-    val photos = spark.read.parquet(dir)
-    val probe = photos.filter(col("caption") === "a small cat sat on a warm mat in the sun")
-      .select(col("phash").cast("long").as("probe"))
-    val near = photos.crossJoin(broadcast(probe))
-      .select(col("caption"),
-        bit_count(col("phash").cast("long").bitwiseXOR(col("probe"))).as("dist"))
-      .filter(col("dist") < 16)
-      .collect()
-    val capts = near.map(_.getString(0)).toSet
-    assert(capts.contains("a small cat sat on a warm mat in the sun") && capts.contains("a small cat sat on the warm mat in the sun"))
-    assert(!capts.contains("sunset over the stormy winter sea"))
+      // SELECT id, caption FROM photos WHERE phash @ probe < 16
+      val photos = spark.read.parquet(dir)
+      val probe = photos.filter(col("caption") === "a small cat sat on a warm mat in the sun")
+        .select(col("phash").cast("long").as("probe"))
+      val near = photos.crossJoin(broadcast(probe))
+        .select(col("caption"),
+          bit_count(col("phash").cast("long").bitwiseXOR(col("probe"))).as("dist"))
+        .filter(col("dist") < 16)
+        .collect()
+      val capts = near.map(_.getString(0)).toSet
+      assert(capts.contains("a small cat sat on a warm mat in the sun") && capts.contains("a small cat sat on the warm mat in the sun"))
+      assert(!capts.contains("sunset over the stormy winter sea"))
 
-    // ids are ULIDs, timestamps are now-ish, UUID type round-trips as string
-    val back = photos.collect()
-    assert(back.map(_.getString(0)).toSet.size == 3)
-    assert(back.forall(_.getString(0).length == 26))
+      // ids are ULIDs, timestamps are now-ish, UUID type round-trips as string
+      val back = photos.collect()
+      assert(back.map(_.getString(0)).toSet.size == 3)
+      assert(back.forall(_.getString(0).length == 26))
+    }
   }
 
   test("README story from SQL strings: CREATE -> INSERT -> @ threshold SELECT") {
@@ -693,16 +693,60 @@ class EmdriveSurfaceSpec extends SparkTestBase {
 
   test("SQL front-end: save/open round-trips the catalog through parquet") {
     GraftSession.prepare(spark)
-    val dir = Files.createTempDirectory("graft-sqlsave").toString + "/t"
-    val es = new graft.sql.EmdriveSession(spark)
-    es.sql("CREATE TABLE t (id UINT32 PRIMARY KEY, name STRING);")
-    es.sql("INSERT INTO t (id, name) VALUES (1, 'a'), (2, 'b');")
-    es.save("t", dir)
-    // a fresh session opens the saved files and queries them
-    val es2 = new graft.sql.EmdriveSession(spark)
-    es2.open("t", dir)
-    val out = es2.sql("SELECT name FROM t WHERE id = 2;").collect()
-    assert(out.map(_.getString(0)).toSeq == Seq("b"))
+    withTempDir("graft-sqlsave") { tmp =>
+      val dir = tmp + "/t"
+      val es = new graft.sql.EmdriveSession(spark)
+      es.sql("CREATE TABLE t (id UINT32 PRIMARY KEY, name STRING);")
+      es.sql("INSERT INTO t (id, name) VALUES (1, 'a'), (2, 'b');")
+      es.save("t", dir)
+      // a fresh session opens the saved files and queries them
+      val es2 = new graft.sql.EmdriveSession(spark)
+      es2.open("t", dir)
+      val out = es2.sql("SELECT name FROM t WHERE id = 2;").collect()
+      assert(out.map(_.getString(0)).toSeq == Seq("b"))
+    }
+  }
+
+  test("durable INSERT runs one job and installs the schema boot restore infers") {
+    GraftSession.prepare(spark)
+    withTempDir("graft-durable-insert") { dir =>
+      val es = new graft.sql.EmdriveSession(spark, Some(dir))
+      es.sql("""CREATE TABLE boats (
+               |  id UINT32 PRIMARY KEY,
+               |  name STRING(40),
+               |  phash NULLABLE(UINT64) METRIC KEY);""".stripMargin)
+      val (_, jobs) = jobsDuring(
+        es.sql("INSERT INTO boats (id, name, phash) VALUES (1, 'Dinghy', 17);"))
+      assert(jobs.size == 1, jobs.mkString("\n"))
+      // the read-back takes the written schema; boot restore infers it
+      // from the same generation's footers — names, types, nullability
+      // and the graft.* role metadata must agree
+      val installed = es.table("boats").schema
+      val restored = new graft.sql.EmdriveSession(spark, Some(dir))
+      assert(installed == restored.table("boats").schema)
+      assert(installed("id").metadata.contains(SchemaMapper.PrimaryKeyMetadata))
+      assert(restored.sql("SELECT id, name FROM boats;").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((1L, "Dinghy")))
+    }
+  }
+
+  test("a durable statement whose save fails leaves the catalog as it was") {
+    GraftSession.prepare(spark)
+    withTempDir("graft-failed-save") { dir =>
+      // a regular file where table t's directory would go: every save of t throws
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "t"), "not a table")
+      val es = new graft.sql.EmdriveSession(spark, Some(dir))
+      intercept[Exception](es.sql("CREATE TABLE t (id UINT32 PRIMARY KEY);"))
+      assert(!es.has("t"))
+      assert(!es.sql("SHOW TABLES;").collect().exists(_.getString(0) == "t"))
+      // an attached in-memory t: the failed INSERT's row must not show
+      val mem = new graft.sql.EmdriveSession(spark)
+      mem.sql("CREATE TABLE t (id UINT32 PRIMARY KEY);")
+      mem.sql("INSERT INTO t (id) VALUES (1);")
+      es.register("t", mem.table("t"))
+      intercept[Exception](es.sql("INSERT INTO t (id) VALUES (2);"))
+      assert(es.sql("SELECT id FROM t;").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    }
   }
 
   test("SQL extension: JOIN ON lowers to an engine equi-join, either key order") {
@@ -1217,69 +1261,70 @@ class EmdriveSurfaceSpec extends SparkTestBase {
   test("SQL r16: COPY TO / COPY FROM — round trip, guards, atomicity") {
     GraftSession.prepare(spark)
     val es = new graft.sql.EmdriveSession(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft_copy_spec").toString
-    es.sql("CREATE TABLE t (k UINT32 PRIMARY KEY, v UINT32);")
-    es.sql("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30);")
-    es.sql(s"COPY t TO '$base/t_csv' (FORMAT CSV, HEADER);")
-    // read-back APPEND into an empty twin, then once more = doubled rows
-    es.sql("CREATE TABLE t2 (k UINT32 PRIMARY KEY, v UINT32);")
-    es.sql(s"COPY t2 FROM '$base/t_csv' (FORMAT CSV, HEADER);")
-    assert(es.sql("SELECT k FROM t2 ORDER BY k;").collect()
-      .map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
-    es.sql(s"COPY t2 FROM '$base/t_csv' (FORMAT CSV, HEADER);")
-    assert(es.sql("SELECT COUNT(*) AS n FROM t2;").collect()(0).getLong(0) == 6L)
-    // format inference from the path extension
-    es.sql(s"COPY t TO '$base/t.json';")
-    es.sql("CREATE TABLE t3 (k UINT32 PRIMARY KEY, v UINT32);")
-    es.sql(s"COPY t3 FROM '$base/t.json';")
-    assert(es.sql("SELECT COUNT(*) AS n FROM t3;").collect()(0).getLong(0) == 3L)
-    // COPY (SELECT …) TO — query export; FROM with a query is refused
-    es.sql(s"COPY (SELECT k FROM t WHERE v >= 20) TO '$base/q' (FORMAT PARQUET);")
-    es.sql("CREATE TABLE tq (k UINT32 PRIMARY KEY);")
-    es.sql(s"COPY tq FROM '$base/q' (FORMAT PARQUET);")
-    assert(es.sql("SELECT k FROM tq ORDER BY k;").collect()
-      .map(_.getLong(0)).toSeq == Seq(2L, 3L))
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY (SELECT k FROM t) FROM '$base/q' (FORMAT PARQUET);")
+    withTempDir("graft_copy_spec") { base =>
+      es.sql("CREATE TABLE t (k UINT32 PRIMARY KEY, v UINT32);")
+      es.sql("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30);")
+      es.sql(s"COPY t TO '$base/t_csv' (FORMAT CSV, HEADER);")
+      // read-back APPEND into an empty twin, then once more = doubled rows
+      es.sql("CREATE TABLE t2 (k UINT32 PRIMARY KEY, v UINT32);")
+      es.sql(s"COPY t2 FROM '$base/t_csv' (FORMAT CSV, HEADER);")
+      assert(es.sql("SELECT k FROM t2 ORDER BY k;").collect()
+        .map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+      es.sql(s"COPY t2 FROM '$base/t_csv' (FORMAT CSV, HEADER);")
+      assert(es.sql("SELECT COUNT(*) AS n FROM t2;").collect()(0).getLong(0) == 6L)
+      // format inference from the path extension
+      es.sql(s"COPY t TO '$base/t.json';")
+      es.sql("CREATE TABLE t3 (k UINT32 PRIMARY KEY, v UINT32);")
+      es.sql(s"COPY t3 FROM '$base/t.json';")
+      assert(es.sql("SELECT COUNT(*) AS n FROM t3;").collect()(0).getLong(0) == 3L)
+      // COPY (SELECT …) TO — query export; FROM with a query is refused
+      es.sql(s"COPY (SELECT k FROM t WHERE v >= 20) TO '$base/q' (FORMAT PARQUET);")
+      es.sql("CREATE TABLE tq (k UINT32 PRIMARY KEY);")
+      es.sql(s"COPY tq FROM '$base/q' (FORMAT PARQUET);")
+      assert(es.sql("SELECT k FROM tq ORDER BY k;").collect()
+        .map(_.getLong(0)).toSeq == Seq(2L, 3L))
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY (SELECT k FROM t) FROM '$base/q' (FORMAT PARQUET);")
+      }
+      // PARTITION_BY: hive-partitioned egress — one directory per key
+      // value; a partitioned read-back recovers every row, and the
+      // partition column survives as data
+      es.sql(s"COPY t TO '$base/part' (FORMAT PARQUET, PARTITION_BY (v));")
+      assert(new java.io.File(s"$base/part/v=10").isDirectory)
+      es.sql("CREATE TABLE tp (k UINT32 PRIMARY KEY, v UINT32);")
+      es.sql(s"COPY tp FROM '$base/part' (FORMAT PARQUET);")
+      assert(es.sql("SELECT k, v FROM tp ORDER BY k;").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY t TO '$base/p2' (FORMAT PARQUET, PARTITION_BY (zz));")
+      }
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY tp FROM '$base/part' (FORMAT PARQUET, PARTITION_BY (v));")
+      }
+      // COPY TO exports a VIEW's relation; COPY FROM needs a real table
+      es.sql("CREATE VIEW tv AS SELECT k FROM t;")
+      es.sql(s"COPY tv TO '$base/tv' (FORMAT PARQUET);")
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY tv FROM '$base/tv' (FORMAT PARQUET);")
+      }
+      // unknown format / uninferrable path are refused at parse time
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY t TO '$base/x' (FORMAT xml);")
+      }
+      intercept[IllegalArgumentException] { es.sql(s"COPY t TO '$base/x';") }
+      // domain validation is eager and ATOMIC: a UINT8 target refuses an
+      // out-of-range file value and keeps its rows untouched
+      es.sql("CREATE TABLE wide (k UINT32 PRIMARY KEY, v UINT16);")
+      es.sql("INSERT INTO wide VALUES (9, 300);")
+      es.sql(s"COPY wide TO '$base/wide_csv' (FORMAT CSV, HEADER);")
+      es.sql("CREATE TABLE narrow (k UINT32 PRIMARY KEY, v UINT8);")
+      es.sql("INSERT INTO narrow VALUES (1, 5);")
+      intercept[Exception] {
+        es.sql(s"COPY narrow FROM '$base/wide_csv' (FORMAT CSV, HEADER);")
+      }
+      assert(es.sql("SELECT COUNT(*) AS n FROM narrow;").collect()(0).getLong(0) == 1L)
     }
-    // PARTITION_BY: hive-partitioned egress — one directory per key
-    // value; a partitioned read-back recovers every row, and the
-    // partition column survives as data
-    es.sql(s"COPY t TO '$base/part' (FORMAT PARQUET, PARTITION_BY (v));")
-    assert(new java.io.File(s"$base/part/v=10").isDirectory)
-    es.sql("CREATE TABLE tp (k UINT32 PRIMARY KEY, v UINT32);")
-    es.sql(s"COPY tp FROM '$base/part' (FORMAT PARQUET);")
-    assert(es.sql("SELECT k, v FROM tp ORDER BY k;").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      == Seq((1L, 10L), (2L, 20L), (3L, 30L)))
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY t TO '$base/p2' (FORMAT PARQUET, PARTITION_BY (zz));")
-    }
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY tp FROM '$base/part' (FORMAT PARQUET, PARTITION_BY (v));")
-    }
-    // COPY TO exports a VIEW's relation; COPY FROM needs a real table
-    es.sql("CREATE VIEW tv AS SELECT k FROM t;")
-    es.sql(s"COPY tv TO '$base/tv' (FORMAT PARQUET);")
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY tv FROM '$base/tv' (FORMAT PARQUET);")
-    }
-    // unknown format / uninferrable path are refused at parse time
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY t TO '$base/x' (FORMAT xml);")
-    }
-    intercept[IllegalArgumentException] { es.sql(s"COPY t TO '$base/x';") }
-    // domain validation is eager and ATOMIC: a UINT8 target refuses an
-    // out-of-range file value and keeps its rows untouched
-    es.sql("CREATE TABLE wide (k UINT32 PRIMARY KEY, v UINT16);")
-    es.sql("INSERT INTO wide VALUES (9, 300);")
-    es.sql(s"COPY wide TO '$base/wide_csv' (FORMAT CSV, HEADER);")
-    es.sql("CREATE TABLE narrow (k UINT32 PRIMARY KEY, v UINT8);")
-    es.sql("INSERT INTO narrow VALUES (1, 5);")
-    intercept[Exception] {
-      es.sql(s"COPY narrow FROM '$base/wide_csv' (FORMAT CSV, HEADER);")
-    }
-    assert(es.sql("SELECT COUNT(*) AS n FROM narrow;").collect()(0).getLong(0) == 1L)
   }
 
   test("SQL r16: DISTINCT aggregates + typed literals — guards") {
@@ -2354,30 +2399,31 @@ class EmdriveSurfaceSpec extends SparkTestBase {
   test("SQL r17: COPY TO overwrite guard + option validation") {
     GraftSession.prepare(spark)
     val es = new graft.sql.EmdriveSession(spark)
-    val base = java.nio.file.Files.createTempDirectory("graft_ow_spec").toString
-    es.sql("CREATE TABLE t (k UINT32 PRIMARY KEY);")
-    es.sql("INSERT INTO t VALUES (1), (2);")
-    es.sql(s"COPY t TO '$base/out' (FORMAT PARQUET);") // fresh target: fine
-    // a non-empty existing target is refused WITHOUT the explicit opt-in
-    // — and the refusal leaves the existing data untouched
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY t TO '$base/out' (FORMAT PARQUET);")
-    }
-    assert(spark.read.parquet(s"$base/out").count() == 2L)
-    es.sql("INSERT INTO t VALUES (3);")
-    es.sql(s"COPY t TO '$base/out' (FORMAT PARQUET, OVERWRITE);")
-    assert(spark.read.parquet(s"$base/out").count() == 3L)
-    // HEADER is a csv concept — refused at parse time for json/parquet
-    // in BOTH directions (r16 ADVICE: a silently ignored option is misuse)
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY t TO '$base/h' (FORMAT PARQUET, HEADER);")
-    }
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY t FROM '$base/out' (FORMAT JSON, HEADER);")
-    }
-    // OVERWRITE is TO-only (FROM appends — nothing to overwrite)
-    intercept[IllegalArgumentException] {
-      es.sql(s"COPY t FROM '$base/out' (FORMAT PARQUET, OVERWRITE);")
+    withTempDir("graft_ow_spec") { base =>
+      es.sql("CREATE TABLE t (k UINT32 PRIMARY KEY);")
+      es.sql("INSERT INTO t VALUES (1), (2);")
+      es.sql(s"COPY t TO '$base/out' (FORMAT PARQUET);") // fresh target: fine
+      // a non-empty existing target is refused WITHOUT the explicit opt-in
+      // — and the refusal leaves the existing data untouched
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY t TO '$base/out' (FORMAT PARQUET);")
+      }
+      assert(spark.read.parquet(s"$base/out").count() == 2L)
+      es.sql("INSERT INTO t VALUES (3);")
+      es.sql(s"COPY t TO '$base/out' (FORMAT PARQUET, OVERWRITE);")
+      assert(spark.read.parquet(s"$base/out").count() == 3L)
+      // HEADER is a csv concept — refused at parse time for json/parquet
+      // in BOTH directions (r16 ADVICE: a silently ignored option is misuse)
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY t TO '$base/h' (FORMAT PARQUET, HEADER);")
+      }
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY t FROM '$base/out' (FORMAT JSON, HEADER);")
+      }
+      // OVERWRITE is TO-only (FROM appends — nothing to overwrite)
+      intercept[IllegalArgumentException] {
+        es.sql(s"COPY t FROM '$base/out' (FORMAT PARQUET, OVERWRITE);")
+      }
     }
   }
 

@@ -15,17 +15,18 @@ class EmptyInputSpec extends SparkTestBase {
 
   test("every registered query executes on zero-row tables") {
     GraftSession.prepare(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
-    graft.sources.Tables.all.foreach { t =>
-      graft.sources.Tables(spark, sfDir, t).limit(0)
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      try { SparkEntry.queries(name)(spark, dir).count(); None }
-      catch { case e: Exception =>
-        Some(s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
+    withTempDir("graft_empty") { dir =>
+      graft.sources.Tables.all.foreach { t =>
+        graft.sources.Tables(spark, sfDir, t).limit(0)
+          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
       }
+      val failures = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+        try { SparkEntry.queries(name)(spark, dir).count(); None }
+        catch { case e: Exception =>
+          Some(s"$name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}")
+        }
+      }
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
-    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

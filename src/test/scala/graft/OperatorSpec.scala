@@ -65,29 +65,31 @@ class OperatorSpec extends SparkTestBase {
     GraftSession.prepare(spark)
     val e = Tables.embeddings(spark, sfDir)
     val assigned = IvfIndex.assign(e, k = 8).cache()
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfidx").toString + "/idx"
-    try {
-      IvfIndex.writeIndex(assigned, path)
-      val centers = IvfIndex.fitCenters(e, k = 8) // same seed → same model
-      val probe = e.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val indexed = IvfIndex.searchIndexed(spark, path, centers, probe,
-        nprobe = 1, topK = 10)
-      // the scan must prune by directory, not filter rows
-      val plan = indexed.queryExecution.executedPlan.toString
-      assert(plan.contains("PartitionFilters") && plan.contains("cluster_id"), plan)
-      // nprobe=1 ranks cells by the fit's own euclidean criterion, so the
-      // chosen directory IS the probe's assigned cell → exact parity
-      val inMem = IvfIndex.search(assigned, probeVecId = 0, topK = 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val onDisk = indexed.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(onDisk == inMem, s"disk=$onDisk mem=$inMem")
-      // nprobe=8 scans every cell: a full top-10 that can only match or
-      // beat the single-cell scan on true-neighbour recall
-      val all = IvfIndex.searchIndexed(spark, path, centers, probe,
-        nprobe = 8, topK = 10).collect().map(_.getLong(0)).toSet
-      assert(all.size == 10)
-    } finally assigned.unpersist()
+    withTempDir("graft-ivfidx") { tmp =>
+      val path = tmp + "/idx"
+      try {
+        IvfIndex.writeIndex(assigned, path)
+        val centers = IvfIndex.fitCenters(e, k = 8) // same seed → same model
+        val probe = e.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
+          .select("embedding").head().getSeq[Float](0).toArray
+        val indexed = IvfIndex.searchIndexed(spark, path, centers, probe,
+          nprobe = 1, topK = 10)
+        // the scan must prune by directory, not filter rows
+        val plan = indexed.queryExecution.executedPlan.toString
+        assert(plan.contains("PartitionFilters") && plan.contains("cluster_id"), plan)
+        // nprobe=1 ranks cells by the fit's own euclidean criterion, so the
+        // chosen directory IS the probe's assigned cell → exact parity
+        val inMem = IvfIndex.search(assigned, probeVecId = 0, topK = 10)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val onDisk = indexed.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(onDisk == inMem, s"disk=$onDisk mem=$inMem")
+        // nprobe=8 scans every cell: a full top-10 that can only match or
+        // beat the single-cell scan on true-neighbour recall
+        val all = IvfIndex.searchIndexed(spark, path, centers, probe,
+          nprobe = 8, topK = 10).collect().map(_.getLong(0)).toSet
+        assert(all.size == 10)
+      } finally assigned.unpersist()
+    }
   }
 
   test("quantized IVF: int8 index rows, cluster-pruned search, recall holds") {

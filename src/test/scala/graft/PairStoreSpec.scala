@@ -11,28 +11,29 @@ class PairStoreSpec extends SparkTestBase {
 
   test("readOrBuild writes once, then serves reads; content identical to build") {
     GraftSession.prepare(spark)
-    val root = java.nio.file.Files.createTempDirectory("pairstore").toString
-    val old = PairStore.root
-    try {
-      PairStore.root = root
-      var builds = 0
-      def build() = {
-        builds += 1
-        Tables.embeddings(spark, sfDir).limit(50)
-          .select(col("vec_id").as("id_a"), (col("vec_id") + 1).as("id_b"),
-            lit(0.5).as("sim"))
-      }
-      val first = PairStore.readOrBuild(spark, sfDir, "t", "embeddings")(build())
-        .collect().map(_.toString).sorted
-      val second = PairStore.readOrBuild(spark, sfDir, "t", "embeddings")(build())
-        .collect().map(_.toString).sorted
-      assert(builds == 1, s"second call must read the artifact, not rebuild ($builds)")
-      assert(first.toSeq == second.toSeq, "artifact read ≠ build output")
-      // the second call plans a parquet scan of the artifact, not the build
-      val plan = PairStore.readOrBuild(spark, sfDir, "t", "embeddings")(build())
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("parquet") || plan.contains("Parquet"), plan)
-    } finally PairStore.root = old
+    withTempDir("pairstore") { root =>
+      val old = PairStore.root
+      try {
+        PairStore.root = root
+        var builds = 0
+        def build() = {
+          builds += 1
+          Tables.embeddings(spark, sfDir).limit(50)
+            .select(col("vec_id").as("id_a"), (col("vec_id") + 1).as("id_b"),
+              lit(0.5).as("sim"))
+        }
+        val first = PairStore.readOrBuild(spark, sfDir, "t", "embeddings")(build())
+          .collect().map(_.toString).sorted
+        val second = PairStore.readOrBuild(spark, sfDir, "t", "embeddings")(build())
+          .collect().map(_.toString).sorted
+        assert(builds == 1, s"second call must read the artifact, not rebuild ($builds)")
+        assert(first.toSeq == second.toSeq, "artifact read ≠ build output")
+        // the second call plans a parquet scan of the artifact, not the build
+        val plan = PairStore.readOrBuild(spark, sfDir, "t", "embeddings")(build())
+          .queryExecution.executedPlan.toString
+        assert(plan.contains("parquet") || plan.contains("Parquet"), plan)
+      } finally PairStore.root = old
+    }
   }
 
   test("fingerprint is stable per corpus and distinct across corpora") {
@@ -48,48 +49,51 @@ class PairStoreSpec extends SparkTestBase {
   test("in-place rewrite of a NESTED data file re-keys the artifact " +
       "(recursive fingerprint)") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("pairstore-fp")
-    // nested layout: emb.parquet/sub/part-0 — a top-level listStatus sees
-    // only the `sub` directory entry, whose (name, len, mtime) does NOT
-    // change when the file inside is rewritten in place (only
-    // create/delete touches a parent dir); the recursive walk folds the
-    // inner file itself
-    val inner = base.resolve("emb.parquet/sub")
-    Files.createDirectories(inner)
-    Files.write(inner.resolve("part-0.parquet"), "generation-one".getBytes)
-    val fp1 = PairStore.fingerprint(spark, base.toString, "emb")
-    Thread.sleep(5) // off the mtime granularity edge
-    Files.write(inner.resolve("part-0.parquet"), "generation-TWO".getBytes)
-    val fp2 = PairStore.fingerprint(spark, base.toString, "emb")
-    assert(fp1 != fp2,
-      "in-place nested rewrite aliased the old artifact fingerprint")
-    // and the artifact path also carries the build tag, so a pair-build
-    // semantics change re-keys even an unchanged corpus
-    assert(PairStore.BuildTag.nonEmpty)
+    withTempDir("pairstore-fp") { tmp =>
+      val base = java.nio.file.Paths.get(tmp)
+      // nested layout: emb.parquet/sub/part-0 — a top-level listStatus sees
+      // only the `sub` directory entry, whose (name, len, mtime) does NOT
+      // change when the file inside is rewritten in place (only
+      // create/delete touches a parent dir); the recursive walk folds the
+      // inner file itself
+      val inner = base.resolve("emb.parquet/sub")
+      Files.createDirectories(inner)
+      Files.write(inner.resolve("part-0.parquet"), "generation-one".getBytes)
+      val fp1 = PairStore.fingerprint(spark, base.toString, "emb")
+      Thread.sleep(5) // off the mtime granularity edge
+      Files.write(inner.resolve("part-0.parquet"), "generation-TWO".getBytes)
+      val fp2 = PairStore.fingerprint(spark, base.toString, "emb")
+      assert(fp1 != fp2,
+        "in-place nested rewrite aliased the old artifact fingerprint")
+      // and the artifact path also carries the build tag, so a pair-build
+      // semantics change re-keys even an unchanged corpus
+      assert(PairStore.BuildTag.nonEmpty)
+    }
   }
 
   test("q_embed_neardup through the persisted artifact matches a fresh build") {
     GraftSession.prepare(spark)
-    val root = java.nio.file.Files.createTempDirectory("pairstore2").toString
-    val old = PairStore.root
-    try {
-      PairStore.root = root
-      SessionMemo.evictAll()
-      val viaStore = graft.operators.Similarity.queries("q_embed_neardup")(spark, sfDir)
-        .collect().map(_.toString).sorted
-      // second session-shaped pass: artifact already on disk, memo evicted
-      SessionMemo.evictAll()
-      val viaRead = graft.operators.Similarity.queries("q_embed_neardup")(spark, sfDir)
-        .collect().map(_.toString).sorted
-      PairStore.root = "off" // disabled → raw in-session build
-      SessionMemo.evictAll()
-      val viaBuild = graft.operators.Similarity.queries("q_embed_neardup")(spark, sfDir)
-        .collect().map(_.toString).sorted
-      assert(viaStore.toSeq == viaBuild.toSeq, "artifact path diverged from raw build")
-      assert(viaRead.toSeq == viaBuild.toSeq, "re-read artifact diverged from raw build")
-    } finally {
-      PairStore.root = old
-      SessionMemo.evictAll()
+    withTempDir("pairstore2") { root =>
+      val old = PairStore.root
+      try {
+        PairStore.root = root
+        SessionMemo.evictAll()
+        val viaStore = graft.operators.Similarity.queries("q_embed_neardup")(spark, sfDir)
+          .collect().map(_.toString).sorted
+        // second session-shaped pass: artifact already on disk, memo evicted
+        SessionMemo.evictAll()
+        val viaRead = graft.operators.Similarity.queries("q_embed_neardup")(spark, sfDir)
+          .collect().map(_.toString).sorted
+        PairStore.root = "off" // disabled → raw in-session build
+        SessionMemo.evictAll()
+        val viaBuild = graft.operators.Similarity.queries("q_embed_neardup")(spark, sfDir)
+          .collect().map(_.toString).sorted
+        assert(viaStore.toSeq == viaBuild.toSeq, "artifact path diverged from raw build")
+        assert(viaRead.toSeq == viaBuild.toSeq, "re-read artifact diverged from raw build")
+      } finally {
+        PairStore.root = old
+        SessionMemo.evictAll()
+      }
     }
   }
 }

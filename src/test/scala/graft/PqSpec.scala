@@ -87,22 +87,24 @@ class PqSpec extends SparkTestBase {
     GraftSession.prepare(spark)
     val e = Tables.embeddings(spark, sfDir)
     val p = probeOf(0)
-    val path = java.nio.file.Files.createTempDirectory("graft-pqidx").toString + "/idx"
-    val written = PqIndex.writeIvfPq(spark, e, dim = 64, kCoarse = 8, path)
-    val opened = PqIndex.openIvfPq(spark, path)
-    // floats round-trip parquet unchanged → the reopened model IS the model
-    assert(opened.dim == written.dim)
-    assert(java.util.Arrays.equals(opened.centersFlat, written.centersFlat))
-    assert(opened.pq == written.pq.copy(booksFlat = opened.pq.booksFlat) &&
-      java.util.Arrays.equals(opened.pq.booksFlat, written.pq.booksFlat))
-    // stored search ≡ in-memory search on the same model (same plan modulo
-    // the scan source)
-    val stored = PqIndex.searchStored(spark, path, opened, p, nprobe = 4, topK = 20)
-    val inMem = PqIndex.searchIvfPq(PqIndex.encodeIvf(e, written), written,
-      p, nprobe = 4, topK = 20)
-    assert(stored.collect().toSeq == inMem.collect().toSeq)
-    // the cluster_id filter must prune parquet DIRECTORIES, not rows
-    val plan = stored.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cluster_id"), plan)
+    withTempDir("graft-pqidx") { tmp =>
+      val path = tmp + "/idx"
+      val written = PqIndex.writeIvfPq(spark, e, dim = 64, kCoarse = 8, path)
+      val opened = PqIndex.openIvfPq(spark, path)
+      // floats round-trip parquet unchanged → the reopened model IS the model
+      assert(opened.dim == written.dim)
+      assert(java.util.Arrays.equals(opened.centersFlat, written.centersFlat))
+      assert(opened.pq == written.pq.copy(booksFlat = opened.pq.booksFlat) &&
+        java.util.Arrays.equals(opened.pq.booksFlat, written.pq.booksFlat))
+      // stored search ≡ in-memory search on the same model (same plan modulo
+      // the scan source)
+      val stored = PqIndex.searchStored(spark, path, opened, p, nprobe = 4, topK = 20)
+      val inMem = PqIndex.searchIvfPq(PqIndex.encodeIvf(e, written), written,
+        p, nprobe = 4, topK = 20)
+      assert(stored.collect().toSeq == inMem.collect().toSeq)
+      // the cluster_id filter must prune parquet DIRECTORIES, not rows
+      val plan = stored.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("cluster_id"), plan)
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+
 import graft.operators.{Multimodal, Relational, Similarity}
 
 /** Plan-shape audits: the scale properties SURVEY §4 promises, asserted on
@@ -641,6 +643,132 @@ class QueryPlanSpec extends SparkTestBase {
       } catch { case e: Exception => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  // literal-parameterized codegen (graft.plans.ParameterizeLiterals)
+
+  private def documentsSession(): graft.sql.EmdriveSession = {
+    val es = new graft.sql.EmdriveSession(spark)
+    es.register("documents", graft.sources.Tables.documents(spark, sfDir))
+    es
+  }
+
+  test("statements that differ only in a literal compile once and share the class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val es = documentsSession()
+    def lookup(k: Int): Seq[Long] =
+      es.sql(s"SELECT doc_id, n_chars FROM documents WHERE doc_id = $k;")
+        .collect().map(_.getLong(0)).toSeq
+    assert(lookup(0) == Seq(0L))
+    val afterFirst = compiles.getCount
+    (1 until 20).foreach(i => assert(lookup(i * 25) == Seq(i * 25L)))
+    assert(compiles.getCount == afterFirst,
+      s"${compiles.getCount - afterFirst} compiles after the first point lookup")
+
+    // the same through AQE stages: a filtered partial/final aggregate
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    def grouped(t: Int): Map[String, Long] =
+      es.sql(s"SELECT source, COUNT(*) AS n FROM documents WHERE n_chars > $t GROUP BY source;")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def want(t: Int): Map[String, Long] =
+      docs.filter(col("n_chars") > t).groupBy(col("source")).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(grouped(100) == want(100))
+    val afterGrouped = compiles.getCount
+    Seq(200, 400, 800, 1600).foreach(t => assert(grouped(t) == want(t)))
+    assert(compiles.getCount == afterGrouped,
+      s"${compiles.getCount - afterGrouped} compiles after the first aggregate")
+  }
+
+  test("parameterized literals leave pushed filters and plan strings as they were") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import graft.plans.{ParamLiteral, ParameterizeLiterals}
+    val df = documentsSession()
+      .sql("SELECT doc_id, n_chars + 1 AS m FROM documents WHERE doc_id = 7;")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(7L))
+    val plan = df.queryExecution.executedPlan
+    val scan = plan.collect { case s: FileSourceScanExec => s }.head
+    assert(scan.metadata("PushedFilters").contains("EqualTo(doc_id,7)"), scan.metadata)
+    assert(scan.dataFilters.exists(_.exists(_ ==
+      org.apache.spark.sql.catalyst.expressions.Literal(7L))), scan.dataFilters)
+    assert(plan.collect { case f: FilterExec => f.condition }
+      .exists(_.exists(_.isInstanceOf[ParamLiteral])), plan)
+    val physical = df.queryExecution.sparkPlan
+    val rewritten = ParameterizeLiterals(physical)
+    assert(rewritten != physical, "the rule rewrote nothing")
+    assert(rewritten.treeString == physical.treeString)
+  }
+
+  test("ScalaCheck: parameterized filter+project equals interpreted evaluation for every covered type") {
+    import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
+    import java.time.temporal.ChronoUnit.MICROS
+    import org.apache.spark.sql.{Row, SparkSession}
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import graft.plans.ParamLiteral
+
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+
+    def edgesOr[T](edges: T*)(g: Gen[T]): Gen[T] =
+      Gen.frequency(1 -> Gen.oneOf(edges), 1 -> g)
+    // Spark's supported datetime range, 0001-01-01 .. 9999-12-31
+    val micros = Gen.choose(-62135596800000000L, 253402300799999999L)
+    def instant(us: Long): Instant = Instant.EPOCH.plus(us, MICROS)
+    val instants = Seq("0001-01-01T00:00:00Z", "9999-12-31T23:59:59.999999Z",
+      "1969-12-31T23:59:59.999999Z", "1582-10-04T12:00:00Z", "1970-01-01T00:00:00Z")
+      .map(Instant.parse)
+    val covered: Seq[(DataType, Gen[Any])] = Seq(
+      IntegerType -> edgesOr(Int.MinValue, Int.MaxValue, 0, -1)(
+        Gen.choose(Int.MinValue, Int.MaxValue)),
+      LongType -> edgesOr(Long.MinValue, Long.MaxValue, 0L, -1L)(
+        Gen.choose(Long.MinValue, Long.MaxValue)),
+      ShortType -> edgesOr(Short.MinValue, Short.MaxValue, 0.toShort)(
+        Gen.choose(Short.MinValue, Short.MaxValue)),
+      ByteType -> edgesOr(Byte.MinValue, Byte.MaxValue, 0.toByte)(
+        Gen.choose(Byte.MinValue, Byte.MaxValue)),
+      FloatType -> edgesOr(Float.NaN, 0.0f, -0.0f, Float.PositiveInfinity,
+        Float.NegativeInfinity, Float.MinValue, Float.MaxValue,
+        Float.MinPositiveValue)(Gen.choose(-1e6f, 1e6f)),
+      DoubleType -> edgesOr(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+        Double.NegativeInfinity, Double.MinValue, Double.MaxValue,
+        Double.MinPositiveValue)(Gen.choose(-1e12, 1e12)),
+      BooleanType -> Gen.oneOf(true, false),
+      DateType -> edgesOr(instants.map(_.atZone(ZoneOffset.UTC).toLocalDate): _*)(
+        micros.map(us => instant(us).atZone(ZoneOffset.UTC).toLocalDate)),
+      TimestampType -> edgesOr(instants: _*)(micros.map(instant)),
+      TimestampNTZType -> edgesOr(instants.map(LocalDateTime.ofInstant(_, ZoneOffset.UTC)): _*)(
+        micros.map(us => LocalDateTime.ofInstant(instant(us), ZoneOffset.UTC))))
+
+    val cases = Gen.oneOf(covered).flatMap { case (dt, g) =>
+      for (data <- Gen.listOfN(12, g); probes <- Gen.listOfN(3, g))
+      yield (dt, data, probes)
+    }
+    val prop = Prop.forAllNoShrink(cases) { case (dt, data, probes) =>
+      val Seq(p, q, r) = probes.map(lit)
+      def run(s: SparkSession) = {
+        val df = s.createDataFrame(
+          s.sparkContext.parallelize(data.map(Row(_)) :+ Row(null), 2),
+          StructType(Seq(StructField("v", dt))))
+        val v = col("v")
+        val out = df.filter(v =!= p || v.isNull || v > q)
+          .select(v, v === p, v < q, v <=> r, coalesce(v, p),
+            when(v >= q, r).otherwise(v))
+        (out.collect().toSeq, out.queryExecution.executedPlan)
+      }
+      val (got, plan) = run(spark)
+      val (want, _) = run(interpreted)
+      val parameterized = plan.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[ParamLiteral])))
+      (got == want && parameterized) :|
+        s"$dt data=$data probes=$probes got=$got want=$want parameterized=$parameterized"
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(40).withWorkers(1), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 
   test("flagship entry returns rows") {

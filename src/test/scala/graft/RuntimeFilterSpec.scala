@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -34,21 +32,25 @@ class RuntimeFilterSpec extends SparkTestBase {
 
   test("dynamic partition pruning fires on a partitioned layout join") {
     GraftSession.prepare(spark)
-    val dir = Files.createTempDirectory("graft-dpp").toString + "/orders_by_status"
-    Tables.orders(spark, sfDir).write.partitionBy("o_orderstatus").parquet(dir)
-    val fact = spark.read.parquet(dir)
-    // the dim must be a scan + surviving Filter node (a LocalRelation is
-    // constant-folded and DPP sees no selective predicate to reuse)
-    val dimDir = Files.createTempDirectory("graft-dpp-dim").toString + "/status_dim"
-    spark.createDataFrame(Seq(("O", "open"), ("X", "unused")))
-      .toDF("st", "label").write.parquet(dimDir)
-    val dim = spark.read.parquet(dimDir).filter(col("label") === "open")
-    val joined = fact.join(dim, col("o_orderstatus") === col("st"))
-    val n = joined.count()
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"), plan)
-    // pruning is an optimization, never a semantics change
-    assert(n == fact.filter(col("o_orderstatus") === "O").count())
+    withTempDir("graft-dpp") { tmp =>
+      val dir = tmp + "/orders_by_status"
+      Tables.orders(spark, sfDir).write.partitionBy("o_orderstatus").parquet(dir)
+      val fact = spark.read.parquet(dir)
+      // the dim must be a scan + surviving Filter node (a LocalRelation is
+      // constant-folded and DPP sees no selective predicate to reuse)
+      withTempDir("graft-dpp-dim") { dimTmp =>
+        val dimDir = dimTmp + "/status_dim"
+        spark.createDataFrame(Seq(("O", "open"), ("X", "unused")))
+          .toDF("st", "label").write.parquet(dimDir)
+        val dim = spark.read.parquet(dimDir).filter(col("label") === "open")
+        val joined = fact.join(dim, col("o_orderstatus") === col("st"))
+        val n = joined.count()
+        val plan = joined.queryExecution.executedPlan.toString
+        assert(plan.toLowerCase.contains("dynamicpruning"), plan)
+        // pruning is an optimization, never a semantics change
+        assert(n == fact.filter(col("o_orderstatus") === "O").count())
+      }
+    }
   }
 
   test("runtime bloom filter pre-filters the big side of a shuffle join") {

@@ -238,41 +238,60 @@ class ServerSpec extends SparkTestBase {
     // next with NO manual attach. Simulated restart = a brand-new
     // EmdriveSession + GraftServer over the same data directory.
     GraftSession.prepare(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft-durable-").toString
-    val es1 = new EmdriveSession(spark, Some(dir))
-    es1.sql("""CREATE TABLE boats (
-             |  id UINT32 PRIMARY KEY,
-             |  name STRING(40),
-             |  phash NULLABLE(UINT64) METRIC KEY);""".stripMargin)
-    es1.sql("INSERT INTO boats (id, name, phash) VALUES (1, 'Dinghy', 17);")
-    es1.sql("INSERT INTO boats (id, name, phash) VALUES (2, 'Sloop', 19);")
-    // restart #1: fresh session, fresh server — catalog restored from disk
-    val es2 = new EmdriveSession(spark, Some(dir))
-    val server = new GraftServer(es2)
-    server.start()
-    val base = s"http://127.0.0.1:${server.boundPort}"
-    try {
-      val resp = post(base, "SELECT id, name FROM boats ORDER BY id;")
-      assert(resp.statusCode() == 200, resp.body())
-      assert(resp.body().contains("Dinghy") && resp.body().contains("Sloop"),
-        resp.body())
-      // DML over HTTP persists too; declared-type metadata survived the
-      // round trip (domain validation still enforced on the restored table)
-      assert(post(base, "INSERT INTO boats (id, name) VALUES (3, 'Ketch');")
-        .statusCode() == 200)
-      assert(post(base, "INSERT INTO boats (id, phash) VALUES (4, -1);")
-        .statusCode() != 200, "restored UINT64 domain must still validate")
-    } finally server.stop()
-    // restart #2: the HTTP-inserted row is there; the failed insert is not
-    val es3 = new EmdriveSession(spark, Some(dir))
-    val rows = es3.sql("SELECT id FROM boats;").collect().map(_.getLong(0)).sorted
-    assert(rows.toSeq == Seq(1L, 2L, 3L), rows.mkString(","))
-    // PRIMARY KEY / METRIC KEY roles survive in system.columns
-    val roles = es3.sql(
-      "SELECT column_name, primary_key, metric_key FROM system.columns;")
-      .collect().map(r => r.getString(0) -> (r.getBoolean(1), r.getBoolean(2)))
-      .toMap
-    assert(roles("id") == (true, false) && roles("phash") == (false, true), roles)
+    withTempDir("graft-durable-") { dir =>
+      val es1 = new EmdriveSession(spark, Some(dir))
+      es1.sql("""CREATE TABLE boats (
+               |  id UINT32 PRIMARY KEY,
+               |  name STRING(40),
+               |  phash NULLABLE(UINT64) METRIC KEY);""".stripMargin)
+      es1.sql("INSERT INTO boats (id, name, phash) VALUES (1, 'Dinghy', 17);")
+      es1.sql("INSERT INTO boats (id, name, phash) VALUES (2, 'Sloop', 19);")
+      // restart #1: fresh session, fresh server — catalog restored from disk
+      val es2 = new EmdriveSession(spark, Some(dir))
+      val server = new GraftServer(es2)
+      server.start()
+      val base = s"http://127.0.0.1:${server.boundPort}"
+      try {
+        val resp = post(base, "SELECT id, name FROM boats ORDER BY id;")
+        assert(resp.statusCode() == 200, resp.body())
+        assert(resp.body().contains("Dinghy") && resp.body().contains("Sloop"),
+          resp.body())
+        // DML over HTTP persists too; declared-type metadata survived the
+        // round trip (domain validation still enforced on the restored table)
+        assert(post(base, "INSERT INTO boats (id, name) VALUES (3, 'Ketch');")
+          .statusCode() == 200)
+        assert(post(base, "INSERT INTO boats (id, phash) VALUES (4, -1);")
+          .statusCode() != 200, "restored UINT64 domain must still validate")
+      } finally server.stop()
+      // restart #2: the HTTP-inserted row is there; the failed insert is not
+      val es3 = new EmdriveSession(spark, Some(dir))
+      val rows = es3.sql("SELECT id FROM boats;").collect().map(_.getLong(0)).sorted
+      assert(rows.toSeq == Seq(1L, 2L, 3L), rows.mkString(","))
+      // PRIMARY KEY / METRIC KEY roles survive in system.columns
+      val roles = es3.sql(
+        "SELECT column_name, primary_key, metric_key FROM system.columns;")
+        .collect().map(r => r.getString(0) -> (r.getBoolean(1), r.getBoolean(2)))
+        .toMap
+      assert(roles("id") == (true, false) && roles("phash") == (false, true), roles)
+    }
+  }
+
+  test("GET /health answers without waiting out a delayed ACK (TCP_NODELAY)") {
+    // headers and body go out as two writes; with Nagle on, the second
+    // waits for the client's delayed ACK, ~40 ms per response
+    withServer() { (_, base) =>
+      val keepAlive = HttpClient.newBuilder()
+        .version(HttpClient.Version.HTTP_1_1).build()
+      val req = HttpRequest.newBuilder().uri(URI.create(s"$base/health")).GET().build()
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        assert(keepAlive.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+        (System.nanoTime() - t0) / 1e6
+      }
+      once() // opens the connection the timed requests reuse
+      val ms = Seq.fill(30)(once()).sorted
+      assert(ms(15) < 20.0, f"median ${ms(15)}%.1f ms of ${ms.map(m => f"$m%.1f").mkString(", ")}")
+    }
   }
 
   test("GraftConfig: env precedence and fail-fast on a bad port") {

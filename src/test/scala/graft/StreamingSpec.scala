@@ -515,26 +515,27 @@ class StreamingSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val (out, cp) = (s"$dir/data", s"$dir/cp")
-    val input = MemoryStream[StreamEvent]
-    def start() = input.toDS()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", cp)
-      .outputMode(OutputMode.Append).start()
-    val q1 = start()
-    input.addData(StreamEvent(1, new Timestamp(100), "click", 1.0),
-      StreamEvent(2, new Timestamp(200), "view", 2.0))
-    q1.processAllAvailable(); q1.stop()
-    // restart against the same checkpoint: the committed offset means
-    // batch 1 is NOT re-emitted; the sink's _spark_metadata commit log
-    // means readers see only finished files — exactly-once end to end
-    val q2 = start()
-    input.addData(StreamEvent(3, new Timestamp(300), "click", 3.0))
-    q2.processAllAvailable(); q2.stop()
-    val rows = spark.read.parquet(out).as[StreamEvent].collect()
-      .map(e => (e.user_id, e.ts.getTime)).toSet
-    assert(rows == Set((1L, 100L), (2L, 200L), (3L, 300L)), rows.toString)
+    withTempDir("graft-sink") { dir =>
+      val (out, cp) = (s"$dir/data", s"$dir/cp")
+      val input = MemoryStream[StreamEvent]
+      def start() = input.toDS()
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", cp)
+        .outputMode(OutputMode.Append).start()
+      val q1 = start()
+      input.addData(StreamEvent(1, new Timestamp(100), "click", 1.0),
+        StreamEvent(2, new Timestamp(200), "view", 2.0))
+      q1.processAllAvailable(); q1.stop()
+      // restart against the same checkpoint: the committed offset means
+      // batch 1 is NOT re-emitted; the sink's _spark_metadata commit log
+      // means readers see only finished files — exactly-once end to end
+      val q2 = start()
+      input.addData(StreamEvent(3, new Timestamp(300), "click", 3.0))
+      q2.processAllAvailable(); q2.stop()
+      val rows = spark.read.parquet(out).as[StreamEvent].collect()
+        .map(e => (e.user_id, e.ts.getTime)).toSet
+      assert(rows == Set((1L, 100L), (2L, 200L), (3L, 300L)), rows.toString)
+    }
   }
 
   test("per-row batch ops are stream-transparent: PII scrub on a document stream (D16)") {
