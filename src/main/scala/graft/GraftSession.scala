@@ -33,7 +33,9 @@ object GraftSession {
   /** Apply graft settings/functions to an externally-created session (the
     * driver's Verify/Bench build their own session without our extension).
     * Physical rules cannot be added after the session is built, so such a
-    * session runs without [[graft.plans.ParameterizeLiterals]].
+    * session runs without [[graft.plans.ParameterizeLiterals]]; the
+    * optimizer rules are added only where the extension did not already
+    * inject them.
     */
   def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -44,9 +46,13 @@ object GraftSession {
     // against the tz-independent epoch-ms oracle (round-7 ADVICE).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     graft.plans.GraftExtensions.registerFunctions(spark)
-    val have = spark.experimental.extraOptimizations
+    // a session built with the extension already runs the rules in its
+    // operator-optimization batches; installing them again as extra
+    // optimizations would run each one in a third batch
+    val extra = spark.experimental.extraOptimizations
+    val have = extra ++ spark.sessionState.optimizer.extendedOperatorOptimizationRules
     spark.experimental.extraOptimizations =
-      have ++ graft.plans.GraftExtensions.optimizerRules.filterNot(have.contains)
+      extra ++ graft.plans.GraftExtensions.optimizerRules.filterNot(have.contains)
     spark
   }
 }

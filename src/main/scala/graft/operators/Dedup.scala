@@ -65,35 +65,28 @@ object Dedup {
     * ~1e5 distinct shingles are ~1e-9 — intersection counts equal the
     * string-exact oracle's in practice. Shared with operators.Pipeline. */
   def jaccardPairs(shingled: DataFrame, threshold: Double,
-      maxDf: Int = WordMaxDf): DataFrame =
-    pairsAllOf(shingled, maxDf)
+      maxDf: Int = WordMaxDf, name: String = "shingled"): DataFrame =
+    pairsAllOf(shingled, maxDf, name)
       .filter(col("raw_j") >= threshold) // raw value (oracle-identical)
       .select(col("id_a"), col("id_b"), col("raw_j"))
 
-  /** Plan-identity-keyed shared pair relation (r17 optimization): the
-    * generic twin of [[wordPairsAll]] for consumers that hand in their
-    * OWN shingled relation (the neardup_jaccard TVF, the pipeline's
-    * filtered corpus, the char-5-gram postings). The postings self-join +
-    * intersection count is the one expensive intermediate behind every
-    * such query; thresholds are downstream filters, so the registry key
-    * is the shingled plan's semantic hash + its input-file fingerprint
-    * (the ensureIndex snapshot key — an in-place rewrite changes the
-    * fingerprint; in-memory relations carry their data in the
-    * LocalRelation semanticHash) + maxDf. Same RDD doctrine as
-    * [[wordPairsAll]]: nothing persist()ed, later consumers reuse the
-    * computed shuffle files as skipped stages, the stress harness evicts
-    * the registry so scale receipts still price the build. */
-  private def pairsAllOf(shingled: DataFrame, maxDf: Int): DataFrame = {
-    val s = shingled.sparkSession
-    val snap = graft.sources.PairStore.fileFingerprint(
-      s, shingled.inputFiles.toSeq)
-    val key = s"jacc_pairs_${shingled.queryExecution.analyzed.semanticHash()}" +
-      s"_${snap}_$maxDf"
-    val (rdd, schema) = graft.SessionMemo.of(s, "", key) {
+  /** Registry-shared pair relation (r17 optimization): the generic twin of
+    * [[wordPairsAll]] for consumers that hand in their OWN shingled
+    * relation (the neardup_jaccard TVF, the pipeline's filtered corpus,
+    * the char-5-gram postings). The postings self-join + intersection
+    * count is the one expensive intermediate behind every such query;
+    * thresholds are downstream filters, so the entry is keyed by the
+    * shingled relation's snapshot, with `name` (one per consumer) and
+    * maxDf in the artifact name. Same RDD doctrine as [[wordPairsAll]]:
+    * nothing persist()ed, later consumers reuse the computed shuffle
+    * files as skipped stages, the stress harness evicts the registry so
+    * scale receipts still price the build. */
+  private def pairsAllOf(shingled: DataFrame, maxDf: Int, name: String): DataFrame = {
+    val (rdd, schema) = graft.SessionMemo.of(shingled, s"jacc_pairs_${name}_$maxDf") {
       val df = pairsAllFromPostings(cutPostings(shingled, maxDf))
       (df.rdd, df.schema)
     }
-    s.createDataFrame(rdd, schema)
+    shingled.sparkSession.createDataFrame(rdd, schema)
   }
 
   /** The word-3-shingle df-cut postings every word-level similarity
@@ -235,24 +228,19 @@ object Dedup {
     * — no interpreted HOF lambdas in the per-document hot path. */
   private def minhashLsh(s: SparkSession, d: String): DataFrame =
     minhashPairs(
-      Tables.documents(s, d).select(col("doc_id"), shingleCol.as("sh")))
+      Tables.documents(s, d).select(col("doc_id"), shingleCol.as("sh")), "documents")
 
   /** The MinHash+LSH pair kernel over any (doc_id, sh) relation — shared
     * by the q_minhash_lsh operator key and the `minhash_neardup` SQL
     * table function (r15). */
-  private[graft] def minhashPairs(docs0: DataFrame): DataFrame = {
+  private[graft] def minhashPairs(docs0: DataFrame, name: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r17 optimization: the shingled relation feeds the banding pass AND
     // both verify-join sides (3 evals of scan+shingles), and the banded
-    // relation feeds both candidate self-join sides — materialize each
-    // once, keyed by plan identity (the pairsAllOf doctrine) so the SQL
-    // TVF twin shares the same artifacts.
-    val s = docs0.sparkSession
-    val snap = graft.sources.PairStore.fileFingerprint(s, docs0.inputFiles.toSeq)
-    val pk = s"minhash_${docs0.queryExecution.analyzed.semanticHash()}" +
-      s"_${snap}"
-    val docs = graft.operators.Relational.materializeOnce(s, "", pk + "_sh")(docs0)
-    val banded = graft.operators.Relational.materializeOnce(s, "", pk + "_band")(
+    // relation feeds both candidate self-join sides — persist each once
+    // in the registry over the input's snapshot (the pairsAllOf doctrine)
+    val docs = graft.SessionMemo.ofPersisted(docs0, s"minhash_${name}_sh")(docs0)
+    val banded = graft.SessionMemo.ofPersisted(docs0, s"minhash_${name}_band")(
       docs.select(
       col("doc_id"),
       posexplode(call_function("minhash_bands", col("sh"), lit(64), lit(16))))
@@ -296,7 +284,7 @@ object Dedup {
     jaccardPairs(
       Tables.documents(s, d).select(col("doc_id"),
         call_function("char_shingles", col("text"), lit(5)).as("sh")),
-      0.5, NgramMaxDf)
+      0.5, NgramMaxDf, "char5")
       .select(col("id_a"), col("id_b"), col("raw_j").as("jaccard"))
 
   /** Connected components over an undirected pair graph (id_a, id_b):

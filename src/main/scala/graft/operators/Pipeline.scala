@@ -42,7 +42,7 @@ object Pipeline {
     // id of each pair (keep-first)
     val shingled = kept.select(col("doc_id"),
       call_function("word_shingles", col("text"), lit(3)).as("sh"))
-    val dropIds = Dedup.jaccardPairs(shingled, 0.5)
+    val dropIds = Dedup.jaccardPairs(shingled, 0.5, name = "pipeline_kept")
       .select(col("id_b").as("doc_id"))
       .distinct()
     (docs, langKept, kept, dropIds)

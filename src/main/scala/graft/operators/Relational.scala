@@ -508,7 +508,8 @@ object Relational {
     * returned plan still reads it at the caller's final action. Its
     * lifecycle is the session registry's (r12 ADVICE): the entry is
     * memoized per (session, dir, key) so repeated invocations reuse ONE
-    * `InMemoryRelation` instead of stacking duplicates, and
+    * `InMemoryRelation` instead of stacking duplicates, a corpus rewrite
+    * under `dir` rebuilds and unpersists it, and
     * [[graft.SessionMemo.evictAll]] unpersists it. It is
     * collapsed-relation-sized (dimension cardinality, not fact) and
     * spills to disk under pressure. */
@@ -2093,12 +2094,6 @@ object Relational {
           .as("revenue"))
   }
 
-  /** Per-(process, corpus-dir) tag for the throwaway /tmp and warehouse
-    * layout paths the storage keys write (evolution/drift/lines/compaction/
-    * zorder/io/bucketed) — see [[graft.SessionMemo.pathTag]] (r11 ADVICE:
-    * no 32-bit-hash collisions, no cross-process path races). */
-  private def pathTag(d: String): String = graft.SessionMemo.pathTag(d)
-
   /** Schema-evolution read end-to-end (D11 upgraded from test-only to an
     * oracle-checked key): generation 1 writes documents WITHOUT the lang
     * column (doc_id < 250 — "yesterday's files predate today's added
@@ -2108,7 +2103,7 @@ object Relational {
     * recomputing the same generation split in SQL. Footer-merge cost is
     * per file; no 100 TB backfill rewrite. */
   private def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val base = s"/tmp/graft_evolve_${pathTag(d)}"
+    val base = s"/tmp/graft_evolve_${graft.SessionMemo.pathTag(d)}"
     val docs = Tables.documents(s, d)
     docs.filter(col("doc_id") < 250)
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -2128,7 +2123,7 @@ object Relational {
     * `Io.schemaDiff`; the oracle is the KNOWN drift as constants. No data
     * scan at any table size (the report reads two footers). */
   private def schemaDrift(s: SparkSession, d: String): DataFrame = {
-    val base = s"/tmp/graft_drift_${pathTag(d)}"
+    val base = s"/tmp/graft_drift_${graft.SessionMemo.pathTag(d)}"
     val docs = Tables.documents(s, d)
     docs.select(col("doc_id"), col("source"), col("n_chars"))
       .write.mode("overwrite").parquet(s"$base/gen1")
@@ -2147,7 +2142,7 @@ object Relational {
     * original table. The md5 projection (not the xxhash64 id itself) is
     * what DuckDB can recompute. */
   private def textIngest(s: SparkSession, d: String): DataFrame = {
-    val base = s"/tmp/graft_lines_${pathTag(d)}"
+    val base = s"/tmp/graft_lines_${graft.SessionMemo.pathTag(d)}"
     Tables.documents(s, d).select(col("text"))
       .write.mode("overwrite").text(base)
     graft.sources.Io.readTextLines(s, base)
@@ -2167,7 +2162,7 @@ object Relational {
     * must preserve every row and byte. File-count mechanics stay
     * spec-asserted in StorageOpsSpec. */
   private def compaction(s: SparkSession, d: String): DataFrame = {
-    val base = s"/tmp/graft_compact_${pathTag(d)}"
+    val base = s"/tmp/graft_compact_${graft.SessionMemo.pathTag(d)}"
     Tables.documents(s, d).repartition(32).write.mode("overwrite").parquet(base)
     graft.sources.Io.compact(s, base)
     s.read.parquet(base)
@@ -2188,7 +2183,7 @@ object Relational {
     * join/aggregation on that key — the Spark analog of the reference's
     * key-ordered btree storage (reference: src/storage/index.rs). */
   private def bucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val tag = pathTag(d)
+    val tag = graft.SessionMemo.pathTag(d)
     val (ot, lt) = (s"b_orders_$tag", s"b_lineitem_$tag")
     // write-once per (session, sf): the bucketed layout is the persisted
     // artifact under test; rewriting it per query would price the build
@@ -2255,7 +2250,7 @@ object Relational {
     * ScaleSpec). At 100 TB this composes with date partitioning; the
     * write amortizes over every subsequent box query. */
   private def zorderScan(s: SparkSession, d: String): DataFrame = {
-    val path = s"/tmp/graft_zorder_${pathTag(d)}"
+    val path = s"/tmp/graft_zorder_${graft.SessionMemo.pathTag(d)}"
     // the Morton key is ONLY a layout key: range-reduce wide ids into
     // zorder2's 31-bit domain (mod keeps locality for in-range keys and
     // wraps larger ones — correctness is untouched, the box filter runs
@@ -2289,7 +2284,7 @@ object Relational {
     * not a data path. */
   private def ioRoundtrip(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = s"/tmp/graft_io_${pathTag(d)}"
+    val base = s"/tmp/graft_io_${graft.SessionMemo.pathTag(d)}"
     docs.write.mode("overwrite").option("header", "true").csv(s"$base/csv")
     docs.write.mode("overwrite").json(s"$base/json")
     graft.sources.Io.writeOrc(docs, s"$base/orc")

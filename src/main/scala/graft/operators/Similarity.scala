@@ -494,19 +494,16 @@ object Similarity {
     * economics as [[embedNeardupClustered]], minus the pair graph. */
   private[graft] def semDedupCore(e: DataFrame, threshold: Double,
       targetCell: Int = 256, seed: Long = 42L,
-      maxPerCell: Int = 4096): DataFrame = {
-    val s = e.sparkSession
+      maxPerCell: Int = 4096, name: String = "vectors"): DataFrame = {
     val ev = e.select(col("vec_id"), col("embedding"))
     // r17 optimization — the fitted centers are an INDEX artifact (the
     // PqIndex registry doctrine) and were re-fit per invocation; the
-    // registry key is the input plan's semantic hash + file fingerprint
-    // (the ensureIndex snapshot key) + the fit parameters, so any
-    // consumer handing in the semantically-same corpus shares one fit.
-    // The corpus count rides in the same entry (it sizes k).
-    val snap = graft.sources.PairStore.fileFingerprint(s, ev.inputFiles.toSeq)
-    val baseKey = s"semdedup_${ev.queryExecution.analyzed.semanticHash()}" +
-      s"_${snap}_${targetCell}_$seed"
-    val (n, centersOpt) = graft.SessionMemo.of(s, "", baseKey) {
+    // registry entry is over the input relation's snapshot, with the fit
+    // parameters in its name, so any consumer handing in the
+    // semantically-same corpus shares one fit. The corpus count rides in
+    // the same entry (it sizes k).
+    val baseKey = s"semdedup_${name}_${targetCell}_$seed"
+    val (n, centersOpt) = graft.SessionMemo.of(ev, baseKey) {
       val n = ev.count()
       // empty-corpus guard (the Pca/Pq doctrine): KMeans cannot fit 0 rows
       if (n == 0) (n, None)
@@ -527,7 +524,7 @@ object Similarity {
     // feeds FOUR subplans (both sides of the dominance self-join and the
     // final kept join) — each branch otherwise re-runs the n×k broadcast
     // assignment pass per execution.
-    val assigned = Relational.materializeOnce(s, "", baseKey + "_assigned")(
+    val assigned = graft.SessionMemo.ofPersisted(ev, baseKey + "_assigned")(
       ev.crossJoin(broadcast(centers))
       .select(col("vec_id"), col("embedding"), col("cid"),
         (lit(2.0) * call_function("dot_product", col("embedding"), col("cvec")) -
@@ -1369,26 +1366,18 @@ object Similarity {
     * keys index the SAME relation at the same bits, so per-query (and
     * per-key) layout rewrites were pure repeated ingest cost — the
     * bucketedJoin write-once doctrine applies verbatim (an index is an
-    * amortized artifact; the stress harness evicts the memo so scale
-    * receipts still price the build). The probe is a 1-row scalar of the
-    * same corpus scan, memoized with the layout, and the layout relation
-    * is resolved once here, so later queries skip partition discovery and
-    * schema inference. None when the corpus has no probe row (incl. the
-    * empty corpus, whose layout has no readable footer). */
+    * amortized artifact; the stress harness evicts the registry so scale
+    * receipts still price the build). The registry hands out the layout
+    * directory and rebuilds it when the corpus changes. The probe is a
+    * 1-row scalar of the same corpus scan, memoized with the layout, and
+    * the layout relation is resolved once here, so later queries skip
+    * partition discovery and schema inference. None when the corpus has
+    * no probe row (incl. the empty corpus, whose layout has no readable
+    * footer). */
   private def metricLayoutAndProbe(s: SparkSession, d: String): Option[(DataFrame, Long)] =
-    graft.SessionMemo.of(s, d, "metric_index_layout") {
+    graft.SessionMemo.layout(s, d, "metric_index_layout", "graft_metric_index_") { path =>
       val hashed = Tables.documents(s, d).select(col("doc_id"),
         call_function("simhash64", split(col("text"), " ")).as("h"))
-      // invocation-unique path (r17 ADVICE, low): SessionMemo's benign-
-      // duplicate-build doctrine holds for in-memory artifacts but not a
-      // shared filesystem path — two concurrent first calls could race
-      // writeIndexed-overwrite vs read. Each racing build now writes its
-      // OWN dir; the losing entry is an orphaned pid-tagged temp dir the
-      // end-of-run sweep deletes (the nanoTime lands BEFORE pathTag so
-      // the dir still ends with _p<pid> for the liveness reaper).
-      val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_metric_index_${System.nanoTime()}_" +
-          graft.SessionMemo.pathTag(d)).toString
       graft.sources.MetricIndex.writeIndexed(hashed, path, "h", bits = 6)
       val probeRow = hashed.filter(col("doc_id") === 0)
         .select(col("h")).limit(1).collect()

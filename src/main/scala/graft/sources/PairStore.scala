@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   * standalone embed-family run paid the one clustered build its pipeline
   * siblings amortize).
   *
-  * Versioning: the artifact directory name embeds a fingerprint of the
-  * source table's file statuses (name, length, mtime of every data file —
-  * the same snapshot identity a table format's manifest provides). A
+  * Versioning: the artifact directory name embeds the source table's
+  * snapshot fingerprint ([[graft.SessionMemo.fingerprint]]: name, length,
+  * mtime of every data file — the identity a table format's manifest
+  * provides). A
   * corpus rewrite changes the fingerprint, so a stale artifact can never
   * serve a new corpus; it simply stops being addressed. (A production
   * deployment would GC superseded fingerprints with table-snapshot
@@ -56,71 +57,6 @@ object PairStore {
     * tag tracks the CODE that derived the artifact from it. */
   val BuildTag: String = "v2_t04"
 
-  private def fnv64(entries: Seq[String]): String = {
-    var h = 0xcbf29ce484222325L
-    entries.foreach { e =>
-      e.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }
-      h ^= '\n'.toLong; h *= 0x100000001b3L
-    }
-    java.lang.Long.toHexString(h)
-  }
-
-  /** Snapshot fingerprint over explicit file paths (name, length, mtime
-    * of each): the identity a table-format manifest carries. Used for
-    * relations whose input files are known from the plan (EmdriveSession
-    * ensureIndex) as well as the directory walk below. */
-  def fileFingerprint(s: SparkSession, files: Seq[String]): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    // batched per parent directory: ONE listStatus RPC per directory
-    // instead of one getFileStatus per data file — on an object store a
-    // many-file table costs a handful of LIST calls per query, not
-    // thousands of HEADs (r10 ADVICE). Deliberately NOT memoized by the
-    // file-name list: an in-place rewrite keeps the names, and detecting
-    // exactly that is this fingerprint's whole job.
-    val entries = files.groupBy(f => new Path(f).getParent).toSeq.flatMap {
-      case (parent, group) =>
-        val wanted = group.map(f => new Path(f).getName).toSet
-        val listed: Map[String, org.apache.hadoop.fs.FileStatus] =
-          if (parent == null) Map.empty
-          else try parent.getFileSystem(conf).listStatus(parent).iterator
-            .filter(st => wanted.contains(st.getPath.getName))
-            .map(st => st.getPath.getName -> st).toMap
-          catch { case _: java.io.FileNotFoundException => Map.empty }
-        group.map { f =>
-          listed.get(new Path(f).getName) match {
-            case Some(st) =>
-              s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-            case None => s"$f:absent"
-          }
-        }
-    }.sorted
-    fnv64(if (entries.isEmpty) Seq("empty") else entries)
-  }
-
-  /** Snapshot fingerprint of one table's data files: 64-bit FNV-1a over
-    * the sorted RECURSIVE (path, length, mtime) file listing. Recursion
-    * matters for partitioned layouts: a top-level `listStatus` sees only
-    * subdirectory entries, whose (name, len, mtime) need not change when
-    * files INSIDE are rewritten — the walk folds every data file, so a
-    * rewrite anywhere re-keys the artifact. Listing-only — no data read;
-    * this is the identity a manifest file would carry. */
-  def fingerprint(s: SparkSession, dir: String, table: String): String = {
-    val p = new Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries =
-      if (!fs.exists(p)) Seq("absent")
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val st = it.next()
-          buf += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-        }
-        if (buf.isEmpty) Seq("empty") else buf.toSeq.sorted
-      }
-    fnv64(entries)
-  }
-
   /** Read the persisted artifact for (dir, name), building and writing it
     * first if this corpus version has none. The build output and the
     * reopened artifact are the same relation (parquet round-trips every
@@ -129,7 +65,8 @@ object PairStore {
   def readOrBuild(s: SparkSession, dir: String, name: String, table: String)
       (build: => DataFrame): DataFrame = {
     if (!enabled) return build
-    val path = s"$root/${name}_${BuildTag}_${fingerprint(s, dir, table)}"
+    val path = s"$root/${name}_${BuildTag}_" +
+      graft.SessionMemo.fingerprint(s, Seq(s"$dir/$table.parquet"))
     val success = new Path(s"$path/_SUCCESS")
     val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(success)) {

@@ -14,30 +14,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Memoized per (session, dir, table): `spark.read.parquet` pays a
+  /** Memoized in the session registry: `spark.read.parquet` pays a
     * driver-side file listing plus a footer read for schema inference on
     * EVERY call, and the bench surface makes ~2-3 such calls per key ×
     * 400+ keys — pure fixed cost with zero data dependence (r17
-    * optimization, guide §1.2/§6: the corpus is immutable for the life
-    * of a session, so the resolved relation is catalog metadata, exactly
-    * what a registered table would hold). Execution still scans parquet
-    * on every action — nothing here caches data. */
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // cheap staleness stamp folded into the memo key (r17 ADVICE, medium):
-    // an in-place corpus rewrite mid-session changes the table path's
-    // (mtime, length) — one local stat per call, so the memoized relation
-    // can never read a stale/deleted file index through the memo. (For a
-    // directory table the dir mtime moves when children are added/
-    // replaced; the single-file corpus moves both fields.) Everything
-    // else — the listing + footer read the memo exists to avoid — still
-    // happens once per distinct stamp.
-    val p = s"$dir/$name.parquet"
-    val f = new java.io.File(p)
-    graft.SessionMemo.of(spark, dir,
-      s"src_table_${name}_${f.lastModified}_${f.length}") {
-      spark.read.parquet(p)
+    * optimization, guide §1.2/§6). The resolved relation is catalog
+    * metadata, exactly what a registered table would hold, and like every
+    * registry entry it is rebuilt when the corpus snapshot moves, so an
+    * in-place rewrite is never read through a stale file index. Execution
+    * still scans parquet on every action — nothing here caches data. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.SessionMemo.of(spark, dir, s"src_table_$name") {
+      spark.read.parquet(s"$dir/$name.parquet")
     }
-  }
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

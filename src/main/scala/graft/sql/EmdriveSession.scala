@@ -113,48 +113,26 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
     * with a same-named corpus registration (r11 ADVICE). */
   def has(name: String): Boolean = catalog.contains(name)
 
-  /** Persisted-index registry: (kind, table plan identity, column) →
-    * on-disk layout path and its resolved relation. Built lazily on the
-    * FIRST index-backed search and reused by every later query — the
-    * reference's index-lives-with-the-table economics (src/storage/
-    * index.rs) at the SQL layer. The layout is read back ONCE, right after
-    * it is written: later queries filter that same relation, so partition
-    * discovery and schema inference (a listing job and a footer job over
-    * the layout's directories) are never repeated, and partition filters
-    * still prune through its file index. Keyed
-    * by the registered relation's SEMANTIC PLAN HASH (not the catalog
-    * name), so two sessions of one SparkSession querying the same corpus
-    * share one layout, while a session registering different data under
-    * the same name can never hit a stale index — the plan identity is
-    * the table-snapshot key, the same role PairStore's file fingerprint
-    * plays for parquet corpora. */
+  /** The persisted index layout of (kind, table, column), built lazily
+    * on the FIRST index-backed search and reused by every later query —
+    * the reference's index-lives-with-the-table economics (src/storage/
+    * index.rs) at the SQL layer. It is a registry entry over the table's
+    * relation ([[graft.SessionMemo.layout]]), so the table's snapshot —
+    * plan identity plus its files — decides reuse: a new generation
+    * written by INSERT/UPDATE supersedes the layout, and the layout two
+    * generations old is deleted. The layout is read back ONCE, right
+    * after it is written: later queries filter that same relation, so
+    * partition discovery and schema inference (a listing job and a footer
+    * job over the layout's directories) are never repeated, and partition
+    * filters still prune through its file index. Named by catalog name,
+    * not plan, so sessions of one SparkSession share one layout. */
   private def ensureIndex(kind: String, tbl: String, column: String)
-      (build: String => Unit): DataFrame = {
-    val rel = table(tbl)
-    // plan identity alone is NOT a snapshot key for file-backed relations:
-    // a parquet path rewritten in place hashes identically (same path,
-    // same schema), so the key also folds a file-status fingerprint of the
-    // plan's input files (name, length, mtime — the manifest identity
-    // PairStore uses). In-memory relations have no input files; their
-    // LocalRelation semanticHash covers the data.
-    val snap = graft.sources.PairStore.fileFingerprint(
-      spark, rel.inputFiles.toSeq)
-    val key = (System.identityHashCode(spark), kind,
-      rel.queryExecution.analyzed.semanticHash(), snap, column)
-    val cur = EmdriveSession.indexPaths.get(key)
-    if (cur != null) cur._2
-    else {
-      // pid-tagged name (ends `_p<pid>`): TempHygiene reaps it only once
-      // this process is gone. An untagged dir is age-swept after 12 h by
-      // any later graft process's startup sweep, which would delete a
-      // long-lived server's live index.
-      val p = graft.TempHygiene.pidTaggedDir(java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir")), s"graft_${kind}_idx").toString
-      build(p)
-      EmdriveSession.indexPaths.putIfAbsent(key, (p, spark.read.parquet(p)))
-      EmdriveSession.indexPaths.get(key)._2
+      (write: String => Unit): DataFrame =
+    graft.SessionMemo.layout(table(tbl), s"sql_${kind}_idx_${tbl}_$column",
+        s"graft_${kind}_idx") { p =>
+      write(p)
+      spark.read.parquet(p)
     }
-  }
 
   private val TvfName = "^([A-Za-z_][A-Za-z_0-9]*)\\((.*)\\)$".r
 
@@ -218,7 +196,8 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         val t = table(args(0))
         val shingled = t.select(col(args(1)).as("doc_id"),
           call_function("word_shingles", col(args(2)), lit(3)).as("sh"))
-        graft.operators.Dedup.jaccardPairs(shingled, args(3).toDouble)
+        graft.operators.Dedup.jaccardPairs(shingled, args(3).toDouble,
+          name = s"tvf_${args.take(3).mkString("_")}")
           .select(col("id_a"), col("id_b"), col("raw_j").as("jaccard"))
       // knn_cosine(tbl, idCol, vecCol, probeId, k): brute-force cosine
       // top-k vs the probe row — broadcast probe + TakeOrdered, no sort
@@ -471,7 +450,8 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         arity(3)
         graft.operators.Dedup.minhashPairs(
           table(args(0)).select(col(args(1)).as("doc_id"),
-            call_function("word_shingles", col(args(2)), lit(3)).as("sh")))
+            call_function("word_shingles", col(args(2)), lit(3)).as("sh")),
+          s"tvf_${args.mkString("_")}")
       // es_stratified(tbl, idCol, stratCol, textCol, k) (r15): the C118
       // per-stratum Efraimidis–Spirakis exact-k quality draw — bounded
       // top-k heaps per stratum, the shuffle carries k·strata rows
@@ -489,7 +469,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         graft.operators.Similarity.semDedupCore(
           table(args(0)).select(col(args(1)).as("vec_id"),
             col(args(2)).as("embedding")),
-          args(3).toDouble)
+          args(3).toDouble, name = s"tvf_${args.take(3).mkString("_")}")
       case other => throw new IllegalArgumentException(
         s"unknown table function: $other")
     }
@@ -1332,18 +1312,3 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
   }
 
 }
-
-object EmdriveSession {
-  /** Cross-session index-layout registry (see ensureIndex): keyed by
-    * (SparkSession identity, kind, relation semantic hash, input-file
-    * fingerprint, column) → (layout path, the layout relation resolved
-    * once at build time), so the write-once/query-many amortization spans
-    * sessions while plan identity rules out stale hits. Layouts are
-    * write-once, so the resolved relation can never go stale either.
-    * Layouts live under java.io.tmpdir; a production catalog would home
-    * them next to the table. */
-  private[sql] val indexPaths =
-    new java.util.concurrent.ConcurrentHashMap[
-      (Int, String, Int, String, String), (String, DataFrame)]()
-}
-

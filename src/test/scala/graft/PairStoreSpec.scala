@@ -37,13 +37,13 @@ class PairStoreSpec extends SparkTestBase {
   }
 
   test("fingerprint is stable per corpus and distinct across corpora") {
-    val a1 = PairStore.fingerprint(spark, sfDir, "embeddings")
-    val a2 = PairStore.fingerprint(spark, sfDir, "embeddings")
-    val b = PairStore.fingerprint(spark, "/root/testdata/sf0.01", "embeddings")
+    val a1 = SessionMemo.fingerprint(spark, Seq(s"$sfDir/embeddings.parquet"))
+    val a2 = SessionMemo.fingerprint(spark, Seq(s"$sfDir/embeddings.parquet"))
+    val b = SessionMemo.fingerprint(spark, Seq("/root/testdata/sf0.01/embeddings.parquet"))
     assert(a1 == a2, "same corpus must fingerprint identically")
     assert(a1 != b, "different corpora must not share an artifact")
     // a missing table gets a sentinel fingerprint, not an exception
-    assert(PairStore.fingerprint(spark, "/nonexistent", "embeddings").nonEmpty)
+    assert(SessionMemo.fingerprint(spark, Seq("/nonexistent/embeddings.parquet")).nonEmpty)
   }
 
   test("in-place rewrite of a NESTED data file re-keys the artifact " +
@@ -59,10 +59,10 @@ class PairStoreSpec extends SparkTestBase {
       val inner = base.resolve("emb.parquet/sub")
       Files.createDirectories(inner)
       Files.write(inner.resolve("part-0.parquet"), "generation-one".getBytes)
-      val fp1 = PairStore.fingerprint(spark, base.toString, "emb")
+      val fp1 = SessionMemo.fingerprint(spark, Seq(s"$base/emb.parquet"))
       Thread.sleep(5) // off the mtime granularity edge
       Files.write(inner.resolve("part-0.parquet"), "generation-TWO".getBytes)
-      val fp2 = PairStore.fingerprint(spark, base.toString, "emb")
+      val fp2 = SessionMemo.fingerprint(spark, Seq(s"$base/emb.parquet"))
       assert(fp1 != fp2,
         "in-place nested rewrite aliased the old artifact fingerprint")
       // and the artifact path also carries the build tag, so a pair-build
