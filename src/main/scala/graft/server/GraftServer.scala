@@ -14,13 +14,17 @@ import graft.sql.{EmdriveSession, EmdriveSql}
   *
   *   - `POST /` with a raw-SQL body → parse → execute → `200` with a JSON
   *     array of column-name-keyed objects (the reference's `QueryResult`
-  *     serialization, executor/mod.rs:27-38 `NamedRow`); a parse/validation
-  *     failure → `400` with `{"type":"parser","message":…}`; anything the
-  *     engine throws → `500` with `{"type":"server","message":…}`.
+  *     serialization, executor/mod.rs:27-38 `NamedRow`); a user error —
+  *     parse/validation failure, analysis error (unknown column …), or a
+  *     data error with SQLSTATE class 21/22 (a scalar subquery with more
+  *     than one row, an invalid cast …) → `400` with
+  *     `{"type":"parser","message":…}`; anything else the engine throws →
+  *     `500` with `{"type":"server","message":…}`.
   *   - `GET /?query=…` is the read-only path. The reference stubs it as an
-  *     echo (mod.rs:67-93 TODO); here it executes, but refuses CREATE and
-  *     INSERT with `400` — the GET/POST read/write split the reference's
-  *     route comments declare is enforced for real.
+  *     echo (mod.rs:67-93 TODO); here it executes, but refuses every
+  *     write statement ([[EmdriveSql.writes]]) with `400` — the GET/POST
+  *     read/write split the reference's route comments declare is
+  *     enforced for real.
   *   - `GET /health` → `{"status":"ok"}` (operational endpoint; not in the
   *     reference, which has no liveness probe).
   *
@@ -79,25 +83,29 @@ final class GraftServer(es: EmdriveSession, port: Int = 0,
           case ("POST", "/") =>
             val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
             // parameterized form (r16): {"query": "… ? …", "params":
-            // [...]} — substituted into TYPED SQL literals BEFORE parse,
-            // so a string parameter is always one literal (quotes in the
+            // [...]} — each parameter binds as one typed literal token, so
+            // a string parameter is always one literal (quotes in the
             // value are data, never syntax — the injection case). A raw
             // SQL body (never '{'-initial) keeps working unchanged.
             if (body.dropWhile(_.isWhitespace).startsWith("{"))
               parseJsonQuery(body) match {
-                case Right(q) => run(q, readOnly = false)
+                case Right((q, params)) =>
+                  run(EmdriveSql.parse(q, params), readOnly = false)
                 case Left(msg) => (400, errJson("parser", msg))
               }
-            else run(body, readOnly = false)
+            else run(EmdriveSql.parse(body), readOnly = false)
           case ("GET", "/") =>
             queryParam(ex.getRequestURI.getRawQuery) match {
-              case Some(q) => run(q, readOnly = true)
+              case Some(q) => run(EmdriveSql.parse(q), readOnly = true)
               case None => (400, errJson("server", "missing 'query' parameter"))
             }
           case ("GET", "/health") => (200, """{"status":"ok"}""")
           case _ => (404, errJson("server", "not found"))
         }
-      } catch { case e: Throwable => (500, errJson("server", errMsg(e))) }
+      } catch {
+        case e: Throwable if userError(e) => (400, errJson("parser", errMsg(e)))
+        case e: Throwable => (500, errJson("server", errMsg(e)))
+      }
     val bytes = body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
@@ -105,38 +113,11 @@ final class GraftServer(es: EmdriveSession, port: Int = 0,
     ex.close()
   }
 
-  private def run(sqlText: String, readOnly: Boolean): (Int, String) = {
-    val stmt =
-      try EmdriveSql.parse(sqlText)
-      catch { case e: IllegalArgumentException => return (400, errJson("parser", errMsg(e))) }
-    // EVERY catalog-mutating statement class is write-classified — the r10
-    // DML surface (UPDATE/DELETE/CTAS/INSERT…SELECT/MERGE) must be refused
-    // by the read-only GET exactly like CREATE/INSERT
-    val isWrite = stmt match {
-      case _: EmdriveSql.CreateTable | _: EmdriveSql.Insert |
-           _: EmdriveSql.InsertSelect | _: EmdriveSql.CreateAs |
-           _: EmdriveSql.Update | _: EmdriveSql.Delete |
-           _: EmdriveSql.Merge |
-           // r14: view DDL and DROP mutate the catalog (DROP TABLE also
-           // deletes durable generations) — write-classified like every
-           // other catalog mutation; PIVOT/UNPIVOT stay read-classified
-           _: EmdriveSql.CreateView | _: EmdriveSql.DropStmt |
-           // r15: schema evolution + truncate mutate the catalog too
-           _: EmdriveSql.AlterAdd | _: EmdriveSql.AlterDrop |
-           _: EmdriveSql.AlterRename | _: EmdriveSql.TruncateStmt |
-           // r16: COPY writes either the filesystem (TO) or the catalog
-           // (FROM) — both directions are writes
-           _: EmdriveSql.CopyStmt => true
-      case _ => false
-    }
-    if (readOnly && isWrite)
+  private def run(stmt: EmdriveSql.Statement, readOnly: Boolean): (Int, String) = {
+    if (readOnly && EmdriveSql.writes(stmt))
       return (400, errJson("server", "read-only endpoint: POST writes to /"))
     // catalog reads/writes are serialized; the jobs below run unlocked
-    val df =
-      try es.synchronized(es.sql(sqlText))
-      catch {
-        case e: IllegalArgumentException => return (400, errJson("parser", errMsg(e)))
-      }
+    val df = es.synchronized(es.sql(stmt))
     val rows = df.limit(maxRows)
       .select(to_json(struct(df.columns.toIndexedSeq.map(col): _*),
         java.util.Map.of("ignoreNullFields", "false")).as("j"))
@@ -144,59 +125,44 @@ final class GraftServer(es: EmdriveSession, port: Int = 0,
     (200, rows.mkString("[", ",", "]"))
   }
 
+  /** A failure the request caused rather than the server: a malformed or
+    * invalid statement, an analysis error, or a data error (SQLSTATE
+    * class 21, cardinality violation; 22, data exception). */
+  private def userError(e: Throwable): Boolean = e match {
+    case _: IllegalArgumentException | _: org.apache.spark.sql.AnalysisException => true
+    case s: org.apache.spark.SparkThrowable =>
+      Option(s.getSqlState).exists(st => st.startsWith("21") || st.startsWith("22"))
+    case _ => false
+  }
+
   /** Parse `{"query": …, "params": […]}` (Jackson — already on the Spark
-    * classpath) and substitute each positional `?` with a rendered typed
-    * literal. Strings become '…' with the dialect's '' escaping — the
-    * value can never terminate the literal, which is the whole injection
-    * defense; numbers/booleans/null render as themselves. `?` inside a
-    * string literal of the query text is data, not a placeholder. */
-  private[server] def parseJsonQuery(body: String): Either[String, String] = {
+    * classpath) into the query text and one typed literal per parameter:
+    * strings, numbers (as the exact decimal the caller sent), booleans and
+    * null. */
+  private[server] def parseJsonQuery(
+      body: String): Either[String, (String, Seq[EmdriveSql.Value])] = {
     val root =
       try new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
       catch { case e: Exception => return Left("bad JSON body: " + errMsg(e)) }
     val qNode = root.get("query")
     if (qNode == null || !qNode.isTextual)
       return Left("JSON body needs a string 'query' field")
-    val q = qNode.asText()
-    val params: Vector[com.fasterxml.jackson.databind.JsonNode] = {
-      val p = root.get("params")
-      if (p == null) Vector.empty
-      else if (!p.isArray) return Left("'params' must be an array")
-      else (0 until p.size).map(p.get).toVector
+    val p = root.get("params")
+    if (p != null && !p.isArray) return Left("'params' must be an array")
+    val params = Option(p).fold(Seq.empty[com.fasterxml.jackson.databind.JsonNode])(
+      a => (0 until a.size).map(a.get))
+    params.find(n => !(n.isTextual || n.isNumber || n.isBoolean || n.isNull)) match {
+      case Some(n) => Left(s"unsupported parameter type: ${n.getNodeType}")
+      case None => Right((qNode.asText(), params.map { n =>
+        if (n.isTextual) EmdriveSql.VStr(n.asText())
+        // plain decimal: BigDecimal round-trips int and float JSON numbers
+        // losslessly, 1e21 included
+        else if (n.isNumber)
+          EmdriveSql.VNum(new java.math.BigDecimal(n.asText()).toPlainString)
+        else if (n.isBoolean) EmdriveSql.VBool(n.asBoolean())
+        else EmdriveSql.VNull
+      }))
     }
-    def render(n: com.fasterxml.jackson.databind.JsonNode): Either[String, String] =
-      if (n.isTextual) Right("'" + n.asText().replace("'", "''") + "'")
-      // plain-decimal rendering (r16 ADVICE): Double.toString puts 1e21 /
-      // 2.5e-7 in scientific notation; the lexer now accepts exponents,
-      // but the substituted literal should still read as the exact
-      // decimal the caller sent (BigDecimal round-trips both int and
-      // float JSON numbers losslessly)
-      else if (n.isNumber)
-        Right(new java.math.BigDecimal(n.asText()).toPlainString)
-      else if (n.isBoolean) Right(if (n.asBoolean()) "TRUE" else "FALSE")
-      else if (n.isNull) Right("NULL")
-      else Left(s"unsupported parameter type: ${n.getNodeType}")
-    val out = new StringBuilder
-    var inStr = false
-    var used = 0
-    var i = 0
-    while (i < q.length) {
-      val c = q(i)
-      if (c == '\'') { inStr = !inStr; out.append(c) }
-      else if (c == '?' && !inStr) {
-        if (used >= params.length)
-          return Left(s"query has more ? placeholders than params (${params.length})")
-        render(params(used)) match {
-          case Right(s) => out.append(s); used += 1
-          case Left(m) => return Left(m)
-        }
-      }
-      else out.append(c)
-      i += 1
-    }
-    if (used != params.length)
-      return Left(s"query has $used ? placeholders but ${params.length} params")
-    Right(out.toString)
   }
 
   private def queryParam(rawQuery: String): Option[String] =

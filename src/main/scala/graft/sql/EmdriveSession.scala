@@ -38,12 +38,11 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
     * later INSERTs). Session-scoped, not durable — the reference's
     * durability unit is the table. */
   private[sql] val views = mutable.Map.empty[String, EmdriveSql.UnionStmt]
-  /** Prepared statements (r17): name → raw statement text with `?`
-    * placeholders. Stored as TEXT, not a parsed plan — `?` is not a
-    * token of the dialect's grammar, and EXECUTE re-parses after
-    * substitution so the statement always binds against the CURRENT
-    * catalog (the views doctrine). Session-scoped. */
-  private[sql] val prepared = mutable.Map.empty[String, String]
+  /** Prepared statements (r17): name → tokenized statement with `?`
+    * placeholders, parsed at each EXECUTE once its literals are bound, so
+    * the statement always binds against the CURRENT catalog (the views
+    * doctrine). Session-scoped. */
+  private[sql] val prepared = mutable.Map.empty[String, EmdriveSql.Template]
 
   // boot-time restore: every `dataDir/<name>/` holding a live generation
   // is a previously persisted table — register it eagerly so a restarted
@@ -585,18 +584,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       StructField("metric_key", BooleanType, nullable = false))))
   }
 
-  /** PREPARE / EXECUTE / DEALLOCATE (r17) intercept BEFORE the parse:
-    * `?` placeholders are not grammar tokens, so prepared text is stored
-    * raw and re-parsed at EXECUTE after literal substitution. */
-  def sql(text: String): DataFrame = {
-    val head = text.trim.takeWhile(_.isLetter).toUpperCase
-    head match {
-      case "PREPARE" => sqlPrepare(text.trim)
-      case "EXECUTE" => sqlExecute(text.trim)
-      case "DEALLOCATE" => sqlDeallocate(text.trim)
-      case _ => sqlRun(text)
-    }
-  }
+  def sql(text: String): DataFrame = sql(EmdriveSql.parse(text))
 
   private def receipt(kind: String, name: String, detail: String): DataFrame =
     spark.createDataFrame(
@@ -605,101 +593,23 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         StructField("name", StringType, nullable = false),
         StructField("detail", StringType, nullable = false))))
 
-  /** Count `?` placeholders outside single-quoted strings — the same
-    * scan the HTTP front door uses ('' escaping keeps data inert). */
-  private def placeholderCount(q: String): Int = {
-    var inStr = false; var n = 0; var i = 0
-    while (i < q.length) {
-      val c = q(i)
-      if (c == '\'') inStr = !inStr
-      else if (c == '?' && !inStr) n += 1
-      i += 1
-    }
-    n
-  }
-
-  /** `PREPARE name AS <statement>` — stores the raw text (overwriting a
-    * previous definition, the DuckDB behavior). The statement must be
-    * non-empty and quote-balanced so a malformed prepare fails HERE, not
-    * on first EXECUTE. */
-  private def sqlPrepare(t: String): DataFrame = {
-    val m = java.util.regex.Pattern
-      .compile("(?is)^PREPARE\\s+([A-Za-z_][A-Za-z_0-9]*)\\s+AS\\s+(.+?)\\s*;?\\s*$",
-        java.util.regex.Pattern.DOTALL).matcher(t)
-    require(m.matches(), s"expected PREPARE <name> AS <statement> in: $t")
-    val (name, body) = (m.group(1), m.group(2))
-    require(body.count(_ == '\'') % 2 == 0,
-      s"PREPARE $name: unbalanced string quoting in the statement body")
-    val headWord = body.trim.takeWhile(_.isLetter).toUpperCase
-    require(headWord != "PREPARE" && headWord != "EXECUTE"
-      && headWord != "DEALLOCATE",
-      s"PREPARE $name: cannot prepare a $headWord statement")
-    prepared(name) = body
-    receipt("PREPARE", name, s"${placeholderCount(body)} parameter(s)")
-  }
-
-  /** `EXECUTE name[(lit, …)]` — substitutes each `?` with the given SQL
-    * LITERAL (number, '…' string, TRUE/FALSE, NULL — arbitrary
-    * expressions are refused, which keeps the placeholder contract as
-    * tight as the HTTP front door's) and runs the statement. */
-  private def sqlExecute(t: String): DataFrame = {
-    val m = java.util.regex.Pattern
-      .compile("(?is)^EXECUTE\\s+([A-Za-z_][A-Za-z_0-9]*)\\s*(?:\\((.*)\\))?\\s*;?\\s*$",
-        java.util.regex.Pattern.DOTALL).matcher(t)
-    require(m.matches(), s"expected EXECUTE <name>[(literals…)] in: $t")
-    val name = m.group(1)
-    val q = prepared.getOrElse(name, throw new IllegalArgumentException(
-      s"EXECUTE $name: no such prepared statement"))
-    // split top-level commas honoring '' string escaping
-    val rawArgs = Option(m.group(2)).map(_.trim).filter(_.nonEmpty)
-    val args: Seq[String] = rawArgs match {
-      case None => Seq.empty
-      case Some(s) =>
-        val out = mutable.ListBuffer.empty[String]
-        val cur = new StringBuilder
-        var inStr = false
-        s.foreach { c =>
-          if (c == '\'') { inStr = !inStr; cur.append(c) }
-          else if (c == ',' && !inStr) { out += cur.toString.trim; cur.clear() }
-          else cur.append(c)
-        }
-        require(!inStr, s"EXECUTE $name: unterminated string literal")
-        out += cur.toString.trim
-        out.toSeq
-    }
-    val LitPat = ("(?is)^(?:NULL|TRUE|FALSE|-?[0-9]+(?:\\.[0-9]+)?" +
-      "(?:[eE][+-]?[0-9]+)?|'(?:[^']|'')*')$").r
-    args.foreach(a => require(LitPat.matches(a),
-      s"EXECUTE $name: argument must be a literal, got: $a"))
-    val need = placeholderCount(q)
-    require(args.length == need,
-      s"EXECUTE $name: expected $need argument(s), got ${args.length}")
-    // splice at the ? positions (outside strings), left to right
-    val out = new StringBuilder
-    var inStr = false; var used = 0; var i = 0
-    while (i < q.length) {
-      val c = q(i)
-      if (c == '\'') { inStr = !inStr; out.append(c) }
-      else if (c == '?' && !inStr) { out.append(args(used)); used += 1 }
-      else out.append(c)
-      i += 1
-    }
-    sqlRun(out.toString)
-  }
-
-  private def sqlDeallocate(t: String): DataFrame = {
-    val m = java.util.regex.Pattern
-      .compile("(?is)^DEALLOCATE\\s+(?:PREPARE\\s+)?([A-Za-z_][A-Za-z_0-9]*)\\s*;?\\s*$")
-      .matcher(t)
-    require(m.matches(), s"expected DEALLOCATE [PREPARE] <name> in: $t")
-    val name = m.group(1)
-    require(prepared.remove(name).nonEmpty,
-      s"DEALLOCATE $name: no such prepared statement")
-    receipt("DEALLOCATE", name, "dropped")
-  }
-
-  private def sqlRun(text: String): DataFrame = EmdriveSql.parse(text) match {
+  /** Run an already-parsed statement (the server parses once, to classify
+    * it as a read or a write, and hands the statement over). */
+  def sql(stmt: Statement): DataFrame = stmt match {
     case ShowTables => systemTables()
+
+    // PREPARE / EXECUTE / DEALLOCATE (r17): EXECUTE binds its literals to
+    // the stored statement's `?` tokens and runs the result
+    case Prepare(name, body) =>
+      prepared(name) = body
+      receipt("PREPARE", name, s"${body.params} parameter(s)")
+    case Execute(name, args) =>
+      sql(prepared.getOrElse(name, throw new IllegalArgumentException(
+        s"EXECUTE $name: no such prepared statement")).bind(args))
+    case Deallocate(name) =>
+      require(prepared.remove(name).nonEmpty,
+        s"DEALLOCATE $name: no such prepared statement")
+      receipt("DEALLOCATE", name, "dropped")
 
     case Describe(name) =>
       // views describe their OUTPUT schema (r14): they have no catalog

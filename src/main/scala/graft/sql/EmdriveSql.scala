@@ -46,7 +46,7 @@ import graft.sources.SchemaMapper
   *                    and operand := mul (('+'|'-') mul)*,
   *                    mul := atom (('*'|'/') atom)*, atom := col | lit
   *                    | col @ probe | '(' operand ')'
-  *                    | (SELECT …)   (uncorrelated scalar subquery)
+  *                    | (SELECT …)   (scalar subquery)
   *                    — arithmetic also as a select item: expr AS a,
   *                    and over aggregates in aggregating selects:
   *                    SUM(a) / COUNT(*) AS r (atoms: agg calls, group
@@ -80,7 +80,7 @@ import graft.sources.SchemaMapper
   *   … FROM generate_series(start, stop[, step]) [alias]   (integer
   *     spine TVF, stop inclusive — the gap-filling join's left side)
   *   … FROM t [a], LATERAL (SELECT … WHERE in = out [ORDER BY …]
-  *     [LIMIT n]) [AS] l   (correlated subquery, decorrelated top-n)
+  *     [LIMIT n]) [AS] l   (correlated per-row subquery; top-n per key)
   *   CREATE [OR REPLACE] VIEW v AS select-chain   (lazy, re-lowered)
   *   DROP TABLE|VIEW [IF EXISTS] name   (kind-checked)
   *   … frame … EXCLUDE CURRENT ROW   (leave-one-out SUM/COUNT/AVG)
@@ -89,9 +89,15 @@ import graft.sources.SchemaMapper
   *   ARRAY_AGG(col ORDER BY col [ASC|DESC])   (ordered list aggregation)
   *
   * WHERE operands may name SELECT-list aliases (the README story filters
-  * on the aliased distance), and `@` adapts to the column's carrier type:
-  * 64-bit integer hashes via xor+bit_count, binary(16) UINT128 hashes via
-  * the hamming128 kernel.
+  * on the aliased distance; a name that is also a source column reads the
+  * source column, ANSI binding), and `@` adapts to the column's carrier
+  * type: 64-bit integer hashes via xor+bit_count, binary(16) UINT128
+  * hashes via the hamming128 kernel.
+  *
+  * Subqueries (scalar, [NOT] IN, [NOT] EXISTS, ANY/ALL, LATERAL) lower to
+  * Spark's native subquery columns and Catalyst decorrelates them; a name
+  * in a subquery's WHERE that the subquery does not define reads the
+  * enclosing query's column.
   *
   * Aggregates / GROUP BY / ORDER BY / LIMIT are a graft EXTENSION beyond
   * the reference grammar (reference SELECT is columns+WHERE only —
@@ -117,6 +123,11 @@ object EmdriveSql {
     * never a keyword, may hold spaces/case; `""` escapes a quote. Kept
     * distinct from TWord so keyword checks can't capture it. */
   private final case class TQuoted(s: String) extends Tok
+  /** `?` — a positional parameter, replaced by a literal token before the
+    * parser runs ([[parse]]'s `params`, a prepared statement's EXECUTE
+    * arguments). Only the tokenizer decides what is a placeholder, so a
+    * `?` inside a string, a quoted identifier or a comment is never one. */
+  private case object TParam extends Tok
 
   private def tokenize(input: String): List[Tok] = {
     val out = mutable.ListBuffer.empty[Tok]
@@ -198,6 +209,8 @@ object EmdriveSql {
         out += TSym("!="); i += 2 // ANSI <> spelling of not-equals
       } else if ((c == '<' || c == '>' || c == '!') && peek(1) == '=') {
         out += TSym(s"$c="); i += 2
+      } else if (c == '?') {
+        out += TParam; i += 1
       } else if ("(),;*@=<>-+/.%".indexOf(c) >= 0) {
         out += TSym(c.toString); i += 1
       } else throw new IllegalArgumentException(s"unexpected character '$c' in: $input")
@@ -298,13 +311,17 @@ object EmdriveSql {
   final case class ORef(name: String) extends Operand
   final case class OVal(v: Value) extends Operand
   final case class ODist(column: String, probe: Value) extends Operand
-  /** (SELECT …) as a comparison RHS (or CASE value): an uncorrelated
-    * scalar subquery. Lowered the way Spark's own ScalarSubquery executes
-    * — subquery runs first, its single value is inlined as a literal in
-    * the outer plan (so `x > (SELECT AVG(…))` stays parquet-pushable);
-    * 0 rows → NULL (ANSI), >1 rows → error, enforced by a bounded
-    * 2-row driver pre-pass. */
+  /** (SELECT …) as an operand: a scalar subquery, lowered to a native
+    * Catalyst scalar subquery (`Dataset.scalar`). Uncorrelated ones stay
+    * parquet-pushable (`x > (SELECT AVG(…))` reaches PushedFilters);
+    * 0 rows → NULL (ANSI), >1 rows → SCALAR_SUBQUERY_TOO_MANY_ROWS when
+    * the query runs. A correlated one selects exactly one aggregate and
+    * Catalyst decorrelates it (COUNT over no rows is 0, not NULL). */
   final case class OSub(sub: Select) extends Operand
+  /** A column of the enclosing query read inside a correlated subquery.
+    * Never parsed: the lowering marks every name in a subquery's WHERE
+    * that the subquery does not define, and lowers it as `Column.outer`. */
+  final case class OOuter(name: String) extends Operand
   /** lhs (+|-|*|/) rhs — arithmetic over columns/literals/subqueries with
     * standard precedence (* / over + -, parens group; graft extension).
     * Lowered 1:1 onto Column arithmetic, so expressions stay inside
@@ -355,9 +372,9 @@ object EmdriveSql {
   /** lhs [NOT] IN (literal, …) — lowered to a Catalyst In expression so
     * the membership test reaches the parquet scan as a pushed filter. */
   final case class PIn(lhs: Operand, vals: Seq[Value], neg: Boolean) extends Pred
-  /** operand [NOT] IN (SELECT …) — WHERE-only; lowered to a null-aware
-    * marker join against the DISTINCT subquery result (ANSI three-valued
-    * IN: empty set → FALSE, match → TRUE, no match with a NULL probe or
+  /** operand [NOT] IN (SELECT …) — lowered to `Column.isin(Dataset)`;
+    * Catalyst's null-aware anti join gives the ANSI three-valued IN
+    * (empty set → FALSE, match → TRUE, no match with a NULL probe or
     * NULLs in the set → NULL). */
   final case class PInSub(lhs: Operand, sub: Select, neg: Boolean) extends Pred
   /** lhs [NOT] LIKE 'pattern' [ESCAPE 'c'] (%, _ wildcards) — lowered to
@@ -376,14 +393,14 @@ object EmdriveSql {
       neg: Boolean) extends Pred
 
   /** `EXISTS (SELECT … FROM t WHERE …)` — the subquery's WHERE may mix
-    * local predicates with equality conjuncts referencing OUTER columns
-    * (correlation); negation composes via [[PNot]] (EXISTS is two-valued,
-    * so `NOT` is safe anywhere in the tree). */
+    * local predicates with conjuncts naming OUTER columns (correlation);
+    * lowered to `Dataset.exists`. Negation composes via [[PNot]] (EXISTS
+    * is two-valued, so `NOT` is safe anywhere in the tree). */
   final case class PExists(sub: Select) extends Pred
   /** operand op ANY|ALL (SELECT …) — ANSI quantified comparison (r14).
     * `= ANY` / `!= ALL` desugar to [NOT] IN at parse time; the inequality
-    * forms lower to a broadcast (min, max, count, nulls) stats frame of
-    * the subquery with full three-valued semantics (empty set: ALL→TRUE,
+    * forms read one scalar (min, max, count, nulls) struct of the
+    * subquery with full three-valued semantics (empty set: ALL→TRUE,
     * ANY→FALSE; NULLs in the set or a NULL probe yield NULL unless some
     * non-null value already decides the answer). */
   final case class PQuant(lhs: Operand, op: String, all: Boolean,
@@ -597,9 +614,9 @@ object EmdriveSql {
       distinctOn: Seq[String] = Seq.empty,
       /** `FROM t [a], LATERAL (SELECT … WHERE inner = outer [ORDER BY …]
         * [LIMIT n]) [AS] l` (r14): a correlated inline subquery evaluated
-        * per outer row — (inner select, alias). Decorrelated at lowering:
-        * LIMIT becomes a per-correlation-key rank window (the classic
-        * top-n-per-key rewrite), then one equi-join. */
+        * per outer row — (inner select, alias). Lowered to
+        * `Dataset.lateralJoin`; Catalyst decorrelates it (a LIMIT becomes
+        * a per-correlation-key rank, the classic top-n-per-key rewrite). */
       lateral: Option[(Select, String)] = None)
     extends Statement
 
@@ -628,6 +645,35 @@ object EmdriveSql {
         * fixpoint (UNION-distinct accumulation, naive evaluation with a
         * convergence guard) instead of wiring one lazy subplan. */
       recursive: Boolean = false) extends Statement
+
+  /** A tokenized statement with `?` placeholders (PREPARE's body): parsed
+    * only when [[bind]] substitutes its literals, so it binds against the
+    * catalog of its EXECUTE (the views doctrine). */
+  final class Template private[EmdriveSql] (toks: List[Tok], text: String) {
+    val params: Int = toks.count(_ == TParam)
+    def bind(values: Seq[Value]): Statement = parseTokens(toks, text, values)
+  }
+  /** PREPARE name AS statement (r17): stores the statement as a
+    * [[Template]], overwriting a previous definition (DuckDB's
+    * behavior). */
+  final case class Prepare(name: String, body: Template) extends Statement
+  /** EXECUTE name[(literal, …)]: runs the prepared statement with each `?`
+    * bound, in order, to one literal — arbitrary expressions are refused. */
+  final case class Execute(name: String, args: Seq[Value]) extends Statement
+  final case class Deallocate(name: String) extends Statement
+
+  /** Whether running `s` changes the catalog, the filesystem or the
+    * session's prepared statements: the statements a read-only endpoint
+    * refuses. EXECUTE counts as a write because its prepared statement
+    * may be one; PIVOT/UNPIVOT and every query are reads. */
+  def writes(s: Statement): Boolean = s match {
+    case _: CreateTable | _: Insert | _: InsertSelect | _: CreateAs |
+         _: Update | _: Delete | _: Merge | _: CreateView | _: DropStmt |
+         _: AlterAdd | _: AlterDrop | _: AlterRename | _: TruncateStmt |
+         // COPY writes the filesystem (TO) or the catalog (FROM)
+         _: CopyStmt | _: Prepare | _: Execute | _: Deallocate => true
+    case _ => false
+  }
 
   // ----- parser (recursive descent over the token list) -----------------
 
@@ -790,8 +836,50 @@ object EmdriveSql {
   private def collapse(c: UnionStmt): Statement =
     if (c.rest.isEmpty) c.first else c
 
-  def parse(sqlText: String): Statement = {
-    val p = new P(tokenize(sqlText), sqlText)
+  /** Parse one statement. `params` bind, in order, to its `?` placeholders
+    * as literal tokens before the parser runs, so a string parameter is
+    * always one string literal, never syntax. */
+  def parse(sqlText: String, params: Seq[Value] = Seq.empty): Statement =
+    parseTokens(tokenize(sqlText), sqlText, params)
+
+  /** The token a bound parameter stands for (a negative number is the
+    * `-` `n` pair the lexer produces for the same text). */
+  private def literalToks(v: Value): List[Tok] = v match {
+    case VNum(n) if n.startsWith("-") => List(TSym("-"), TNum(n.drop(1)))
+    case VNum(n) => List(TNum(n))
+    case VStr(x) => List(TStr(x))
+    case VBits(b) => List(TBits(b))
+    case VBool(b) => List(TWord(if (b) "TRUE" else "FALSE"))
+    case VNull => List(TWord("NULL"))
+    case VFunc(f) => List(TWord(f), TSym("("), TSym(")"))
+  }
+
+  private def parseTokens(toks: List[Tok], sqlText: String,
+      params: Seq[Value]): Statement = {
+    val p = new P(toks, sqlText)
+    // PREPARE keeps its body's placeholders: they bind at EXECUTE
+    if (p.tryWord("PREPARE")) {
+      val name = p.ident()
+      p.eatWord("AS")
+      val body = if (p.toks.lastOption.contains(TSym(";"))) p.toks.init else p.toks
+      body.headOption match {
+        case None => p.fail(s"a statement after PREPARE $name AS")
+        case Some(TWord(w)) if Set("PREPARE", "EXECUTE", "DEALLOCATE")(w.toUpperCase) =>
+          throw new IllegalArgumentException(
+            s"PREPARE $name: cannot prepare a ${w.toUpperCase} statement")
+        case _ =>
+      }
+      require(params.isEmpty, s"PREPARE $name takes no parameters")
+      return Prepare(name, new Template(body, sqlText))
+    }
+    val holes = toks.count(_ == TParam)
+    require(holes == params.length,
+      s"$holes ? placeholder(s) but ${params.length} parameter(s) in: $sqlText")
+    val args = params.iterator
+    p.toks = toks.flatMap {
+      case TParam => literalToks(args.next())
+      case t => List(t)
+    }
     val stmt =
       if (p.tryWord("CREATE")) parseCreate(p)
       else if (p.tryWord("INSERT")) parseInsert(p)
@@ -1038,6 +1126,20 @@ object EmdriveSql {
           s"COPY: HEADER applies to FORMAT CSV only, not $fmt")
         CopyStmt(t, path, toFile, fmt, header, chain, partBy.toSeq, overwrite)
       }
+      else if (p.tryWord("EXECUTE")) {
+        val name = p.ident()
+        val args = mutable.ListBuffer.empty[Value]
+        if (p.trySym("(") && !p.trySym(")")) {
+          args += p.value()
+          while (p.trySym(",")) args += p.value()
+          p.eatSym(")")
+        }
+        Execute(name, args.toSeq)
+      }
+      else if (p.tryWord("DEALLOCATE")) {
+        p.tryWord("PREPARE"): Unit
+        Deallocate(p.ident())
+      }
       else if (p.tryWord("SHOW")) { p.eatWord("TABLES"); ShowTables }
       else if (p.tryWord("DESCRIBE")) Describe(p.ident())
       else if (p.tryWord("EXPLAIN")) {
@@ -1046,7 +1148,7 @@ object EmdriveSql {
         p.eatWord("SELECT"); ExplainStmt(parseSelect(p), analyze)
       }
       else p.fail("CREATE, INSERT, SELECT, WITH, EXPLAIN, PIVOT, UNPIVOT, " +
-        "SHOW TABLES or DESCRIBE")
+        "SHOW TABLES, DESCRIBE, PREPARE, EXECUTE or DEALLOCATE")
     p.trySym(";")
     if (!p.done) p.fail("end of statement")
     stmt
@@ -1090,7 +1192,7 @@ object EmdriveSql {
         case TStr(s) :: rest => cur.append(" '" + s.replace("'", "''") + "'"); p.toks = rest
         case TBits(v) :: rest => cur.append(" " + v.toString); p.toks = rest
         case TSym(s) :: rest => cur.append(" " + s); p.toks = rest
-        case Nil => p.fail("')' closing the column list")
+        case _ => p.fail("')' closing the column list")
       }
     }
     // SchemaMapper's grammar expects TYPE(n) with no spaces — recompact

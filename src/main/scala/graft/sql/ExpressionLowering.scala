@@ -318,39 +318,14 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
     }
   }
 
-  /** Pred nodes in a WHERE tree (the only place IN (SELECT …) is legal). */
-  private[sql] def collectInSubs(p: Pred): Seq[PInSub] = p match {
-    case s: PInSub => Seq(s)
-    case PAnd(a, b) => collectInSubs(a) ++ collectInSubs(b)
-    case POr(a, b) => collectInSubs(a) ++ collectInSubs(b)
-    case PNot(x) => collectInSubs(x)
-    case _ => Seq.empty
-  }
-
-  private[sql] def collectExists(p: Pred): Seq[PExists] = p match {
-    case s: PExists => Seq(s)
-    case PAnd(a, b) => collectExists(a) ++ collectExists(b)
-    case POr(a, b) => collectExists(a) ++ collectExists(b)
-    case PNot(x) => collectExists(x)
-    case _ => Seq.empty
-  }
-
-  private[sql] def collectQuants(p: Pred): Seq[PQuant] = p match {
-    case s: PQuant => Seq(s)
-    case PAnd(a, b) => collectQuants(a) ++ collectQuants(b)
-    case POr(a, b) => collectQuants(a) ++ collectQuants(b)
-    case PNot(x) => collectQuants(x)
-    case _ => Seq.empty
-  }
-
   /** HAVING aggregate atoms → their select-item twin's output column
     * (r9): `HAVING COUNT(*) >= 20` works without an alias reference when
     * some item computes the same aggregate; an aggregate with no twin is
     * refused (this dialect aggregates only what the select list names —
     * the documented extension shape). Structural rewrite over the whole
     * predicate tree, so aggregates compose inside arithmetic/CAST. */
-  private[sql] def resolveHavingAggs(p: Pred, items: Seq[SelectItem]): Pred = {
-    def op(o: Operand): Operand = o match {
+  private[sql] def resolveHavingAggs(p: Pred, items: Seq[SelectItem]): Pred =
+    mapOperands(p) {
       case OAgg(f, arg) =>
         items.collectFirst {
           case AggItem(f2, arg2, alias, None) if f2 == f && arg2 == arg =>
@@ -366,11 +341,20 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
         }.getOrElse(throw new IllegalArgumentException(
           s"HAVING aggregate ${a.func}(<expr>) must also appear " +
             "in the select list (same spelling)"))
-      case OArith(l, oper, r) => OArith(op(l), oper, op(r))
-      case OFunc(f, as) => OFunc(f, as.map(op))
-      case OCast(x, t, tm) => OCast(op(x), t, tm)
-      case other => other
     }
+
+  /** `p` with every operand that `f` is defined at replaced (outermost
+    * match wins; elsewhere the walk descends). Subquery bodies are not
+    * entered: their names live in their own scope. */
+  private[sql] def mapOperands(p: Pred)(f: PartialFunction[Operand, Operand]): Pred = {
+    def op(o: Operand): Operand = f.applyOrElse(o, (x: Operand) => x match {
+      case OArith(l, oper, r) => OArith(op(l), oper, op(r))
+      case OFunc(fn, as) => OFunc(fn, as.map(op))
+      case OCast(y, t, tm) => OCast(op(y), t, tm)
+      case OAggX(fn, a) => OAggX(fn, op(a))
+      case OCase(bs, e) => OCase(bs.map { case (c, v) => (walk(c), op(v)) }, e.map(op))
+      case other => other
+    })
     def walk(pr: Pred): Pred = pr match {
       case PCmp(Cmp(l, c, r)) => PCmp(Cmp(op(l), c, op(r)))
       case PAnd(a, b) => PAnd(walk(a), walk(b))
@@ -378,29 +362,34 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
       case PNot(x) => PNot(walk(x))
       case PIn(l, vs, n) => PIn(op(l), vs, n)
       case PInTuple(ls, rows, n) => PInTuple(ls.map(op), rows, n)
+      case PInSub(l, sub, n) => PInSub(op(l), sub, n)
+      case PQuant(l, o, all, sub) => PQuant(op(l), o, all, sub)
       case PLike(l, pat, n, e, ci) => PLike(op(l), pat, n, e, ci)
       case PIsNull(l, n) => PIsNull(op(l), n)
       case PDistinct(l, r, n) => PDistinct(op(l), op(r), n)
-      case other => other
+      case e: PExists => e
     }
     walk(p)
   }
 
   /** Top-level AND conjuncts (the unit of the pre/post-window WHERE split
-    * and of EXISTS decorrelation). */
+    * and of a subquery's local/correlated split). */
   private[sql] def splitConjuncts(p: Pred): Seq[Pred] = p match {
     case PAnd(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
     case other => Seq(other)
   }
 
-  /** Column names a predicate reads (scalar subqueries inline to literals
-    * and EXISTS reads its marker, so neither contributes). */
+  /** Column names a predicate reads in its own scope (subquery bodies and
+    * outer-marked names do not contribute). */
   private[sql] def refNamesO(o: Operand): Set[String] = o match {
     case ORef(n) => Set(n)
     case ODist(c, _) => Set(c)
     case OArith(l, _, r) => refNamesO(l) ++ refNamesO(r)
     case OFunc(_, args) => args.flatMap(refNamesO).toSet
     case OCast(o, _, _) => refNamesO(o)
+    case OCase(bs, e) =>
+      bs.flatMap { case (c, v) => refNames(c) ++ refNamesO(v) }.toSet ++
+        e.toSet.flatMap(refNamesO)
     case _ => Set.empty
   }
 
@@ -419,35 +408,6 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
     case _: PExists => Set.empty
   }
 
-  /** Correlated scalar subquery atoms ANYWHERE in an operand tree — not
-    * just as a direct comparison side: `(SELECT MIN(x) …) * 10 > col`
-    * nests its subquery inside arithmetic, and r8 ADVICE flagged that the
-    * direct-side-only match let such atoms fall through to the
-    * uncorrelated inline-literal path, which dies unresolved. */
-  private[sql] def corrSubsInOperand(o: Operand, outer: DataFrame): Seq[Select] =
-    o match {
-      case OSub(sub) if isCorrScalar(sub, outer) => Seq(sub)
-      case OArith(l, _, r) =>
-        corrSubsInOperand(l, outer) ++ corrSubsInOperand(r, outer)
-      case OFunc(_, args) => args.flatMap(corrSubsInOperand(_, outer))
-      case OCast(x, _, _) => corrSubsInOperand(x, outer)
-      case _ => Seq.empty
-    }
-
-  /** PCmp nodes with a correlated scalar subquery anywhere in either
-    * operand tree — these decorrelate in lowerSelect's 2c pre-pass and
-    * the whole comparison rewrites to a Column (composable under
-    * AND/OR/NOT like IN/EXISTS). */
-  private[sql] def collectCorrCmps(p: Pred, outer: DataFrame): Seq[PCmp] = p match {
-    case s @ PCmp(Cmp(l, _, r))
-      if (corrSubsInOperand(l, outer) ++ corrSubsInOperand(r, outer)).nonEmpty =>
-      Seq(s)
-    case PAnd(a, b) => collectCorrCmps(a, outer) ++ collectCorrCmps(b, outer)
-    case POr(a, b) => collectCorrCmps(a, outer) ++ collectCorrCmps(b, outer)
-    case PNot(x) => collectCorrCmps(x, outer)
-    case _ => Seq.empty
-  }
-
   private[sql] def applyCmpOp(l: Column, op: String, r: Column): Column = op match {
     case "=" => l === r
     case "!=" => l =!= r
@@ -457,19 +417,16 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
     case ">=" => l >= r
   }
 
-  private[sql] def predCol(base: DataFrame, p: Pred,
-      subs: Map[Pred, Column] = Map.empty): Column = p match {
-    case s: PCmp if subs.contains(s) => subs(s)
+  private[sql] def predCol(base: DataFrame, p: Pred): Column = p match {
     case PCmp(c) => cmpCol(base, c)
-    case PAnd(a, b) => predCol(base, a, subs) && predCol(base, b, subs)
-    case POr(a, b) => predCol(base, a, subs) || predCol(base, b, subs)
-    case PNot(x) => !predCol(base, x, subs)
-    case s: PInSub => subs.getOrElse(s, throw new IllegalArgumentException(
-      "IN (SELECT …) is only supported in WHERE"))
-    case s: PExists => subs.getOrElse(s, throw new IllegalArgumentException(
-      "EXISTS (SELECT …) is only supported in WHERE"))
-    case s: PQuant => subs.getOrElse(s, throw new IllegalArgumentException(
-      "ANY/ALL (SELECT …) is only supported in WHERE"))
+    case PAnd(a, b) => predCol(base, a) && predCol(base, b)
+    case POr(a, b) => predCol(base, a) || predCol(base, b)
+    case PNot(x) => !predCol(base, x)
+    case PInSub(lhs, sub, neg) =>
+      val c = operandCol(base, lhs).isin(singleColumn(sub, "IN"))
+      if (neg) !c else c
+    case PExists(sub) => existsCol(sub)
+    case PQuant(lhs, op, all, sub) => quantCol(operandCol(base, lhs), op, all, sub)
     case PIn(lhs, vals, neg) =>
       // raw literal values (not Columns) build a true Catalyst In — the
       // shape the parquet datasource translates to a pushed IN filter
@@ -535,45 +492,11 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
       case _: NumberFormatException => lit(new java.math.BigDecimal(s))
     }
 
-  private[sql] def operandCol(base: DataFrame, o: Operand,
-      corr: Map[Select, Column] = Map.empty): Column = o match {
+  private[sql] def operandCol(base: DataFrame, o: Operand): Column = o match {
     case ORef(n) => qref(n)
+    case OOuter(n) => qref(n).outer()
     case ODist(c, probe) => distCol(base, c, probe)
-    // correlated scalar subquery already decorrelated by the 2c pre-pass:
-    // read the attached column instead of executing standalone
-    case OSub(sub) if corr.contains(sub) => corr(sub)
-    case OSub(sub) =>
-      // uncorrelated scalar subquery: executed first, value inlined as a
-      // literal (Spark's own ScalarSubquery shape — keeps the outer
-      // predicate pushable). The 2-row collect is a documented bounded
-      // driver pre-pass enforcing the at-most-one-row rule. A correlated
-      // subquery that the decorrelator does not recognize (e.g. joined or
-      // grouped inner relation with an outer reference) would otherwise
-      // die here with an opaque unresolved-column error — turn it into
-      // the dialect's targeted message (r8 ADVICE).
-      val df =
-        try lowerSelect(sub)
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getMessage.contains("UNRESOLVED_COLUMN") ||
-                e.getMessage.contains("cannot be resolved") =>
-            throw new IllegalArgumentException(
-              "scalar subquery references an outer column but is not a " +
-                "supported correlated shape (single inner table, equality " +
-                "correlation); decorrelate it manually or simplify the " +
-                "inner relation", e)
-        }
-      require(df.columns.length == 1,
-        s"scalar subquery must project exactly one column, got " +
-          s"(${df.columns.mkString(", ")})")
-      df.limit(2).collect() match {
-        case Array() => lit(null).cast(df.schema.head.dataType)
-        case Array(row) =>
-          if (row.isNullAt(0)) lit(null).cast(df.schema.head.dataType)
-          else lit(row.get(0))
-        case _ => throw new IllegalArgumentException(
-          s"scalar subquery returned more than one row")
-      }
+    case OSub(sub) => scalarCol(sub)
     case OVal(VNum(s)) => numLit(s)
     case OVal(VStr(s)) => lit(s)
     case OVal(VBits(v)) => lit(v.longValue)
@@ -582,7 +505,7 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
     case OVal(VNull) => lit(null)
     case OVal(f: VFunc) => funcCol(f)
     case OArith(lhs, op, rhs) =>
-      val (l, r) = (operandCol(base, lhs, corr), operandCol(base, rhs, corr))
+      val (l, r) = (operandCol(base, lhs), operandCol(base, rhs))
       op match {
         case "+" => l + r
         case "-" => l - r
@@ -594,21 +517,19 @@ private[sql] trait ExpressionLowering { self: EmdriveSession =>
         case "||" => concat(l, r)
       }
     case OFunc(f, args) =>
-      funcApply(f, args.map(operandCol(base, _, corr)), args)
+      funcApply(f, args.map(operandCol(base, _)), args)
     case OCast(o, t, tm) =>
-      val c = operandCol(base, o, corr)
+      val c = operandCol(base, o)
       if (tm) call_function("graft_try_cast", c, lit(sqlTypeName(t)))
       else c.cast(sqlTypeName(t))
     // operand-level CASE (r15): the when-chain, exactly the CaseItem
     // lowering — a NULL-subject/no-match row yields the ELSE (or NULL)
     case OCase(branches, elseV) =>
-      // branch conditions are plain predicates (subquery forms stay a
-      // WHERE-only shape, refused by predCol's default substitution map)
       val chain = branches.foldLeft(Option.empty[Column]) { case (acc, (pr, v)) =>
-        val (c, x) = (predCol(base, pr), operandCol(base, v, corr))
+        val (c, x) = (predCol(base, pr), operandCol(base, v))
         Some(acc.fold(when(c, x))(_.when(c, x)))
       }.get
-      elseV.fold(chain)(e => chain.otherwise(operandCol(base, e, corr)))
+      elseV.fold(chain)(e => chain.otherwise(operandCol(base, e)))
     case a: OAgg => throw new IllegalArgumentException(
       s"aggregate ${a.func} is only valid in an aggregating SELECT's items")
     case a: OAggX => throw new IllegalArgumentException(

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** SELECT-shape lowering for [[EmdriveSession]]: set-op chains, recursive
-  * CTEs, FROM/join trees (NATURAL/USING/ASOF/LATERAL), correlated scalar
-  * subqueries, VALUES relations, and the big `lowerSelect` — split out of
+  * CTEs, FROM/join trees (NATURAL/USING/ASOF/LATERAL), subqueries, VALUES
+  * relations, and the big `lowerSelect` — split out of
   * EmdriveSession.scala (r16, pure move) so the statement/catalog file
   * stays readable. Mixed into the session class; state (catalog, views,
   * spark) stays on the class. */
@@ -125,68 +125,109 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
     }
   }
 
-  /** True when `sub` is a correlated scalar subquery against `outer`:
-    * single table, no grouping, and at least one WHERE equality conjunct
-    * straddling the inner table and the outer relation. Uncorrelated
-    * subqueries keep the execute-and-inline literal path. */
-  private[sql] def isCorrScalar(sub: Select, outer: DataFrame): Boolean =
-    sub.derived.isEmpty && sub.joins.isEmpty && sub.groupBy.isEmpty &&
-      sub.having.isEmpty && {
-      val innerCols = table(sub.table).columns.toSet
-      val outerCols = outer.columns.toSet
-      sub.where.flatMap(splitConjuncts).exists {
-        case PCmp(Cmp(ORef(a), "=", ORef(b))) =>
-          (innerCols(a) && !innerCols(b) && outerCols(b)) ||
-            (innerCols(b) && !innerCols(a) && outerCols(a))
-        case _ => false
-      }
+  /** The one local/correlated split of a subquery's WHERE: `sub`'s FROM
+    * relation, the conjuncts that name only its own columns (the
+    * relation's, or its select-list aliases), and the correlated rest,
+    * with every outer name marked [[EmdriveSql.OOuter]]. Callers apply the
+    * correlated conjuncts last: a frame holding an outer reference cannot
+    * be analyzed on its own, so nothing that resolves names eagerly
+    * (`columns`, `groupBy`) may run on it. */
+  private[sql] def correlate(sub: Select): (DataFrame, Seq[Pred], Seq[Pred]) = {
+    val from = lowerFrom(sub)
+    val own = from.columns.toSet ++ sub.items.collect {
+      case ColItem(_, Some(a)) => a
+      case ExprItem(_, a) => a
+      case it: CaseItem => it.alias
+      case d: DistItem => d.alias
     }
+    val (corr, local) = sub.where.flatMap(splitConjuncts)
+      .partition(refNames(_).exists(n => !own(n)))
+    (from, local, corr.map(mapOperands(_) { case ORef(n) if !own(n) => OOuter(n) }))
+  }
 
-  /** Correlated scalar subquery in the SELECT list:
-    * `(SELECT agg(x) FROM t WHERE t.k = outer.k [AND local]) AS a` —
-    * the Kim/Dayal rewrite: the inner relation keeps its local
-    * predicates, aggregates GROUPED BY the correlation keys (one row per
-    * key, so the scalar cardinality guarantee holds by construction
-    * instead of by runtime check), and left-outer joins back on the
-    * outer columns — declarative, so AQE broadcasts small key sides.
-    * ANSI empty-set semantics: a scalar subquery over no rows is NULL,
-    * except COUNT which is 0 — the grouped rewrite drops empty groups,
-    * so COUNT gets an explicit zero-fill and every other aggregate keeps
-    * the join's NULL. Helper columns live under reserved `__cs_` names
-    * and are dropped before projection. */
-  private[sql] def attachCorrScalar(df0: DataFrame, sub: Select, alias: String): DataFrame = {
-    val (aggF, aggArg) = sub.items match {
-      case Seq(AggItem(f, arg, _, None)) => (f, arg)
+  private[sql] def filtered(df: DataFrame, preds: Seq[Pred]): DataFrame =
+    preds.foldLeft(df)((d, p) => d.filter(predCol(df, p)))
+
+  /** An uncorrelated subquery that feeds a one-column form (scalar, IN,
+    * ANY/ALL). */
+  private[sql] def singleColumn(sub: Select, what: String): DataFrame = {
+    val df = lowerSelect(sub)
+    require(df.columns.length == 1,
+      s"$what subquery must project exactly one column, got " +
+        s"(${df.columns.mkString(", ")})")
+    df
+  }
+
+  /** `(SELECT …)` as a value: a native scalar subquery. A correlated one
+    * selects exactly one aggregate and keeps its correlated filter BELOW
+    * the aggregate, so Catalyst's scalar-subquery rewrite owns the ANSI
+    * empty case (NULL, but 0 for COUNT). */
+  private[sql] def scalarCol(sub: Select): Column = {
+    val (from, local, corr) = correlate(sub)
+    if (corr.isEmpty) singleColumn(sub, "scalar").scalar()
+    else sub.items match {
+      case Seq(agg: AggItem) if sub.groupBy.isEmpty && sub.having.isEmpty =>
+        filtered(from, local ++ corr).select(aggItemCol(from, agg)).scalar()
       case _ => throw new IllegalArgumentException(
-        "a correlated scalar subquery must select exactly one aggregate")
+        "a correlated scalar subquery must select exactly one aggregate " +
+          "(no GROUP BY)")
     }
-    val inner = table(sub.table)
-    val innerCols = inner.columns.toSet
-    val outerCols = df0.columns.toSet
-    val (corr, local) = sub.where.flatMap(splitConjuncts).partitionMap {
-      case PCmp(Cmp(ORef(a), "=", ORef(b)))
-          if innerCols(a) && !innerCols(b) && outerCols(b) => Left((a, b))
-      case PCmp(Cmp(ORef(a), "=", ORef(b)))
-          if innerCols(b) && !innerCols(a) && outerCols(a) => Left((b, a))
-      case other => Right(other)
+  }
+
+  /** `EXISTS (SELECT …)`: row existence, so the select list is ignored.
+    * A grouped body (`… GROUP BY g HAVING h`) groups per (correlation key
+    * × GROUP BY key) — exactly the groups the subquery forms per outer
+    * row — filters by HAVING, and applies the correlation above the
+    * aggregate; that is exact for equality correlations only. */
+  private[sql] def existsCol(sub: Select): Column = {
+    val (from, local, corr) = correlate(sub)
+    if (sub.groupBy.isEmpty && sub.having.isEmpty)
+      filtered(from, local ++ corr).exists()
+    else {
+      require(corr.forall { case PCmp(Cmp(_, "=", _)) => true; case _ => false },
+        "a grouped EXISTS correlates through equalities only")
+      val aggs = sub.items.collect { case it: AggItem => aggItemCol(from, it) } match {
+        case Seq() => Seq(count(lit(1)).as("__ex_n"))
+        case as => as
+      }
+      val g = filtered(from, local)
+        .groupBy((corr.flatMap(refNames) ++ sub.groupBy).distinct.map(qref): _*)
+        .agg(aggs.head, aggs.tail: _*)
+      filtered(filtered(g, sub.having.map(resolveHavingAggs(_, sub.items))), corr)
+        .exists()
     }
-    val filtered = local.foldLeft(inner)((d0, pr) => d0.filter(predCol(inner, pr)))
-    val pairs = corr.distinct
-    val keyCols = pairs.map(_._1).distinct
-    val keyName = keyCols.zipWithIndex
-      .map { case (k, j) => k -> s"__cs_key_${alias}_$j" }.toMap
-    val aggN = s"__cs_agg_$alias"
-    val grouped = filtered.groupBy(keyCols.map(col): _*)
-      .agg(aggColumn(aggF, aggArg).as(aggN))
-      .select(keyCols.map(k => col(k).as(keyName(k))) :+ col(aggN): _*)
-    val cond = pairs.map { case (ic, oc) =>
-      df0(oc) === grouped(keyName(ic)) }.reduce(_ && _)
-    val value =
-      if (aggF == "COUNT" || aggF == "COUNT_DISTINCT") coalesce(col(aggN), lit(0L))
-      else col(aggN)
-    df0.join(grouped, cond, "left_outer")
-      .withColumn(alias, value)
-      .drop(keyName.values.toSeq :+ aggN: _*)
+  }
+
+  /** `p op ANY|ALL (SELECT …)` (r14), decided by the extremes: a
+    * falsifier for ALL (or a satisfier for ANY) exists iff the comparison
+    * fails (holds) against the relevant extreme, so the subquery reduces
+    * to ONE scalar struct — min/max over non-null values, row count, null
+    * count. Three-valued: empty set → ALL TRUE / ANY FALSE; a NULL probe
+    * or NULLs in the set yield NULL unless an extreme already decides the
+    * answer (ANSI). `= ANY` / `!= ALL` never reach here (parse-time
+    * desugar to IN). */
+  private[sql] def quantCol(p: Column, op: String, all: Boolean,
+      sub: Select): Column = {
+    val v = col("v")
+    val st = singleColumn(sub, "ANY/ALL").toDF("v")
+      .select(struct(min(v).as("lo"), max(v).as("hi"), count(lit(1)).as("n"),
+        count(when(v.isNull, 1)).as("nulls")))
+      .scalar()
+    val (lo, hi) = (st.getField("lo"), st.getField("hi"))
+    // NULL-probe comparisons are NULL → fall through to the NULL branch
+    val decided = op match {
+      case ">" => if (all) p <= hi else p > lo
+      case ">=" => if (all) p < hi else p >= lo
+      case "<" => if (all) p >= lo else p < hi
+      case "<=" => if (all) p > lo else p <= hi
+      case "=" | "!=" => (p =!= lo) || (p =!= hi)
+      case other => throw new IllegalArgumentException(
+        s"quantified comparison with $other")
+    }
+    when(st.getField("n") === 0, all)
+      .when(decided, !all)
+      .when(p.isNull || st.getField("nulls") > 0, lit(null).cast(BooleanType))
+      .otherwise(all)
   }
 
   /** FROM + JOIN chain → a DataFrame: base relation (table, derived
@@ -196,8 +237,8 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
     * Unqualified ON keys resolve by which side owns the name (either
     * order); `t AS a` renames columns to `a.col` so qualified references
     * and self-joins resolve by plain (dotted) name. Shared by the
-    * top-level SELECT path and the EXISTS subquery pre-pass (which needs
-    * the inner RELATION but ignores the select list). */
+    * top-level SELECT path and the subquery lowering ([[correlate]]),
+    * which filters the relation before any select list applies. */
   private[sql] def lowerFrom(sel: Select): DataFrame = {
     val joined = lowerFromJoins(sel)
     sel.lateral.fold(joined) { case (sub, alias) =>
@@ -266,55 +307,30 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
 
   /** LATERAL lowering (r14): `outer, LATERAL (SELECT items FROM t WHERE
     * inner = outer AND local… [ORDER BY …] [LIMIT n]) l` — the ANSI
-    * spelling of per-key top-n and per-row subquery expansion.
-    *
-    * Decorrelated, never per-row: the inner relation keeps its LOCAL
-    * predicates, a LIMIT becomes a rank window PARTITIONED BY the
-    * correlation key (`row_number ≤ n` — the classic top-n-per-key
-    * rewrite: one shuffle on the key, sort bounded per key), and the
-    * result equi-joins back to the outer relation, where AQE picks
-    * broadcast vs shuffle. The window computes over every inner key
-    * before the join — at 100 TB pre-filter the inner relation or put
-    * the selective predicate inside the LATERAL body (Catalyst cannot
-    * push outer predicates through the rank window). */
+    * spelling of per-key top-n and per-row subquery expansion — as one
+    * `Dataset.lateralJoin` with inner semantics (an outer row whose
+    * subquery is empty drops). Catalyst decorrelates it, turning a
+    * correlated LIMIT into a rank per correlation key. */
   private[sql] def lowerLateral(outer: DataFrame, sub: Select,
       alias: String): DataFrame = {
-    require(sub.joins.isEmpty && sub.derived.isEmpty && sub.groupBy.isEmpty,
-      "LATERAL supports a single-table projection body")
-    val inner = aliasCols(table(sub.table), sub.baseAlias)
-    val innerCols = inner.columns.toSet
-    val outerCols = outer.columns.toSet
-    val (corr, local) = sub.where.flatMap(splitConjuncts).partitionMap {
-      case PCmp(Cmp(ORef(a), "=", ORef(b)))
-          if innerCols(a) && !innerCols(b) && outerCols(b) => Left((a, b))
-      case PCmp(Cmp(ORef(a), "=", ORef(b)))
-          if innerCols(b) && !innerCols(a) && outerCols(a) => Left((b, a))
-      case other => Right(other)
-    }
-    require(corr.size == 1,
-      s"LATERAL requires exactly one equality correlation, found ${corr.size}")
-    val (ik, ok) = corr.head
-    val filtered = local.foldLeft(inner)((d, pr) => d.filter(predCol(inner, pr)))
-    val ranked = sub.limit.fold(filtered) { n =>
+    require(sub.groupBy.isEmpty && sub.having.isEmpty,
+      "LATERAL supports a projection body")
+    val (from, local, corr) = correlate(sub)
+    require(corr.nonEmpty,
+      "LATERAL requires at least one correlation with the outer relation")
+    val rel = filtered(from, local ++ corr)
+    val top = sub.limit.fold(rel) { n =>
       require(sub.orderBy.nonEmpty,
         "LATERAL LIMIT requires ORDER BY (unordered top-n is nondeterministic)")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(qcol(filtered, ik))
-        .orderBy(sub.orderBy.map(k =>
-          if (k.desc) qref(k.name).desc else qref(k.name).asc): _*)
-      filtered.withColumn("__lrn", row_number().over(w))
-        .filter(col("__lrn") <= n)
+      rel.orderBy(sub.orderBy.map(k =>
+        if (k.desc) qref(k.name).desc else qref(k.name).asc): _*).limit(n.toInt)
     }
-    val itemCols: Seq[(Column, String)] = sub.items.map {
-      case ColItem(c, a) => (qref(c), s"$alias.${a.getOrElse(c)}")
-      case ExprItem(o, a) => (operandCol(ranked, o), s"$alias.$a")
+    outer.lateralJoin(top.select(sub.items.map {
+      case ColItem(c, a) => qref(c).as(s"$alias.${a.getOrElse(c)}")
+      case ExprItem(o, a) => operandCol(from, o).as(s"$alias.$a")
       case other => throw new IllegalArgumentException(
         s"LATERAL body supports plain/computed columns, got $other")
-    }
-    val proj = ranked.select(
-      (qref(ik).as("__lk") +:
-        itemCols.map { case (c, n) => c.as(n) }): _*)
-    outer.join(proj, qcol(outer, ok) === col("__lk"), "inner").drop("__lk")
+    }: _*), "inner")
   }
 
   /** ASOF JOIN lowering (r14): for each left row, the single right row
@@ -471,198 +487,36 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
       // references and self-joins then resolve by plain (dotted) name,
       // with backtick quoting at the Column boundary (aliasCols/qref)
       val base = lowerFrom(sel)
+      // ANSI name binding: an unqualified WHERE name reads the source
+      // column even where a SELECT alias of that name replaces it in step
+      // 1 — the WHERE reads such a column under a hidden name, which the
+      // final projection drops. A name no source column has reads the
+      // alias (README story: WHERE distance < 4 filters the SELECT alias).
+      val whereNames = where.flatMap(refNames).toSet
+      val shadowed: Map[String, String] = items.collect {
+        case ColItem(c, Some(a)) if a != c => a
+        case ExprItem(_, a) => a
+        case it: CaseItem => it.alias
+        case d: DistItem => d.alias
+      }.filter(whereNames).flatMap { a =>
+        val exact = base.columns.filter(_ == a)
+        (if (exact.nonEmpty) exact else base.columns.filter(_.endsWith("." + a)))
+          .toSeq match {
+          case Seq(src) => Some(a -> src)
+          case _ => None
+        }
+      }.toMap
+      var df = shadowed.foldLeft(base) { case (d, (a, src)) =>
+        d.withColumn(s"__src_$a", qref(src))
+      }
       // 1. attach aliased distance/computed columns, so WHERE can reference
-      //    them (README story: WHERE distance < 4 filters the SELECT
-      //    alias); window items attach AFTER the pre-window WHERE below
-      var df = base
+      //    them; window items attach AFTER the pre-window WHERE below
       items.foreach {
         case DistItem(c, probe, alias) => df = df.withColumn(alias, distCol(base, c, probe))
         case ColItem(c, Some(alias)) => df = df.withColumn(alias, qref(c))
         case it: CaseItem => df = df.withColumn(it.alias, caseCol(base, it))
-        // correlated scalar subquery in the SELECT list — decorrelated
-        // into a grouped-aggregate left join (attachCorrScalar); must
-        // intercept BEFORE the generic operand path, which would execute
-        // the subquery standalone and fail on the outer reference
-        case ExprItem(OSub(sub), alias) if isCorrScalar(sub, df) =>
-          df = attachCorrScalar(df, sub, alias)
         case ExprItem(o, alias) => df = df.withColumn(alias, operandCol(base, o))
         case _ => ()
-      }
-      // 2a. IN (SELECT …) pre-pass: each subquery becomes a left-outer
-      //     join of the probe value against the DISTINCT single-column
-      //     subquery result plus a broadcast 1-row (count, null-count)
-      //     frame — declarative joins, so AQE picks broadcast vs shuffle
-      //     on the distinct side. The predicate then reads the match
-      //     marker with ANSI three-valued semantics, which makes it
-      //     composable anywhere in the WHERE tree (AND/OR/NOT).
-      var subPreds = Map.empty[Pred, Column]
-      where.flatMap(collectInSubs).distinct.zipWithIndex.foreach {
-        case (node, i) =>
-          val sub = lowerSelect(node.sub)
-          require(sub.columns.length == 1,
-            s"IN subquery must project exactly one column, got " +
-              s"(${sub.columns.mkString(", ")})")
-          val (keyN, markN, cntN, nullN, probeN) =
-            (s"__in_key_$i", s"__in_match_$i", s"__in_n_$i",
-              s"__in_nulls_$i", s"__in_probe_$i")
-          val keys = sub.toDF(keyN).distinct().withColumn(markN, lit(true))
-          val stats = broadcast(sub.toDF("v").agg(
-            count(lit(1)).as(cntN), count(when(col("v").isNull, 1)).as(nullN)))
-          df = df.withColumn(probeN, operandCol(base, node.lhs))
-            .join(keys, col(probeN) === col(keyN), "left_outer")
-            .crossJoin(stats)
-          val c = when(col(cntN) === 0, false)
-            .when(col(markN).isNotNull, true)
-            .when(col(probeN).isNull || col(nullN) > 0, lit(null).cast(BooleanType))
-            .otherwise(false)
-          subPreds += node -> (if (node.neg) !c else c)
-      }
-      // 2a'. quantified comparisons (r14): `x op ANY|ALL (SELECT …)`.
-      //      The subquery reduces to ONE broadcast stats row — min/max
-      //      over non-null values, row count, null count — because every
-      //      ordering quantifier is decidable from the extremes: a
-      //      falsifier for ALL (or a satisfier for ANY) exists iff the
-      //      comparison fails (holds) against the relevant extreme.
-      //      Three-valued: empty set → ALL TRUE / ANY FALSE; a NULL probe
-      //      or NULLs in the set yield NULL unless an extreme already
-      //      decides the answer (ANSI). `= ANY` / `!= ALL` never reach
-      //      here (parse-time desugar to the null-aware IN machinery).
-      where.flatMap(collectQuants).distinct.zipWithIndex.foreach {
-        case (node, i) =>
-          val sub = lowerSelect(node.sub)
-          require(sub.columns.length == 1,
-            s"ANY/ALL subquery must project exactly one column, got " +
-              s"(${sub.columns.mkString(", ")})")
-          val (minN, maxN, cntN, nullN, probeN) =
-            (s"__q_min_$i", s"__q_max_$i", s"__q_n_$i",
-              s"__q_nulls_$i", s"__q_probe_$i")
-          val stats = broadcast(sub.toDF("v").agg(
-            min(col("v")).as(minN), max(col("v")).as(maxN),
-            count(lit(1)).as(cntN),
-            count(when(col("v").isNull, 1)).as(nullN)))
-          df = df.withColumn(probeN, operandCol(base, node.lhs))
-            .crossJoin(stats)
-          val p = col(probeN)
-          // the extreme that decides: ALL looks for a falsifier, ANY for
-          // a satisfier (NULL-probe comparisons are NULL → fall through)
-          val decided = node.op match {
-            case ">" => if (node.all) p <= col(maxN) else p > col(minN)
-            case ">=" => if (node.all) p < col(maxN) else p >= col(minN)
-            case "<" => if (node.all) p >= col(minN) else p < col(maxN)
-            case "<=" => if (node.all) p > col(minN) else p <= col(maxN)
-            case "=" | "!=" => (p =!= col(minN)) || (p =!= col(maxN))
-            case other => throw new IllegalArgumentException(
-              s"quantified comparison with $other")
-          }
-          val c =
-            when(col(cntN) === 0, node.all)
-              .when(decided, !node.all)
-              .when(p.isNull || col(nullN) > 0, lit(null).cast(BooleanType))
-              .otherwise(node.all)
-          subPreds += (node: Pred) -> c
-      }
-      // 2b. [NOT]-composable EXISTS pre-pass: equality conjuncts that
-      //     straddle the subquery and the outer relation DECORRELATE into
-      //     a marker join — the inner relation keeps its local
-      //     predicates, projects the DISTINCT correlation keys, and
-      //     left-outer joins on the outer columns (AQE broadcasts the
-      //     key side when small); EXISTS then reads the match marker.
-      //     Two-valued, so it composes under AND/OR/NOT anywhere in the
-      //     tree. An uncorrelated EXISTS folds to a broadcast
-      //     existence bit off a LIMIT-1 probe.
-      where.flatMap(collectExists).distinct.zipWithIndex.foreach { case (node, i) =>
-        val sub = node.sub
-        // the inner chain lowers through the same relation machinery as a
-        // top-level SELECT (r9: the single-filtered-table restriction is
-        // lifted — joined subqueries fold through lowerFrom, grouped ones
-        // through the grouped-existence rewrite below); only the select
-        // list is ignored, since EXISTS is about row existence (ANSI)
-        val inner = lowerFrom(sub)
-        val innerCols = inner.columns.toSet
-        val outerCols = df.columns.toSet
-        val (corr, local) = sub.where.flatMap(splitConjuncts).partitionMap {
-          case PCmp(Cmp(ORef(a), "=", ORef(b)))
-              if innerCols(a) && !innerCols(b) && outerCols(b) => Left((a, b))
-          case PCmp(Cmp(ORef(a), "=", ORef(b)))
-              if innerCols(b) && !innerCols(a) && outerCols(a) => Left((b, a))
-          case other => Right(other)
-        }
-        val filtered = local.foldLeft(inner)((d0, pr) => d0.filter(predCol(inner, pr)))
-        // grouped EXISTS (`… GROUP BY g HAVING h`): groups form per
-        // (correlation key × GROUP BY key) — exactly the groups the
-        // correlated subquery would form per outer row — HAVING filters
-        // them, and existence means ANY surviving group. Without HAVING
-        // a grouped EXISTS degenerates to plain row existence, and the
-        // rewrite below reduces to it.
-        val existsRel: DataFrame =
-          if (sub.groupBy.isEmpty && sub.having.isEmpty) filtered
-          else {
-            require(sub.groupBy.forall(innerCols),
-              s"EXISTS GROUP BY keys must be inner columns, " +
-                s"got ${sub.groupBy.mkString(", ")}")
-            val groupCols = (corr.map(_._1) ++ sub.groupBy).distinct
-            val aggCols = sub.items.collect {
-              case it: AggItem => aggItemCol(filtered, it)
-            }
-            val aggAll =
-              if (aggCols.nonEmpty) aggCols
-              else Seq(count(lit(1)).as(s"__ex_cnt_$i"))
-            val g = filtered.groupBy(groupCols.map(qref): _*)
-              .agg(aggAll.head, aggAll.tail: _*)
-            sub.having.foldLeft(g)((d0, pr) =>
-              d0.filter(predCol(d0, resolveHavingAggs(pr, sub.items))))
-          }
-        val c =
-          if (corr.isEmpty) {
-            val cntN = s"__ex_n_$i"
-            df = df.crossJoin(broadcast(
-              existsRel.limit(1).agg(count(lit(1)).as(cntN))))
-            col(cntN) > 0
-          } else {
-            val markN = s"__ex_match_$i"
-            val pairs = corr.distinct
-            val keyCols = pairs.map(_._1).distinct
-            val keyName = keyCols.zipWithIndex
-              .map { case (k, j) => k -> s"__ex_key_${i}_$j" }.toMap
-            val keys = existsRel
-              .select(keyCols.map(qref): _*).distinct()
-              .toDF(keyCols.map(keyName): _*)
-              .withColumn(markN, lit(true))
-            val cond = pairs.map { case (ic, oc) =>
-              qcol(df, oc) === keys(keyName(ic)) }.reduce(_ && _)
-            df = df.join(keys, cond, "left_outer")
-            col(markN).isNotNull
-          }
-        subPreds += (node: Pred) -> c
-      }
-      // 2c. correlated scalar subqueries in WHERE comparisons
-      //     (`WHERE x > (SELECT AVG(y) FROM t WHERE t.k = outer.k)`): the
-      //     subquery attaches through the same Kim/Dayal grouped-aggregate
-      //     decorrelation as the SELECT-list path (attachCorrScalar),
-      //     under a reserved __cw_ name; the WHOLE comparison rewrites to
-      //     a Column reading the attached value — ANSI NULL semantics fall
-      //     out (empty non-COUNT group → NULL → comparison NULL → row
-      //     dropped), and the node composes under AND/OR/NOT.
-      //     Every distinct correlated atom in the node's operand trees is
-      //     attached once (identical subqueries share one join), and the
-      //     comparison lowers through operandCol with the atom→column map
-      //     — so the subquery composes inside arithmetic, CAST, and
-      //     scalar functions exactly like any other operand.
-      locally {
-        val nodes = where.flatMap(p => collectCorrCmps(p, df)).distinct
-        val atoms = nodes.flatMap { case PCmp(Cmp(l, _, r)) =>
-          corrSubsInOperand(l, df) ++ corrSubsInOperand(r, df)
-        }.distinct
-        val corr: Map[Select, Column] = atoms.zipWithIndex.map {
-          case (subSel, i) =>
-            val alias = s"__cw_$i"
-            df = attachCorrScalar(df, subSel, alias)
-            subSel -> col(alias)
-        }.toMap
-        nodes.foreach { case node @ PCmp(Cmp(l, op, r)) =>
-          subPreds += (node: Pred) -> applyCmpOp(
-            operandCol(base, l, corr), op, operandCol(base, r, corr))
-        }
       }
       // 2. WHERE — ANSI split: conjuncts that do not read a window alias
       //    filter the window INPUT (plain column equality still lands in
@@ -673,8 +527,9 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
       //    include the filtered column).
       val winAliases = items.collect { case w: WinItem => w.alias }.toSet
       val (postWin, preWin) = where.flatMap(splitConjuncts)
+        .map(mapOperands(_) { case ORef(n) if shadowed.contains(n) => ORef(s"__src_$n") })
         .partition(c => refNames(c).exists(winAliases))
-      preWin.foreach(c => df = df.filter(predCol(base, c, subPreds)))
+      preWin.foreach(c => df = df.filter(predCol(base, c)))
       items.foreach {
         case WinItem(f, arg, parts, keys, alias, frame, fil) =>
           import org.apache.spark.sql.expressions.Window
@@ -790,7 +645,7 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
             // form (NULL-skipping makes it exactly ANSI)
             case agg if fil.nonEmpty =>
               require(!xcur, "FILTER cannot combine with EXCLUDE CURRENT ROW")
-              aggColumnFiltered(agg, arg, predCol(base, fil.get, subPreds))
+              aggColumnFiltered(agg, arg, predCol(base, fil.get))
             // ordered aggregate: ANSI default frame (RANGE unbounded
             // preceding → current row), same default in DuckDB
             case agg => aggColumn(agg, arg)
@@ -828,10 +683,10 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
           df = df.withColumn(alias, result)
         case _ => ()
       }
-      postWin.foreach(c => df = df.filter(predCol(base, c, subPreds)))
+      postWin.foreach(c => df = df.filter(predCol(base, c)))
       // QUALIFY (r9): explicit window filter — same lowering as the
       // post-window WHERE conjuncts, just spelled the ANSI-extension way
-      qualify.foreach(c => df = df.filter(predCol(base, c, subPreds)))
+      qualify.foreach(c => df = df.filter(predCol(base, c)))
       val hasAgg = items.exists(i =>
         i.isInstanceOf[AggItem] || i.isInstanceOf[AggExprItem])
       // ORDER BY expression keys (r9): hidden __ob_i columns. On the
@@ -933,7 +788,7 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
             case a: OAggX => col(aggxNames(a))
             case ORef(n) => qref(n)
             case OVal(VNum(s)) => numLit(s)
-            case s: OSub => operandCol(base, s) // scalar subquery: already a literal
+            case s: OSub => operandCol(base, s)
             case OArith(l, op, r) =>
               val (lc, rc) = (aggExprCol(l), aggExprCol(r))
               op match {

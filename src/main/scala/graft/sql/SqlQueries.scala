@@ -190,7 +190,7 @@ object SqlQueries {
     }),
     // scalar subquery inside HAVING arithmetic: groups kept only when
     // their count beats a corpus-derived threshold — the uncorrelated
-    // subquery executes once and inlines as a literal atom
+    // subquery is one native scalar subquery
     "q_sql_having_sub" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("documents", Tables.documents(s, d))
@@ -250,8 +250,7 @@ object SqlQueries {
                |GROUP BY n_name ORDER BY n_orders DESC, n_name LIMIT 10;""".stripMargin)
     }),
     // [NOT] IN (SELECT …) end-to-end: a semi-filter and an anti-filter in
-    // one WHERE tree, lowered to null-aware marker joins whose distinct
-    // subquery sides AQE is free to broadcast
+    // one WHERE tree (Catalyst plans the NOT IN as a null-aware anti join)
     "q_sql_in_subquery" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("customer", Tables.customer(s, d))
@@ -394,8 +393,7 @@ object SqlQueries {
       } finally server.stop()
     }),
     // correlated [NOT] EXISTS end-to-end: big-spender customers with no
-    // failed order — both subqueries decorrelate into marker joins whose
-    // distinct key sides AQE broadcasts
+    // failed order — Catalyst decorrelates both into semi/anti joins
     "q_sql_exists" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("customer", Tables.customer(s, d))
@@ -410,8 +408,7 @@ object SqlQueries {
     // joined EXISTS subquery (r8 verdict #4: the single-filtered-table
     // restriction lifted) — customers with a finished order carrying a
     // max-quantity line; the inner orders⋈lineitem chain lowers through
-    // the same relation machinery as a top-level SELECT, then
-    // decorrelates into one distinct-key marker join
+    // the same relation machinery as a top-level SELECT
     "q_sql_exists_join" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("customer", Tables.customer(s, d))
@@ -439,8 +436,7 @@ object SqlQueries {
     }),
     // correlated scalar subqueries NESTED INSIDE arithmetic (r8 ADVICE:
     // previously only direct comparison sides decorrelated) — integer
-    // arithmetic only, and the first/third atoms are identical so the
-    // decorrelation attaches them ONCE (shared Kim/Dayal join)
+    // arithmetic only, and the first/third atoms are identical
     "q_sql_corr_arith" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("customer", Tables.customer(s, d))
@@ -1403,8 +1399,8 @@ object SqlQueries {
                | COUNT(*) FILTER (WHERE c_kept = FALSE) AS pruned
                |FROM o JOIN c ON ovec = cvec CROSS JOIN tot;""".stripMargin)
     }),
-    // r14: LATERAL — the ANSI per-key top-n spelling; decorrelated to a
-    // rank window + one equi-join, never a per-row subquery
+    // r14: LATERAL — the ANSI per-key top-n spelling; Catalyst
+    // decorrelates it to a rank per key, never a per-row subquery
     "q_sql_lateral" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("customer", Tables.customer(s, d))
@@ -1496,8 +1492,8 @@ object SqlQueries {
       es.sql("""SELECT COLUMNS('_order') FROM orders
                |WHERE o_orderkey < 200 ORDER BY o_orderkey;""".stripMargin)
     }),
-    // r14: quantified subquery comparisons — ALL lowers to one broadcast
-    // (min,max,count,nulls) stats row, ANY to the same frame's other
+    // r14: quantified subquery comparisons — ALL reads one scalar
+    // (min,max,count,nulls) stats struct, ANY the same struct's other
     // extreme; = ANY / != ALL desugar to the null-aware IN machinery
     "q_sql_any_all" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
@@ -1833,7 +1829,7 @@ object SqlQueries {
     // a local predicate mixing with the correlation)
     // correlated scalar subqueries in WHERE — both sides of the AND carry
     // one (a count floor and a per-customer MIN comparison against outer
-    // arithmetic), exercising the 2c decorrelation + composability
+    // arithmetic), exercising decorrelation + composability
     "q_sql_corr_where" -> ((s: SparkSession, d: String) => {
       val es = new EmdriveSession(s)
       es.register("customer", Tables.customer(s, d))

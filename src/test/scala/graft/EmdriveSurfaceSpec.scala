@@ -281,10 +281,12 @@ class EmdriveSurfaceSpec extends SparkTestBase {
       """SELECT tag, COUNT(*) AS n FROM m GROUP BY tag
         |HAVING n >= (SELECT COUNT(*) FROM m WHERE id < 3);""".stripMargin)
       .collect().map(_.getString(0)).toSet == Set("a", "b"))
-    // more than one row is an error, per ANSI
-    intercept[IllegalArgumentException] {
+    // more than one row is an error, per ANSI — Spark's own, raised when
+    // the query runs
+    val many = intercept[org.apache.spark.SparkException] {
       es.sql("SELECT id FROM m WHERE v > (SELECT v FROM m);").collect()
     }
+    assert(many.getCondition == "SCALAR_SUBQUERY_TOO_MANY_ROWS", many.getMessage)
   }
 
   test("SQL extension: LIKE / NOT LIKE and SELECT DISTINCT") {
@@ -1985,15 +1987,14 @@ class EmdriveSurfaceSpec extends SparkTestBase {
         |WHERE CAST((SELECT COUNT(*) FROM o WHERE ock = ck) AS DOUBLE) / 4
         |      > 0.4;""".stripMargin)
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L))
-    // an unsupported correlated shape gets the targeted message, not an
-    // opaque unresolved-column error
-    val err = intercept[IllegalArgumentException] {
-      es.sql(
-        """SELECT ck FROM c
-          |WHERE (SELECT SUM(amt) FROM o JOIN c AS c2 ON ock = c2.ck
-          |       WHERE ock = ck) > 0;""".stripMargin).collect()
-    }
-    assert(err.getMessage.contains("correlated shape"), err.getMessage)
+    // a joined inner relation decorrelates too: o ⋈ c2 on ock = c2.ck
+    // keeps all three orders; per outer ck the SUM is 30 + 40 = 70 (ck 1),
+    // 10 (ck 2) and NULL (ck 3, no orders → comparison unknown)
+    assert(es.sql(
+      """SELECT ck FROM c
+        |WHERE (SELECT SUM(amt) FROM o JOIN c AS c2 ON ock = c2.ck
+        |       WHERE ock = ck) > 0;""".stripMargin)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
 
   test("SQL index-backed search: ann_search prunes to the probe's cell directory") {
@@ -2702,5 +2703,65 @@ class EmdriveSurfaceSpec extends SparkTestBase {
     // 6&3=2, 6|3=7, 6^3=5; the NULL row is skipped; FILTER leaves only 6
     assert(r.getLong(0) == 2L && r.getLong(1) == 7L && r.getLong(2) == 5L &&
       r.getLong(3) == 6L, r)
+  }
+
+  test("SQL subqueries: lowering runs no Spark job for any subquery form") {
+    GraftSession.prepare(spark)
+    val s = spark
+    import s.implicits._
+    val es = new graft.sql.EmdriveSession(spark)
+    es.register("c", Seq((1L, "ann"), (2L, "bo"), (3L, "cy")).toDF("ck", "nm"))
+    es.register("o", Seq((10L, 1L, 30L), (11L, 1L, 40L), (12L, 2L, 10L))
+      .toDF("ok", "ock", "amt"))
+    Seq(
+      "uncorrelated scalar" -> "SELECT ck FROM c WHERE ck < (SELECT MAX(ock) FROM o);",
+      "IN" -> "SELECT ck FROM c WHERE ck IN (SELECT ock FROM o);",
+      "EXISTS" -> "SELECT ck FROM c WHERE EXISTS (SELECT 1 FROM o WHERE ock = ck);",
+      "correlated scalar" ->
+        "SELECT ck, (SELECT SUM(amt) FROM o WHERE ock = ck) AS total FROM c;",
+      "LATERAL" -> """SELECT x.ck AS ck, l.amt AS amt FROM c x, LATERAL (
+        |  SELECT amt FROM o WHERE ock = x.ck ORDER BY amt DESC LIMIT 1) l;""".stripMargin,
+      "ANY/ALL" -> "SELECT ck FROM c WHERE ck >= ALL (SELECT ock FROM o);"
+    ).foreach { case (form, q) =>
+      val (df, jobs) = jobsDuring(es.sql(q))
+      assert(jobs.isEmpty, s"$form: lowering ran ${jobs.size} job(s): $jobs")
+      assert(df.collect().nonEmpty, form)
+    }
+  }
+
+  test("SQL WHERE: an unqualified name reads the source column before a SELECT alias") {
+    GraftSession.prepare(spark)
+    val es = new graft.sql.EmdriveSession(spark)
+    es.sql("CREATE TABLE ab (id UINT32 PRIMARY KEY, v UINT32);")
+    es.sql("INSERT INTO ab VALUES (1, 1), (2, 3), (3, 5);")
+    // ANSI (and DuckDB): v is ab.v, not the v + 10 alias
+    assert(es.sql("SELECT id, v + 10 AS v FROM ab WHERE v < 4 ORDER BY id;").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 11L), (2L, 13L)))
+    // a name no source column has still reads the alias (the README story)
+    assert(es.sql("SELECT id, v @ 1 AS distance FROM ab WHERE distance < 1;")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
+    // an aliased relation's column binds unqualified too: v is s.v, so the
+    // step runs while s.v < 4 and the set is {1, 2, 3, 4}
+    assert(es.sql(
+      """WITH RECURSIVE seq AS (
+        |  SELECT MIN(id) AS v FROM ab
+        |  UNION
+        |  SELECT s.v + 1 AS v FROM seq AS s WHERE v < 4)
+        |SELECT COUNT(*) AS n FROM seq;""".stripMargin).collect().head.getLong(0) == 4L)
+  }
+
+  test("SQL PREPARE: only placeholder tokens bind, not ? or ' in quoted identifiers or comments") {
+    GraftSession.prepare(spark)
+    val es = new graft.sql.EmdriveSession(spark)
+    es.sql("CREATE TABLE pq (id UINT32 PRIMARY KEY);")
+    es.sql("INSERT INTO pq VALUES (1), (2), (3);")
+    Seq(
+      "SELECT id AS \"id?\" FROM pq WHERE id = ?;",
+      "SELECT id FROM pq -- which one?\nWHERE id = ?;",
+      "SELECT id AS \"it's\" FROM pq WHERE id = ?;"
+    ).foreach { q =>
+      es.sql(s"PREPARE one AS $q")
+      assert(es.sql("EXECUTE one(2);").collect().map(_.getLong(0)).toSeq == Seq(2L), q)
+    }
   }
 }

@@ -54,11 +54,6 @@ class OptimizationSpec extends SparkTestBase {
     es.register("documents", Tables(spark, sfDir, "documents"))
     val minDoc = Tables(spark, sfDir, "documents")
       .agg(min(col("doc_id"))).collect().head.getLong(0)
-    // references qualified (s.v): an UNQUALIFIED v in the step's WHERE
-    // binds to the SELECT alias, not the source column — a pre-existing
-    // dialect divergence vs ANSI/DuckDB found while writing this test
-    // (none of the declared keys hits it; noted in OPTIMIZATION_r17.md
-    // for the next build round)
     val out = es.sql(
       """WITH RECURSIVE seq AS (
         |  SELECT MIN(doc_id) AS v FROM documents

@@ -35,10 +35,11 @@ class QueryPlanSpec extends SparkTestBase {
   }
 
   test("quantified ALL reduces to one broadcast stats row, no per-row join (r14)") {
-    // the subquery folds to a 1-row (min,max,count,nulls) aggregate that
-    // broadcast-nest-loops against the probe side — never a key shuffle
+    // the subquery folds to a 1-row (min,max,count,nulls) aggregate read
+    // as a scalar subquery value by every probe row — no join at all
     val p = plan("q_sql_any_all")
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
+    assert(p.contains("struct(min(v) AS lo, max(v) AS hi, count(1) AS n"), p)
+    assert(!p.contains("Join"), p)
   }
 
   test("diversity selection shuffles one row per vector, heaps per cell (r14)") {

@@ -324,4 +324,31 @@ class ServerSpec extends SparkTestBase {
       assert(results.forall(_ == 200))
     }
   }
+
+  test("user errors answer 400: an unknown column, a scalar subquery with more than one row") {
+    withServer() { (_, base) =>
+      val unknown = post(base, "SELECT nosuch FROM documents;")
+      assert(unknown.statusCode() == 400, unknown.body())
+      assert(unknown.body().contains("\"type\":\"parser\""), unknown.body())
+      val many = post(base,
+        "SELECT doc_id FROM documents WHERE doc_id > (SELECT doc_id FROM documents);")
+      assert(many.statusCode() == 400, many.body())
+      assert(many.body().contains("SCALAR_SUBQUERY_TOO_MANY_ROWS"), many.body())
+    }
+  }
+
+  test("POST params bind to placeholder tokens only: ? and ' in quoted identifiers and comments are inert") {
+    withServer() { (_, base) =>
+      assert(post(base, "CREATE TABLE t (id UINT32 PRIMARY KEY);").statusCode() == 200)
+      assert(post(base, "INSERT INTO t VALUES (1), (2), (3);").statusCode() == 200)
+      def withParam2(q: String) =
+        post(base, s"""{"query": ${graft.Harness.json(q)}, "params": [2]}""")
+      val quotedQ = withParam2("SELECT id AS \"id?\" FROM t WHERE id = ?;")
+      assert(quotedQ.body() == """[{"id?":2}]""", quotedQ.body())
+      val comment = withParam2("SELECT id FROM t -- which one?\nWHERE id = ?;")
+      assert(comment.body() == """[{"id":2}]""", comment.body())
+      val apostrophe = withParam2("SELECT id AS \"it's\" FROM t WHERE id = ?;")
+      assert(apostrophe.body() == """[{"it's":2}]""", apostrophe.body())
+    }
+  }
 }
