@@ -40,9 +40,9 @@ import graft.sql.{EmdriveSession, EmdriveSql}
   * mpsc executor queue (executor/mod.rs:19 `MAX_IN_FLIGHT_REQUESTS=100`):
   * a fixed worker pool over a bounded queue, with caller-runs overflow so
   * saturation backpressures the accept loop exactly like the reference's
-  * awaited `send`. Catalog mutation (CREATE/INSERT re-point the session's
-  * table map) is serialized on a monitor; Spark job execution itself runs
-  * unlocked and concurrent — the scheduler is thread-safe.
+  * awaited `send`. Requests share the session with no lock of their own:
+  * reads never wait for a write, writes serialize inside the session, and
+  * Spark jobs run concurrently — the scheduler is thread-safe.
   *
   * JSON value mapping is Spark's own (`to_json`): numbers bare, strings
   * escaped, null columns kept (`ignoreNullFields=false`, matching serde's
@@ -116,8 +116,7 @@ final class GraftServer(es: EmdriveSession, port: Int = 0,
   private def run(stmt: EmdriveSql.Statement, readOnly: Boolean): (Int, String) = {
     if (readOnly && EmdriveSql.writes(stmt))
       return (400, errJson("server", "read-only endpoint: POST writes to /"))
-    // catalog reads/writes are serialized; the jobs below run unlocked
-    val df = es.synchronized(es.sql(stmt))
+    val df = es.sql(stmt)
     val rows = df.limit(maxRows)
       .select(to_json(struct(df.columns.toIndexedSeq.map(col): _*),
         java.util.Map.of("ignoreNullFields", "false")).as("j"))

@@ -19,7 +19,7 @@ import graft.sql.EmdriveSession
   * system-catalog read (iterating the catalog WHILE other clients mutate
   * it), and per-client DML — each client owns a `load_<c>` table it
   * CREATEs and INSERTs into, so catalog mutation runs genuinely
-  * concurrent with reads (serialized on the server's monitor).
+  * concurrent with reads (writes serialize inside the session).
   * Concurrency is set ABOVE the server's worker pool (8) so the bounded
   * queue + caller-runs overflow path — the reference's
   * MAX_IN_FLIGHT_REQUESTS analog — is actually exercised, not just

@@ -38,8 +38,4 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = apply(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
-
-  /** Register every table as a temp view (for spark.sql entry points). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

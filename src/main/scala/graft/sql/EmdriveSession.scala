@@ -1,21 +1,84 @@
 package graft.sql
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.SchemaMapper
 
-/** A mutable emdrive catalog bound to one SparkSession: `sql(text)` runs a
+/** The catalog as one immutable value: tables, views (r14: parsed chains,
+  * re-lowered at every reference so a view reads the current tables) and
+  * prepared statements (r17). A statement that changes it builds the next
+  * value. Views and prepared statements are session-scoped, not durable. */
+private[sql] final case class Catalog(
+    tables: Map[String, DataFrame] = Map.empty,
+    views: Map[String, EmdriveSql.UnionStmt] = Map.empty,
+    prepared: Map[String, EmdriveSql.Template] = Map.empty) {
+
+  def withTable(name: String, df: DataFrame): Catalog =
+    copy(tables = tables + (name -> df))
+
+  /** `system.tables` analog (reference: src/storage/system.rs:5-16): one
+    * row per registered table. The reference keys by storage UUID; here
+    * the name IS the identity, so the id column is dropped. */
+  def systemTables(spark: SparkSession): DataFrame = {
+    val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
+    tables.keys.toSeq.sorted.foreach { n =>
+      rows.add(Row(n, tables(n).schema.fields.length))
+    }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("table_name", StringType, nullable = false),
+      StructField("n_columns", IntegerType, nullable = false))))
+  }
+
+  /** `system.columns` analog (reference: src/storage/system.rs Columns):
+    * one row per column of every registered table, with the Spark SQL type,
+    * nullability, and the emdrive key roles from the schema metadata. */
+  def systemColumns(spark: SparkSession): DataFrame = {
+    val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
+    tables.keys.toSeq.sorted.foreach { n =>
+      tables(n).schema.fields.zipWithIndex.foreach { case (f, i) =>
+        rows.add(Row(n, f.name, i, f.dataType.sql, f.nullable,
+          f.metadata.contains(SchemaMapper.PrimaryKeyMetadata),
+          f.metadata.contains("graft.metricKey")))
+      }
+    }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("table_name", StringType, nullable = false),
+      StructField("column_name", StringType, nullable = false),
+      StructField("ordinal", IntegerType, nullable = false),
+      StructField("data_type", StringType, nullable = false),
+      StructField("is_nullable", BooleanType, nullable = false),
+      StructField("primary_key", BooleanType, nullable = false),
+      StructField("metric_key", BooleanType, nullable = false))))
+  }
+}
+
+/** What names mean to one lowering: a catalog snapshot, the CTEs in scope
+  * (shadowing tables and views), and the views being resolved (cycles). */
+private[sql] final case class Scope(catalog: Catalog,
+    ctes: Map[String, DataFrame] = Map.empty,
+    resolving: Set[String] = Set.empty) {
+
+  def bind(name: String, rel: DataFrame): Scope =
+    copy(ctes = ctes + (name -> rel))
+}
+
+/** An emdrive catalog bound to one SparkSession: `sql(text)` runs a
   * statement against it. Tables live as DataFrames — CREATE registers an
   * empty typed frame, INSERT unions literal row plans (ULID()/NOW()
   * evaluated by the engine, per row), `register` attaches any existing
   * DataFrame (e.g. a parquet table) under a name. INSERT VALUES is the
   * reference's driver-local row path; bulk data goes through
   * sources.Io/Tables as ever.
+  *
+  * Concurrency: safe to share across threads. One immutable [[Catalog]]
+  * sits behind a volatile reference; a read lowers against it with no
+  * lock. Writes ([[EmdriveSql.writes]], EXECUTE by its bound statement) and
+  * `register`/`save`/`open` serialize on one private lock and install the
+  * catalog they built only on success: no lost update, no partial state.
   *
   * Durability: constructed with a `dataDir`, the session is WRITE-THROUGH —
   * every DDL/DML statement persists the mutated table to
@@ -26,47 +89,31 @@ import graft.sources.SchemaMapper
   * contract (reference: src/config.rs:1-22 data_directory,
   * src/storage/filesystem.rs write/read roundtrip, src/main.rs boot).
   * Without a dataDir the catalog is in-memory only (tests, ad-hoc use). */
-final class EmdriveSession(private[sql] val spark: SparkSession,
-    dataDir: Option[String] = None)
-  extends SelectLowering with ExpressionLowering {
+final class EmdriveSession(spark: SparkSession,
+    dataDir: Option[String] = None) {
   import EmdriveSql._
+  import EmdriveSession.writeGeneration
 
-  private[sql] val catalog = mutable.Map.empty[String, DataFrame]
-  /** Views (r14): stored as their parsed chain and RE-LOWERED at every
-    * reference, so a view always reads the CURRENT base tables (a stored
-    * DataFrame would snapshot the plan at CREATE time and silently miss
-    * later INSERTs). Session-scoped, not durable — the reference's
-    * durability unit is the table. */
-  private[sql] val views = mutable.Map.empty[String, EmdriveSql.UnionStmt]
-  /** Prepared statements (r17): name → tokenized statement with `?`
-    * placeholders, parsed at each EXECUTE once its literals are bound, so
-    * the statement always binds against the CURRENT catalog (the views
-    * doctrine). Session-scoped. */
-  private[sql] val prepared = mutable.Map.empty[String, EmdriveSql.Template]
+  @volatile private var current = Catalog(tables = restore())
+  private val writeLock = new Object
 
-  // boot-time restore: every `dataDir/<name>/` holding a live generation
-  // is a previously persisted table — register it eagerly so a restarted
-  // session/server serves the same rows (reference src/main.rs boot path).
-  // Generation resolution (see save()): the CURRENT pointer names the live
-  // `gen-*` dir; a missing/dangling pointer (crash between publish steps)
-  // falls back to the newest complete generation; a bare _SUCCESS dir is
-  // the pre-generation legacy layout. Leftover `.tmp-*` names from a
-  // crashed legacy save are junk, never tables (r11 ADVICE).
-  dataDir.foreach { dir =>
+  /** Boot-time restore (reference src/main.rs boot path): every
+    * `dataDir/<name>/` holding a live generation is a persisted table;
+    * `.tmp-*` names from a crashed legacy save are junk (r11 ADVICE). */
+  private def restore(): Map[String, DataFrame] = dataDir.toSeq.flatMap { dir =>
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.isDirectory)
-        .filterNot(_.getPath.getName.contains(".tmp-"))
-        .foreach { st =>
-          liveGeneration(fs, st.getPath).foreach(p =>
-            catalog(st.getPath.getName) = spark.read.parquet(p.toString))
-        }
-  }
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).filter(_.isDirectory)
+      .filterNot(_.getPath.getName.contains(".tmp-"))
+      .flatMap(st => liveGeneration(fs, st.getPath).map(p =>
+        st.getPath.getName -> spark.read.parquet(p.toString)))
+  }.toMap
 
   /** Resolve the readable generation of a persisted table dir, or None if
     * the dir holds no complete table. Order: CURRENT-named gen (complete)
-    * → newest complete gen-* → legacy in-place layout (_SUCCESS at root). */
+    * → newest complete gen-* (a crash between publish steps leaves CURRENT
+    * missing or dangling) → legacy in-place layout (_SUCCESS at root). */
   private def liveGeneration(fs: org.apache.hadoop.fs.FileSystem,
       tableDir: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
     import org.apache.hadoop.fs.Path
@@ -88,29 +135,85 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       .orElse(Some(tableDir).filter(complete))
   }
 
-  /** Install `rel` as table `name` and return the installed relation.
-    * A durable session writes it under its data directory FIRST and
-    * installs the generation it wrote only once the write succeeded, so a
-    * statement whose save throws leaves the catalog as it was; an
-    * in-memory session installs at once. Callers run eager domain
-    * validation before this, so a failed statement never reaches disk. */
-  private def commit(name: String, rel: DataFrame): DataFrame = {
-    catalog(name) = dataDir.fold(rel)(dir => writeGeneration(rel, s"$dir/$name"))
-    catalog(name)
-  }
+  private def lowering(c: Catalog): Lowering = new Lowering(spark, Scope(c))
 
+  /** Replace the catalog with `f` of it, serialized with every write. */
+  private def update(f: Catalog => Catalog): Unit =
+    writeLock.synchronized { current = f(current) }
 
-  /** DML targets must be TABLES: writing "into" a view would silently
-    * materialize a same-named catalog table shadowing it (r14 guard). */
-  private def requireTable(name: String, stmt: String): Unit =
-    require(!views.contains(name), s"$name is a view; $stmt needs a table")
-
-  def register(name: String, df: DataFrame): Unit = catalog(name) = df
+  def register(name: String, df: DataFrame): Unit =
+    update(_.withTable(name, df))
 
   /** Whether `name` is already registered (restored or registered earlier).
     * The server boot uses this to avoid shadowing a durably-restored table
     * with a same-named corpus registration (r11 ADVICE). */
-  def has(name: String): Boolean = catalog.contains(name)
+  def has(name: String): Boolean = current.tables.contains(name)
+
+  def table(name: String): DataFrame = lowering(current).table(name)
+
+  /** Persist a catalog table as parquet (the durable storage the
+    * reference's paged files provide — here it's just a columnar write),
+    * and re-point the catalog at the written files so subsequent SELECTs
+    * scan parquet (pushdown/pruning) instead of the in-memory union plan.
+    *
+    * Versioned generations (r11 ADVICE — the delete-then-rename swap lost
+    * the on-disk copy in a crash window and raced in-flight readers):
+    * each save writes a FRESH `path/gen-<ts>-<uuid>/` — never touching the
+    * files the current plan (or a concurrent server SELECT's running
+    * collect) reads — then publishes it by rewriting the CURRENT pointer.
+    * No step destroys the live generation: a crash mid-write leaves an
+    * incomplete gen dir (no _SUCCESS — boot skips it), a crash between
+    * pointer delete and rename leaves no CURRENT (boot falls back to the
+    * newest complete generation). Old generations are deleted DEFERRED —
+    * the immediately-previous one survives the publish, so a reader that
+    * planned against it finishes its scan; only generations two saves back
+    * (and the legacy in-place layout, once two gens exist) are dropped. */
+  def save(name: String, path: String): Unit = update(c => c.withTable(name,
+    writeGeneration(lowering(c).table(name), path)))
+
+  /** Attach a previously saved table, resolving the live generation the
+    * same way boot restore does (CURRENT pointer → newest complete gen →
+    * legacy in-place layout). */
+  def open(name: String, path: String): Unit = {
+    val target = new org.apache.hadoop.fs.Path(path)
+    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+    val live = liveGeneration(fs, target).getOrElse(throw
+      new IllegalArgumentException(s"open: no complete table at $path"))
+    update(_.withTable(name, spark.read.parquet(live.toString)))
+  }
+
+  def systemTables(): DataFrame = current.systemTables(spark)
+
+  def systemColumns(): DataFrame = current.systemColumns(spark)
+
+  def sql(text: String): DataFrame = sql(EmdriveSql.parse(text))
+
+  /** Run an already-parsed statement (the server parses once, to classify
+    * it as a read or a write, and hands the statement over). EXECUTE binds
+    * its literals to the stored statement's `?` tokens (r17). */
+  def sql(stmt: Statement): DataFrame = stmt match {
+    case Execute(name, args) =>
+      sql(current.prepared.getOrElse(name, throw new IllegalArgumentException(
+        s"EXECUTE $name: no such prepared statement")).bind(args))
+    case _ if writes(stmt) => writeLock.synchronized {
+      val run = new StatementRun(lowering(current), dataDir)
+      val df = run(stmt)
+      current = run.next
+      df
+    }
+    case _ => new StatementRun(lowering(current), dataDir)(stmt)
+  }
+}
+
+/** One statement's lowering, every name resolved through `scope`. A CTE, a
+  * recursive CTE's round and a view body each lower through a new instance
+  * over their own scope; concurrent statements never see each other's. */
+private[sql] final class Lowering(private[sql] val spark: SparkSession,
+    private[sql] val scope: Scope)
+  extends SelectLowering with ExpressionLowering {
+  import EmdriveSession.TvfName
+
+  private[sql] def within(s: Scope): Lowering = new Lowering(spark, s)
 
   /** The persisted index layout of (kind, table, column), built lazily
     * on the FIRST index-backed search and reused by every later query —
@@ -133,39 +236,32 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
       spark.read.parquet(p)
     }
 
-  private val TvfName = "^([A-Za-z_][A-Za-z_0-9]*)\\((.*)\\)$".r
-
-  /** Views currently being re-lowered — a view chain that re-enters its
-    * own resolution (self-referential OR REPLACE, a two-view cycle) is a
-    * circular reference and raises a clear error instead of recursing to
-    * StackOverflowError (r14 ADVICE). Statement execution is
-    * single-threaded per session, so a plain set suffices. */
-  private val viewResolving = mutable.Set.empty[String]
-
+  /** A view reads the catalog, never the caller's CTEs. */
   private def resolveView(name: String, ch: EmdriveSql.UnionStmt): DataFrame = {
-    require(!viewResolving.contains(name),
-      s"circular view reference: $name")
-    viewResolving += name
-    try lowerChain(ch) finally viewResolving -= name
+    require(!scope.resolving(name), s"circular view reference: $name")
+    within(Scope(scope.catalog, resolving = scope.resolving + name))
+      .lowerChain(ch)
   }
 
   def table(name: String): DataFrame = name match {
     case TvfName(fn, argStr) =>
       tableFunction(fn.toLowerCase,
         if (argStr.isEmpty) Seq.empty else argStr.split(",").map(_.trim).toSeq)
-    case _ => catalog.get(name).orElse(views.get(name).map(ch =>
-      resolveView(name, ch))).orElse(name match {
-      // the system catalog is itself queryable — SELECT/JOIN/GROUP BY
-      // compose over it like any relation (reference: src/storage/
-      // system.rs registers `system.tables`/`system.columns` as tables);
-      // SHOW TABLES / DESCRIBE remain as sugar over the same rows. A
-      // user-registered table wins the name (checked first), so this
-      // cannot shadow data.
-      case "system.tables" => Some(systemTables())
-      case "system.columns" => Some(systemColumns())
-      case _ => None
-    }).getOrElse(
-      throw new IllegalArgumentException(s"unknown table: $name"))
+    case _ => scope.ctes.get(name)
+      .orElse(scope.catalog.tables.get(name))
+      .orElse(scope.catalog.views.get(name).map(resolveView(name, _)))
+      .orElse(name match {
+        // the system catalog is itself queryable — SELECT/JOIN/GROUP BY
+        // compose over it like any relation (reference: src/storage/
+        // system.rs registers `system.tables`/`system.columns` as tables);
+        // SHOW TABLES / DESCRIBE remain as sugar over the same rows. A
+        // user-registered table wins the name (checked first), so this
+        // cannot shadow data.
+        case "system.tables" => Some(scope.catalog.systemTables(spark))
+        case "system.columns" => Some(scope.catalog.systemColumns(spark))
+        case _ => None
+      }).getOrElse(
+        throw new IllegalArgumentException(s"unknown table: $name"))
   }
 
   /** Table functions — the pipeline operators surfaced to the SQL (and
@@ -473,34 +569,19 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         s"unknown table function: $other")
     }
   }
+}
 
-  /** Persist a catalog table as parquet (the durable storage the
-    * reference's paged files provide — here it's just a columnar write),
-    * and re-point the catalog at the written files so subsequent SELECTs
-    * scan parquet (pushdown/pruning) instead of the in-memory union plan.
-    *
-    * Versioned generations (r11 ADVICE — the delete-then-rename swap lost
-    * the on-disk copy in a crash window and raced in-flight readers):
-    * each save writes a FRESH `path/gen-<ts>-<uuid>/` — never touching the
-    * files the current plan (or a concurrent server SELECT's running
-    * collect) reads — then publishes it by rewriting the CURRENT pointer.
-    * No step destroys the live generation: a crash mid-write leaves an
-    * incomplete gen dir (no _SUCCESS — boot skips it), a crash between
-    * pointer delete and rename leaves no CURRENT (boot falls back to the
-    * newest complete generation). Old generations are deleted DEFERRED —
-    * the immediately-previous one survives the publish, so a reader that
-    * planned against it finishes its scan; only generations two saves back
-    * (and the legacy in-place layout, once two gens exist) are dropped. */
-  def save(name: String, path: String): Unit =
-    catalog(name) = writeGeneration(table(name), path)
+private object EmdriveSession {
+  val TvfName = "^([A-Za-z_][A-Za-z_0-9]*)\\((.*)\\)$".r
 
-  /** Write `df` as a new generation under `path`, publish it (the
-    * protocol above) and return the relation reading it back. The read
-    * takes the schema that was just written, so it runs no schema-inference
-    * job over the new files (boot restore and `open`, which do not know
-    * the schema, keep inference; both yield the same schema). */
-  private def writeGeneration(df: DataFrame, path: String): DataFrame = {
+  /** Write `df` as a new generation under `path`, publish it (the protocol
+    * on `save`) and return the relation reading it back. The read takes the
+    * schema just written, so it runs no schema-inference job (boot restore
+    * and `open`, which do not know the schema, keep inference; both yield
+    * the same schema). */
+  def writeGeneration(df: DataFrame, path: String): DataFrame = {
     import org.apache.hadoop.fs.Path
+    val spark = df.sparkSession
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
     val gen = new Path(target, f"gen-${System.currentTimeMillis()}%020d-" +
@@ -537,54 +618,34 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         .foreach(p => fs.delete(p, false): Unit)
     written
   }
+}
 
-  /** Attach a previously saved table, resolving the live generation the
-    * same way boot restore does (CURRENT pointer → newest complete gen →
-    * legacy in-place layout). */
-  def open(name: String, path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = liveGeneration(fs, target).getOrElse(throw
-      new IllegalArgumentException(s"open: no complete table at $path"))
-    catalog(name) = spark.read.parquet(live.toString)
+/** One statement against `low`'s catalog: `apply` returns its result and
+  * `next` the catalog it leaves, which the session installs for a write. */
+private final class StatementRun(low: Lowering, dataDir: Option[String]) {
+  import EmdriveSql._
+  import EmdriveSession.writeGeneration
+  import low._
+
+  private val cat = scope.catalog
+  var next: Catalog = cat
+
+  /** Install `rel` as table `name` and return the installed relation.
+    * A durable session writes it under its data directory FIRST and
+    * installs the generation it wrote only once the write succeeded, so a
+    * statement whose save throws leaves the catalog as it was; an
+    * in-memory session installs at once. Callers run eager domain
+    * validation before this, so a failed statement never reaches disk. */
+  private def commit(name: String, rel: DataFrame): DataFrame = {
+    val installed = dataDir.fold(rel)(dir => writeGeneration(rel, s"$dir/$name"))
+    next = next.withTable(name, installed)
+    installed
   }
 
-  /** `system.tables` analog (reference: src/storage/system.rs:5-16): one
-    * row per registered table. The reference keys by storage UUID; here
-    * the name IS the identity, so the id column is dropped. */
-  def systemTables(): DataFrame = {
-    val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-    catalog.keys.toSeq.sorted.foreach { n =>
-      rows.add(Row(n, catalog(n).schema.fields.length))
-    }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("table_name", StringType, nullable = false),
-      StructField("n_columns", IntegerType, nullable = false))))
-  }
-
-  /** `system.columns` analog (reference: src/storage/system.rs Columns):
-    * one row per column of every registered table, with the Spark SQL type,
-    * nullability, and the emdrive key roles from the schema metadata. */
-  def systemColumns(): DataFrame = {
-    val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-    catalog.keys.toSeq.sorted.foreach { n =>
-      catalog(n).schema.fields.zipWithIndex.foreach { case (f, i) =>
-        rows.add(Row(n, f.name, i, f.dataType.sql, f.nullable,
-          f.metadata.contains(SchemaMapper.PrimaryKeyMetadata),
-          f.metadata.contains("graft.metricKey")))
-      }
-    }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("table_name", StringType, nullable = false),
-      StructField("column_name", StringType, nullable = false),
-      StructField("ordinal", IntegerType, nullable = false),
-      StructField("data_type", StringType, nullable = false),
-      StructField("is_nullable", BooleanType, nullable = false),
-      StructField("primary_key", BooleanType, nullable = false),
-      StructField("metric_key", BooleanType, nullable = false))))
-  }
-
-  def sql(text: String): DataFrame = sql(EmdriveSql.parse(text))
+  /** DML targets must be TABLES: writing "into" a view would silently
+    * materialize a same-named catalog table shadowing it (r14 guard). */
+  private def requireTable(name: String, stmt: String): Unit =
+    require(!cat.views.contains(name), s"$name is a view; $stmt needs a table")
 
   private def receipt(kind: String, name: String, detail: String): DataFrame =
     spark.createDataFrame(
@@ -593,68 +654,42 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         StructField("name", StringType, nullable = false),
         StructField("detail", StringType, nullable = false))))
 
-  /** Run an already-parsed statement (the server parses once, to classify
-    * it as a read or a write, and hands the statement over). */
-  def sql(stmt: Statement): DataFrame = stmt match {
-    case ShowTables => systemTables()
+  def apply(stmt: Statement): DataFrame = stmt match {
+    case ShowTables => cat.systemTables(spark)
 
-    // PREPARE / EXECUTE / DEALLOCATE (r17): EXECUTE binds its literals to
-    // the stored statement's `?` tokens and runs the result
+    // PREPARE / DEALLOCATE (r17); EXECUTE binds in EmdriveSession.sql
     case Prepare(name, body) =>
-      prepared(name) = body
+      next = cat.copy(prepared = cat.prepared + (name -> body))
       receipt("PREPARE", name, s"${body.params} parameter(s)")
-    case Execute(name, args) =>
-      sql(prepared.getOrElse(name, throw new IllegalArgumentException(
-        s"EXECUTE $name: no such prepared statement")).bind(args))
     case Deallocate(name) =>
-      require(prepared.remove(name).nonEmpty,
+      require(cat.prepared.contains(name),
         s"DEALLOCATE $name: no such prepared statement")
+      next = cat.copy(prepared = cat.prepared - name)
       receipt("DEALLOCATE", name, "dropped")
 
     case Describe(name) =>
-      // views describe their OUTPUT schema (r14): they have no catalog
-      // row, so build the same column shape from the re-lowered plan
-      // (no key roles — a view cannot carry PRIMARY/METRIC KEY)
-      if (views.contains(name)) {
-        val rows: java.util.List[Row] = new java.util.ArrayList[Row]()
-        table(name).schema.fields.zipWithIndex.foreach { case (f, i) =>
-          rows.add(Row(f.name, i, f.dataType.sql, f.nullable, false, false))
-        }
-        spark.createDataFrame(rows, StructType(Seq(
-          StructField("column_name", StringType, nullable = false),
-          StructField("ordinal", IntegerType, nullable = false),
-          StructField("data_type", StringType, nullable = false),
-          StructField("is_nullable", BooleanType, nullable = false),
-          StructField("primary_key", BooleanType, nullable = false),
-          StructField("metric_key", BooleanType, nullable = false))))
-      } else {
-        table(name) // unknown-table error, same as SELECT
-        systemColumns().filter(col("table_name") === name).drop("table_name")
-      }
+      val rel = table(name) // unknown-table error, same as SELECT
+      // views describe their OUTPUT schema (r14) with no key roles — a
+      // view cannot carry PRIMARY/METRIC KEY
+      val described =
+        if (!cat.views.contains(name)) cat
+        else Catalog(Map(name -> spark.createDataFrame(java.util.List.of[Row](),
+          StructType(rel.schema.map(_.copy(metadata = Metadata.empty))))))
+      described.systemColumns(spark).filter(col("table_name") === name)
+        .drop("table_name")
 
     // CREATE VIEW (r14): validate the chain EAGERLY (unknown tables or
     // columns fail at CREATE, as in DuckDB) but store the PARSED chain —
     // re-lowered per reference for true view semantics.
     case CreateView(name, chain, orReplace) =>
-      require(!catalog.contains(name),
+      require(!cat.tables.contains(name),
         s"a table named $name exists; views cannot shadow tables")
-      require(orReplace || !views.contains(name), s"view exists: $name")
-      // validate with the NEW definition already installed (r14 ADVICE:
-      // validating against the old chain let a self-referential OR
-      // REPLACE through, to StackOverflow on the next reference) — a
-      // cycle now raises HERE via the resolveView guard, and the
-      // previous definition is restored on ANY validation failure
-      val prev = views.get(name)
-      views(name) = chain
-      try resolveView(name, chain)
-      catch {
-        case e: Throwable =>
-          prev match {
-            case Some(p) => views(name) = p
-            case None => views.remove(name): Unit
-          }
-          throw e
-      }
+      require(orReplace || !cat.views.contains(name), s"view exists: $name")
+      // validate with the NEW definition in the catalog (r14 ADVICE: the
+      // old chain let a self-referential OR REPLACE through) — a cycle
+      // raises HERE via the resolveView guard, and nothing is installed
+      next = cat.copy(views = cat.views + (name -> chain))
+      within(Scope(next)).table(name)
 
     // DROP (r14): kind-checked removal; a durable table's on-disk
     // generations go with it (boot must not resurrect a dropped table).
@@ -664,23 +699,23 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         // ADVICE): DROP VIEW on a TABLE errors even under IF EXISTS —
         // the name exists with the wrong kind, which DuckDB reports,
         // rather than "not there", which IF EXISTS would swallow
-        require(!catalog.contains(name),
+        require(!cat.tables.contains(name),
           s"$name is a table; use DROP TABLE")
-        if (views.remove(name).isEmpty)
-          require(ifExists, s"unknown view: $name")
+        require(ifExists || cat.views.contains(name), s"unknown view: $name")
+        next = cat.copy(views = cat.views - name)
       } else {
-        require(!views.contains(name),
+        require(!cat.views.contains(name),
           s"$name is a view; use DROP VIEW")
-        if (catalog.remove(name).isEmpty)
-          require(ifExists, s"unknown table: $name")
-        else dataDir.foreach { dir =>
+        require(ifExists || cat.tables.contains(name), s"unknown table: $name")
+        if (cat.tables.contains(name)) dataDir.foreach { dir =>
           import org.apache.hadoop.fs.Path
           val p = new Path(s"$dir/$name")
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (fs.exists(p)) fs.delete(p, true)
         }
+        next = cat.copy(tables = cat.tables - name)
       }
-      systemTables()
+      next.systemTables(spark)
 
     // PIVOT (r14): one grouped aggregation with a FILTERed leg per IN
     // value — Spark's pivot lowers to exactly that (one shuffle, partial
@@ -707,10 +742,10 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         .filter(col(v).isNotNull)
 
     case CreateTable(name, ifNotExists, schema) =>
-      require(!views.contains(name), s"a view named $name exists")
-      if (catalog.contains(name) && ifNotExists) catalog(name)
+      require(!cat.views.contains(name), s"a view named $name exists")
+      if (cat.tables.contains(name) && ifNotExists) cat.tables(name)
       else {
-        require(!catalog.contains(name), s"table exists: $name")
+        require(!cat.tables.contains(name), s"table exists: $name")
         commit(name, spark.createDataFrame(
           java.util.Collections.emptyList[Row](), schema))
       }
@@ -765,9 +800,9 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
 
     case CreateAs(name, ifNotExists, chain) =>
       requireTable(name, "CREATE TABLE AS")
-      if (catalog.contains(name) && ifNotExists) catalog(name)
+      if (cat.tables.contains(name) && ifNotExists) cat.tables(name)
       else {
-        require(!catalog.contains(name), s"table exists: $name")
+        require(!cat.tables.contains(name), s"table exists: $name")
         commit(name, lowerChain(chain))
       }
 
@@ -1088,46 +1123,7 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
 
     case u: UnionStmt => lowerChain(u)
 
-    case WithStmt(ctes, body, recursive) =>
-      // statement-scoped catalog overlay: each CTE's plan registers under
-      // its name (shadowing any same-named table), the body lowers against
-      // the overlay, and the pre-statement catalog is restored whatever
-      // happens — the session is never mutated by a query. Plans are lazy,
-      // so "registering" a CTE is wiring a subplan, not materializing it —
-      // except a RECURSIVE self-referencing CTE, which iterates eagerly
-      // to its set fixpoint before the body sees it.
-      val saved = ctes.map { case (n, _) => n -> catalog.get(n) }
-      // inside a WITH RECURSIVE statement every fixpoint round
-      // re-evaluates the step arms, so a lazily-wired non-recursive CTE
-      // that a STEP arm reads would be recomputed once per round —
-      // materialize exactly those once (r17 optimization, the
-      // lowerRecursiveCte localCheckpoint discipline). CTEs read only
-      // from base arms / the body stay lazy, keeping predicate pushdown
-      // (and plain WITH is untouched).
-      val stepRef: String => Boolean =
-        if (!recursive) _ => false
-        else {
-          val stepArms = ctes.collect {
-            case (rn, ch) if chainReferences(ch, rn) =>
-              (ch.first +: ch.rest.map(_._2)).filter(selectReferences(_, rn))
-          }.flatten
-          n2 => stepArms.exists(selectReferences(_, n2))
-        }
-      try {
-        ctes.foreach { case (n, chain) =>
-          catalog(n) =
-            if (recursive && chainReferences(chain, n))
-              lowerRecursiveCte(n, chain)
-            else {
-              val df = lowerChain(chain)
-              if (stepRef(n)) df.localCheckpoint() else df
-            }
-        }
-        lowerChain(body)
-      } finally saved.reverse.foreach {
-        case (n, Some(prev)) => catalog(n) = prev
-        case (n, None) => catalog.remove(n)
-      }
+    case w: WithStmt => lowerWith(w)
 
     case ExplainStmt(sel, false) =>
       val text = lowerSelect(sel).queryExecution.explainString(
@@ -1206,8 +1202,8 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         .values.map(g => (g.head._1, g.map(_._2).min)).toSeq
       def tableOf(leaf: SparkPlan): Option[String] = {
         val names = leaf.output.map(_.name).toSet
-        val owners = catalog.keys.filter(t =>
-          names.subsetOf(catalog(t).columns.toSet)).toSeq
+        val owners = cat.tables.keys.filter(t =>
+          names.subsetOf(cat.tables(t).columns.toSet)).toSeq
         if (owners.size == 1) Some(owners.head) else None
       }
       val whereRows: Seq[Row] =
@@ -1220,5 +1216,4 @@ final class EmdriveSession(private[sql] val spark: SparkSession,
         StructField("node", StringType, nullable = false),
         StructField("n_rows", LongType, nullable = false))))
   }
-
 }

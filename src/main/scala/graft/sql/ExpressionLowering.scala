@@ -1,20 +1,19 @@
 package graft.sql
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.SchemaMapper
 
-/** Expression/predicate/value lowering for [[EmdriveSession]]: column
-  * references, aggregates, predicates, scalar functions, literal/domain
-  * handling — split out of EmdriveSession.scala (r16, pure move). Mixed
-  * into the session class; state stays on the class. */
-private[sql] trait ExpressionLowering { self: EmdriveSession =>
+/** Expression/predicate/value lowering: column references, aggregates,
+  * predicates, scalar functions, literal/domain handling. Mixed into
+  * [[Lowering]]; a subquery resolves its names through that scope. */
+private[sql] trait ExpressionLowering { self: Lowering =>
   import EmdriveSql._
 
+  /** Column ref with backtick quoting for the dotted names that aliased
+    * relations carry (`a.col` is ONE column, not a struct access). */
   private[sql] def qref(n: String): Column =
     if (n.contains('.')) col(s"`$n`") else col(n)
 

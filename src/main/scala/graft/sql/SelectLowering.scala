@@ -1,28 +1,19 @@
 package graft.sql
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** SELECT-shape lowering for [[EmdriveSession]]: set-op chains, recursive
-  * CTEs, FROM/join trees (NATURAL/USING/ASOF/LATERAL), subqueries, VALUES
-  * relations, and the big `lowerSelect` — split out of
-  * EmdriveSession.scala (r16, pure move) so the statement/catalog file
-  * stays readable. Mixed into the session class; state (catalog, views,
-  * spark) stays on the class. */
-private[sql] trait SelectLowering { self: EmdriveSession =>
+/** SELECT-shape lowering: set-op chains, WITH and recursive CTEs,
+  * FROM/join trees (NATURAL/USING/ASOF/LATERAL), subqueries, VALUES
+  * relations, and the big `lowerSelect`. Mixed into [[Lowering]], whose
+  * immutable scope resolves every name; a construct that binds a name
+  * lowers through a new [[Lowering]] over the extended scope. */
+private[sql] trait SelectLowering { self: Lowering =>
   import EmdriveSql._
 
-  /** Left-assoc set-op fold (ANSI bag semantics): positional column
-    * matching; UNION dedupes the accumulated bag (the same
-    * partial-combined aggregate as any DISTINCT), UNION ALL keeps it,
-    * EXCEPT/INTERSECT lower to Dataset.except/intersect — Spark plans
-    * both as null-safe left-anti/left-semi joins over distinct inputs,
-    * exactly the ANSI DISTINCT set semantics, and AQE picks
-    * broadcast vs shuffle. A tail-less chain is just its head SELECT. */
   /** Does this select (transitively through joins/derived tables)
     * reference relation `n` in a FROM position? The recursion detector
     * for WITH RECURSIVE — subquery positions are deliberately excluded
@@ -67,26 +58,19 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
     var n = acc.count()
     var iter = 0
     var grown = true
-    val saved = catalog.get(name)
-    try {
-      while (grown && iter < 100) {
-        catalog(name) = acc
-        val stepped = stepArms.map { case (_, s) => lowerSelect(s) }
-          .map(d => d.toDF(acc.columns.toIndexedSeq: _*))
-          .reduce(_ union _)
-        val next = acc.union(stepped).dropDuplicates()
-          .localCheckpoint(eager = false)
-        val n2 = next.count()
-        grown = n2 > n
-        acc = next
-        n = n2
-        iter += 1
-      }
-    } finally {
-      saved match {
-        case Some(prev) => catalog(name) = prev
-        case None => catalog.remove(name)
-      }
+    while (grown && iter < 100) {
+      // each round's steps read the accumulator under the CTE's name
+      val round = within(scope.bind(name, acc))
+      val stepped = stepArms.map { case (_, s) => round.lowerSelect(s) }
+        .map(d => d.toDF(acc.columns.toIndexedSeq: _*))
+        .reduce(_ union _)
+      val next = acc.union(stepped).dropDuplicates()
+        .localCheckpoint(eager = false)
+      val n2 = next.count()
+      grown = n2 > n
+      acc = next
+      n = n2
+      iter += 1
     }
     require(!grown,
       s"recursive CTE $name did not converge within 100 iterations " +
@@ -94,6 +78,35 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
     acc
   }
 
+  /** WITH: each CTE lowers in the scope of those before it and binds its
+    * name for the rest of the statement. Binding wires a lazy subplan,
+    * except a RECURSIVE self-referencing CTE, which iterates eagerly to its
+    * set fixpoint before the body sees it. */
+  private[sql] def lowerWith(w: WithStmt): DataFrame = {
+    val WithStmt(ctes, body, recursive) = w
+    // every fixpoint round re-evaluates the step arms, so a non-recursive
+    // CTE that a STEP arm reads is materialized once (r17), not recomputed
+    // per round; the others stay lazy, keeping predicate pushdown
+    val stepArms = if (!recursive) Nil else ctes.flatMap { case (rn, ch) =>
+      (ch.first +: ch.rest.map(_._2)).filter(selectReferences(_, rn))
+    }
+    ctes.foldLeft[Lowering](self) { case (low, (n, chain)) =>
+      val rel =
+        if (recursive && chainReferences(chain, n)) low.lowerRecursiveCte(n, chain)
+        else if (stepArms.exists(selectReferences(_, n)))
+          low.lowerChain(chain).localCheckpoint()
+        else low.lowerChain(chain)
+      low.within(low.scope.bind(n, rel))
+    }.lowerChain(body)
+  }
+
+  /** Left-assoc set-op fold (ANSI bag semantics): positional column
+    * matching; UNION dedupes the accumulated bag (the same
+    * partial-combined aggregate as any DISTINCT), UNION ALL keeps it,
+    * EXCEPT/INTERSECT lower to Dataset.except/intersect — Spark plans
+    * both as null-safe left-anti/left-semi joins over distinct inputs,
+    * exactly the ANSI DISTINCT set semantics, and AQE picks
+    * broadcast vs shuffle. A tail-less chain is just its head SELECT. */
   private[sql] def lowerChain(u: UnionStmt): DataFrame = {
     // ANSI precedence (r10, closes the r9 uniform-precedence
     // simplification): INTERSECT [ALL] binds tighter than UNION/EXCEPT,
@@ -914,7 +927,4 @@ private[sql] trait SelectLowering { self: EmdriveSession =>
       out
     }
   }
-
-  /** Column ref with backtick quoting for the dotted names that aliased
-    * relations carry (`a.col` is ONE column, not a struct access). */
 }

@@ -550,6 +550,48 @@ class EmdriveSurfaceSpec extends SparkTestBase {
     }
   }
 
+  // Lexical scoping: a view body resolves against the catalog, never the
+  // CTEs of the statement that reads it (expected rows from DuckDB 1.0.0)
+  private def scopingSession(): graft.sql.EmdriveSession = {
+    GraftSession.prepare(spark)
+    val es = new graft.sql.EmdriveSession(spark)
+    es.sql("CREATE TABLE t (x UINT32 PRIMARY KEY);")
+    es.sql("INSERT INTO t VALUES (1), (2);")
+    es.sql("CREATE TABLE o (x UINT32 PRIMARY KEY);")
+    es.sql("INSERT INTO o VALUES (99);")
+    es.sql("CREATE VIEW v AS SELECT x FROM t;")
+    es
+  }
+
+  private def longs(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getAs[Number](0).longValue).toSeq
+
+  test("SQL scoping: a CTE does not leak into a view that reads the same name") {
+    val es = scopingSession()
+    assert(longs(es.sql("WITH t AS (SELECT x FROM o) SELECT x FROM v ORDER BY x;")) ==
+      Seq(1L, 2L))
+  }
+
+  test("SQL scoping: a CTE named like an inner view does not leak into the outer view") {
+    val es = scopingSession()
+    es.sql("CREATE VIEW w AS SELECT x FROM v;")
+    assert(longs(es.sql("WITH v AS (SELECT x FROM o) SELECT x FROM w ORDER BY x;")) ==
+      Seq(1L, 2L))
+  }
+
+  test("SQL scoping: a recursive CTE's accumulator does not leak into a view") {
+    GraftSession.prepare(spark)
+    val es = new graft.sql.EmdriveSession(spark)
+    es.sql("CREATE TABLE r (n UINT32 PRIMARY KEY);")
+    es.sql("INSERT INTO r VALUES (100);")
+    es.sql("CREATE VIEW rv AS SELECT n FROM r;")
+    es.sql("CREATE TABLE one (n UINT32 PRIMARY KEY);")
+    es.sql("INSERT INTO one VALUES (1);")
+    assert(longs(es.sql("""WITH RECURSIVE r AS (SELECT n FROM one
+                          |  UNION SELECT n + 1 AS n FROM r WHERE n < 3)
+                          |SELECT n FROM rv;""".stripMargin)) == Seq(100L))
+  }
+
   test("SQL extension: arithmetic with standard precedence in items and WHERE") {
     GraftSession.prepare(spark)
     val es = new graft.sql.EmdriveSession(spark)

@@ -351,4 +351,54 @@ class ServerSpec extends SparkTestBase {
       assert(apostrophe.body() == """[{"it's":2}]""", apostrophe.body())
     }
   }
+
+  test("a read answers while a durable write's job is held open") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    GraftSession.prepare(spark)
+    withTempDir("graft-rw-") { dir =>
+      val es = new EmdriveSession(spark, Some(dir))
+      es.register("documents", graft.sources.Tables.documents(spark, sfDir))
+      es.sql("CREATE TABLE w (id UINT32 PRIMARY KEY);")
+      val (entered, release) = (new CountDownLatch(1), new CountDownLatch(1))
+      ServerSpec.gate = (entered, release)
+      // one partition: the held task takes one of the four task slots
+      val held = org.apache.spark.sql.functions.udf { (id: Long) =>
+        val (e, r) = ServerSpec.gate
+        e.countDown()
+        r.await(60, TimeUnit.SECONDS)
+        id
+      }
+      es.register("slow", spark.range(0, 3, 1, 1).select(held(col("id")).as("id")))
+      val server = new GraftServer(es)
+      server.start()
+      val base = s"http://127.0.0.1:${server.boundPort}"
+      try {
+        val insert = Future(post(base, "INSERT INTO w SELECT id FROM slow;"))
+        try {
+          assert(entered.await(60, TimeUnit.SECONDS), "the write's job never started")
+          val q = java.net.URLEncoder.encode(
+            "SELECT doc_id FROM documents WHERE doc_id = 1;", "UTF-8")
+          val read = client.send(
+            HttpRequest.newBuilder().uri(URI.create(s"$base/?query=$q"))
+              .timeout(java.time.Duration.ofSeconds(10)).GET().build(),
+            HttpResponse.BodyHandlers.ofString())
+          assert(read.statusCode() == 200, read.body())
+          assert(!insert.isCompleted, "the write finished before the read ran")
+        } finally release.countDown()
+        val inserted = Await.result(insert, 120.seconds)
+        assert(inserted.statusCode() == 200, inserted.body())
+        assert(es.sql("SELECT id FROM w;").count() == 3)
+      } finally server.stop()
+    }
+  }
+}
+
+object ServerSpec {
+  /** (entered, release) for the held UDF above: tasks run in this JVM and
+    * reach the latches through this object, not through the closure. */
+  @volatile var gate: (java.util.concurrent.CountDownLatch,
+    java.util.concurrent.CountDownLatch) = _
 }
