@@ -207,13 +207,18 @@ final class EmdriveSession(spark: SparkSession,
 
 /** One statement's lowering, every name resolved through `scope`. A CTE, a
   * recursive CTE's round and a view body each lower through a new instance
-  * over their own scope; concurrent statements never see each other's. */
+  * over their own scope; concurrent statements never see each other's.
+  * An `aggregating` instance lowers the items of an aggregating SELECT:
+  * only there does an aggregate call become a Column. */
 private[sql] final class Lowering(private[sql] val spark: SparkSession,
-    private[sql] val scope: Scope)
+    private[sql] val scope: Scope, private[sql] val aggregating: Boolean = false)
   extends SelectLowering with ExpressionLowering {
   import EmdriveSession.TvfName
 
   private[sql] def within(s: Scope): Lowering = new Lowering(spark, s)
+
+  /** This scope, lowering expressions over aggregates. */
+  private[sql] def aggregated: Lowering = new Lowering(spark, scope, aggregating = true)
 
   /** The persisted index layout of (kind, table, column), built lazily
     * on the FIRST index-backed search and reused by every later query —
@@ -721,14 +726,14 @@ private final class StatementRun(low: Lowering, dataDir: Option[String]) {
     // value — Spark's pivot lowers to exactly that (one shuffle, partial
     // aggregation map-side), never a per-value scan. Output columns are
     // named by the IN values (the DuckDB naming for a single USING agg).
-    case PivotStmt(t, on, vals, func, arg, gb) =>
+    case PivotStmt(t, on, vals, agg, gb) =>
       val base = table(t)
       require(base.columns.contains(on), s"unknown PIVOT column: $on")
       gb.foreach(g => require(base.columns.contains(g),
         s"unknown GROUP BY column: $g"))
       base.groupBy(gb.map(qcol(base, _)): _*)
         .pivot(on, vals)
-        .agg(aggColumn(func, arg))
+        .agg(aggCol(base, agg))
 
     // UNPIVOT (r14): wide → long via Spark's unpivot (a generate, not a
     // self-union — ONE scan fans each row out to |ON| rows); NULL values

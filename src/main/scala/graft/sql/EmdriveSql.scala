@@ -32,10 +32,9 @@ import graft.sources.SchemaMapper
   *   INSERT INTO t [(cols…)] VALUES (v, …) [, (v, …) …]
   *   INSERT INTO t [(cols…)] SELECT-chain   (query-result load; positional
   *     column match, cast to declared types, DEFAULT/NULL fill)
-  *   SELECT [DISTINCT] * | col [AS a] | col @ probe AS a
-  *     | CASE [subject] WHEN pred|v THEN v [WHEN …] [ELSE v] END AS a
-  *       (searched and simple forms; simple desugars to subject = v)
-  *     | (COUNT|SUM|AVG|MIN|MAX|MEDIAN) '(' (*|col) ')' [AS a] [, …] FROM t
+  *   SELECT [DISTINCT] * | col [AS a] | operand AS a
+  *     | agg [AS a]   (a bare aggregate's default name is count,
+  *       <func>_<col> or <func>_distinct_<col>) [, …] FROM t
   *     [WHERE pred]   where pred := cmp | pred AND pred | pred OR pred
   *                    | NOT pred | '(' pred ')' (AND binds tighter than
   *                    OR), and cmp := operand (= | != | < | <= | > | >=)
@@ -47,10 +46,12 @@ import graft.sources.SchemaMapper
   *                    mul := atom (('*'|'/') atom)*, atom := col | lit
   *                    | col @ probe | '(' operand ')'
   *                    | (SELECT …)   (scalar subquery)
-  *                    — arithmetic also as a select item: expr AS a,
-  *                    and over aggregates in aggregating selects:
-  *                    SUM(a) / COUNT(*) AS r (atoms: agg calls, group
-  *                    keys, literals, scalar subqueries)
+  *                    | CASE [subject] WHEN pred|v THEN v … [ELSE v] END
+  *                    | fn '(' operand, … ')' | agg,
+  *                    agg := f '(' * | [DISTINCT] operand, … ')'
+  *                    [FILTER '(' WHERE pred ')'] — an aggregate is an
+  *                    operand like any other: `CASE WHEN COUNT(*) > 1 …`,
+  *                    `k || CAST(SUM(x) AS VARCHAR)`, SUM(a) / COUNT(*)
   *   (ROW_NUMBER|RANK|DENSE_RANK) '()' OVER '(' [PARTITION BY col …]
   *     ORDER BY col [ASC|DESC] … ')' AS a   (ranking windows; ORDER BY
   *     and the alias are mandatory. The rank computes over the FROM/JOIN
@@ -59,7 +60,7 @@ import graft.sources.SchemaMapper
   *     top-k-per-group idiom)
   *   agg '(' (*|col) ')' OVER '(' … ')' AS a   (window aggregates —
   *     running totals; ordered, so the ANSI default RANGE frame applies)
-  *     [GROUP BY [ROLLUP(|CUBE(]col [, …][)]] [HAVING pred-over-output-names]
+  *     [GROUP BY [ROLLUP(|CUBE(]col [, …][)]] [HAVING pred]
   *     [WINDOW n AS '(' spec ')' [, …]]   (named specs; items say OVER n)
   *     [ORDER BY col [ASC|DESC] [, …]] [LIMIT n] [OFFSET m]
   *     (OFFSET requires ORDER BY — unordered pagination is
@@ -105,9 +106,10 @@ import graft.sources.SchemaMapper
   * point lookups immediately, and the lowering is the same thin layer —
   * groupBy/agg/orderBy/limit DataFrame calls, so partial aggregation and
   * TakeOrderedAndProject come from Catalyst for free. WHERE stays
-  * pre-aggregation; HAVING filters the aggregated output by its OUTPUT
-  * column names (aggregate aliases or group keys); plain SELECT columns
-  * must be group keys.
+  * pre-aggregation; each aggregating item is one Column inside the
+  * aggregation; HAVING and ORDER BY read output names and any aggregate
+  * (one the select list does not name is a hidden column); plain SELECT
+  * columns must be group keys.
   */
 object EmdriveSql {
 
@@ -243,56 +245,39 @@ object EmdriveSql {
     * projection. */
   final case class StarPattern(re: String) extends SelectItem
   final case class ColItem(name: String, alias: Option[String]) extends SelectItem
-  /** An arithmetic/computed select item (`price * (1 - disc) AS net`) —
-    * mandatory alias (the output name must be explicit), attached pre-WHERE
-    * so predicates can reference it like any other alias. */
+  /** Every computed select item: `price * (1 - disc) AS net`, `hash @
+    * probe AS dist`, `CASE … END AS bucket`, `SUM(a) / COUNT(*) AS r`.
+    * An item without an aggregate attaches before WHERE, so predicates
+    * (the README's `WHERE dist < 4`) and GROUP BY can name its alias. An
+    * item with an aggregate makes the SELECT aggregating and lowers as one
+    * Column inside the aggregation. A bare aggregate may omit the alias:
+    * the parser names it `count`, `<func>_<col>` or
+    * `<func>_distinct_<col>`; every other computed item must be named. */
   final case class ExprItem(op: Operand, alias: String) extends SelectItem
-  /** Arithmetic over aggregates and group keys (`SUM(a)/SUM(b) AS r`) —
-    * mandatory alias; evaluated AFTER the aggregation, unlike ExprItem
-    * which attaches pre-WHERE. */
-  final case class AggExprItem(op: Operand, alias: String) extends SelectItem
-  /** ROW_NUMBER()/RANK()/DENSE_RANK() — or an aggregate, SUM(x)/COUNT(*)/
-    * MIN/MAX/AVG — OVER (PARTITION BY … ORDER BY …) AS a: window functions
-    * (graft extension). Mandatory alias AND mandatory ORDER BY (an
-    * unordered rank is nondeterministic, refused like unordered OFFSET;
-    * ordered aggregates use the ANSI default frame, RANGE UNBOUNDED
-    * PRECEDING → CURRENT ROW, identically in Spark and DuckDB). Attached
-    * pre-WHERE, so `WHERE rn <= k` is the SQL top-k-per-group idiom —
-    * Catalyst turns the filter into map-side WindowGroupLimit pruning
-    * before the rank shuffle. `arg` is the aggregate's column (None for
-    * ranking functions and COUNT(*)). */
-  /** frame: None = ANSI default (RANGE unbounded→current);
-    * Some((lo, hi)) = explicit ROWS frame — lo None = UNBOUNDED
+  /** A window function `f(…) OVER (PARTITION BY … ORDER BY … [frame]) AS
+    * a` (graft extension), attached pre-WHERE, so `WHERE rn <= k` is the
+    * top-k-per-group idiom (Catalyst prunes map-side with
+    * WindowGroupLimit before the rank shuffle). An aggregate window
+    * carries its call in `agg` (FILTER included); a plain SUM/COUNT/AVG/
+    * MIN/MAX window may omit ORDER BY (the whole partition is its frame).
+    * A ranking or navigation function has `agg` empty and its argument
+    * encoded in `arg` ("col:off!ignore" for LAG/LEAD, the bucket count
+    * for NTILE), and requires ORDER BY. The alias is mandatory.
+    *
+    * frame: None = ANSI default (RANGE unbounded→current);
+    * Some((kind, lo, hi)) = explicit frame — lo None = UNBOUNDED
     * PRECEDING, Some(n) = n PRECEDING; hi None = UNBOUNDED FOLLOWING,
-    * Some(n) = n FOLLOWING; 0 = CURRENT ROW on either bound. Covers
-    * running totals, trailing windows, and centered moving averages. */
-  /** `filter` (r17) carries an ANSI `FILTER (WHERE …)` ahead of OVER:
-    * the window aggregate folds only the qualifying rows of its frame
-    * (plain SUM/AVG/MIN/MAX/COUNT windows only). */
+    * Some(n) = n FOLLOWING; 0 = CURRENT ROW on either bound. */
   final case class WinItem(func: String, arg: Option[String],
       partitionBy: Seq[String], orderBy: Seq[OrderKey],
       alias: String,
       frame: Option[(String, Option[Long], Option[Long])] = None,
-      filter: Option[Pred] = None) extends SelectItem
+      agg: Option[OAgg] = None) extends SelectItem
   /** `fn() OVER w AS a` — a window item referencing a named WINDOW-clause
     * spec; parseSelect substitutes the named spec in (a [[WinItem]]
     * results), so nothing downstream ever sees this node. */
   final case class WinRefItem(func: String, arg: Option[String],
-      winName: String, alias: String) extends SelectItem
-  final case class DistItem(column: String, probe: Value, alias: String) extends SelectItem
-  /** COUNT/SUM/AVG/MIN/MAX over a column (or `*` for COUNT). Output name
-    * defaults to `count` / `<func>_<col>` when no alias is given.
-    * `filter` carries an ANSI `FILTER (WHERE …)` clause (r13): the
-    * aggregate folds only the qualifying rows — lowered to the
-    * aggregate-over-`when(cond, x)` form Spark's NULL-skipping makes
-    * exactly equivalent; an explicit alias is mandatory with FILTER. */
-  final case class AggItem(func: String, arg: Option[String],
-      alias: Option[String], filter: Option[Pred] = None) extends SelectItem
-  /** CASE WHEN pred THEN v [WHEN …] [ELSE v] END AS alias — searched CASE
-    * over the dialect's predicate grammar; the alias is mandatory so the
-    * output name (and any WHERE/GROUP BY reference to it) is explicit. */
-  final case class CaseItem(branches: Seq[(Pred, Operand)],
-      elseV: Option[Operand], alias: String) extends SelectItem
+      winName: String, alias: String, agg: Option[OAgg] = None) extends SelectItem
 
   /** A sort key: an output name / "#n" ordinal (the common case), or —
     * top-level SELECT only — an arbitrary scalar EXPRESSION carried in
@@ -343,19 +328,23 @@ object EmdriveSql {
       tryMode: Boolean = false) extends Operand
   /** Scalar function call (string functions — the UPPER/SUBSTR tier). */
   final case class OFunc(name: String, args: Seq[Operand]) extends Operand
-  /** An aggregate call as an arithmetic atom (`SUM(a) / COUNT(*)`): only
-    * valid inside an aggregating SELECT's items — the lowering computes
-    * each distinct (func, arg) once and the expression reads the result;
-    * anywhere else (WHERE, CASE, subquery) it is rejected at lowering. */
-  final case class OAgg(func: String, arg: Option[String]) extends Operand
-  /** Aggregate over an EXPRESSION (r15): `SUM(a * b)`, `SUM(CASE WHEN p
-    * THEN x ELSE y END)` — the conditional-aggregation / inline-formula
-    * idiom (TPC-H revenue without a derived table). SUM/AVG/MIN/MAX/COUNT
-    * only; parses whenever the argument is not a single column name. */
-  final case class OAggX(func: String, arg: Operand) extends Operand
-  /** Operand-level CASE (r15): usable inside expressions, aggregate
-    * arguments, and WHERE — the item-level [[CaseItem]]'s anonymous twin
-    * (same parse body, same when-chain lowering). */
+  /** An aggregate call `f([DISTINCT] arg, …) [FILTER (WHERE p)]`: a
+    * select item, an atom of any expression, or the body of a window
+    * aggregate. Valid in an aggregating SELECT's items, HAVING and ORDER
+    * BY and in a window; anywhere else (WHERE, GROUP BY, a row-level
+    * item) the lowering refuses it. `args` are the call's typed
+    * arguments: none for COUNT(*); (value, separator literal) for
+    * STRING_AGG; (value, fraction literal) for PERCENTILE_CONT(f) WITHIN
+    * GROUP (ORDER BY value); (value, by) for ARG_MAX/ARG_MIN; (y, x) for
+    * the REGR_ family, CORR and COVAR_SAMP/POP. `filter` keeps only the
+    * rows where it holds; `desc` is ARRAY_AGG(x ORDER BY x DESC)'s
+    * direction. */
+  final case class OAgg(func: String, args: Seq[Operand],
+      distinct: Boolean = false, filter: Option[Pred] = None,
+      desc: Boolean = false) extends Operand
+  /** Operand-level CASE (r15): CASE … END anywhere an operand goes —
+    * items, aggregate arguments, WHERE. Simple CASE desugars to the
+    * searched form at parse. */
   final case class OCase(branches: Seq[(Pred, Operand)],
       elseV: Option[Operand]) extends Operand
   final case class Cmp(lhs: Operand, op: String, rhs: Operand)
@@ -468,7 +457,7 @@ object EmdriveSql {
     * value — the explicit IN list keeps the output schema static (and
     * engine-identical), never data-dependent. */
   final case class PivotStmt(table: String, on: String, values: Seq[String],
-      func: String, arg: Option[String], groupBy: Seq[String]) extends Statement
+      agg: OAgg, groupBy: Seq[String]) extends Statement
   /** UNPIVOT tbl ON c1[, …] INTO NAME n VALUE v (r14, the DuckDB
     * statement): wide → long; rows whose value is NULL are excluded
     * (DuckDB's documented default). */
@@ -750,10 +739,8 @@ object EmdriveSql {
     "DELETE", "UPDATE", "SET", "MERGE", "USING", "MATCHED", "RECURSIVE",
     "QUALIFY", "NATURAL", "SAMPLE", "ALTER", "TRUNCATE")
 
-  /** Aggregates that accept an EXPRESSION argument (r15, → [[OAggX]]);
-    * the rest stay column-only (their lowerings read the arg slot). */
-  private val ExprAggFuncs = Set("COUNT", "SUM", "AVG", "MIN", "MAX")
-
+  /** Aggregates parsed by the generic call `f(* | [DISTINCT] arg, …)`;
+    * the lowering's one aggregate table checks each one's arguments. */
   private val AggFuncs =
     Set("COUNT", "SUM", "AVG", "MIN", "MAX", "MEDIAN", "GROUPING",
       // r12 widening: boolean quantifier + dispersion aggregates
@@ -761,6 +748,9 @@ object EmdriveSql {
       // r14: ANY_VALUE — deterministic only over per-group-constant
       // input, which is how the gate key uses it
       "ANY_VALUE",
+      // r13/r14: value-ordered concatenation (LISTAGG is the ANSI
+      // spelling) and the value on the row where another column peaks
+      "STRING_AGG", "LISTAGG", "ARG_MAX", "ARG_MIN",
       // r17: bitwise aggregates — exact integer folds (order-invariant,
       // so partitioning-independent), NULLs skipped in both engines
       "BIT_AND", "BIT_OR", "BIT_XOR",
@@ -771,14 +761,13 @@ object EmdriveSql {
       // r17: dispersion tier 2 — variance both denominators + population
       // stddev; SKEWNESS/KURTOSIS are the SAMPLE-corrected statistics
       // (DuckDB's definition), composed from Spark's population moments
-      "VAR_SAMP", "VAR_POP", "STDDEV_POP", "SKEWNESS", "KURTOSIS")
+      "VAR_SAMP", "VAR_POP", "STDDEV_POP", "SKEWNESS", "KURTOSIS",
+      // r17: the two-column ANSI bivariate family REGR_*(y, x) plus
+      // CORR / COVAR_SAMP / COVAR_POP — any-null pairs skipped
+      "REGR_SLOPE", "REGR_INTERCEPT", "REGR_R2",
+      "REGR_COUNT", "REGR_AVGX", "REGR_AVGY",
+      "CORR", "COVAR_SAMP", "COVAR_POP")
 
-  /** Two-column aggregates (r17): the ANSI bivariate regression family
-    * REGR_*(y, x) plus CORR / COVAR_SAMP / COVAR_POP — all single-pass
-    * moment accumulations with any-null pairs skipped. */
-  private val RegrFuncs = Set("REGR_SLOPE", "REGR_INTERCEPT", "REGR_R2",
-    "REGR_COUNT", "REGR_AVGX", "REGR_AVGY",
-    "CORR", "COVAR_SAMP", "COVAR_POP")
   private val StrFuncs = Set("UPPER", "LOWER", "LENGTH", "TRIM", "SUBSTR",
     "REPLACE", "COALESCE", "NULLIF", "ABS", "ROUND",
     "YEAR", "MONTH", "DAY",
@@ -1021,7 +1010,7 @@ object EmdriveSql {
         p.eatWord("GROUP"); p.eatWord("BY")
         val gb = mutable.ListBuffer(p.qident())
         while (p.trySym(",")) gb += p.qident()
-        PivotStmt(t, on, vals.toSeq, func, arg, gb.toSeq)
+        PivotStmt(t, on, vals.toSeq, OAgg(func, arg.map(ORef).toSeq), gb.toSeq)
       }
       else if (p.tryWord("UNPIVOT")) {
         val t = p.tident()
@@ -1454,8 +1443,7 @@ object EmdriveSql {
         if (p.tryWord("ALL")) {
           val keys = items.toSeq.flatMap {
             case ColItem(c, _) => Seq(c)
-            case ExprItem(_, a) => Seq(a)
-            case _: AggItem | _: AggExprItem => Seq.empty
+            case ExprItem(o, a) => if (aggsOf(o).isEmpty) Seq(a) else Seq.empty
             case other => throw new IllegalArgumentException(
               s"GROUP BY ALL cannot infer a key from select item $other")
           }
@@ -1476,7 +1464,7 @@ object EmdriveSql {
               case ORef(nm) => nm
               case o =>
                 items.collectFirst {
-                  case ExprItem(o2, alias) if o2 == o => alias
+                  case ExprItem(o2, alias) if o2 == o && aggsOf(o).isEmpty => alias
                 }.getOrElse {
                   val hn = s"__gb_${groupExprs.length}"
                   groupExprs += ((hn, o))
@@ -1532,12 +1520,12 @@ object EmdriveSql {
       while (p.trySym(",")) one()
     }
     val resolvedItems: Seq[SelectItem] = items.toSeq.map {
-      case WinRefItem(f, a, w, alias) =>
+      case WinRefItem(f, a, w, alias, agg) =>
         val (parts, keys, frame) = winSpecs.getOrElse(w,
           p.fail(s"OVER $w references no WINDOW clause spec"))
         checkFrame(f, frame, p)
         checkUnordered(f, keys, p)
-        WinItem(f, a, parts, keys, alias, frame)
+        WinItem(f, a, parts, keys, alias, frame, agg)
       case other => other
     }
     val qualify = mutable.ListBuffer.empty[Pred]
@@ -1634,11 +1622,6 @@ object EmdriveSql {
   }
 
   private def parseItem(p: P): SelectItem = p.toks match {
-    case TWord(w) :: _ if w.equalsIgnoreCase("CASE") =>
-      p.toks = p.toks.tail
-      val (branches, elseV) = parseCaseBody(p)
-      p.eatWord("AS") // mandatory: the output name must be explicit
-      CaseItem(branches, elseV, p.ident())
     case TWord(f) :: TSym("(") :: TSym(")") :: _ if WinFuncs(f.toUpperCase) =>
       p.toks = p.toks.tail.tail.tail
       parseOverClause(p, f.toUpperCase, None)
@@ -1725,11 +1708,6 @@ object EmdriveSql {
       if (ex.isEmpty && repl.isEmpty) Star
       else StarExclude(ex.toSeq, repl.toSeq)
     case _ => parseOperand(p) match {
-      // a bare `col @ probe` keeps its dedicated item (mandatory alias,
-      // the README story's shape); inside arithmetic it is a plain atom
-      case ODist(name, probe) =>
-        p.eatWord("AS")
-        DistItem(name, probe, p.ident())
       case ORef(name) =>
         if (p.tryWord("AS")) ColItem(name, Some(p.ident()))
         // ANSI derived column name for a qualified ref: `SELECT a.k`
@@ -1738,43 +1716,33 @@ object EmdriveSql {
         else if (name.contains('.'))
           ColItem(name, Some(name.substring(name.indexOf('.') + 1)))
         else ColItem(name, None)
-      // a bare aggregate call keeps its dedicated item (optional alias,
-      // aggAlias default naming) — unless OVER follows, making it a
-      // window aggregate; arithmetic CONTAINING one becomes a
-      // post-aggregation expression item
-      case OAgg(f, arg) =>
-        // ANSI FILTER (WHERE …) — per-aggregate row qualification (r13);
-        // r17: also legal ahead of OVER (the windowed-FILTER form)
-        val fil =
-          if (!p.tryWord("FILTER")) None
-          else {
-            p.eatSym("("); p.eatWord("WHERE")
-            val pr = parsePred(p)
-            p.eatSym(")")
-            Some(pr)
-          }
-        if (p.peekWord("OVER")) {
-          require(!f.endsWith("_DISTINCT"),
-            "DISTINCT aggregates OVER a window are not supported")
-          require(fil.isEmpty || Set("SUM", "AVG", "MIN", "MAX", "COUNT")(f),
-            s"FILTER over a window supports plain SUM/AVG/MIN/MAX/COUNT, not $f")
-          p.eatWord("OVER")
-          parseOverClause(p, f, arg, overEaten = true, filter = fil)
-        } else {
-          val alias = if (p.tryWord("AS")) Some(p.ident()) else None
-          require(fil.isEmpty || alias.nonEmpty,
-            "an aggregate with FILTER must have an explicit alias")
-          AggItem(f, arg, alias, fil)
-        }
+      // a bare aggregate call followed by OVER is a window aggregate
+      case a: OAgg if p.peekWord("OVER") =>
+        require(!a.distinct,
+          "DISTINCT aggregates OVER a window are not supported")
+        require(a.filter.isEmpty || UnorderedWinAggs(a.func),
+          s"FILTER over a window supports plain SUM/AVG/MIN/MAX/COUNT, not ${a.func}")
+        require(a.args.forall(_.isInstanceOf[ORef]),
+          "window aggregates take a plain column argument — compute " +
+            "the expression in a derived table first")
+        p.eatWord("OVER")
+        parseOverClause(p, a.func, None, overEaten = true, agg = Some(a))
+      // a bare aggregate over `*` or a column may omit its alias
+      case a @ OAgg(f, args, distinct, fil, _) if !p.peekWord("AS")
+          && args.headOption.forall(_.isInstanceOf[ORef]) =>
+        require(fil.isEmpty, "an aggregate with FILTER must have an explicit alias")
+        ExprItem(a, args.headOption match {
+          case Some(ORef(c)) =>
+            s"${f.toLowerCase}${if (distinct) "_distinct" else ""}_$c"
+          case _ => "count"
+        })
       case other =>
         p.eatWord("AS") // computed items must name their output
-        if (aggAtoms(other).nonEmpty) AggExprItem(other, p.ident())
-        else ExprItem(other, p.ident())
+        ExprItem(other, p.ident())
     }
   }
 
-  /** CASE body (after the CASE keyword, through END) — shared by the
-    * item-level CaseItem and the operand-level OCase (r15). Simple CASE
+  /** CASE body (after the CASE keyword, through END). Simple CASE
     * (`CASE x WHEN v THEN r …`) desugars at parse time to the searched
     * form (`WHEN x = v THEN r`) — ANSI-equivalent for non-NULL subjects,
     * one lowering path. */
@@ -1798,7 +1766,7 @@ object EmdriveSql {
 
   /** Shared OVER-clause parse for ranking and aggregate window items. */
   private def parseOverClause(p: P, func: String, arg: Option[String],
-      overEaten: Boolean = false, filter: Option[Pred] = None): SelectItem = {
+      overEaten: Boolean = false, agg: Option[OAgg] = None): SelectItem = {
     if (!overEaten) p.eatWord("OVER")
     // `OVER w` — reference into the statement's WINDOW clause, resolved
     // by parseSelect once the named specs have been read (ANSI order
@@ -1806,19 +1774,19 @@ object EmdriveSql {
     p.toks match {
       case TWord(w) :: rest if !w.equalsIgnoreCase("AS")
           && !Keywords.contains(w.toUpperCase) =>
-        require(filter.isEmpty,
+        require(agg.forall(_.filter.isEmpty),
           "FILTER is not supported with a named WINDOW reference; " +
             "spell the spec inline")
         p.toks = rest
         p.eatWord("AS")
-        return WinRefItem(func, arg, w, p.ident())
+        return WinRefItem(func, arg, w, p.ident(), agg)
       case _ => ()
     }
     val (parts, keys, frame) = parseWindowSpec(p)
     checkFrame(func, frame, p)
     checkUnordered(func, keys, p)
     p.eatWord("AS")
-    WinItem(func, arg, parts, keys, p.ident(), frame, filter)
+    WinItem(func, arg, parts, keys, p.ident(), frame, agg)
   }
 
   /** A frame clause is only legal on frame-taking functions — shared by
@@ -1942,14 +1910,60 @@ object EmdriveSql {
       s"$func requires ORDER BY in its OVER clause " +
         "(only SUM/COUNT/AVG/MIN/MAX may omit it)")
 
-  /** All aggregate atoms inside an operand tree. */
-  private[sql] def aggAtoms(o: Operand): Seq[Operand] = o match {
-    case a: OAgg => Seq(a)
-    case a: OAggX => Seq(a) // expression aggregates are atoms too (r15)
-    case OArith(l, _, r) => aggAtoms(l) ++ aggAtoms(r)
-    case OFunc(_, args) => args.flatMap(aggAtoms)
-    case OCast(x, _, _) => aggAtoms(x)
-    case _ => Seq.empty
+  /** `o` with every operand that `f` is defined at replaced (outermost
+    * match wins; elsewhere the walk descends, into CASE predicates and
+    * aggregate arguments too). Subquery bodies are not entered: their
+    * names live in their own scope. */
+  private[sql] def mapOperand(o: Operand)(f: PartialFunction[Operand, Operand]): Operand =
+    f.applyOrElse(o, (x: Operand) => x match {
+      case OArith(l, oper, r) => OArith(mapOperand(l)(f), oper, mapOperand(r)(f))
+      case OFunc(fn, as) => OFunc(fn, as.map(mapOperand(_)(f)))
+      case OCast(y, t, tm) => OCast(mapOperand(y)(f), t, tm)
+      case a: OAgg =>
+        a.copy(args = a.args.map(mapOperand(_)(f)), filter = a.filter.map(mapOperands(_)(f)))
+      case OCase(bs, e) =>
+        OCase(bs.map { case (c, v) => (mapOperands(c)(f), mapOperand(v)(f)) },
+          e.map(mapOperand(_)(f)))
+      case other => other
+    })
+
+  /** [[mapOperand]] over every operand of a predicate. */
+  private[sql] def mapOperands(p: Pred)(f: PartialFunction[Operand, Operand]): Pred = {
+    def op(o: Operand): Operand = mapOperand(o)(f)
+    def walk(pr: Pred): Pred = pr match {
+      case PCmp(Cmp(l, c, r)) => PCmp(Cmp(op(l), c, op(r)))
+      case PAnd(a, b) => PAnd(walk(a), walk(b))
+      case POr(a, b) => POr(walk(a), walk(b))
+      case PNot(x) => PNot(walk(x))
+      case PIn(l, vs, n) => PIn(op(l), vs, n)
+      case PInTuple(ls, rows, n) => PInTuple(ls.map(op), rows, n)
+      case PInSub(l, sub, n) => PInSub(op(l), sub, n)
+      case PQuant(l, o, all, sub) => PQuant(op(l), o, all, sub)
+      case PLike(l, pat, n, e, ci) => PLike(op(l), pat, n, e, ci)
+      case PIsNull(l, n) => PIsNull(op(l), n)
+      case PDistinct(l, r, n) => PDistinct(op(l), op(r), n)
+      case e: PExists => e
+    }
+    walk(p)
+  }
+
+  /** The aggregate calls of `o` outside subqueries, outermost only. */
+  private[sql] def aggsOf(o: Operand): Seq[OAgg] = {
+    val found = mutable.ListBuffer.empty[OAgg]
+    mapOperand(o) { case a: OAgg => found += a; a }
+    found.toSeq
+  }
+
+  /** An aggregate call's optional ANSI `FILTER (WHERE …)` tail (r13):
+    * the aggregate folds only the qualifying rows. */
+  private def aggFilter(p: P, a: OAgg): OAgg = p.toks match {
+    case TWord(w) :: TSym("(") :: _ if w.equalsIgnoreCase("FILTER") =>
+      p.toks = p.toks.tail.tail
+      p.eatWord("WHERE")
+      val pr = parsePred(p)
+      p.eatSym(")")
+      a.copy(filter = Some(pr))
+    case _ => a
   }
 
   /** operand := mul (('+'|'-') mul)*; mul := atom (('*'|'/') atom)*;
@@ -2133,23 +2147,6 @@ object EmdriveSql {
       while (p.trySym(",")) args += parseOperand(p)
       p.eatSym(")")
       OFunc(f.toUpperCase, args.toSeq)
-    // STRING_AGG(col, 'sep') — ordered-by-value concatenation (r13).
-    // The dialect DEFINES the order as ascending by the aggregated value
-    // (deterministic cross-engine; DuckDB spells it ORDER BY col). The
-    // column+separator ride the OAgg arg slot -joined.
-    // LISTAGG (r17) is the ANSI spelling of STRING_AGG — same contract
-    // (ascending by the aggregated value), same OAgg atom
-    case TWord(f) :: TSym("(") :: _
-        if f.equalsIgnoreCase("STRING_AGG") || f.equalsIgnoreCase("LISTAGG") =>
-      p.toks = p.toks.tail.tail
-      val c = p.qident()
-      p.eatSym(",")
-      val sep = p.value() match {
-        case VStr(x) => x
-        case other => p.fail(s"separator string after STRING_AGG column, got $other")
-      }
-      p.eatSym(")")
-      OAgg("STRING_AGG", Some(c + "" + sep))
     // ARRAY_AGG(col ORDER BY col [ASC|DESC]) (r14) — list aggregation.
     // The inner ORDER BY is MANDATORY and must name the aggregated column
     // itself (sort_array's contract): an unordered ARRAY_AGG is
@@ -2164,19 +2161,7 @@ object EmdriveSql {
       val desc = p.tryWord("DESC")
       if (!desc) p.tryWord("ASC")
       p.eatSym(")")
-      OAgg("ARRAY_AGG", Some(c + "" + (if (desc) "d" else "a")))
-    // ARG_MAX/ARG_MIN(ret, by) (r14) — the value of `ret` on the row
-    // where `by` is extreme (max_by/min_by; ties need a unique `by` per
-    // group for determinism — the keys use unique ids). Both columns
-    // ride the OAgg arg slot U+0001-joined like STRING_AGG.
-    case TWord(f) :: TSym("(") :: _
-        if f.equalsIgnoreCase("ARG_MAX") || f.equalsIgnoreCase("ARG_MIN") =>
-      p.toks = p.toks.tail.tail
-      val a = p.qident()
-      p.eatSym(",")
-      val b = p.qident()
-      p.eatSym(")")
-      OAgg(f.toUpperCase, Some(a + "" + b))
+      aggFilter(p, OAgg("ARRAY_AGG", Seq(ORef(c)), desc = desc))
     // PERCENTILE_CONT(f) WITHIN GROUP (ORDER BY col) (r17) — the ANSI
     // ordered-set spelling of the exact interpolated percentile (the
     // MEDIAN/q_percentile kernel; DuckDB's quantile_cont interpolation).
@@ -2198,7 +2183,7 @@ object EmdriveSql {
         "PERCENTILE_CONT WITHIN GROUP orders ascending only (use 1 - f)")
       p.tryWord("ASC"): Unit
       p.eatSym(")")
-      OAgg("PERCENTILE_CONT", Some(c + "" + frac))
+      aggFilter(p, OAgg("PERCENTILE_CONT", Seq(ORef(c), OVal(VNum(frac)))))
     // MODE() WITHIN GROUP (ORDER BY col) (r17) — the ANSI ordered-set
     // spelling of the dialect's deterministic MODE(col)
     case TWord(f) :: TSym("(") :: TSym(")") :: _ if f.equalsIgnoreCase("MODE") =>
@@ -2208,69 +2193,27 @@ object EmdriveSql {
       val c = p.qident()
       p.tryWord("ASC"): Unit
       p.eatSym(")")
-      OAgg("MODE", Some(c))
-    // REGR_*(y, x) (r17) — the ANSI bivariate regression aggregates
-    // (slope/intercept/r2 of the least-squares fit, pair count, per-pair
-    // means; rows with a NULL in EITHER column are skipped, both
-    // engines). The two columns ride the OAgg arg slot U+0001-joined
-    // like ARG_MAX.
-    case TWord(f) :: TSym("(") :: _ if RegrFuncs(f.toUpperCase) =>
-      p.toks = p.toks.tail.tail
-      val y = p.qident()
-      p.eatSym(",")
-      val x = p.qident()
-      p.eatSym(")")
-      OAgg(f.toUpperCase, Some(y + "" + x))
+      aggFilter(p, OAgg("MODE", Seq(ORef(c))))
+    // the generic aggregate call: `*` (COUNT only) or [DISTINCT] operand
+    // {, operand}. DISTINCT (r16) reads plain columns; COUNT(DISTINCT a,
+    // b, …) counts distinct tuples, skipping a row with ANY null key
+    // (ANSI). LISTAGG (r17) is the ANSI spelling of STRING_AGG.
     case TWord(f) :: TSym("(") :: _ if AggFuncs(f.toUpperCase) =>
       p.toks = p.toks.tail.tail
+      val func = if (f.equalsIgnoreCase("LISTAGG")) "STRING_AGG" else f.toUpperCase
       val distinct = p.tryWord("DISTINCT")
-      // plain-column argument (the classic path) — or, for SUM/AVG/MIN/
-      // MAX/COUNT, any EXPRESSION (r15): `SUM(a * b)`, `SUM(CASE … END)`.
-      // Disambiguated by lookahead: a single qident followed by `)` is a
-      // column; anything else re-parses as an operand → OAggX.
-      val saved = p.toks
-      val plainArg: Option[Option[String]] =
-        if (p.trySym("*")) Some(None)
-        else scala.util.Try(p.qident()).toOption match {
-          case Some(c) if p.peekSym(")") => Some(Some(c))
-          // COUNT(DISTINCT a, b, …) (r16): multi-column distinct — the
-          // pair/tuple cardinality ask; columns ride the arg slot
-          // U+0001-joined (the STRING_AGG/ARG_MAX encoding). ANSI NULL
-          // semantics: a row with ANY null key is skipped (the DuckDB
-          // row-value replay counts null-carrying rows, so oracles over
-          // nullable columns must FILTER them — testdata keys are
-          // non-null).
-          case Some(c) if distinct && f.equalsIgnoreCase("count")
-              && p.peekSym(",") =>
-            val cs = mutable.ListBuffer(c)
-            while (p.trySym(",")) cs += p.qident()
-            Some(Some(cs.mkString("")))
-          case _ => p.toks = saved; None
+      val args =
+        if (!distinct && p.trySym("*")) Seq.empty
+        else {
+          val as = mutable.ListBuffer(parseOperand(p))
+          while (p.trySym(",")) as += parseOperand(p)
+          as.toSeq
         }
-      plainArg match {
-        case Some(arg) =>
-          p.eatSym(")")
-          require(arg.nonEmpty || f.equalsIgnoreCase("count"),
-            s"$f(*) is not valid; only COUNT(*)")
-          // DISTINCT aggregates (r16): COUNT/SUM/AVG/MIN/MAX(DISTINCT c)
-          // — the atom name carries the _DISTINCT suffix, so HAVING's
-          // structural matching and the expression-aggregate registry
-          // treat SUM(c) and SUM(DISTINCT c) as different computations
-          require(!distinct || (arg.nonEmpty && ExprAggFuncs(f.toUpperCase)),
-            "DISTINCT takes a plain column under COUNT/SUM/AVG/MIN/MAX")
-          OAgg(if (distinct) f.toUpperCase + "_DISTINCT" else f.toUpperCase, arg)
-        case None =>
-          require(!distinct,
-            "DISTINCT takes a plain column argument, not an expression")
-          require(ExprAggFuncs(f.toUpperCase),
-            s"$f takes a plain column argument, not an expression")
-          val o = parseOperand(p)
-          p.eatSym(")")
-          require(!p.peekWord("OVER"),
-            "window aggregates take a plain column argument — compute " +
-              "the expression in a derived table first")
-          OAggX(f.toUpperCase, o)
-      }
+      p.eatSym(")")
+      require(args.nonEmpty || func == "COUNT", s"$f(*) is not valid; only COUNT(*)")
+      require(!distinct || args.forall(_.isInstanceOf[ORef]),
+        "DISTINCT takes a plain column argument, not an expression")
+      aggFilter(p, OAgg(func, args, distinct))
     case TSym("(") :: _ =>
       p.eatSym("(")
       val inner = parseOperand(p)

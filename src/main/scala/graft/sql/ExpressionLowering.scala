@@ -64,95 +64,101 @@ private[sql] trait ExpressionLowering { self: Lowering =>
     out.toString
   }
 
-  /** Expression-aggregate lowering (r15, [[EmdriveSql.OAggX]]): the
-    * argument Column was already lowered over PRE-aggregation rows. */
-  private[sql] def aggColumnX(func: String, x: Column): Column = func match {
-    case "COUNT" => count(x)
-    case "SUM" => sum(x)
-    case "AVG" => avg(x)
-    case "MIN" => min(x)
-    case "MAX" => max(x)
-    case other => throw new IllegalArgumentException(
-      s"$other does not take an expression argument")
-  }
-
-  private[sql] def aggColumn(func: String, arg: Option[String]): Column =
-    (func, arg) match {
-      case ("COUNT", None) => count(lit(1))
-      case ("COUNT", Some(c)) => count(qref(c))
+  /** The one aggregate table: an [[EmdriveSql.OAgg]] over the rows of
+    * `base`. Arguments lower as row-level operands; FILTER masks each
+    * input to `when(cond, x)`, which every aggregate here skips like a
+    * NULL, so it folds exactly the qualifying rows (COUNT(*) counts
+    * `when(cond, 1)`). COUNT/SUM/AVG/MIN/MAX take any expression; the
+    * others read plain columns. */
+  private[sql] def aggCol(base: DataFrame, a: OAgg): Column = {
+    val OAgg(f, args, distinct, filter, desc) = a
+    val cond = filter.map { p =>
+      // GROUPING reads the grouping-set mask, not rows
+      require(f != "GROUPING", "FILTER is not supported for GROUPING")
+      predCol(base, p)
+    }
+    def mask(c: Column): Column = cond.fold(c)(when(_, c))
+    def in(o: Operand): Column = mask(operandCol(base, o))
+    def colRef(o: Operand): String = o match {
+      case ORef(n) => n
+      case _ => throw new IllegalArgumentException(
+        s"$f takes a plain column argument, not an expression")
+    }
+    def colIn(o: Operand): Column = in(ORef(colRef(o)))
+    if (distinct) (f, args) match {
       // exact distinct (the partial-combined two-phase Expand plan); the
       // 100 TB approximate alternative is approx_count_distinct.
-      // COUNT(DISTINCT a, b, …) (r16): columns U+0001-joined in the arg
-      // slot; Spark's native multi-child count_distinct (ANSI: any-null
-      // rows skipped)
-      case ("COUNT_DISTINCT", Some(c)) if c.contains('') =>
-        val cs = c.split('')
-        countDistinct(qref(cs.head), cs.tail.toIndexedSeq.map(qref): _*)
-      case ("COUNT_DISTINCT", Some(c)) => countDistinct(qref(c))
-      // DISTINCT aggregates (r16): SUM/AVG lower onto Catalyst's native
-      // distinct-aggregate Expand plan (the q_sql_count_distinct shape —
-      // per-group dedup partial-combines map-side, then one aggregate).
-      // AVG(DISTINCT) composes SUM/COUNT over the SAME deduped input:
-      // Catalyst shares one Expand for equal distinct children, and the
-      // integer-division promotion to double matches DuckDB's AVG.
+      // COUNT(DISTINCT a, b, …) (r16): Spark's native multi-child
+      // count_distinct (ANSI: any-null rows skipped)
+      case ("COUNT", x +: xs) => countDistinct(in(x), xs.map(in): _*)
+      // SUM/AVG lower onto Catalyst's native distinct-aggregate Expand
+      // plan (the q_sql_count_distinct shape — per-group dedup
+      // partial-combines map-side, then one aggregate). AVG(DISTINCT)
+      // composes SUM/COUNT over the SAME deduped input: Catalyst shares
+      // one Expand for equal distinct children, and the integer-division
+      // promotion to double matches DuckDB's AVG.
+      case ("SUM", Seq(x)) => sum_distinct(in(x))
+      case ("AVG", Seq(x)) => sum_distinct(in(x)) / count_distinct(in(x))
       // MIN/MAX(DISTINCT) are semantically MIN/MAX (ANSI): dedup cannot
-      // change an extremum, so the distinct pass is dropped, not planned.
-      case ("SUM_DISTINCT", Some(c)) => sum_distinct(qref(c))
-      case ("AVG_DISTINCT", Some(c)) =>
-        sum_distinct(qref(c)) / count_distinct(qref(c))
-      case ("MIN_DISTINCT", Some(c)) => min(qref(c))
-      case ("MAX_DISTINCT", Some(c)) => max(qref(c))
-      case ("SUM", Some(c)) => sum(qref(c))
-      case ("AVG", Some(c)) => avg(qref(c))
-      case ("MIN", Some(c)) => min(qref(c))
-      case ("MAX", Some(c)) => max(qref(c))
+      // change an extremum, so the distinct pass is dropped, not planned
+      case ("MIN", Seq(x)) => min(in(x))
+      case ("MAX", Seq(x)) => max(in(x))
+      case _ => throw new IllegalArgumentException(
+        "DISTINCT takes a plain column under COUNT/SUM/AVG/MIN/MAX")
+    } else (f, args) match {
+      case ("COUNT", Seq()) => count(mask(lit(1)))
+      case ("COUNT", Seq(x)) => count(in(x))
+      case ("SUM", Seq(x)) => sum(in(x))
+      case ("AVG", Seq(x)) => avg(in(x))
+      case ("MIN", Seq(x)) => min(in(x))
+      case ("MAX", Seq(x)) => max(in(x))
       // exact interpolated median — the same cross-engine-stable
       // percentile the q_percentile operator uses (DuckDB: median =
       // quantile_cont(.5), identical interpolation)
-      case ("MEDIAN", Some(c)) => percentile(qref(c), lit(0.5))
+      case ("MEDIAN", Seq(x)) => percentile(colIn(x), lit(0.5))
+      // PERCENTILE_CONT(f) WITHIN GROUP (r17): the exact interpolated
+      // percentile (the MEDIAN kernel at an arbitrary fraction)
+      case ("PERCENTILE_CONT", Seq(x, OVal(VNum(frac)))) =>
+        percentile(colIn(x), lit(frac.toDouble))
       // GROUPING(col) — 1 on the subtotal rows where col is rolled up,
       // 0 on detail rows (ANSI; disambiguates a real NULL key from a
       // rollup NULL). Widened from Spark's tinyint to bigint so the
       // dialect's type is engine-independent.
-      case ("GROUPING", Some(c)) => grouping(qref(c)).cast("bigint")
+      case ("GROUPING", Seq(x)) => grouping(colIn(x)).cast("bigint")
       // boolean quantifiers (ANSI EVERY/ANY; the DuckDB spelling) — both
       // engines skip NULLs and return NULL on all-NULL groups
-      case ("BOOL_AND", Some(c)) => bool_and(qref(c))
-      case ("BOOL_OR", Some(c)) => bool_or(qref(c))
+      case ("BOOL_AND", Seq(x)) => bool_and(colIn(x))
+      case ("BOOL_OR", Seq(x)) => bool_or(colIn(x))
       // sample standard deviation (n−1 denominator in both engines).
       // Float-accumulated — keys must round(…, 6) per the §5 discipline.
-      case ("STDDEV", Some(c)) => stddev_samp(qref(c))
-      // ordered concatenation: collect → sort → join, so the result is
-      // deterministic on any partitioning (the DuckDB twin spells the
-      // same order as string_agg(c, sep ORDER BY c))
-      case ("ARG_MAX", Some(enc)) =>
-        val Array(a, b) = enc.split("", 2)
-        max_by(qref(a), qref(b))
-      case ("ARG_MIN", Some(enc)) =>
-        val Array(a, b) = enc.split("", 2)
-        min_by(qref(a), qref(b))
-      // deterministic ONLY over per-group-constant input (the gate key's
-      // use); Spark and DuckDB agree trivially there
-      case ("ANY_VALUE", Some(c)) => any_value(qref(c))
+      case ("STDDEV", Seq(x)) => stddev_samp(colIn(x))
+      // the value of `x` on the row where `by` is extreme (max_by/min_by;
+      // ties need a unique `by` per group for determinism — the keys use
+      // unique ids)
+      case ("ARG_MAX", Seq(x, by)) => max_by(colIn(x), colIn(by))
+      case ("ARG_MIN", Seq(x, by)) => min_by(colIn(x), colIn(by))
+      // the first non-NULL value (DuckDB's any_value); deterministic ONLY
+      // over per-group-constant input (the gate key's use)
+      case ("ANY_VALUE", Seq(x)) => any_value(colIn(x), lit(true))
       // bitwise aggregates (r17): exact integer folds — commutative and
       // associative, so partial-combined map-side and order-invariant on
       // any partitioning; NULLs skipped in both engines
-      case ("BIT_AND", Some(c)) => call_function("bit_and", qref(c))
-      case ("BIT_OR", Some(c)) => call_function("bit_or", qref(c))
-      case ("BIT_XOR", Some(c)) => call_function("bit_xor", qref(c))
+      case ("BIT_AND", Seq(x)) => call_function("bit_and", colIn(x))
+      case ("BIT_OR", Seq(x)) => call_function("bit_or", colIn(x))
+      case ("BIT_XOR", Seq(x)) => call_function("bit_xor", colIn(x))
       // deterministic MODE (r17): most frequent value, ties broken by
       // the SMALLEST value (Spark's deterministic flag; the DuckDB
       // replay composes the same contract as row_number() ORDER BY
       // count DESC, value ASC — DuckDB's own mode() is tie-arbitrary).
       // Partial-combines on (group, value) counts map-side; per-group
       // state is the distinct-value map, not the row list.
-      case ("MODE", Some(c)) => call_function("mode", qref(c), lit(true))
+      case ("MODE", Seq(x)) => call_function("mode", colIn(x), lit(true))
       // dispersion tier 2 (r17): variance in both denominators +
       // population stddev — Catalyst's partial-combined moment
       // aggregates, float-accumulated (gate keys round(…, 6) per §5)
-      case ("VAR_SAMP", Some(c)) => var_samp(qref(c))
-      case ("VAR_POP", Some(c)) => var_pop(qref(c))
-      case ("STDDEV_POP", Some(c)) => stddev_pop(qref(c))
+      case ("VAR_SAMP", Seq(x)) => var_samp(colIn(x))
+      case ("VAR_POP", Seq(x)) => var_pop(colIn(x))
+      case ("STDDEV_POP", Seq(x)) => stddev_pop(colIn(x))
       // SKEWNESS/KURTOSIS (r17): the dialect's contract is the
       // SAMPLE-corrected statistics (DuckDB's definition); Spark's
       // skewness/kurtosis are the POPULATION g1 / excess g2, so the
@@ -160,53 +166,51 @@ private[sql] trait ExpressionLowering { self: Lowering =>
       // same central-moment accumulator plus a count. Guards mirror
       // DuckDB's NULL edges: skew needs n >= 3, kurt n >= 4, and a
       // zero-variance group is NULL (Spark alone would return NaN).
-      case ("SKEWNESS", Some(c)) =>
-        val x = qref(c); val n = count(x)
+      case ("SKEWNESS", Seq(x0)) =>
+        val x = colIn(x0); val n = count(x)
         when(n > 2 && var_pop(x) > 0,
           call_function("skewness", x) * sqrt(n * (n - lit(1))) / (n - lit(2)))
-      case ("KURTOSIS", Some(c)) =>
-        val x = qref(c); val n = count(x)
+      case ("KURTOSIS", Seq(x0)) =>
+        val x = colIn(x0); val n = count(x)
         when(n > 3 && var_pop(x) > 0,
           ((n + lit(1)) * call_function("kurtosis", x) + lit(6))
             * (n - lit(1)) / ((n - lit(2)) * (n - lit(3))))
-      // PERCENTILE_CONT(f) WITHIN GROUP (r17): the exact interpolated
-      // percentile (the MEDIAN kernel at an arbitrary fraction)
-      case ("PERCENTILE_CONT", Some(enc)) =>
-        val Array(c, frac) = enc.split("", 2)
-        percentile(qref(c), lit(frac.toDouble))
-      // ANSI bivariate regression aggregates (r17): y U+0001 x in the
-      // arg slot (the ARG_MAX encoding). Single-pass moment accumulation
-      // (Catalyst's partial-combined covar/var machinery) — no second
-      // scan; float-accumulated, so gate keys round(…, 6) per §5.
-      // Pairs with a NULL on either side are skipped, both engines.
-      // CORR/COVAR_SAMP/COVAR_POP (r17) ride the same two-column slot.
-      case (f, Some(enc)) if f.startsWith("REGR_")
-          || Set("CORR", "COVAR_SAMP", "COVAR_POP")(f) =>
-        val Array(y, x) = enc.split("", 2)
-        call_function(f.toLowerCase, qref(y), qref(x))
-      case ("STRING_AGG", Some(enc)) =>
-        // limit-2 split: an empty separator (or one containing the
-        // U+0001 delimiter itself) round-trips -- Java's limitless char
-        // split drops trailing empty tokens and would MatchError here
-        // for STRING_AGG(col, '') (r13 ADVICE)
-        val Array(c, sep) = enc.split("", 2)
-        // per-group memory is the group's full value list (STRING_AGG's
-        // inherent semantics) -- at 100 TB one degenerate hot key would
-        // concentrate its whole list on a single task, so a loud error
-        // above the cap beats a silent executor OOM (r13 verdict note).
-        val lst = sort_array(collect_list(qref(c)))
+      // ANSI bivariate regression aggregates (r17) and CORR/COVAR_SAMP/
+      // COVAR_POP: single-pass moment accumulation (Catalyst's
+      // partial-combined covar/var machinery) — no second scan;
+      // float-accumulated, so gate keys round(…, 6) per §5. Pairs with a
+      // NULL on either side are skipped, both engines. CORR is
+      // Sxy / sqrt(Sxx * Syy) over the pairs, NULL when a side is
+      // constant, as in DuckDB (Spark's own corr divides by zero there,
+      // which ANSI mode raises).
+      case ("CORR", Seq(y0, x0)) =>
+        val (y, x) = (colIn(y0), colIn(x0))
+        val (sxx, syy) = (regr_sxx(y, x), regr_syy(y, x))
+        when(sxx > 0 && syy > 0, regr_sxy(y, x) / sqrt(sxx * syy))
+      case (r, Seq(y, x)) if r.startsWith("REGR_")
+          || Set("COVAR_SAMP", "COVAR_POP")(r) =>
+        call_function(r.toLowerCase, colIn(y), colIn(x))
+      // ordered concatenation: collect → sort → join, so the result is
+      // deterministic on any partitioning (the DuckDB twin spells the
+      // same order as string_agg(c, sep ORDER BY c)). Per-group memory is
+      // the group's full value list (STRING_AGG's inherent semantics) —
+      // at 100 TB one degenerate hot key would concentrate its whole list
+      // on a single task, so a loud error above the cap beats a silent
+      // executor OOM (r13 verdict note). A group with no value is NULL,
+      // as in DuckDB.
+      case ("STRING_AGG", Seq(x, sep)) =>
+        val c = colRef(x)
+        val lst = sort_array(collect_list(colIn(x)))
         when(size(lst) > StringAggMaxGroup,
             raise_error(concat(lit("STRING_AGG group for '"), lit(c),
               lit(s"' exceeds $StringAggMaxGroup values; aggregate or "),
               lit("bucket the group key first"))))
-          .otherwise(array_join(lst, sep))
-      case ("ARRAY_AGG", Some(enc)) =>
-        // col + direction ride the arg slot U+0001-joined (parse
-        // guarantees ORDER BY the aggregated column itself, so
+          .when(size(lst) > 0, array_join(lst, argStr(sep, "STRING_AGG separator")))
+      case ("ARRAY_AGG", Seq(x)) =>
+        // parse guarantees ORDER BY the aggregated column itself, so
         // sort_array IS the ordered aggregation — deterministic on any
-        // partitioning). Same per-group memory model as STRING_AGG:
-        // the group's full value list, capped loudly.
-        val Array(c, dir) = enc.split("", 2)
+        // partitioning. Same per-group memory model as STRING_AGG: the
+        // group's full value list, capped loudly.
         // DuckDB parity (r14 ADVICE): ARRAY_AGG KEEPS NULL elements --
         // Spark's collect_list silently drops them -- and orders NULLS
         // LAST in both directions (DuckDB default_null_order, probed).
@@ -214,83 +218,26 @@ private[sql] trait ExpressionLowering { self: Lowering =>
         // cannot drop them (a struct value is never NULL) and
         // sort_array's field-wise struct ordering lands NULLs last:
         // ascending sorts (isNull, v) -- false before true; descending
-        // sorts (isNotNull, v) -- true first. The same projection
-        // unwraps (codegen'd transform), so the product is a plain list.
-        val asc = dir == "a"
-        val x = qref(c)
+        // sorts (isNotNull, v) -- true first. FILTER masks the struct,
+        // so a filtered-out row is dropped while a kept NULL stays. The
+        // same projection unwraps (codegen'd transform), so the product
+        // is a plain list, NULL when FILTER leaves no row (DuckDB).
+        val c = colRef(x)
+        val v = qref(c)
         val lst = transform(
-          sort_array(collect_list(struct(
-            (if (asc) x.isNull else x.isNotNull).as("n"), x.as("v"))),
-            asc = asc),
+          sort_array(collect_list(mask(struct(
+            (if (desc) v.isNotNull else v.isNull).as("n"), v.as("v")))),
+            asc = !desc),
           e => e.getField("v"))
         when(size(lst) > StringAggMaxGroup,
             raise_error(concat(lit("ARRAY_AGG group for '"), lit(c),
               lit(s"' exceeds $StringAggMaxGroup values; aggregate or "),
               lit("bucket the group key first"))))
-          .otherwise(lst)
-      case other => throw new IllegalArgumentException(s"bad aggregate: $other")
-    }
-
-  /** FILTER (WHERE …) lowering: the aggregate's input becomes
-    * `when(cond, x)` — every aggregate here skips NULLs, so folding the
-    * NULLed-out rows is exactly the ANSI FILTER semantics (COUNT(*)
-    * counts a non-null literal under the condition). GROUPING cannot
-    * take a FILTER (it reads the grouping-set mask, not rows). */
-  private[sql] def aggColumnFiltered(func: String, arg: Option[String],
-      cond: Column): Column = {
-    def g(c: String): Column = when(cond, qref(c))
-    (func, arg) match {
-      case ("COUNT", None) => count(when(cond, lit(1)))
-      case ("COUNT", Some(c)) => count(g(c))
-      // multi-column + FILTER: nulling every key under !cond makes the
-      // row all-null, which any-null-skipping distinct then drops — the
-      // exact FILTER semantics
-      case ("COUNT_DISTINCT", Some(c)) if c.contains('') =>
-        val cs = c.split('')
-        countDistinct(g(cs.head), cs.tail.toIndexedSeq.map(g): _*)
-      case ("COUNT_DISTINCT", Some(c)) => countDistinct(g(c))
-      case ("SUM_DISTINCT", Some(c)) => sum_distinct(g(c))
-      case ("AVG_DISTINCT", Some(c)) =>
-        sum_distinct(g(c)) / count_distinct(g(c))
-      case ("MIN_DISTINCT", Some(c)) => min(g(c))
-      case ("MAX_DISTINCT", Some(c)) => max(g(c))
-      case ("SUM", Some(c)) => sum(g(c))
-      case ("AVG", Some(c)) => avg(g(c))
-      case ("MIN", Some(c)) => min(g(c))
-      case ("MAX", Some(c)) => max(g(c))
-      case ("MEDIAN", Some(c)) => percentile(g(c), lit(0.5))
-      case ("BOOL_AND", Some(c)) => bool_and(g(c))
-      case ("BOOL_OR", Some(c)) => bool_or(g(c))
-      case ("STDDEV", Some(c)) => stddev_samp(g(c))
-      case ("BIT_AND", Some(c)) => call_function("bit_and", g(c))
-      case ("BIT_OR", Some(c)) => call_function("bit_or", g(c))
-      case ("BIT_XOR", Some(c)) => call_function("bit_xor", g(c))
-      case ("MODE", Some(c)) => call_function("mode", g(c), lit(true))
-      // regr + FILTER: nulling EITHER side under !cond drops the pair
-      // (regr skips any-null pairs) — the exact FILTER semantics
-      case (f, Some(enc)) if f.startsWith("REGR_") =>
-        val Array(y, x) = enc.split("", 2)
-        call_function(f.toLowerCase, g(y), g(x))
-      case other => throw new IllegalArgumentException(
-        s"FILTER is not supported for aggregate: $other")
+          .when(size(lst) > 0, lst)
+      case _ => throw new IllegalArgumentException(
+        s"bad aggregate: $f with ${args.length} argument(s)")
     }
   }
-
-  private[sql] def aggItemCol(base: DataFrame, it: AggItem): Column =
-    (it.filter match {
-      case None => aggColumn(it.func, it.arg)
-      case Some(p) => aggColumnFiltered(it.func, it.arg, predCol(base, p))
-    }).as(aggAlias(it.func, it.arg, it.alias))
-
-  private[sql] def aggAlias(func: String, arg: Option[String], alias: Option[String]): String =
-    alias.getOrElse(arg match {
-      case None => "count"
-      // STRING_AGG's arg slot carries "colsep" — default name
-      // from the column alone
-      case Some(c) if c.contains('') =>
-        s"${func.toLowerCase}_${c.split("", 2).head}"
-      case Some(c) => s"${func.toLowerCase}_$c"
-    })
 
   /** `@` adapts to the metric-key carrier type: binary(16) UINT128 → the
     * hamming128 byte kernel; integer/UINT64(decimal) hashes → 64-bit
@@ -315,60 +262,6 @@ private[sql] trait ExpressionLowering { self: Lowering =>
       case other =>
         throw new IllegalArgumentException(s"@ requires a metric-key column, got $other")
     }
-  }
-
-  /** HAVING aggregate atoms → their select-item twin's output column
-    * (r9): `HAVING COUNT(*) >= 20` works without an alias reference when
-    * some item computes the same aggregate; an aggregate with no twin is
-    * refused (this dialect aggregates only what the select list names —
-    * the documented extension shape). Structural rewrite over the whole
-    * predicate tree, so aggregates compose inside arithmetic/CAST. */
-  private[sql] def resolveHavingAggs(p: Pred, items: Seq[SelectItem]): Pred =
-    mapOperands(p) {
-      case OAgg(f, arg) =>
-        items.collectFirst {
-          case AggItem(f2, arg2, alias, None) if f2 == f && arg2 == arg =>
-            ORef(aggAlias(f2, arg2, alias))
-        }.getOrElse(throw new IllegalArgumentException(
-          s"HAVING aggregate $f(${arg.getOrElse("*")}) must also appear " +
-            "in the select list"))
-      // expression aggregates (r15): HAVING SUM(CASE … END) … resolves to
-      // the structurally-identical select-item atom's output alias
-      case a: OAggX =>
-        items.collectFirst {
-          case AggExprItem(o2, alias) if o2 == (a: Operand) => ORef(alias)
-        }.getOrElse(throw new IllegalArgumentException(
-          s"HAVING aggregate ${a.func}(<expr>) must also appear " +
-            "in the select list (same spelling)"))
-    }
-
-  /** `p` with every operand that `f` is defined at replaced (outermost
-    * match wins; elsewhere the walk descends). Subquery bodies are not
-    * entered: their names live in their own scope. */
-  private[sql] def mapOperands(p: Pred)(f: PartialFunction[Operand, Operand]): Pred = {
-    def op(o: Operand): Operand = f.applyOrElse(o, (x: Operand) => x match {
-      case OArith(l, oper, r) => OArith(op(l), oper, op(r))
-      case OFunc(fn, as) => OFunc(fn, as.map(op))
-      case OCast(y, t, tm) => OCast(op(y), t, tm)
-      case OAggX(fn, a) => OAggX(fn, op(a))
-      case OCase(bs, e) => OCase(bs.map { case (c, v) => (walk(c), op(v)) }, e.map(op))
-      case other => other
-    })
-    def walk(pr: Pred): Pred = pr match {
-      case PCmp(Cmp(l, c, r)) => PCmp(Cmp(op(l), c, op(r)))
-      case PAnd(a, b) => PAnd(walk(a), walk(b))
-      case POr(a, b) => POr(walk(a), walk(b))
-      case PNot(x) => PNot(walk(x))
-      case PIn(l, vs, n) => PIn(op(l), vs, n)
-      case PInTuple(ls, rows, n) => PInTuple(ls.map(op), rows, n)
-      case PInSub(l, sub, n) => PInSub(op(l), sub, n)
-      case PQuant(l, o, all, sub) => PQuant(op(l), o, all, sub)
-      case PLike(l, pat, n, e, ci) => PLike(op(l), pat, n, e, ci)
-      case PIsNull(l, n) => PIsNull(op(l), n)
-      case PDistinct(l, r, n) => PDistinct(op(l), op(r), n)
-      case e: PExists => e
-    }
-    walk(p)
   }
 
   /** Top-level AND conjuncts (the unit of the pre/post-window WHERE split
@@ -422,10 +315,11 @@ private[sql] trait ExpressionLowering { self: Lowering =>
     case POr(a, b) => predCol(base, a) || predCol(base, b)
     case PNot(x) => !predCol(base, x)
     case PInSub(lhs, sub, neg) =>
-      val c = operandCol(base, lhs).isin(singleColumn(sub, "IN"))
+      val c = operandCol(base, lhs).isin(rowLevel.singleColumn(sub, "IN"))
       if (neg) !c else c
-    case PExists(sub) => existsCol(sub)
-    case PQuant(lhs, op, all, sub) => quantCol(operandCol(base, lhs), op, all, sub)
+    case PExists(sub) => rowLevel.existsCol(sub)
+    case PQuant(lhs, op, all, sub) =>
+      rowLevel.quantCol(operandCol(base, lhs), op, all, sub)
     case PIn(lhs, vals, neg) =>
       // raw literal values (not Columns) build a true Catalyst In — the
       // shape the parquet datasource translates to a pushed IN filter
@@ -466,17 +360,6 @@ private[sql] trait ExpressionLowering { self: Lowering =>
       if (not) c else !c
   }
 
-  /** Searched CASE → when().when()….otherwise() Column chain; branches
-    * evaluate in order, exactly ANSI semantics (Catalyst CaseWhen). */
-  private[sql] def caseCol(base: DataFrame, it: EmdriveSql.CaseItem): Column = {
-    val first = when(predCol(base, it.branches.head._1),
-      operandCol(base, it.branches.head._2))
-    val chained = it.branches.tail.foldLeft(first) { case (acc, (pr, v)) =>
-      acc.when(predCol(base, pr), operandCol(base, v))
-    }
-    it.elseV.fold(chained)(v => chained.otherwise(operandCol(base, v)))
-  }
-
   /** Numeric literal → Column. Integer literals beyond int64 (the dialect's
     * UINT64 tier, reference components.rs u64/u128 values) lower to exact
     * DECIMAL literals instead of overflowing Long.parseLong. */
@@ -495,7 +378,7 @@ private[sql] trait ExpressionLowering { self: Lowering =>
     case ORef(n) => qref(n)
     case OOuter(n) => qref(n).outer()
     case ODist(c, probe) => distCol(base, c, probe)
-    case OSub(sub) => scalarCol(sub)
+    case OSub(sub) => rowLevel.scalarCol(sub)
     case OVal(VNum(s)) => numLit(s)
     case OVal(VStr(s)) => lit(s)
     case OVal(VBits(v)) => lit(v.longValue)
@@ -521,24 +404,26 @@ private[sql] trait ExpressionLowering { self: Lowering =>
       val c = operandCol(base, o)
       if (tm) call_function("graft_try_cast", c, lit(sqlTypeName(t)))
       else c.cast(sqlTypeName(t))
-    // operand-level CASE (r15): the when-chain, exactly the CaseItem
-    // lowering — a NULL-subject/no-match row yields the ELSE (or NULL)
+    // searched CASE → when().when()….otherwise(): branches evaluate in
+    // order, exactly ANSI (Catalyst CaseWhen); a no-match row yields the
+    // ELSE (or NULL)
     case OCase(branches, elseV) =>
       val chain = branches.foldLeft(Option.empty[Column]) { case (acc, (pr, v)) =>
         val (c, x) = (predCol(base, pr), operandCol(base, v))
         Some(acc.fold(when(c, x))(_.when(c, x)))
       }.get
       elseV.fold(chain)(e => chain.otherwise(operandCol(base, e)))
+    case a: OAgg if aggregating => rowLevel.aggCol(base, a)
     case a: OAgg => throw new IllegalArgumentException(
-      s"aggregate ${a.func} is only valid in an aggregating SELECT's items")
-    case a: OAggX => throw new IllegalArgumentException(
-      s"aggregate ${a.func} is only valid in an aggregating SELECT's items")
+      s"aggregate ${a.func} is only valid in an aggregating SELECT's items, HAVING or ORDER BY")
   }
 
-  /** Scalar-function dispatch over already-lowered argument Columns
-    * (shared by the row path and the post-aggregation expression path —
-    * `ROUND(SUM(x) / 7, 1)` lowers its atoms differently but applies the
-    * same functions). `args` rides along for literal-only parameters. */
+  /** This lowering with aggregates refused again: an aggregate's own
+    * arguments and every subquery lower through it. */
+  private def rowLevel: Lowering = if (aggregating) within(scope) else self
+
+  /** Scalar-function dispatch over already-lowered argument Columns;
+    * `args` rides along for literal-only parameters. */
   private[sql] def funcApply(f: String, a: Seq[Column], args: Seq[Operand]): Column =
       (f, a) match {
         case ("UPPER", Seq(x)) => upper(x)

@@ -138,6 +138,25 @@ private[sql] trait SelectLowering { self: Lowering =>
     }
   }
 
+  /** Does `it` compute over aggregates (making its SELECT aggregating)? */
+  private def aggregates(it: SelectItem): Boolean = it match {
+    case ExprItem(o, _) => aggsOf(o).nonEmpty
+    case _ => false
+  }
+
+  /** HAVING and ORDER BY may name aggregate calls the select list does
+    * not: `hoist` rewrites each distinct call to a reference to a hidden
+    * column `__hagg_i`, which `columns` computes in the aggregation. */
+  private final class HiddenAggs {
+    private val calls = mutable.LinkedHashMap.empty[OAgg, String]
+    val hoist: PartialFunction[Operand, Operand] = {
+      case a: OAgg => ORef(calls.getOrElseUpdate(a, s"__hagg_${calls.size}"))
+    }
+    def names: Seq[String] = calls.values.toSeq
+    def columns(base: DataFrame): Seq[Column] =
+      calls.toSeq.map { case (a, n) => aggCol(base, a).as(n) }
+  }
+
   /** The one local/correlated split of a subquery's WHERE: `sub`'s FROM
     * relation, the conjuncts that name only its own columns (the
     * relation's, or its select-list aliases), and the correlated rest,
@@ -149,9 +168,7 @@ private[sql] trait SelectLowering { self: Lowering =>
     val from = lowerFrom(sub)
     val own = from.columns.toSet ++ sub.items.collect {
       case ColItem(_, Some(a)) => a
-      case ExprItem(_, a) => a
-      case it: CaseItem => it.alias
-      case d: DistItem => d.alias
+      case it @ ExprItem(_, a) if !aggregates(it) => a
     }
     val (corr, local) = sub.where.flatMap(splitConjuncts)
       .partition(refNames(_).exists(n => !own(n)))
@@ -172,15 +189,16 @@ private[sql] trait SelectLowering { self: Lowering =>
   }
 
   /** `(SELECT …)` as a value: a native scalar subquery. A correlated one
-    * selects exactly one aggregate and keeps its correlated filter BELOW
-    * the aggregate, so Catalyst's scalar-subquery rewrite owns the ANSI
-    * empty case (NULL, but 0 for COUNT). */
+    * selects exactly one aggregate expression and keeps its correlated
+    * filter BELOW the aggregate, so Catalyst's scalar-subquery rewrite
+    * owns the ANSI empty case (NULL, but 0 for COUNT). */
   private[sql] def scalarCol(sub: Select): Column = {
     val (from, local, corr) = correlate(sub)
     if (corr.isEmpty) singleColumn(sub, "scalar").scalar()
     else sub.items match {
-      case Seq(agg: AggItem) if sub.groupBy.isEmpty && sub.having.isEmpty =>
-        filtered(from, local ++ corr).select(aggItemCol(from, agg)).scalar()
+      case Seq(it @ ExprItem(o, _)) if aggregates(it) && sub.groupBy.isEmpty
+          && sub.having.isEmpty =>
+        filtered(from, local ++ corr).select(aggregated.operandCol(from, o)).scalar()
       case _ => throw new IllegalArgumentException(
         "a correlated scalar subquery must select exactly one aggregate " +
           "(no GROUP BY)")
@@ -199,15 +217,18 @@ private[sql] trait SelectLowering { self: Lowering =>
     else {
       require(corr.forall { case PCmp(Cmp(_, "=", _)) => true; case _ => false },
         "a grouped EXISTS correlates through equalities only")
-      val aggs = sub.items.collect { case it: AggItem => aggItemCol(from, it) } match {
+      val hidden = new HiddenAggs
+      val having = sub.having.map(mapOperands(_)(hidden.hoist))
+      val aggs = sub.items.collect {
+        case it @ ExprItem(o, a) if aggregates(it) => aggregated.operandCol(from, o).as(a)
+      } ++ hidden.columns(from) match {
         case Seq() => Seq(count(lit(1)).as("__ex_n"))
         case as => as
       }
       val g = filtered(from, local)
         .groupBy((corr.flatMap(refNames) ++ sub.groupBy).distinct.map(qref): _*)
         .agg(aggs.head, aggs.tail: _*)
-      filtered(filtered(g, sub.having.map(resolveHavingAggs(_, sub.items))), corr)
-        .exists()
+      filtered(filtered(g, having), corr).exists()
     }
   }
 
@@ -469,11 +490,7 @@ private[sql] trait SelectLowering { self: Lowering =>
     def itemName(it: SelectItem): String = it match {
       case ColItem(n, a) => a.getOrElse(n)
       case ExprItem(_, a) => a
-      case AggExprItem(_, a) => a
       case w: WinItem => w.alias
-      case DistItem(_, _, a) => a
-      case c: CaseItem => c.alias
-      case AggItem(f, arg, a, _) => aggAlias(f, arg, a)
       case Star | _: StarExclude | _: StarPattern =>
         throw new IllegalArgumentException("an ordinal cannot reference *")
     }
@@ -483,8 +500,7 @@ private[sql] trait SelectLowering { self: Lowering =>
         require(i >= 1 && i <= items.length,
           s"ordinal $i is out of range for ${items.length} select items")
         val it = items(i - 1)
-        require(!grouping || !(it.isInstanceOf[AggItem]
-          || it.isInstanceOf[AggExprItem] || it.isInstanceOf[WinItem]),
+        require(!grouping || !(aggregates(it) || it.isInstanceOf[WinItem]),
           s"GROUP BY ordinal $i references an aggregate/window item")
         itemName(it)
       } else k
@@ -508,9 +524,7 @@ private[sql] trait SelectLowering { self: Lowering =>
       val whereNames = where.flatMap(refNames).toSet
       val shadowed: Map[String, String] = items.collect {
         case ColItem(c, Some(a)) if a != c => a
-        case ExprItem(_, a) => a
-        case it: CaseItem => it.alias
-        case d: DistItem => d.alias
+        case it @ ExprItem(_, a) if !aggregates(it) => a
       }.filter(whereNames).flatMap { a =>
         val exact = base.columns.filter(_ == a)
         (if (exact.nonEmpty) exact else base.columns.filter(_.endsWith("." + a)))
@@ -522,13 +536,14 @@ private[sql] trait SelectLowering { self: Lowering =>
       var df = shadowed.foldLeft(base) { case (d, (a, src)) =>
         d.withColumn(s"__src_$a", qref(src))
       }
-      // 1. attach aliased distance/computed columns, so WHERE can reference
-      //    them; window items attach AFTER the pre-window WHERE below
+      // 1. attach aliased and computed row-level columns (distances,
+      //    CASE buckets, arithmetic), so WHERE can reference them; window
+      //    items attach AFTER the pre-window WHERE below, aggregates in
+      //    the aggregation
       items.foreach {
-        case DistItem(c, probe, alias) => df = df.withColumn(alias, distCol(base, c, probe))
         case ColItem(c, Some(alias)) => df = df.withColumn(alias, qref(c))
-        case it: CaseItem => df = df.withColumn(it.alias, caseCol(base, it))
-        case ExprItem(o, alias) => df = df.withColumn(alias, operandCol(base, o))
+        case it @ ExprItem(o, alias) if !aggregates(it) =>
+          df = df.withColumn(alias, operandCol(base, o))
         case _ => ()
       }
       // 2. WHERE — ANSI split: conjuncts that do not read a window alias
@@ -544,7 +559,7 @@ private[sql] trait SelectLowering { self: Lowering =>
         .partition(c => refNames(c).exists(winAliases))
       preWin.foreach(c => df = df.filter(predCol(base, c)))
       items.foreach {
-        case WinItem(f, arg, parts, keys, alias, frame, fil) =>
+        case WinItem(f, arg, parts, keys, alias, frame, agg) =>
           import org.apache.spark.sql.expressions.Window
           // a global window (no PARTITION BY) single-tasks the whole
           // relation — fine over a dimension/grid, a scale-killer over a
@@ -619,70 +634,68 @@ private[sql] trait SelectLowering { self: Lowering =>
               lo.fold(Window.unboundedPreceding)(n => -n),
               hi.fold(Window.unboundedFollowing)(n => n))
           }
-          val fn = f match {
-            case "ROW_NUMBER" => row_number()
-            case "RANK" => rank()
-            case "DENSE_RANK" => dense_rank()
-            // (rank−1)/(rows−1): a ratio of exact integers, identically
-            // defined in DuckDB — bitwise cross-engine
-            case "PERCENT_RANK" => percent_rank()
-            // rows-with-peers-or-before / rows: same exact-int ratio
-            // class (ANSI CUME_DIST, identical in DuckDB)
-            case "CUME_DIST" => cume_dist()
-            case "NTILE" => ntile(arg.get.toInt)
-            // out-of-partition rows yield NULL, identically in DuckDB
-            case "NTH_VALUE" =>
-              val Array(c, n) = arg.get.split(":")
-              nth_value(qref(c), n.toInt)
-            case "LAG" | "LEAD" =>
-              // "!ignore" suffix = IGNORE NULLS (r17): the n-th previous
-              // NON-NULL value — Spark's ignoreNulls flag, DuckDB-identical
-              val (spec0, ign) = arg.get.split("!") match {
-                case Array(a0, "ignore") => (a0, true)
-                case _ => (arg.get, false)
+          val fn = agg match {
+            // an aggregate folds its frame through the one aggregate
+            // table, FILTER included; ordered, the ANSI default frame
+            // (RANGE unbounded preceding → current row) applies, as in
+            // DuckDB
+            case Some(a) =>
+              require(a.filter.isEmpty || !xcur,
+                "FILTER cannot combine with EXCLUDE CURRENT ROW")
+              aggCol(base, a)
+            case None => f match {
+              case "ROW_NUMBER" => row_number()
+              case "RANK" => rank()
+              case "DENSE_RANK" => dense_rank()
+              // (rank−1)/(rows−1): a ratio of exact integers, identically
+              // defined in DuckDB — bitwise cross-engine
+              case "PERCENT_RANK" => percent_rank()
+              // rows-with-peers-or-before / rows: same exact-int ratio
+              // class (ANSI CUME_DIST, identical in DuckDB)
+              case "CUME_DIST" => cume_dist()
+              case "NTILE" => ntile(arg.get.toInt)
+              // out-of-partition rows yield NULL, identically in DuckDB
+              case "NTH_VALUE" =>
+                val Array(c, n) = arg.get.split(":")
+                nth_value(qref(c), n.toInt)
+              case "LAG" | "LEAD" =>
+                // "!ignore" suffix = IGNORE NULLS (r17): the n-th previous
+                // NON-NULL value — Spark's ignoreNulls flag, DuckDB-identical
+                val (spec0, ign) = arg.get.split("!") match {
+                  case Array(a0, "ignore") => (a0, true)
+                  case _ => (arg.get, false)
+                }
+                val Array(c, off) = spec0.split(":")
+                if (f == "LAG") lag(col(c), off.toInt, null, ign)
+                else lead(col(c), off.toInt, null, ign)
+              case "FIRST_VALUE" | "LAST_VALUE" =>
+                // "!ignore" suffix = ANSI IGNORE NULLS (Spark's ignoreNulls
+                // flag; DuckDB-identical: the nearest non-null in frame)
+                val (c, ign) = arg.get.split("!") match {
+                  case Array(c0, "ignore") => (c0, true)
+                  case _ => (arg.get, false)
+                }
+                if (f == "FIRST_VALUE") first(qref(c), ignoreNulls = ign)
+                else last(qref(c), ignoreNulls = ign)
               }
-              val Array(c, off) = spec0.split(":")
-              if (f == "LAG") lag(col(c), off.toInt, null, ign)
-              else lead(col(c), off.toInt, null, ign)
-            case "FIRST_VALUE" | "LAST_VALUE" =>
-              // "!ignore" suffix = ANSI IGNORE NULLS (Spark's ignoreNulls
-              // flag; DuckDB-identical: the nearest non-null in frame)
-              val (c, ign) = arg.get.split("!") match {
-                case Array(c0, "ignore") => (c0, true)
-                case _ => (arg.get, false)
-              }
-              if (f == "FIRST_VALUE") first(qref(c), ignoreNulls = ign)
-              else last(qref(c), ignoreNulls = ign)
-            // windowed FILTER (r17): the aggregate folds only qualifying
-            // frame rows — the same when(cond, x) fold as the grouped
-            // form (NULL-skipping makes it exactly ANSI)
-            case agg if fil.nonEmpty =>
-              require(!xcur, "FILTER cannot combine with EXCLUDE CURRENT ROW")
-              aggColumnFiltered(agg, arg, predCol(base, fil.get))
-            // ordered aggregate: ANSI default frame (RANGE unbounded
-            // preceding → current row), same default in DuckDB
-            case agg => aggColumn(agg, arg)
           }
           val result =
             if (!xcur) fn.over(spec)
-            else f match {
+            else (f, agg.toSeq.flatMap(_.args).map(operandCol(base, _))) match {
               // leave-one-out rewrites. NULL edges follow the engines'
               // shared semantics: SUM/AVG over a reduced frame with no
               // non-null values is NULL (not 0); COUNT is 0.
-              case "SUM" =>
-                val x = qref(arg.get)
+              case ("SUM", Seq(x)) =>
                 val nX = count(x).over(spec) -
                   when(x.isNotNull, lit(1L)).otherwise(lit(0L))
                 when(nX === 0, lit(null))
                   .otherwise(sum(x).over(spec) - coalesce(x, lit(0)))
-              case "COUNT" if arg.isEmpty =>
+              case ("COUNT", Seq()) =>
                 count(lit(1)).over(spec) - lit(1L)
-              case "COUNT" =>
-                val x = qref(arg.get)
+              case ("COUNT", Seq(x)) =>
                 count(x).over(spec) -
                   when(x.isNotNull, lit(1L)).otherwise(lit(0L))
-              case "AVG" =>
-                val x = qref(arg.get)
+              case ("AVG", Seq(x)) =>
                 val nX = count(x).over(spec) -
                   when(x.isNotNull, lit(1L)).otherwise(lit(0L))
                 val sX = sum(x).over(spec) - coalesce(x, lit(0))
@@ -690,7 +703,7 @@ private[sql] trait SelectLowering { self: Lowering =>
                 // bitwise cross-engine for integral columns
                 when(nX === 0, lit(null))
                   .otherwise(sX.cast("double") / nX)
-              case other => throw new IllegalArgumentException(
+              case (other, _) => throw new IllegalArgumentException(
                 s"EXCLUDE CURRENT ROW supports SUM/COUNT/AVG, not $other")
             }
           df = df.withColumn(alias, result)
@@ -700,8 +713,7 @@ private[sql] trait SelectLowering { self: Lowering =>
       // QUALIFY (r9): explicit window filter — same lowering as the
       // post-window WHERE conjuncts, just spelled the ANSI-extension way
       qualify.foreach(c => df = df.filter(predCol(base, c)))
-      val hasAgg = items.exists(i =>
-        i.isInstanceOf[AggItem] || i.isInstanceOf[AggExprItem])
+      val grouped = items.exists(aggregates) || groupBy.nonEmpty
       // ORDER BY expression keys (r9): hidden __ob_i columns. On the
       // plain-projection path they attach BEFORE the projection, so the
       // expression may read underlying columns not in the select list
@@ -713,7 +725,7 @@ private[sql] trait SelectLowering { self: Lowering =>
       if (obExprs.nonEmpty) {
         require(!distinct, "ORDER BY expressions cannot combine with " +
           "SELECT DISTINCT — order by a select-list alias instead")
-        if (!hasAgg && groupBy.isEmpty)
+        if (!grouped)
           obExprs.foreach { case (hn, o) =>
             df = df.withColumn(hn, operandCol(base, o))
           }
@@ -724,9 +736,15 @@ private[sql] trait SelectLowering { self: Lowering =>
       groupExprs.foreach { case (hn, o) =>
         df = df.withColumn(hn, operandCol(base, o))
       }
+      // HAVING and ORDER BY aggregates read hidden aggregate columns
+      val hidden = new HiddenAggs
+      val (havingPreds, sortKeys) =
+        if (!grouped) (having, orderBy)
+        else (having.map(mapOperands(_)(hidden.hoist)),
+          orderBy.map(k => k.copy(expr = k.expr.map(mapOperand(_)(hidden.hoist)))))
       // 3. aggregation (graft extension) or plain SELECT-list projection
       var out: DataFrame =
-        if (hasAgg || groupBy.nonEmpty) {
+        if (grouped) {
           items.foreach {
             // either spelling may be the group key: the raw (possibly
             // qualified) column or its output alias (ordinals resolve to
@@ -734,53 +752,25 @@ private[sql] trait SelectLowering { self: Lowering =>
             case ColItem(c, a) =>
               require(groupBy.contains(c) || a.exists(groupBy.contains),
                 s"column $c must appear in GROUP BY")
-            // a CASE or computed alias may be a group key (the bucketing
-            // idiom: GROUP BY the computed bucket) — it was attached pre-agg
-            case it: CaseItem => require(groupBy.contains(it.alias),
-              s"CASE alias ${it.alias} must appear in GROUP BY")
-            case it: ExprItem => require(groupBy.contains(it.alias),
-              s"expression alias ${it.alias} must appear in GROUP BY")
+            // a row-level computed alias may be a group key (the
+            // bucketing idiom: GROUP BY the computed bucket) — it was
+            // attached pre-agg
+            case it @ ExprItem(_, a) => require(aggregates(it) || groupBy.contains(a),
+              s"expression alias $a must appear in GROUP BY")
             case Star | _: StarExclude | _: StarPattern =>
               throw new IllegalArgumentException(
                 "SELECT * cannot be combined with aggregates/GROUP BY")
-            case d: DistItem => throw new IllegalArgumentException(
-              s"distance item ${d.alias} cannot be combined with aggregates/GROUP BY")
-            case _: AggItem => ()
-            case _: AggExprItem => ()
             case w: WinItem => throw new IllegalArgumentException(
               s"window item ${w.alias} cannot be combined with aggregates/GROUP BY")
           }
-          val plain = items.collect { case it: AggItem =>
-            aggItemCol(df, it) }
-          // each distinct aggregate atom inside expressions computes ONCE
-          // under a RESERVED internal name (never a user-visible alias:
-          // deduplicating against plain items let `SELECT SUM(x) AS
-          // sum_v, SUM(v) / 2 ...` silently read the SUM(x) column —
-          // round-7 ADVICE). Catalyst collapses identical aggregate
-          // expressions, so the occasional double registration is free.
-          val exprAtoms = items
-            .collect { case AggExprItem(o, _) => aggAtoms(o) }.flatten.distinct
-          // positional internal names (r16 ADVICE): __aggx_<i> over the
-          // DISTINCT atom list — a 32-bit structural hash could collide
-          // between two different atoms in one query, silently aliasing
-          // them; position over a deduped list cannot
-          val aggxNames: Map[EmdriveSql.OAggX, String] = exprAtoms
-            .collect { case a: EmdriveSql.OAggX => a }
-            .zipWithIndex.map { case (a, i) => a -> s"__aggx_$i" }.toMap
-          val exprAggs = exprAtoms
-            .map {
-              case OAgg(f, arg) =>
-                aggColumn(f, arg).as("__agg_" + aggAlias(f, arg, None))
-              // expression aggregates (r15): the argument lowers over the
-              // PRE-aggregation rows (CASE/arithmetic per row, then the
-              // partial-combined aggregate — one scan, map-side combine);
-              // the same spelled atom computes once and reads consistently
-              case a @ OAggX(f, o) =>
-                aggColumnX(f, operandCol(df, o)).as(aggxNames(a))
-              case other => throw new IllegalArgumentException(
-                s"unexpected aggregate atom: $other")
-            }
-          val aggs = plain ++ exprAggs
+          // each aggregating item is ONE Column over the pre-aggregation
+          // rows: its aggregates fold them (arguments and FILTER per row,
+          // partial-combined map-side) and the expression around them
+          // reads the group keys; Spark's Aggregate checks that every
+          // plain reference is a key
+          val aggs = items.collect {
+            case it @ ExprItem(o, a) if aggregates(it) => aggregated.operandCol(df, o).as(a)
+          } ++ hidden.columns(df)
           require(aggs.nonEmpty, "GROUP BY requires at least one aggregate")
           // ROLLUP/CUBE lower to Dataset.rollup/cube — ONE Expand pass
           // produces every grouping set (no re-aggregation per level)
@@ -794,43 +784,15 @@ private[sql] trait SelectLowering { self: Lowering =>
                 df.groupingSets(groupSets.map(_.map(qref)), groupBy.map(qref): _*)
               case _ => df.groupBy(groupBy.map(qref): _*)
             }).agg(aggs.head, aggs.tail: _*)
-          // post-aggregation expression evaluation: aggregate atoms read
-          // their computed columns, ORefs read group keys, literals stay
-          def aggExprCol(o: Operand): Column = o match {
-            case OAgg(f, arg) => col("__agg_" + aggAlias(f, arg, None))
-            case a: OAggX => col(aggxNames(a))
-            case ORef(n) => qref(n)
-            case OVal(VNum(s)) => numLit(s)
-            case s: OSub => operandCol(base, s)
-            case OArith(l, op, r) =>
-              val (lc, rc) = (aggExprCol(l), aggExprCol(r))
-              op match {
-                case "+" => lc + rc
-                case "-" => lc - rc
-                case "*" => lc * rc
-                case "/" => lc / rc
-                case "%" => lc % rc
-              }
-            case OFunc(f, fargs) => funcApply(f, fargs.map(aggExprCol), fargs)
-            case OCast(x, t, tm) =>
-              val c = aggExprCol(x)
-              if (tm) call_function("graft_try_cast", c, lit(sqlTypeName(t)))
-              else c.cast(sqlTypeName(t))
-            case other => throw new IllegalArgumentException(
-              s"unsupported term in aggregate expression: $other")
-          }
           agged.select(items.map {
             case ColItem(c, alias) =>
               // the aggregated frame carries whichever spelling was the
               // group key — the raw column or the attached alias
               val n = if (groupBy.contains(c)) c else alias.getOrElse(c)
               qref(n).as(alias.getOrElse(c))
-            case it: CaseItem => col(it.alias)
-            case it: ExprItem => col(it.alias)
-            case AggItem(f, arg, alias, _) => col(aggAlias(f, arg, alias))
-            case AggExprItem(o, alias) => aggExprCol(o).as(alias)
+            case ExprItem(_, a) => col(a)
             case other => throw new IllegalStateException(other.toString)
-          }: _*)
+          } ++ hidden.names.map(col): _*)
         } else {
           df.select(items.flatMap {
             case Star => base.columns.toSeq.map(col)
@@ -850,23 +812,23 @@ private[sql] trait SelectLowering { self: Lowering =>
               base.columns.toSeq.filterNot(ex.toSet).map { c =>
                 rm.get(c).fold(col(c))(o => operandCol(base, o).as(c)) }
             case ColItem(c, alias) => Seq(col(alias.getOrElse(c)))
-            case DistItem(_, _, alias) => Seq(col(alias))
-            case CaseItem(_, _, alias) => Seq(col(alias))
             case ExprItem(_, alias) => Seq(col(alias))
-            case WinItem(_, _, _, _, alias, _, _) => Seq(col(alias))
+            case w: WinItem => Seq(col(w.alias))
             case other => throw new IllegalStateException(other.toString)
           } ++ obExprs.map { case (hn, _) => col(hn) }: _*)
         }
-      // 4. HAVING filters the aggregated output — by output names, and
-      //    (r9) by aggregate EXPRESSIONS: `HAVING COUNT(*) >= 20` resolves
-      //    each aggregate atom to its select-item twin's output column
-      //    (ANSI spelling without requiring the alias). Catalyst evaluates
-      //    post-aggregation, exactly ANSI HAVING semantics.
+      // 4. HAVING filters the aggregated output — by output names and by
+      //    aggregate expressions (`HAVING COUNT(*) >= 20`), which read
+      //    their hidden columns. Catalyst evaluates post-aggregation,
+      //    exactly ANSI HAVING semantics.
       if (having.nonEmpty) {
-        require(hasAgg || groupBy.nonEmpty, "HAVING requires GROUP BY/aggregates")
-        having.foreach(pred =>
-          out = out.filter(predCol(out, resolveHavingAggs(pred, items))))
+        require(grouped, "HAVING requires GROUP BY/aggregates")
+        havingPreds.foreach(pred => out = out.filter(predCol(out, pred)))
       }
+      // the hidden aggregates leave before a dedupe (DISTINCT refuses
+      // ORDER BY expressions, so none is needed past HAVING there)
+      val dedupes = distinct || distinctOn.nonEmpty
+      if (dedupes && hidden.names.nonEmpty) out = out.drop(hidden.names: _*)
       // 4b. SELECT DISTINCT dedupes the projected output (ANSI position:
       //     after HAVING, before ORDER BY/LIMIT) — lowered to the same
       //     partial-combined aggregate as any distinct, no driver state
@@ -898,7 +860,7 @@ private[sql] trait SelectLowering { self: Lowering =>
         // here on the aggregated path), sort, then drop — the projection
         // folds into TakeOrderedAndProject under a LIMIT, so the hidden
         // column never materializes globally
-        val sortCols = orderBy.zipWithIndex.map { case (k, i) =>
+        val sortCols = sortKeys.zipWithIndex.map { case (k, i) =>
           val c = k.expr match {
             case Some(o) =>
               val hn = s"__ob_$i"
@@ -917,8 +879,9 @@ private[sql] trait SelectLowering { self: Lowering =>
           }
         }
         out = out.orderBy(sortCols: _*)
-        if (obExprs.nonEmpty) out = out.drop(obExprs.map(_._1): _*)
       }
+      val dropped = obExprs.map(_._1) ++ (if (dedupes) Nil else hidden.names)
+      if (dropped.nonEmpty) out = out.drop(dropped: _*)
       // ANSI pagination: OFFSET skips before LIMIT counts (Dataset.offset
       // composes with the sort into a single GlobalLimit — no full
       // materialization of the skipped prefix)

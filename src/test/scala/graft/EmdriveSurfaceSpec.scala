@@ -2806,4 +2806,70 @@ class EmdriveSurfaceSpec extends SparkTestBase {
       assert(es.sql("EXECUTE one(2);").collect().map(_.getLong(0)).toSeq == Seq(2L), q)
     }
   }
+
+  /** t(k, x, y) for the aggregate-expression specs below; expected rows
+    * are DuckDB 1.0.0's answers to the same statements. */
+  private def aggTable(): graft.sql.EmdriveSession = {
+    GraftSession.prepare(spark)
+    val s = spark
+    import s.implicits._
+    val es = new graft.sql.EmdriveSession(spark)
+    es.register("t", Seq(("a", 1, 10), ("a", 2, 20), ("b", 3, 30), ("b", 4, 5),
+      ("c", 5, 7)).toDF("k", "x", "y"))
+    es
+  }
+
+  private def byKey(es: graft.sql.EmdriveSession, q: String): Seq[(String, Any)] =
+    es.sql(q).collect().map(r => (r.getString(0), r.get(1))).sortBy(_._1).toSeq
+
+  test("SQL aggregates: CASE over an aggregate is an aggregating item") {
+    assert(byKey(aggTable(),
+      "SELECT k, CASE WHEN COUNT(*) > 1 THEN 'many' ELSE 'one' END AS sz FROM t GROUP BY k;") ==
+      Seq(("a", "many"), ("b", "many"), ("c", "one")))
+  }
+
+  test("SQL aggregates: concatenation reads a group key beside a cast aggregate") {
+    assert(byKey(aggTable(),
+      "SELECT k, k || ':' || CAST(SUM(x) AS VARCHAR) AS s FROM t GROUP BY k;") ==
+      Seq(("a", "a:3"), ("b", "b:7"), ("c", "c:5")))
+  }
+
+  test("SQL aggregates: HAVING filters on an aggregate the select list does not name") {
+    val es = aggTable()
+    val q = "SELECT k, SUM(x) AS s FROM t GROUP BY k HAVING MAX(y) > 10;"
+    assert(byKey(es, q) == Seq(("a", 3L), ("b", 7L)))
+    assert(es.sql(q).columns.toSeq == Seq("k", "s"))
+  }
+
+  test("SQL aggregates: ORDER BY an aggregate expression") {
+    val out = aggTable().sql(
+      "SELECT k, SUM(x) AS s FROM t GROUP BY k ORDER BY SUM(x) DESC;")
+    assert(out.columns.toSeq == Seq("k", "s"))
+    assert(out.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      Seq(("b", 7L), ("c", 5L), ("a", 3L)))
+  }
+
+  test("SQL aggregates: ARG_MAX takes FILTER") {
+    assert(byKey(aggTable(),
+      "SELECT k, ARG_MAX(x, y) FILTER (WHERE y < 25) AS am FROM t GROUP BY k;") ==
+      Seq(("a", 2), ("b", 4), ("c", 5)))
+  }
+
+  test("SQL aggregates: ARRAY_AGG takes FILTER") {
+    assert(byKey(aggTable(),
+      "SELECT k, ARRAY_AGG(x ORDER BY x) FILTER (WHERE y > 6) AS a FROM t GROUP BY k;") ==
+      Seq(("a", Seq(1, 2)), ("b", Seq(3)), ("c", Seq(5))))
+  }
+
+  test("SQL aggregates: FILTER on an aggregate over an expression") {
+    assert(byKey(aggTable(),
+      "SELECT k, SUM(x * 2) FILTER (WHERE y > 6) AS s FROM t GROUP BY k;") ==
+      Seq(("a", 6L), ("b", 6L), ("c", 10L)))
+  }
+
+  test("SQL aggregates: GROUP BY ALL keys on a CASE item") {
+    assert(byKey(aggTable(),
+      "SELECT CASE WHEN x > 2 THEN 'hi' ELSE 'lo' END AS b, COUNT(*) AS n FROM t GROUP BY ALL;") ==
+      Seq(("hi", 3L), ("lo", 2L)))
+  }
 }
