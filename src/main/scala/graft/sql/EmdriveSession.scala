@@ -209,9 +209,12 @@ final class EmdriveSession(spark: SparkSession,
   * recursive CTE's round and a view body each lower through a new instance
   * over their own scope; concurrent statements never see each other's.
   * An `aggregating` instance lowers the items of an aggregating SELECT:
-  * only there does an aggregate call become a Column. */
+  * only there does an aggregate call become a Column. A `windowing` one
+  * lowers the window items of a SELECT without aggregates: only there
+  * does a window call become a Column. */
 private[sql] final class Lowering(private[sql] val spark: SparkSession,
-    private[sql] val scope: Scope, private[sql] val aggregating: Boolean = false)
+    private[sql] val scope: Scope, private[sql] val aggregating: Boolean = false,
+    private[sql] val windowing: Boolean = false)
   extends SelectLowering with ExpressionLowering {
   import EmdriveSession.TvfName
 
@@ -219,6 +222,9 @@ private[sql] final class Lowering(private[sql] val spark: SparkSession,
 
   /** This scope, lowering expressions over aggregates. */
   private[sql] def aggregated: Lowering = new Lowering(spark, scope, aggregating = true)
+
+  /** This scope, lowering expressions over windows. */
+  private[sql] def windowed: Lowering = new Lowering(spark, scope, windowing = true)
 
   /** The persisted index layout of (kind, table, column), built lazily
     * on the FIRST index-backed search and reused by every later query —

@@ -47,21 +47,28 @@ import graft.sources.SchemaMapper
   *                    | col @ probe | '(' operand ')'
   *                    | (SELECT …)   (scalar subquery)
   *                    | CASE [subject] WHEN pred|v THEN v … [ELSE v] END
-  *                    | fn '(' operand, … ')' | agg,
+  *                    | fn '(' operand, … ')' | agg | win,
   *                    agg := f '(' * | [DISTINCT] operand, … ')'
   *                    [FILTER '(' WHERE pred ')'] — an aggregate is an
   *                    operand like any other: `CASE WHEN COUNT(*) > 1 …`,
-  *                    `k || CAST(SUM(x) AS VARCHAR)`, SUM(a) / COUNT(*)
-  *   (ROW_NUMBER|RANK|DENSE_RANK) '()' OVER '(' [PARTITION BY col …]
-  *     ORDER BY col [ASC|DESC] … ')' AS a   (ranking windows; ORDER BY
-  *     and the alias are mandatory. The rank computes over the FROM/JOIN
-  *     relation and WHERE then filters it — i.e. WHERE acts on window
-  *     aliases like DuckDB's QUALIFY, making `WHERE rn <= k` the
-  *     top-k-per-group idiom)
-  *   agg '(' (*|col) ')' OVER '(' … ')' AS a   (window aggregates —
-  *     running totals; ordered, so the ANSI default RANGE frame applies)
+  *                    `k || CAST(SUM(x) AS VARCHAR)`, SUM(a) / COUNT(*);
+  *                    win := (agg | wf '(' [operand, …] [IGNORE NULLS]
+  *                    ')') OVER ('(' spec ')' | n), wf := ROW_NUMBER |
+  *                    RANK | DENSE_RANK | PERCENT_RANK | CUME_DIST |
+  *                    NTILE | FIRST_VALUE | LAST_VALUE | NTH_VALUE | LAG
+  *                    | LEAD, spec := [PARTITION BY col, …] [ORDER BY col
+  *                    [ASC|DESC], …] [ROWS|RANGE BETWEEN lo AND hi] — a
+  *                    window is an operand too (`x - LAG(x) OVER (…)`,
+  *                    `n * 1.0 / SUM(n) OVER ()`), valid in the select
+  *                    items of a SELECT without aggregates. It computes
+  *                    over the FROM/JOIN relation and the WHERE conjuncts
+  *                    that do not name a window item; the ones that do
+  *                    filter after it, like DuckDB's QUALIFY, making
+  *                    `WHERE rn <= k` the top-k-per-group idiom. ORDER BY
+  *                    is mandatory except for SUM/COUNT/AVG/MIN/MAX;
+  *                    window aggregates read plain columns
   *     [GROUP BY [ROLLUP(|CUBE(]col [, …][)]] [HAVING pred]
-  *     [WINDOW n AS '(' spec ')' [, …]]   (named specs; items say OVER n)
+  *     [WINDOW n AS '(' spec ')' [, …]]   (named specs; windows say OVER n)
   *     [ORDER BY col [ASC|DESC] [, …]] [LIMIT n] [OFFSET m]
   *     (OFFSET requires ORDER BY — unordered pagination is
   *     nondeterministic and refused)
@@ -84,7 +91,8 @@ import graft.sources.SchemaMapper
   *     [LIMIT n]) [AS] l   (correlated per-row subquery; top-n per key)
   *   CREATE [OR REPLACE] VIEW v AS select-chain   (lazy, re-lowered)
   *   DROP TABLE|VIEW [IF EXISTS] name   (kind-checked)
-  *   … frame … EXCLUDE CURRENT ROW   (leave-one-out SUM/COUNT/AVG)
+  *   … BETWEEN lo AND hi EXCLUDE CURRENT ROW   (leave-one-out window
+  *     SUM/COUNT/AVG)
   *   PIVOT tbl ON col IN ('v', …) USING agg(x|*) GROUP BY g [, …]
   *   UNPIVOT tbl ON c1 [, …] INTO NAME n VALUE v   (NULL cells excluded)
   *   ARRAY_AGG(col ORDER BY col [ASC|DESC])   (ordered list aggregation)
@@ -246,38 +254,18 @@ object EmdriveSql {
   final case class StarPattern(re: String) extends SelectItem
   final case class ColItem(name: String, alias: Option[String]) extends SelectItem
   /** Every computed select item: `price * (1 - disc) AS net`, `hash @
-    * probe AS dist`, `CASE … END AS bucket`, `SUM(a) / COUNT(*) AS r`.
-    * An item without an aggregate attaches before WHERE, so predicates
-    * (the README's `WHERE dist < 4`) and GROUP BY can name its alias. An
-    * item with an aggregate makes the SELECT aggregating and lowers as one
-    * Column inside the aggregation. A bare aggregate may omit the alias:
-    * the parser names it `count`, `<func>_<col>` or
-    * `<func>_distinct_<col>`; every other computed item must be named. */
+    * probe AS dist`, `CASE … END AS bucket`, `SUM(a) / COUNT(*) AS r`,
+    * `x - LAG(x) OVER (ORDER BY t) AS d`. An item without an aggregate or
+    * a window attaches before WHERE, so predicates (the README's `WHERE
+    * dist < 4`) and GROUP BY can name its alias. An item with an
+    * aggregate makes the SELECT aggregating and lowers as one Column
+    * inside the aggregation. An item with a window attaches after the
+    * WHERE conjuncts that do not name a window item, and the ones that do
+    * filter its result (the QUALIFY idiom, `WHERE rn <= k`). A bare
+    * aggregate may omit the alias: the parser names it `count`,
+    * `<func>_<col>` or `<func>_distinct_<col>`; every other computed item
+    * must be named. */
   final case class ExprItem(op: Operand, alias: String) extends SelectItem
-  /** A window function `f(…) OVER (PARTITION BY … ORDER BY … [frame]) AS
-    * a` (graft extension), attached pre-WHERE, so `WHERE rn <= k` is the
-    * top-k-per-group idiom (Catalyst prunes map-side with
-    * WindowGroupLimit before the rank shuffle). An aggregate window
-    * carries its call in `agg` (FILTER included); a plain SUM/COUNT/AVG/
-    * MIN/MAX window may omit ORDER BY (the whole partition is its frame).
-    * A ranking or navigation function has `agg` empty and its argument
-    * encoded in `arg` ("col:off!ignore" for LAG/LEAD, the bucket count
-    * for NTILE), and requires ORDER BY. The alias is mandatory.
-    *
-    * frame: None = ANSI default (RANGE unbounded→current);
-    * Some((kind, lo, hi)) = explicit frame — lo None = UNBOUNDED
-    * PRECEDING, Some(n) = n PRECEDING; hi None = UNBOUNDED FOLLOWING,
-    * Some(n) = n FOLLOWING; 0 = CURRENT ROW on either bound. */
-  final case class WinItem(func: String, arg: Option[String],
-      partitionBy: Seq[String], orderBy: Seq[OrderKey],
-      alias: String,
-      frame: Option[(String, Option[Long], Option[Long])] = None,
-      agg: Option[OAgg] = None) extends SelectItem
-  /** `fn() OVER w AS a` — a window item referencing a named WINDOW-clause
-    * spec; parseSelect substitutes the named spec in (a [[WinItem]]
-    * results), so nothing downstream ever sees this node. */
-  final case class WinRefItem(func: String, arg: Option[String],
-      winName: String, alias: String, agg: Option[OAgg] = None) extends SelectItem
 
   /** A sort key: an output name / "#n" ordinal (the common case), or —
     * top-level SELECT only — an arbitrary scalar EXPRESSION carried in
@@ -347,6 +335,34 @@ object EmdriveSql {
     * searched form at parse. */
   final case class OCase(branches: Seq[(Pred, Operand)],
       elseV: Option[Operand]) extends Operand
+  /** A window call `f(…) OVER (spec)` or `f(…) OVER name`, an operand
+    * like any other (`x - LAG(x) OVER (…)`, `n / SUM(n) OVER ()`), valid
+    * in the select items of a SELECT without aggregates. `call` is an
+    * [[OAgg]] for a window aggregate (plain column arguments, FILTER
+    * allowed) or an [[OFunc]] for a ranking/navigation function
+    * (ROW_NUMBER … NTH_VALUE, LAG/LEAD) whose arguments are operands;
+    * `ignoreNulls` is FIRST/LAST_VALUE's and LAG/LEAD's IGNORE NULLS.
+    * `ref` names a WINDOW-clause spec until parseSelect substitutes it
+    * into `spec`. */
+  final case class OWin(call: Operand, spec: WinSpec,
+      ignoreNulls: Boolean = false, ref: Option[String] = None) extends Operand {
+    def func: String = call match {
+      case a: OAgg => a.func
+      case f: OFunc => f.name
+      case other => throw new IllegalStateException(other.toString)
+    }
+  }
+  /** `[PARTITION BY …] [ORDER BY …] [frame]`. A SUM/COUNT/AVG/MIN/MAX
+    * window may omit ORDER BY (the whole partition is its frame); every
+    * other window function requires it. No frame = the ANSI default
+    * (RANGE unbounded preceding → current row). */
+  final case class WinSpec(partitionBy: Seq[String], orderBy: Seq[OrderKey],
+      frame: Option[Frame] = None)
+  /** `ROWS|RANGE BETWEEN lo AND hi [EXCLUDE CURRENT ROW]`: a bound of
+    * None is UNBOUNDED, Some(n) is n PRECEDING (lo) or n FOLLOWING (hi),
+    * 0 is CURRENT ROW. `days` marks RANGE `INTERVAL n DAY` bounds. */
+  final case class Frame(rows: Boolean, lo: Option[Long], hi: Option[Long],
+      days: Boolean = false, excludeCurrent: Boolean = false)
   final case class Cmp(lhs: Operand, op: String, rhs: Operand)
 
   /** Boolean predicate tree (graft extension — the reference grammar is an
@@ -793,8 +809,12 @@ object EmdriveSql {
     // r16 math tier 5 + prefix/suffix predicates
     "LOG10", "LOG2", "CBRT", "SIN", "COS", "TAN", "ATAN2",
     "RADIANS", "DEGREES", "STARTS_WITH", "ENDS_WITH")
-  private val WinFuncs =
+  /** Ranking functions: no argument, no frame. */
+  private val RankFuncs =
     Set("ROW_NUMBER", "RANK", "DENSE_RANK", "PERCENT_RANK", "CUME_DIST")
+  /** The calls that exist only with OVER: ranking and navigation. */
+  private val WinFuncs = RankFuncs ++
+    Set("NTILE", "NTH_VALUE", "FIRST_VALUE", "LAST_VALUE", "LAG", "LEAD")
 
   /** SELECT … [UNION [ALL] SELECT …]* — the shared select-chain shape used
     * at top level, inside EXPLAIN, and as every CTE body. A single SELECT
@@ -1508,10 +1528,9 @@ object EmdriveSql {
     val having = mutable.ListBuffer.empty[Pred]
     if (p.tryWord("HAVING")) having += parsePred(p)
     // WINDOW n AS (spec) [, n2 AS (spec)] — named window specs (ANSI
-    // position: after HAVING, before ORDER BY); `OVER n` items parsed
-    // above resolve here. Unknown names fail loudly.
-    val winSpecs = mutable.Map.empty[String,
-      (Seq[String], Seq[OrderKey], Option[(String, Option[Long], Option[Long])])]
+    // position: after HAVING, before ORDER BY); the `OVER n` windows of
+    // the items resolve here. Unknown names fail loudly.
+    val winSpecs = mutable.Map.empty[String, WinSpec]
     if (p.tryWord("WINDOW")) {
       def one(): Unit = {
         val n = p.ident(); p.eatWord("AS"); winSpecs(n) = parseWindowSpec(p)
@@ -1519,13 +1538,10 @@ object EmdriveSql {
       one()
       while (p.trySym(",")) one()
     }
+    def resolve(w: OWin): OWin = checkWindow(w.ref.fold(w)(n => w.copy(ref = None,
+      spec = winSpecs.getOrElse(n, p.fail(s"OVER $n references no WINDOW clause spec")))))
     val resolvedItems: Seq[SelectItem] = items.toSeq.map {
-      case WinRefItem(f, a, w, alias, agg) =>
-        val (parts, keys, frame) = winSpecs.getOrElse(w,
-          p.fail(s"OVER $w references no WINDOW clause spec"))
-        checkFrame(f, frame, p)
-        checkUnordered(f, keys, p)
-        WinItem(f, a, parts, keys, alias, frame, agg)
+      case ExprItem(o, alias) => ExprItem(mapOperand(o) { case w: OWin => resolve(w) }, alias)
       case other => other
     }
     val qualify = mutable.ListBuffer.empty[Pred]
@@ -1622,61 +1638,6 @@ object EmdriveSql {
   }
 
   private def parseItem(p: P): SelectItem = p.toks match {
-    case TWord(f) :: TSym("(") :: TSym(")") :: _ if WinFuncs(f.toUpperCase) =>
-      p.toks = p.toks.tail.tail.tail
-      parseOverClause(p, f.toUpperCase, None)
-    // NTILE(n) — the bucket count rides in the WinItem's arg slot
-    case TWord(f) :: TSym("(") :: TNum(n) :: TSym(")") :: rest
-        if f.equalsIgnoreCase("NTILE") && !n.contains('.') =>
-      p.toks = rest
-      parseOverClause(p, "NTILE", Some(n))
-    // FIRST_VALUE/LAST_VALUE(col [IGNORE NULLS]) — ANSI navigation over
-    // the window frame (LAST_VALUE under the default RANGE frame is the
-    // current row, exactly ANSI — pair it with a ROWS frame for the
-    // usual idiom). IGNORE NULLS (r13) is THE gap-fill idiom
-    // (`LAST_VALUE(x IGNORE NULLS)` = last observation carried forward);
-    // it rides the arg slot as a "!ignore" suffix.
-    case TWord(f) :: TSym("(") :: _
-        if f.equalsIgnoreCase("FIRST_VALUE") || f.equalsIgnoreCase("LAST_VALUE") =>
-      p.toks = p.toks.tail.tail
-      val c = p.ident()
-      val ign =
-        if (p.tryWord("IGNORE")) { p.eatWord("NULLS"); "!ignore" } else ""
-      p.eatSym(")")
-      parseOverClause(p, f.toUpperCase, Some(c + ign))
-    // NTH_VALUE(col, n) (r14) — the n-th value of the window frame
-    // (1-based; NULL while the frame holds fewer than n rows — ANSI,
-    // DuckDB-identical); rides the arg slot as "col:n" like LAG
-    case TWord(f) :: TSym("(") :: _ if f.equalsIgnoreCase("NTH_VALUE") =>
-      p.toks = p.toks.tail.tail
-      val c = p.ident()
-      p.eatSym(",")
-      val nth = p.toks match {
-        case TNum(n) :: rest if !n.contains('.') && n.toInt >= 1 =>
-          p.toks = rest; n
-        case _ => p.fail("positive integer NTH_VALUE position")
-      }
-      p.eatSym(")")
-      parseOverClause(p, "NTH_VALUE", Some(s"$c:$nth"))
-    // LAG/LEAD(col [, offset] [IGNORE NULLS]) — column and offset ride
-    // the arg slot as "col:offset" (offset defaults to 1, ANSI). IGNORE
-    // NULLS (r17) skips null rows when counting the offset — the n-th
-    // previous NON-NULL value, the LOCF/gap-fill spelling on lag (Spark's
-    // ignoreNulls flag, DuckDB-identical); rides as a "!ignore" suffix
-    // like FIRST/LAST_VALUE.
-    case TWord(f) :: TSym("(") :: _
-        if f.equalsIgnoreCase("LAG") || f.equalsIgnoreCase("LEAD") =>
-      p.toks = p.toks.tail.tail
-      val c = p.ident()
-      val off =
-        if (p.trySym(",")) p.toks match {
-          case TNum(n) :: rest if !n.contains('.') => p.toks = rest; n
-          case _ => p.fail("integer LAG/LEAD offset")
-        } else "1"
-      val ign =
-        if (p.tryWord("IGNORE")) { p.eatWord("NULLS"); "!ignore" } else ""
-      p.eatSym(")")
-      parseOverClause(p, f.toUpperCase, Some(s"$c:$off$ign"))
     case TWord(w) :: TSym("(") :: _ if w.equalsIgnoreCase("COLUMNS") =>
       p.toks = p.toks.tail.tail
       val re = p.value() match {
@@ -1716,17 +1677,6 @@ object EmdriveSql {
         else if (name.contains('.'))
           ColItem(name, Some(name.substring(name.indexOf('.') + 1)))
         else ColItem(name, None)
-      // a bare aggregate call followed by OVER is a window aggregate
-      case a: OAgg if p.peekWord("OVER") =>
-        require(!a.distinct,
-          "DISTINCT aggregates OVER a window are not supported")
-        require(a.filter.isEmpty || UnorderedWinAggs(a.func),
-          s"FILTER over a window supports plain SUM/AVG/MIN/MAX/COUNT, not ${a.func}")
-        require(a.args.forall(_.isInstanceOf[ORef]),
-          "window aggregates take a plain column argument — compute " +
-            "the expression in a derived table first")
-        p.eatWord("OVER")
-        parseOverClause(p, a.func, None, overEaten = true, agg = Some(a))
       // a bare aggregate over `*` or a column may omit its alias
       case a @ OAgg(f, args, distinct, fil, _) if !p.peekWord("AS")
           && args.headOption.forall(_.isInstanceOf[ORef]) =>
@@ -1764,44 +1714,51 @@ object EmdriveSql {
     (branches.toSeq, elseV)
   }
 
-  /** Shared OVER-clause parse for ranking and aggregate window items. */
-  private def parseOverClause(p: P, func: String, arg: Option[String],
-      overEaten: Boolean = false, agg: Option[OAgg] = None): SelectItem = {
-    if (!overEaten) p.eatWord("OVER")
+  /** The `OVER (spec) | OVER name` postfix of a window call. A window
+    * aggregate reads plain columns, without DISTINCT; FILTER is for
+    * SUM/COUNT/AVG/MIN/MAX over an inline spec. */
+  private def parseOver(p: P, call: Operand, ignoreNulls: Boolean = false): OWin = {
+    p.eatWord("OVER")
+    val filtered = call match {
+      case a: OAgg =>
+        require(!a.distinct, "DISTINCT aggregates OVER a window are not supported")
+        require(a.filter.isEmpty || UnorderedWinAggs(a.func),
+          s"FILTER over a window supports plain SUM/AVG/MIN/MAX/COUNT, not ${a.func}")
+        require(a.args.forall(_.isInstanceOf[ORef]),
+          "window aggregates take a plain column argument — compute " +
+            "the expression in a derived table first")
+        a.filter.nonEmpty
+      case _ => false
+    }
     // `OVER w` — reference into the statement's WINDOW clause, resolved
     // by parseSelect once the named specs have been read (ANSI order
     // puts WINDOW after HAVING, so the spec text is still ahead of us)
     p.toks match {
-      case TWord(w) :: rest if !w.equalsIgnoreCase("AS")
-          && !Keywords.contains(w.toUpperCase) =>
-        require(agg.forall(_.filter.isEmpty),
+      case TWord(w) :: rest if !Keywords.contains(w.toUpperCase) =>
+        require(!filtered,
           "FILTER is not supported with a named WINDOW reference; " +
             "spell the spec inline")
         p.toks = rest
-        p.eatWord("AS")
-        return WinRefItem(func, arg, w, p.ident(), agg)
-      case _ => ()
+        OWin(call, WinSpec(Nil, Nil), ignoreNulls, Some(w))
+      case _ => OWin(call, parseWindowSpec(p), ignoreNulls)
     }
-    val (parts, keys, frame) = parseWindowSpec(p)
-    checkFrame(func, frame, p)
-    checkUnordered(func, keys, p)
-    p.eatWord("AS")
-    WinItem(func, arg, parts, keys, p.ident(), frame, agg)
   }
 
-  /** A frame clause is only legal on frame-taking functions — shared by
-    * the inline OVER path and named-WINDOW substitution. */
-  private def checkFrame(func: String,
-      frame: Option[(String, Option[Long], Option[Long])], p: P): Unit =
-    require(frame.isEmpty
-        || !(WinFuncs(func) || Set("NTILE", "LAG", "LEAD")(func)),
-      s"$func does not take a frame clause")
+  /** A window whose spec is known: a frame clause only on frame-taking
+    * functions, and ORDER BY on all but the plain aggregates. */
+  private def checkWindow(w: OWin): OWin = {
+    require(w.spec.frame.isEmpty ||
+        !(RankFuncs(w.func) || Set("NTILE", "LAG", "LEAD")(w.func)),
+      s"${w.func} does not take a frame clause")
+    require(w.spec.orderBy.nonEmpty || UnorderedWinAggs(w.func),
+      s"${w.func} requires ORDER BY in its OVER clause " +
+        "(only SUM/COUNT/AVG/MIN/MAX may omit it)")
+    w
+  }
 
   /** `( [PARTITION BY …] ORDER BY … [ROWS BETWEEN …] )` — the window
     * specification body, shared by inline OVER and the WINDOW clause. */
-  private def parseWindowSpec(
-      p: P): (Seq[String], Seq[OrderKey],
-      Option[(String, Option[Long], Option[Long])]) = {
+  private def parseWindowSpec(p: P): WinSpec = {
     p.eatSym("(")
     val parts = if (p.tryWord("PARTITION")) {
       p.eatWord("BY")
@@ -1814,7 +1771,7 @@ object EmdriveSql {
     // ORDER BY) but OPTIONAL for plain aggregate windows (r15): SUM(x)
     // OVER () / OVER (PARTITION BY k) — the share-of-total idiom — is
     // deterministic by construction (whole-partition frame, no order to
-    // depend on). parseOverClause enforces per-function.
+    // depend on). checkWindow enforces per-function.
     val keys = mutable.ListBuffer.empty[OrderKey]
     if (p.tryWord("ORDER")) {
       p.eatWord("BY")
@@ -1833,87 +1790,67 @@ object EmdriveSql {
     // PRECEDING AND CURRENT ROW` — the rolling-window-by-VALUE idiom,
     // requiring a single numeric ORDER BY key, which Catalyst enforces);
     // the ANSI default RANGE frame stays when absent
-    val frame: Option[(String, Option[Long], Option[Long])] =
+    val frame: Option[Frame] =
       if (p.peekWord("ROWS") || p.peekWord("RANGE")) {
-        var kind = if (p.tryWord("ROWS")) "rows" else { p.eatWord("RANGE"); "range" }
+        val rows = p.tryWord("ROWS") || { p.eatWord("RANGE"); false }
         p.eatWord("BETWEEN")
         // `INTERVAL n DAY[S]` bound (r14): the trailing-calendar-window
         // idiom (RANGE BETWEEN INTERVAL 7 DAY PRECEDING AND CURRENT
         // ROW). Day granularity only — the lowering re-keys the RANGE
         // frame onto exact day numbers, which requires a DATE order key.
-        def intervalDays(): Long = {
-          val n = p.toks match {
-            case TNum(s) :: rest if !s.contains('.') => p.toks = rest; s.toLong
-            case _ => p.fail("integer after INTERVAL")
-          }
-          p.toks match {
-            case TWord(u) :: rest
-                if u.equalsIgnoreCase("DAY") || u.equalsIgnoreCase("DAYS") =>
-              p.toks = rest
-            case other => p.fail(s"DAY[S] interval unit in a frame bound, got $other")
-          }
-          require(kind == "range", "INTERVAL frame bounds require RANGE")
-          kind = "range_days"
-          n
-        }
-        val lo: Option[Long] =
-          if (p.tryWord("UNBOUNDED")) { p.eatWord("PRECEDING"); None }
+        var days = false
+        def bound(dir: String): Option[Long] =
+          if (p.tryWord("UNBOUNDED")) { p.eatWord(dir); None }
           else if (p.tryWord("CURRENT")) { p.eatWord("ROW"); Some(0L) }
-          else if (p.tryWord("INTERVAL")) {
-            val n = intervalDays(); p.eatWord("PRECEDING"); Some(n)
+          else {
+            val interval = p.tryWord("INTERVAL")
+            val n = p.toks match {
+              case TNum(s) :: rest if !s.contains('.') => p.toks = rest; s.toLong
+              case _ => p.fail(s"UNBOUNDED/CURRENT ROW/integer $dir")
+            }
+            if (interval) {
+              p.toks match {
+                case TWord(u) :: rest
+                    if u.equalsIgnoreCase("DAY") || u.equalsIgnoreCase("DAYS") =>
+                  p.toks = rest
+                case other => p.fail(s"DAY[S] interval unit in a frame bound, got $other")
+              }
+              require(!rows, "INTERVAL frame bounds require RANGE")
+              days = true
+            }
+            p.eatWord(dir)
+            Some(n)
           }
-          else p.toks match {
-            case TNum(n) :: rest if !n.contains('.') =>
-              p.toks = rest; p.eatWord("PRECEDING"); Some(n.toLong)
-            case _ => p.fail("UNBOUNDED/CURRENT ROW/integer PRECEDING")
-          }
+        val lo = bound("PRECEDING")
         p.eatWord("AND")
-        val hi: Option[Long] =
-          if (p.tryWord("CURRENT")) { p.eatWord("ROW"); Some(0L) }
-          else if (p.tryWord("UNBOUNDED")) { p.eatWord("FOLLOWING"); None }
-          else if (p.tryWord("INTERVAL")) {
-            val n = intervalDays(); p.eatWord("FOLLOWING"); Some(n)
-          }
-          else p.toks match {
-            case TNum(n) :: rest if !n.contains('.') =>
-              p.toks = rest; p.eatWord("FOLLOWING"); Some(n.toLong)
-            case _ => p.fail("CURRENT ROW/UNBOUNDED/integer FOLLOWING")
-          }
+        val hi = bound("FOLLOWING")
         // EXCLUDE CURRENT ROW (r14): the leave-one-out frame (peer
-        // statistics — compare each row to its OWN group sans itself).
-        // Rides the frame kind as a suffix; lowering rewrites SUM/COUNT/
-        // AVG arithmetically (full-frame aggregate minus the row's own
-        // contribution), other functions are refused loudly.
-        if (p.tryWord("EXCLUDE")) {
-          p.eatWord("CURRENT"); p.eatWord("ROW")
-          kind += "_xcur"
-        }
-        Some((kind, lo, hi))
+        // statistics — compare each row to its OWN group sans itself);
+        // lowering rewrites SUM/COUNT/AVG arithmetically (full-frame
+        // aggregate minus the row's own contribution), other functions
+        // are refused loudly.
+        val xcur = p.tryWord("EXCLUDE") && { p.eatWord("CURRENT"); p.eatWord("ROW"); true }
+        Some(Frame(rows, lo, hi, days, xcur))
       } else None
     p.eatSym(")")
     // a frame clause positions rows relative to an order — meaningless
     // (and nondeterministic) without one
     require(keys.nonEmpty || frame.isEmpty,
       "a window frame clause requires ORDER BY")
-    (parts, keys.toSeq, frame)
+    WinSpec(parts, keys.toSeq, frame)
   }
 
   /** Aggregates that accept a frame-free (no ORDER BY) window — the
     * share-of-total / percent-of-group idiom. Deterministic by
     * construction: the implicit frame is the whole partition, so no row
     * order can change the value. Rank/navigation functions stay
-    * order-mandatory (checked in [[checkUnordered]]). */
+    * order-mandatory (checked in [[checkWindow]]). */
   private val UnorderedWinAggs = Set("SUM", "COUNT", "AVG", "MIN", "MAX")
-
-  private def checkUnordered(func: String, keys: Seq[OrderKey], p: P): Unit =
-    require(keys.nonEmpty || UnorderedWinAggs(func),
-      s"$func requires ORDER BY in its OVER clause " +
-        "(only SUM/COUNT/AVG/MIN/MAX may omit it)")
 
   /** `o` with every operand that `f` is defined at replaced (outermost
     * match wins; elsewhere the walk descends, into CASE predicates and
     * aggregate arguments too). Subquery bodies are not entered: their
-    * names live in their own scope. */
+    * names live in their own scope; nor are windows, which lower apart. */
   private[sql] def mapOperand(o: Operand)(f: PartialFunction[Operand, Operand]): Operand =
     f.applyOrElse(o, (x: Operand) => x match {
       case OArith(l, oper, r) => OArith(mapOperand(l)(f), oper, mapOperand(r)(f))
@@ -1947,12 +1884,20 @@ object EmdriveSql {
     walk(p)
   }
 
-  /** The aggregate calls of `o` outside subqueries, outermost only. */
-  private[sql] def aggsOf(o: Operand): Seq[OAgg] = {
-    val found = mutable.ListBuffer.empty[OAgg]
-    mapOperand(o) { case a: OAgg => found += a; a }
+  /** The operands of `o` that `pick` is defined at, as [[mapOperand]]
+    * walks: outside subqueries and windows, outermost only. */
+  private def collect[T <: Operand](o: Operand)(pick: PartialFunction[Operand, T]): Seq[T] = {
+    val found = mutable.ListBuffer.empty[T]
+    mapOperand(o)(pick.andThen { t => found += t; t })
     found.toSeq
   }
+
+  /** The aggregate calls of `o` (a window aggregate never makes its
+    * SELECT aggregating). */
+  private[sql] def aggsOf(o: Operand): Seq[OAgg] = collect(o) { case a: OAgg => a }
+
+  /** The window calls of `o`. */
+  private[sql] def winsOf(o: Operand): Seq[OWin] = collect(o) { case w: OWin => w }
 
   /** An aggregate call's optional ANSI `FILTER (WHERE …)` tail (r13):
     * the aggregate folds only the qualifying rows. */
@@ -2025,9 +1970,13 @@ object EmdriveSql {
     * Postgres cast spelling users write first; binds tighter than any
     * arithmetic (including unary minus, whose recursion routes through
     * here: `-x::INT` is `-(x::INT)`, both engines). Same OCast lowering
-    * as `CAST(x AS T)`. */
+    * as `CAST(x AS T)`. An aggregate call followed by OVER is a window
+    * (`SUM(x) OVER (…)::INT` casts the window). */
   private def parseAtom(p: P): Operand = {
-    var a = parseAtomBase(p)
+    var a = parseAtomBase(p) match {
+      case agg: OAgg if p.peekWord("OVER") => parseOver(p, agg)
+      case other => other
+    }
     while (p.trySym("::")) a = OCast(a, parseTypeName(p))
     a
   }
@@ -2141,6 +2090,21 @@ object EmdriveSql {
         case Some(c) => OFunc(base + "_CHARS", Seq(x, OVal(VStr(c))))
         case None => OFunc(base, Seq(x))
       }
+    // a ranking/navigation call: `f(operand, … [IGNORE NULLS]) OVER …`.
+    // IGNORE NULLS (FIRST/LAST_VALUE, LAG/LEAD) skips NULL rows — the
+    // LOCF gap-fill idiom (`LAST_VALUE(x IGNORE NULLS)`), DuckDB-identical
+    case TWord(f) :: TSym("(") :: _ if WinFuncs(f.toUpperCase) =>
+      p.toks = p.toks.tail.tail
+      val args = mutable.ListBuffer.empty[Operand]
+      if (!p.peekSym(")")) {
+        args += parseOperand(p)
+        while (p.trySym(",")) args += parseOperand(p)
+      }
+      val ign = p.tryWord("IGNORE") && { p.eatWord("NULLS"); true }
+      require(!ign || Set("FIRST_VALUE", "LAST_VALUE", "LAG", "LEAD")(f.toUpperCase),
+        s"IGNORE NULLS does not apply to $f")
+      p.eatSym(")")
+      parseOver(p, OFunc(f.toUpperCase, args.toSeq), ign)
     case TWord(f) :: TSym("(") :: _ if StrFuncs(f.toUpperCase) =>
       p.toks = p.toks.tail.tail
       val args = mutable.ListBuffer(parseOperand(p))

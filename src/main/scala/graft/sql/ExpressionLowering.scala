@@ -416,11 +416,140 @@ private[sql] trait ExpressionLowering { self: Lowering =>
     case a: OAgg if aggregating => rowLevel.aggCol(base, a)
     case a: OAgg => throw new IllegalArgumentException(
       s"aggregate ${a.func} is only valid in an aggregating SELECT's items, HAVING or ORDER BY")
+    case w: OWin if windowing => rowLevel.winCol(base, w)
+    case w: OWin => throw new IllegalArgumentException(
+      s"window function ${w.func} is only valid in the select items of a " +
+        "SELECT without aggregates (not in WHERE, GROUP BY, HAVING, ORDER BY " +
+        "or an aggregate or window argument)")
   }
 
-  /** This lowering with aggregates refused again: an aggregate's own
-    * arguments and every subquery lower through it. */
-  private def rowLevel: Lowering = if (aggregating) within(scope) else self
+  /** This lowering with aggregates and windows refused again: an
+    * aggregate's or a window's own arguments and every subquery lower
+    * through it. */
+  private def rowLevel: Lowering = if (aggregating || windowing) within(scope) else self
+
+  /** A window call over the rows of `base`: partition and order keys read
+    * columns by name, the call's arguments lower as row-level operands.
+    * A window aggregate folds its frame through [[aggCol]], FILTER
+    * included; ordered, the ANSI default frame (RANGE unbounded preceding
+    * → current row) applies, as in DuckDB. */
+  private[sql] def winCol(base: DataFrame, w: OWin): Column = {
+    import org.apache.spark.sql.expressions.Window
+    val WinSpec(parts, keys, frame) = w.spec
+    val f = w.func
+    // a global window (no PARTITION BY) single-tasks the whole relation —
+    // fine over a dimension/grid, a scale-killer over a fact. The dialect
+    // can't see cardinality, so it WARNS (the engine's own WindowExec
+    // warning fires too).
+    if (parts.isEmpty)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"window $f has no PARTITION BY: the whole relation sorts in one " +
+          "task — acceptable for dimension-sized inputs only")
+    // no ORDER BY → no sort at all, and Spark's default frame is the
+    // WHOLE partition — the share-of-total idiom (n / SUM(n) OVER ())
+    val partitioned = Window.partitionBy(parts.map(qref): _*)
+    val ordered =
+      if (keys.isEmpty) partitioned
+      else partitioned.orderBy(keys.map(k =>
+        if (k.desc) qref(k.name).desc else qref(k.name).asc): _*)
+    val spec = frame.fold(ordered) { fr =>
+      val lo = fr.lo.fold(Window.unboundedPreceding)(n => -n)
+      val hi = fr.hi.fold(Window.unboundedFollowing)(n => n)
+      if (fr.rows) ordered.rowsBetween(lo, hi)
+      else if (!fr.days) ordered.rangeBetween(lo, hi)
+      else {
+        // INTERVAL n DAY bounds (r14): re-key the RANGE frame onto exact
+        // day numbers — datediff from the epoch is order- and
+        // tie-equivalent to the DATE key itself, so `INTERVAL 7 DAY
+        // PRECEDING` is precisely a 7-day value frame (DuckDB semantics at
+        // day granularity). DATE keys only; a timestamp would silently
+        // bucket to days, so it is refused.
+        require(keys.length == 1 && !keys.head.desc,
+          "an INTERVAL frame takes exactly one ascending ORDER BY key")
+        val k = keys.head.name
+        val kc = qref(k)
+        val dayNum = datediff(to_date(kc), to_date(lit("1970-01-01")))
+        val keyExpr = base.schema.find(_.name == k).map(_.dataType) match {
+          case Some(DateType) => dayNum
+          // timestamp keys are accepted ONLY when every value is
+          // midnight-aligned (a date stored as a timestamp, the common
+          // parquet shape) — checked per row at scan speed; an intra-day
+          // time would make day-keyed RANGE silently diverge from exact
+          // interval arithmetic, so it raises
+          case Some(t @ (TimestampType | TimestampNTZType)) =>
+            when(kc =!= to_date(kc).cast(t),
+              raise_error(concat(lit(s"INTERVAL frame key $k has a "),
+                lit("non-midnight timestamp; day-granularity RANGE "),
+                lit("requires date-valued keys"))))
+              .otherwise(dayNum)
+          case other => throw new IllegalArgumentException(
+            s"INTERVAL frame ORDER BY key $k must be DATE-valued, got $other")
+        }
+        partitioned.orderBy(keyExpr).rangeBetween(lo, hi)
+      }
+    }
+    val fn = w.call match {
+      case a: OAgg =>
+        require(a.filter.isEmpty || !frame.exists(_.excludeCurrent),
+          "FILTER cannot combine with EXCLUDE CURRENT ROW")
+        aggCol(base, a)
+      case OFunc(_, args) =>
+        def in(i: Int): Column = operandCol(base, args(i))
+        (f, args.length) match {
+          case ("ROW_NUMBER", 0) => row_number()
+          case ("RANK", 0) => rank()
+          case ("DENSE_RANK", 0) => dense_rank()
+          // (rank−1)/(rows−1) and rows-with-peers-or-before / rows: ratios
+          // of exact integers, identically defined in DuckDB — bitwise
+          // cross-engine
+          case ("PERCENT_RANK", 0) => percent_rank()
+          case ("CUME_DIST", 0) => cume_dist()
+          case ("NTILE", 1) => ntile(argInt(args(0), "NTILE bucket count"))
+          // the n-th value of the frame, 1-based; NULL while the frame
+          // holds fewer than n rows (ANSI, DuckDB-identical)
+          case ("NTH_VALUE", 2) =>
+            val n = argInt(args(1), "NTH_VALUE position")
+            require(n >= 1, s"NTH_VALUE position must be positive, got $n")
+            nth_value(in(0), n)
+          // offset defaults to 1 (ANSI); out-of-partition rows are NULL
+          case ("LAG" | "LEAD", 1 | 2) =>
+            val off = if (args.length == 1) 1 else argInt(args(1), s"$f offset")
+            if (f == "LAG") lag(in(0), off, null, w.ignoreNulls)
+            else lead(in(0), off, null, w.ignoreNulls)
+          case ("FIRST_VALUE", 1) => first(in(0), w.ignoreNulls)
+          case ("LAST_VALUE", 1) => last(in(0), w.ignoreNulls)
+          case _ => throw new IllegalArgumentException(
+            s"wrong argument count for $f: got ${args.length}")
+        }
+      case other => throw new IllegalStateException(other.toString)
+    }
+    val xs = w.call match {
+      case a: OAgg => a.args.map(operandCol(base, _))
+      case _ => Nil
+    }
+    // EXCLUDE CURRENT ROW (r14): Spark has no native frame exclusion, so
+    // the aggregate over the FULL frame is rewritten arithmetically (full
+    // frame minus the row's own contribution). NULL edges follow the
+    // engines' shared semantics: SUM/AVG over a reduced frame with no
+    // non-null values is NULL (not 0); COUNT is 0.
+    if (!frame.exists(_.excludeCurrent)) fn.over(spec)
+    else (f, xs) match {
+      case ("SUM", Seq(x)) =>
+        val nX = count(x).over(spec) - when(x.isNotNull, lit(1L)).otherwise(lit(0L))
+        when(nX === 0, lit(null)).otherwise(sum(x).over(spec) - coalesce(x, lit(0)))
+      case ("COUNT", Seq()) => count(lit(1)).over(spec) - lit(1L)
+      case ("COUNT", Seq(x)) =>
+        count(x).over(spec) - when(x.isNotNull, lit(1L)).otherwise(lit(0L))
+      case ("AVG", Seq(x)) =>
+        val nX = count(x).over(spec) - when(x.isNotNull, lit(1L)).otherwise(lit(0L))
+        val sX = sum(x).over(spec) - coalesce(x, lit(0))
+        // exact-integer dividend/divisor → ONE IEEE division, bitwise
+        // cross-engine for integral columns
+        when(nX === 0, lit(null)).otherwise(sX.cast("double") / nX)
+      case (other, _) => throw new IllegalArgumentException(
+        s"EXCLUDE CURRENT ROW supports SUM/COUNT/AVG, not $other")
+    }
+  }
 
   /** Scalar-function dispatch over already-lowered argument Columns;
     * `args` rides along for literal-only parameters. */

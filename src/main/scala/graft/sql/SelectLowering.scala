@@ -144,6 +144,13 @@ private[sql] trait SelectLowering { self: Lowering =>
     case _ => false
   }
 
+  /** Does `it` compute over a window (attaching after the pre-window
+    * WHERE)? */
+  private def windows(it: SelectItem): Boolean = it match {
+    case ExprItem(o, _) => winsOf(o).nonEmpty
+    case _ => false
+  }
+
   /** HAVING and ORDER BY may name aggregate calls the select list does
     * not: `hoist` rewrites each distinct call to a reference to a hidden
     * column `__hagg_i`, which `columns` computes in the aggregation. */
@@ -486,11 +493,10 @@ private[sql] trait SelectLowering { self: Lowering =>
       qualify, groupSets, _, distinctOn, _) = sel
     // "#n" ordinal markers (GROUP BY 1 / ORDER BY 2) resolve to the n-th
     // select item's OUTPUT name — ANSI ordinal semantics; grouping by an
-    // aggregate/window position is refused like any non-key grouping
+    // aggregate position is refused like any non-key grouping
     def itemName(it: SelectItem): String = it match {
       case ColItem(n, a) => a.getOrElse(n)
       case ExprItem(_, a) => a
-      case w: WinItem => w.alias
       case Star | _: StarExclude | _: StarPattern =>
         throw new IllegalArgumentException("an ordinal cannot reference *")
     }
@@ -500,12 +506,15 @@ private[sql] trait SelectLowering { self: Lowering =>
         require(i >= 1 && i <= items.length,
           s"ordinal $i is out of range for ${items.length} select items")
         val it = items(i - 1)
-        require(!grouping || !(aggregates(it) || it.isInstanceOf[WinItem]),
-          s"GROUP BY ordinal $i references an aggregate/window item")
+        require(!grouping || !aggregates(it),
+          s"GROUP BY ordinal $i references an aggregate item")
         itemName(it)
       } else k
     val groupBy = rawGroupBy.map(resolveOrd(_, grouping = true))
     val orderBy = rawOrderBy.map(k => k.copy(name = resolveOrd(k.name, grouping = false)))
+    val grouped = items.exists(aggregates) || groupBy.nonEmpty
+    require(!grouped || !items.exists(windows),
+      "window functions cannot be combined with aggregates/GROUP BY")
     locally {
       // JOIN lowering (graft extension): unqualified ON keys resolved by
       // which side owns the name (either order). The equi-join lowers to a
@@ -524,7 +533,7 @@ private[sql] trait SelectLowering { self: Lowering =>
       val whereNames = where.flatMap(refNames).toSet
       val shadowed: Map[String, String] = items.collect {
         case ColItem(c, Some(a)) if a != c => a
-        case it @ ExprItem(_, a) if !aggregates(it) => a
+        case it @ ExprItem(_, a) if !aggregates(it) && !windows(it) => a
       }.filter(whereNames).flatMap { a =>
         val exact = base.columns.filter(_ == a)
         (if (exact.nonEmpty) exact else base.columns.filter(_.endsWith("." + a)))
@@ -542,7 +551,7 @@ private[sql] trait SelectLowering { self: Lowering =>
       //    the aggregation
       items.foreach {
         case ColItem(c, Some(alias)) => df = df.withColumn(alias, qref(c))
-        case it @ ExprItem(o, alias) if !aggregates(it) =>
+        case it @ ExprItem(o, alias) if !aggregates(it) && !windows(it) =>
           df = df.withColumn(alias, operandCol(base, o))
         case _ => ()
       }
@@ -553,167 +562,22 @@ private[sql] trait SelectLowering { self: Lowering =>
       //    ADVICE: the old all-post-window order silently diverged from
       //    ANSI when a plain filter met a window whose partition did not
       //    include the filtered column).
-      val winAliases = items.collect { case w: WinItem => w.alias }.toSet
+      val winAliases = items.collect { case it @ ExprItem(_, a) if windows(it) => a }.toSet
       val (postWin, preWin) = where.flatMap(splitConjuncts)
         .map(mapOperands(_) { case ORef(n) if shadowed.contains(n) => ORef(s"__src_$n") })
         .partition(c => refNames(c).exists(winAliases))
       preWin.foreach(c => df = df.filter(predCol(base, c)))
+      // windows lower over `df`: their keys may name step-1 aliases, and
+      // an INTERVAL frame reads its key's type there
       items.foreach {
-        case WinItem(f, arg, parts, keys, alias, frame, agg) =>
-          import org.apache.spark.sql.expressions.Window
-          // a global window (no PARTITION BY) single-tasks the whole
-          // relation — fine over a dimension/grid, a scale-killer over a
-          // fact. The dialect can't see cardinality, so it WARNS (the
-          // engine's own WindowExec warning fires too); unordered ranks
-          // stay refused outright, as nondeterminism is a correctness
-          // matter, not a performance one.
-          if (parts.isEmpty)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"window $f over $alias has no PARTITION BY: the whole " +
-                "relation sorts in one task — acceptable for " +
-                "dimension-sized inputs only")
-          // frame-free aggregate window (r15): no ORDER BY → no sort at
-          // all, and Spark's default frame is the WHOLE partition — the
-          // share-of-total idiom (n / SUM(n) OVER ()). Deterministic by
-          // construction; the parser restricts it to SUM/COUNT/AVG/MIN/
-          // MAX. With an order the ANSI default RANGE frame applies.
-          val partitioned = Window.partitionBy(parts.map(qref): _*)
-          val ordered =
-            if (keys.isEmpty) partitioned
-            else partitioned.orderBy(keys.map(k =>
-              if (k.desc) qref(k.name).desc else qref(k.name).asc): _*)
-          // EXCLUDE CURRENT ROW (r14) rides the frame kind as a suffix:
-          // strip it here, build the FULL-frame spec, and rewrite the
-          // aggregate arithmetically below (full frame minus the row's
-          // own contribution) — Spark has no native frame exclusion.
-          val (frameBase, xcur) = frame match {
-            case Some((k, lo, hi)) if k.endsWith("_xcur") =>
-              (Some((k.dropRight(5), lo, hi)), true)
-            case other => (other, false)
-          }
-          val spec = frameBase match {
-            case None => ordered // ANSI default RANGE frame
-            case Some(("range", lo, hi)) => ordered.rangeBetween(
-              lo.fold(Window.unboundedPreceding)(n => -n),
-              hi.fold(Window.unboundedFollowing)(n => n))
-            // INTERVAL n DAY bounds (r14): re-key the RANGE frame onto
-            // exact day numbers — datediff from the epoch is order- and
-            // tie-equivalent to the DATE key itself, so `INTERVAL 7 DAY
-            // PRECEDING` is precisely a 7-day value frame (DuckDB
-            // semantics at day granularity). DATE keys only; a timestamp
-            // would silently bucket to days, so it is refused.
-            case Some(("range_days", lo, hi)) =>
-              require(keys.length == 1 && !keys.head.desc,
-                "an INTERVAL frame takes exactly one ascending ORDER BY key")
-              val k = keys.head.name
-              val kc = qref(k)
-              val dayNum = datediff(to_date(kc), to_date(lit("1970-01-01")))
-              val keyExpr = df.schema.find(_.name == k).map(_.dataType) match {
-                case Some(DateType) => dayNum
-                // timestamp keys are accepted ONLY when every value is
-                // midnight-aligned (a date stored as a timestamp, the
-                // common parquet shape) — checked per row at scan speed;
-                // an intra-day time would make day-keyed RANGE silently
-                // diverge from exact interval arithmetic, so it raises
-                case Some(TimestampType) | Some(TimestampNTZType) =>
-                  when(kc =!= to_date(kc).cast(
-                      df.schema.find(_.name == k).get.dataType),
-                    raise_error(concat(lit(s"INTERVAL frame key $k has a "),
-                      lit("non-midnight timestamp; day-granularity RANGE "),
-                      lit("requires date-valued keys"))))
-                    .otherwise(dayNum)
-                case other => throw new IllegalArgumentException(
-                  s"INTERVAL frame ORDER BY key $k must be DATE-valued, got $other")
-              }
-              Window.partitionBy(parts.map(qref): _*)
-                .orderBy(keyExpr)
-                .rangeBetween(
-                  lo.fold(Window.unboundedPreceding)(n => -n),
-                  hi.fold(Window.unboundedFollowing)(n => n))
-            case Some((_, lo, hi)) => ordered.rowsBetween(
-              lo.fold(Window.unboundedPreceding)(n => -n),
-              hi.fold(Window.unboundedFollowing)(n => n))
-          }
-          val fn = agg match {
-            // an aggregate folds its frame through the one aggregate
-            // table, FILTER included; ordered, the ANSI default frame
-            // (RANGE unbounded preceding → current row) applies, as in
-            // DuckDB
-            case Some(a) =>
-              require(a.filter.isEmpty || !xcur,
-                "FILTER cannot combine with EXCLUDE CURRENT ROW")
-              aggCol(base, a)
-            case None => f match {
-              case "ROW_NUMBER" => row_number()
-              case "RANK" => rank()
-              case "DENSE_RANK" => dense_rank()
-              // (rank−1)/(rows−1): a ratio of exact integers, identically
-              // defined in DuckDB — bitwise cross-engine
-              case "PERCENT_RANK" => percent_rank()
-              // rows-with-peers-or-before / rows: same exact-int ratio
-              // class (ANSI CUME_DIST, identical in DuckDB)
-              case "CUME_DIST" => cume_dist()
-              case "NTILE" => ntile(arg.get.toInt)
-              // out-of-partition rows yield NULL, identically in DuckDB
-              case "NTH_VALUE" =>
-                val Array(c, n) = arg.get.split(":")
-                nth_value(qref(c), n.toInt)
-              case "LAG" | "LEAD" =>
-                // "!ignore" suffix = IGNORE NULLS (r17): the n-th previous
-                // NON-NULL value — Spark's ignoreNulls flag, DuckDB-identical
-                val (spec0, ign) = arg.get.split("!") match {
-                  case Array(a0, "ignore") => (a0, true)
-                  case _ => (arg.get, false)
-                }
-                val Array(c, off) = spec0.split(":")
-                if (f == "LAG") lag(col(c), off.toInt, null, ign)
-                else lead(col(c), off.toInt, null, ign)
-              case "FIRST_VALUE" | "LAST_VALUE" =>
-                // "!ignore" suffix = ANSI IGNORE NULLS (Spark's ignoreNulls
-                // flag; DuckDB-identical: the nearest non-null in frame)
-                val (c, ign) = arg.get.split("!") match {
-                  case Array(c0, "ignore") => (c0, true)
-                  case _ => (arg.get, false)
-                }
-                if (f == "FIRST_VALUE") first(qref(c), ignoreNulls = ign)
-                else last(qref(c), ignoreNulls = ign)
-              }
-          }
-          val result =
-            if (!xcur) fn.over(spec)
-            else (f, agg.toSeq.flatMap(_.args).map(operandCol(base, _))) match {
-              // leave-one-out rewrites. NULL edges follow the engines'
-              // shared semantics: SUM/AVG over a reduced frame with no
-              // non-null values is NULL (not 0); COUNT is 0.
-              case ("SUM", Seq(x)) =>
-                val nX = count(x).over(spec) -
-                  when(x.isNotNull, lit(1L)).otherwise(lit(0L))
-                when(nX === 0, lit(null))
-                  .otherwise(sum(x).over(spec) - coalesce(x, lit(0)))
-              case ("COUNT", Seq()) =>
-                count(lit(1)).over(spec) - lit(1L)
-              case ("COUNT", Seq(x)) =>
-                count(x).over(spec) -
-                  when(x.isNotNull, lit(1L)).otherwise(lit(0L))
-              case ("AVG", Seq(x)) =>
-                val nX = count(x).over(spec) -
-                  when(x.isNotNull, lit(1L)).otherwise(lit(0L))
-                val sX = sum(x).over(spec) - coalesce(x, lit(0))
-                // exact-integer dividend/divisor → ONE IEEE division,
-                // bitwise cross-engine for integral columns
-                when(nX === 0, lit(null))
-                  .otherwise(sX.cast("double") / nX)
-              case (other, _) => throw new IllegalArgumentException(
-                s"EXCLUDE CURRENT ROW supports SUM/COUNT/AVG, not $other")
-            }
-          df = df.withColumn(alias, result)
+        case it @ ExprItem(o, alias) if windows(it) =>
+          df = df.withColumn(alias, windowed.operandCol(df, o))
         case _ => ()
       }
       postWin.foreach(c => df = df.filter(predCol(base, c)))
       // QUALIFY (r9): explicit window filter — same lowering as the
       // post-window WHERE conjuncts, just spelled the ANSI-extension way
       qualify.foreach(c => df = df.filter(predCol(base, c)))
-      val grouped = items.exists(aggregates) || groupBy.nonEmpty
       // ORDER BY expression keys (r9): hidden __ob_i columns. On the
       // plain-projection path they attach BEFORE the projection, so the
       // expression may read underlying columns not in the select list
@@ -754,36 +618,38 @@ private[sql] trait SelectLowering { self: Lowering =>
                 s"column $c must appear in GROUP BY")
             // a row-level computed alias may be a group key (the
             // bucketing idiom: GROUP BY the computed bucket) — it was
-            // attached pre-agg
-            case it @ ExprItem(_, a) => require(aggregates(it) || groupBy.contains(a),
+            // attached pre-agg — or read group keys only (a constant, an
+            // uncorrelated subquery, `k || '!'`)
+            case it @ ExprItem(o, a) => require(aggregates(it) || groupBy.contains(a) ||
+                refNamesO(o).subsetOf(groupBy.toSet),
               s"expression alias $a must appear in GROUP BY")
             case Star | _: StarExclude | _: StarPattern =>
               throw new IllegalArgumentException(
                 "SELECT * cannot be combined with aggregates/GROUP BY")
-            case w: WinItem => throw new IllegalArgumentException(
-              s"window item ${w.alias} cannot be combined with aggregates/GROUP BY")
           }
-          // each aggregating item is ONE Column over the pre-aggregation
-          // rows: its aggregates fold them (arguments and FILTER per row,
-          // partial-combined map-side) and the expression around them
-          // reads the group keys; Spark's Aggregate checks that every
-          // plain reference is a key
+          // each computed item that is not a group key is ONE Column over
+          // the pre-aggregation rows: its aggregates fold them (arguments
+          // and FILTER per row, partial-combined map-side) and the
+          // expression around them reads the group keys; Spark's Aggregate
+          // checks that every plain reference is a key
           val aggs = items.collect {
-            case it @ ExprItem(o, a) if aggregates(it) => aggregated.operandCol(df, o).as(a)
+            case ExprItem(o, a) if !groupBy.contains(a) => aggregated.operandCol(df, o).as(a)
           } ++ hidden.columns(df)
-          require(aggs.nonEmpty, "GROUP BY requires at least one aggregate")
           // ROLLUP/CUBE lower to Dataset.rollup/cube — ONE Expand pass
           // produces every grouping set (no re-aggregation per level)
-          val agged =
-            (groupMode match {
-              case "rollup" => df.rollup(groupBy.map(qref): _*)
-              case "cube" => df.cube(groupBy.map(qref): _*)
-              // explicit GROUPING SETS: the same single-Expand plan as
-              // rollup/cube, with exactly the listed sets
-              case "sets" =>
-                df.groupingSets(groupSets.map(_.map(qref)), groupBy.map(qref): _*)
-              case _ => df.groupBy(groupBy.map(qref): _*)
-            }).agg(aggs.head, aggs.tail: _*)
+          val grouping = groupMode match {
+            case "rollup" => df.rollup(groupBy.map(qref): _*)
+            case "cube" => df.cube(groupBy.map(qref): _*)
+            // explicit GROUPING SETS: the same single-Expand plan as
+            // rollup/cube, with exactly the listed sets
+            case "sets" =>
+              df.groupingSets(groupSets.map(_.map(qref)), groupBy.map(qref): _*)
+            case _ => df.groupBy(groupBy.map(qref): _*)
+          }
+          val agged = aggs match {
+            case Seq() => grouping.agg(Map.empty[String, String]) // keys only
+            case a +: as => grouping.agg(a, as: _*)
+          }
           agged.select(items.map {
             case ColItem(c, alias) =>
               // the aggregated frame carries whichever spelling was the
@@ -813,7 +679,6 @@ private[sql] trait SelectLowering { self: Lowering =>
                 rm.get(c).fold(col(c))(o => operandCol(base, o).as(c)) }
             case ColItem(c, alias) => Seq(col(alias.getOrElse(c)))
             case ExprItem(_, alias) => Seq(col(alias))
-            case w: WinItem => Seq(col(w.alias))
             case other => throw new IllegalStateException(other.toString)
           } ++ obExprs.map { case (hn, _) => col(hn) }: _*)
         }

@@ -2872,4 +2872,77 @@ class EmdriveSurfaceSpec extends SparkTestBase {
       "SELECT CASE WHEN x > 2 THEN 'hi' ELSE 'lo' END AS b, COUNT(*) AS n FROM t GROUP BY ALL;") ==
       Seq(("hi", 3L), ("lo", 2L)))
   }
+
+  /** t(k, x) = (a,1),(a,2),(b,3) for the GROUP BY specs below; expected
+    * rows are DuckDB 1.0.0's answers to the same statements. */
+  private def keyTable(): graft.sql.EmdriveSession = {
+    GraftSession.prepare(spark)
+    val s = spark
+    import s.implicits._
+    val es = new graft.sql.EmdriveSession(spark)
+    es.register("t", Seq(("a", 1), ("a", 2), ("b", 3)).toDF("k", "x"))
+    es
+  }
+
+  test("SQL aggregates: GROUP BY without an aggregate lists the keys") {
+    val es = keyTable()
+    assert(es.sql("SELECT k FROM t GROUP BY k;").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("a", "b"))
+  }
+
+  test("SQL aggregates: a constant item beside an aggregate") {
+    val es = keyTable()
+    assert(es.sql("SELECT 'x' AS tag, COUNT(*) AS n FROM t;").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("x", 3L)))
+  }
+
+  test("SQL aggregates: an uncorrelated scalar subquery item beside GROUP BY") {
+    val es = keyTable()
+    assert(es.sql(
+      "SELECT k, (SELECT COUNT(*) FROM t) AS total, SUM(x) AS s FROM t GROUP BY k;")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq ==
+      Seq(("a", 3L, 3L), ("b", 3L, 3L)))
+  }
+
+  /** t(k, g, v) for the window-operand specs below; expected rows are
+    * DuckDB 1.0.0's answers to the same statements, in k order. */
+  private def winTable(): graft.sql.EmdriveSession = {
+    GraftSession.prepare(spark)
+    val s = spark
+    import s.implicits._
+    val es = new graft.sql.EmdriveSession(spark)
+    es.register("t", Seq((1, "a", Some(10)), (2, "a", None), (3, "a", Some(7)),
+      (4, "b", Some(20)), (5, "b", Some(5))).toDF("k", "g", "v"))
+    es
+  }
+
+  private def byK(q: String): Seq[Any] =
+    winTable().sql(q).collect().map(r => (r.getInt(0), r.get(1))).sortBy(_._1).map(_._2).toSeq
+
+  test("SQL windows: arithmetic over LAG") {
+    assert(byK("SELECT k, v - LAG(v) OVER (ORDER BY k) AS d FROM t;") ==
+      Seq(null, null, null, 13, -15))
+  }
+
+  test("SQL windows: share of a partition total") {
+    assert(byK("SELECT k, ROUND(v * 1.0 / SUM(v) OVER (PARTITION BY g), 6) AS s FROM t;") ==
+      Seq(0.588235, null, 0.411765, 0.8, 0.2))
+  }
+
+  test("SQL windows: LAG over qualified names of an aliased relation") {
+    assert(byK("SELECT e.k, LAG(e.v) OVER (PARTITION BY e.g ORDER BY e.k) AS p FROM t e;") ==
+      Seq(null, 10, null, null, 20))
+  }
+
+  test("SQL windows: a cast ranking over a named window is an operand") {
+    assert(byK("""SELECT k, CAST(ROW_NUMBER() OVER w AS INTEGER) * 10 AS r FROM t
+                 |WINDOW w AS (PARTITION BY g ORDER BY k);""".stripMargin) ==
+      Seq(10, 20, 30, 10, 20))
+  }
+
+  test("SQL windows: CASE over RANK") {
+    assert(byK("""SELECT k, CASE WHEN RANK() OVER (PARTITION BY g ORDER BY v DESC) = 1
+                 |  THEN 'top' ELSE 'rest' END AS c FROM t;""".stripMargin) ==
+      Seq("top", "rest", "rest", "top", "rest"))
+  }
 }
