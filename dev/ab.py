@@ -13,11 +13,13 @@ seeds[i % len(seeds)].
 The report gives, for every end-to-end metric `BENCHMARK.json` declares:
 the median of each side, the parent's quartiles, the change's median
 relative to the parent's, the declared bound, and how many pairs the change
-won (better by the metric's direction). Then the correct/attempted/failed
-counts of each side and every raw run, with the machine's CPU steal share
-during the run as perfbench's report records it (a run on a contended
-host reads slow on every layer at once). Runs with the same tree on both
-sides (an A/A set) show the noise floor the same way.
+won (better by the metric's direction). Below it, the same for each
+statement kind's warm median (seconds), parsed from perfbench's
+`per kind (cold s / warm median s / n)` stderr line. Then the
+correct/attempted/failed counts of each side and every raw run, with the
+machine's CPU steal share during the run as perfbench's report records it
+(a run on a contended host reads slow on every layer at once). Runs with
+the same tree on both sides (an A/A set) show the noise floor the same way.
 
 Nothing in either checkout is edited; perfbench's own caches
 (`.bench_build/`, `.bench_out/`, ...) are written where it writes them.
@@ -57,7 +59,27 @@ def run_once(root, workload, seed, seconds, trace):
         pass
     return {"ok": True, "seed": seed, "wall_s": wall, "correct": line["correct"],
             "attempted": line["attempted"], "failed": line["failed"], "steal": steal,
-            "metrics": {k: v["value"] for k, v in line["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in line["metrics"].items()},
+            "kinds": per_kind(p.stderr)}
+
+
+PER_KIND = "per kind (cold s / warm median s / n) "
+
+
+def per_kind(stderr):
+    """{kind: warm median s} from perfbench's `per kind` stderr line."""
+    for ln in stderr.splitlines():
+        at = ln.find(PER_KIND)
+        if at < 0:
+            continue
+        kinds = {}
+        for item in ln[at + len(PER_KIND):].split():
+            kind, _, vals = item.partition("=")
+            parts = vals.split("/")
+            if len(parts) == 3 and int(parts[2]) > 0:
+                kinds[kind] = float(parts[1])
+        return kinds
+    return {}
 
 
 def quartiles(xs):
@@ -121,6 +143,27 @@ def main():
                          "change_wins": wins, "pairs": len(ok)}
         print(f"{name:<14}{ma:>12.4g}{q1:>11.4g}{q3:>11.4g}{mb:>12.4g}{ratio:>8.3f}"
               f"{m.get('bound', float('nan')):>7}{wins:>4}/{len(ok)}")
+    kinds = sorted({k for p in ok for side in ("parent", "change")
+                    for k in p[side].get("kinds", {})})
+    w = max([14] + [len(k) + 2 for k in kinds])
+    if kinds:
+        print(f"{'kind warm s':<{w}}{'parent_med':>12}{'parent_q1':>11}{'parent_q3':>11}"
+              f"{'change_med':>12}{'ratio':>8}{'wins':>9}")
+    for k in kinds:
+        both = [p for p in ok if k in p["parent"].get("kinds", {})
+                and k in p["change"].get("kinds", {})]
+        if not both:
+            continue
+        a = [p["parent"]["kinds"][k] for p in both]
+        b = [p["change"]["kinds"][k] for p in both]
+        wins = sum(1 for x, y in zip(a, b) if y < x)
+        ma, mb = statistics.median(a), statistics.median(b)
+        q1, q3 = quartiles(a)
+        summary["kind:" + k] = {"parent_median": ma, "parent_q1": q1, "parent_q3": q3,
+                                "change_median": mb, "change_wins": wins,
+                                "pairs": len(both)}
+        print(f"{k:<{w}}{ma:>12.4g}{q1:>11.4g}{q3:>11.4g}{mb:>12.4g}"
+              f"{(mb / ma if ma else float('nan')):>8.3f}{wins:>6}/{len(both)}")
     for side in ("parent", "change"):
         rs = [p[side] for p in runs]
         done = [r for r in rs if r["ok"]]

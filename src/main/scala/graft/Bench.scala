@@ -39,7 +39,10 @@ object Bench {
     val starts = Harness.obj(results.map(r => r.key -> r.startedMs))
     val repsDump = Harness.obj(results.map(r =>
       r.key -> r.timing.fold(_ => Seq.empty[Double], _.secs).mkString("[", ",", "]")))
-    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"started_ms":$starts,"reps":$repsDump,"cpus":$cpus,"sf":"$sfDir","errors":${Harness.errors(results)}}"""
+    // the cold total: every key's first rep, keys whose first rep failed
+    // left out
+    val coldTotal = results.flatMap(_.timing.toOption.flatMap(_.cold)).sum
+    val fileLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"started_ms":$starts,"reps":$repsDump,"cold_total":$coldTotal,"cpus":$cpus,"sf":"$sfDir","errors":${Harness.errors(results)}}"""
     // The driver keeps only a ~2000-char stdout tail; with 140+ queries the
     // full line overflows it and arrives front-truncated (unparseable,
     // BENCH_r{3..6}.json "parsed": null). Emit a complete compact summary

@@ -34,8 +34,8 @@ object GraftSession {
     * driver's Verify/Bench build their own session without our extension).
     * Physical rules cannot be added after the session is built, so such a
     * session runs without [[graft.plans.ParameterizeLiterals]]; the
-    * optimizer rules are added only where the extension did not already
-    * inject them.
+    * optimizer rules and the [[graft.plans.DriverCollect]] strategy are
+    * added only where the extension did not already inject them.
     */
   def prepare(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -53,6 +53,11 @@ object GraftSession {
     val have = extra ++ spark.sessionState.optimizer.extendedOperatorOptimizationRules
     spark.experimental.extraOptimizations =
       extra ++ graft.plans.GraftExtensions.optimizerRules.filterNot(have.contains)
+    // strategies, unlike physical rules, have a post-hoc hook
+    val strategies = spark.experimental.extraStrategies
+    if (!(strategies ++ spark.sessionState.planner.extraPlanningStrategies)
+        .contains(graft.plans.DriverCollect))
+      spark.experimental.extraStrategies = graft.plans.DriverCollect +: strategies
     spark
   }
 }

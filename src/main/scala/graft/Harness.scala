@@ -81,8 +81,10 @@ object Harness {
     try Right(body) catch { case e: Throwable => Left(cause(e)) }
 
   /** Wall seconds of each rep that succeeded, and the action's row count. */
-  final case class Timed(secs: Seq[Double], rows: Long) {
+  final case class Timed(secs: Seq[Double], rows: Long, firstFailed: Boolean = false) {
     def best: Double = secs.min
+    /** The first rep's seconds (builds included), None if it failed. */
+    def cold: Option[Double] = if (firstFailed) None else secs.headOption
   }
 
   /** The timed action `fn(spark, dir).count()`, `reps` times. Right when
@@ -106,7 +108,7 @@ object Harness {
     System.gc()
     val ok = tries.collect { case Right(r) => r }
     if (ok.isEmpty) Left(tries.collect { case Left(c) => c }.last)
-    else Right(Timed(ok.map(_._1), ok.head._2))
+    else Right(Timed(ok.map(_._1), ok.head._2, tries.head.isLeft))
   }
 
   /** One key's outcome in a many-key run. */

@@ -67,6 +67,13 @@ object SessionMemo {
   def of[T <: AnyRef](input: DataFrame, name: String)(build: => T): T =
     lookup(input.sparkSession, name, relationSnapshot(input), persist = false, None)(_ => build)
 
+  /** The artifact `name` built from settings rather than data: the caller
+    * states the snapshot (say, the session conf it is built under), and a
+    * lookup under another snapshot rebuilds it. */
+  def ofSnapshot[T <: AnyRef](s: SparkSession, name: String, snapshot: String)(
+      build: => T): T =
+    lookup(s, name, snapshot, persist = false, None)(_ => build)
+
   /** [[of]] for a relation that is `persist()`ed once: every later caller
     * gets the SAME cached instance, so a repeated query re-reads the cache
     * instead of stacking a duplicate `InMemoryRelation`. */

@@ -12,7 +12,8 @@ import graft.functions.{CcCandidates, CcValid, CdcChunks, CharShingles, ContentF
 /** SparkSessionExtensions entry point: injects graft's native Catalyst
   * expressions into the SQL function registry, so `spark.sql` and
   * `call_function` can use them like built-ins (codegen included), plus
-  * graft's optimizer rules and the physical [[ParameterizeLiterals]] rule.
+  * graft's optimizer rules, the physical [[ParameterizeLiterals]] rule and
+  * the [[DriverCollect]] planner strategy.
   *
   * Register with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or post-hoc via [[GraftExtensions.registerFunctions]].
@@ -26,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // physical only: a session built without the extension (the bare
     // Verify/Bench session) has no hook to add it later and keeps its plans
     ext.injectColumnar(_ => ParameterizeLiterals.Hook)
+    ext.injectPlannerStrategy(_ => DriverCollect)
   }
 }
 

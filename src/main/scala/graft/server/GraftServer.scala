@@ -30,8 +30,11 @@ import graft.sql.{EmdriveSession, EmdriveSql}
   *
   * Scale shape: the server is a thin driver-side boundary — planning stays
   * declarative (the SQL lowers to the same Catalyst plans as the library
-  * calls), row rendering is DISTRIBUTED (`to_json(struct(*))` runs Jackson
-  * inside codegen per partition; the driver concatenates strings), and
+  * calls), row rendering runs where the rows are read (`to_json(struct(*))`
+  * runs inside codegen per partition and the driver concatenates strings;
+  * a small read — a projection, filter and limit over parquet files within
+  * `spark.sql.files.openCostInBytes` — is read and rendered on the driver
+  * with no Spark job, [[graft.plans.DriverCollect]]), and
   * materialization is BOUNDED: every result passes through `LIMIT maxRows`
   * before the one driver-side collect a serving boundary cannot avoid. A
   * `SELECT` without `LIMIT` over a 100 TB table answers with the first

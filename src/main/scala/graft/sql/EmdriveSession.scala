@@ -2,7 +2,7 @@ package graft.sql
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -284,6 +284,14 @@ private[sql] final class Lowering(private[sql] val spark: SparkSession,
   private def tableFunction(fn: String, args: Seq[String]): DataFrame = {
     def arity(n: Int): Unit = require(args.length == n,
       s"$fn expects $n arguments, got ${args.length} in (${args.mkString(", ")})")
+    // the probe row's `cols` (probe id = 4th argument) by a bounded
+    // one-row lookup, which small tables answer on the driver; None when
+    // the probe is absent, the empty corpus included
+    def probeRow(t: DataFrame, id: String, cols: Column*): Option[Row] =
+      t.filter(col(id) === args(3).toLong).select(cols: _*).limit(1).collect().headOption
+    // a metric query's answer to an absent probe: no rows, the query's schema
+    def noMatches(tbl: String): DataFrame =
+      table(tbl).limit(0).withColumn("dist", lit(0).cast("int"))
     fn match {
       // dedup_exact(tbl, idCol, textCol): the rows that SURVIVE exact
       // dedup (keeper = min id per identical content) with the source
@@ -351,16 +359,10 @@ private[sql] final class Lowering(private[sql] val spark: SparkSession,
         arity(5)
         val (tbl, id, h) = (args(0), args(1), args(2))
         val bits = 6
-        // 1-row driver probe lookup FIRST (the bounded-collect pattern
-        // the PQ sidecars use) — a missing probe (incl. the empty-corpus
-        // case) yields the empty relation with the query's schema, and
-        // no index is written for a corpus with nothing to find
-        val probeRows = table(tbl).filter(col(id) === args(3).toLong)
-          .select(col(h).cast("long")).limit(1).collect()
-        if (probeRows.isEmpty) {
-          table(tbl).limit(0).withColumn("dist", lit(0).cast("int"))
-        } else {
-          val probe = probeRows(0).getLong(0)
+        // the probe lookup FIRST: a missing probe yields no rows, and no
+        // index is written for a corpus with nothing to find
+        probeRow(table(tbl), id, col(h).cast("long")).fold(noMatches(tbl)) { r =>
+          val probe = r.getLong(0)
           val layout = ensureIndex("metric", tbl, h)(p =>
             graft.sources.MetricIndex.writeIndexed(table(tbl), p, h, bits))
           graft.sources.MetricIndex
@@ -380,15 +382,10 @@ private[sql] final class Lowering(private[sql] val spark: SparkSession,
         arity(5)
         val (tbl, id, h) = (args(0), args(1), args(2))
         val bits = 6
-        val probeRows = table(tbl).filter(col(id) === args(3).toLong)
-          .select(col(h).cast("long")).limit(1).collect()
-        if (probeRows.isEmpty) {
-          table(tbl).limit(0).withColumn("dist", lit(0).cast("int"))
-        } else {
-          val probe = probeRows(0).getLong(0)
+        probeRow(table(tbl), id, col(h).cast("long")).fold(noMatches(tbl)) { r =>
           val layout = ensureIndex("metric", tbl, h)(p =>
             graft.sources.MetricIndex.writeIndexed(table(tbl), p, h, bits))
-          graft.sources.MetricIndex.knnQuery(layout, h, probe, args(4).toInt)
+          graft.sources.MetricIndex.knnQuery(layout, h, r.getLong(0), args(4).toInt)
         }
       // ann_search(tbl, idCol, vecCol, probeId, k): index-backed cosine
       // top-k from a PERSISTED IVF layout. Cells are the 8 lowest-id
@@ -428,8 +425,7 @@ private[sql] final class Lowering(private[sql] val spark: SparkSession,
         // probe presence check first: a missing probe (incl. the empty
         // corpus, whose layout would not even be readable) is the empty
         // relation, not an error or a doomed index build
-        if (table(tbl).filter(col(id) === args(3).toLong).limit(1)
-            .collect().isEmpty)
+        if (probeRow(table(tbl), id, col(id)).isEmpty)
           return table(tbl).limit(0)
             .select(col(id), lit(0.0).as("sim"))
         val idx = ensureIndex(
@@ -447,12 +443,9 @@ private[sql] final class Lowering(private[sql] val spark: SparkSession,
               col("b.cid").cast("int").as("cluster_id"))
           graft.operators.IvfIndex.writeIndex(assigned, p)
         }
-        val pr = idx.filter(col("vec_id") === args(3).toLong)
-          .select(col("cluster_id").cast("int"), col("embedding"))
-          .limit(1).collect()
-        require(pr.nonEmpty,
-          s"ann_search: probe row ${args(3)} not found in $tbl")
-        val (pc, pv) = (pr(0).getInt(0), pr(0).getSeq[Float](1).toArray)
+        val pr = probeRow(idx, "vec_id", col("cluster_id").cast("int"), col("embedding"))
+        require(pr.nonEmpty, s"ann_search: probe row ${args(3)} not found in $tbl")
+        val (pc, pv) = (pr.get.getInt(0), pr.get.getSeq[Float](1).toArray)
         // nprobe cells: rank the centroids (the nCells lowest-id vectors;
         // their index rows carry cid == own vec_id assignment source) by
         // cosine to the probe, DESC with lower-cid tie-break — the same

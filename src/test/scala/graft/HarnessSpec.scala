@@ -43,9 +43,31 @@ class HarnessSpec extends SparkTestBase {
     assert(fields(summary) == Seq("metric", "value", "unit", "sf", "n_queries",
       "failed", "slowest", "queries_full"))
     assert(mapper.readTree(summary).get("queries_full").asText == "BENCH_OUT_c4.json")
+    // the stdout lines as they were before the file dump gained cold_total
+    assert(line == """{"metric":"total","value":0.25,"unit":"sec",""" +
+      """"queries":{"q_a":0.25,"q_b":-1.0},"sf":"/sf"}""")
+    assert(summary == """{"metric":"total","value":0.25,"unit":"sec","sf":"/sf",""" +
+      """"n_queries":2,"failed":["q_b"],"slowest":{"q_a":0.250},""" +
+      """"queries_full":"BENCH_OUT_c4.json"}""")
     assert(fields(fileLine) == Seq("metric", "value", "unit", "queries",
-      "started_ms", "reps", "cpus", "sf", "errors"))
+      "started_ms", "reps", "cold_total", "cpus", "sf", "errors"))
     assert(mapper.readTree(fileLine).get("errors").get("q_b").asText ==
       "IllegalStateException: boom")
+    assert(mapper.readTree(fileLine).get("cold_total").asDouble == 0.5)
+  }
+
+  test("Bench's cold_total sums each key's first rep and leaves out keys whose first rep failed") {
+    val a = Harness.Keyed("q_a", 1L, Right(Harness.Timed(Seq(2.0, 0.5), 3L)))
+    val b = Harness.Keyed("q_b", 2L, Right(Harness.Timed(Seq(0.25), 3L, firstFailed = true)))
+    val c = Harness.Keyed("q_c", 3L, Left("IllegalStateException: boom"))
+    val d = Harness.Keyed("q_d", 4L, Right(Harness.Timed(Seq(1.0, 0.75), 3L)))
+    val (_, fileLine) = Bench.render(Seq(a, b, c, d), "/sf", "4", "BENCH_OUT_c4.json")
+    assert(mapper.readTree(fileLine).get("cold_total").asDouble == 3.0)
+    assert(mapper.readTree(fileLine).get("value").asDouble == 1.5)
+    // a first rep that throws is not a cold time: the key's cold is None
+    var n = 0
+    val flaky: Harness.Query = (s, _) => { n += 1; if (n == 1) sys.error("cold boom") else s.range(1).toDF() }
+    val Right(t) = Harness.timeKey(spark, sfDir, flaky, reps = 2)
+    assert(t.firstFailed && t.cold.isEmpty && t.secs.size == 1)
   }
 }

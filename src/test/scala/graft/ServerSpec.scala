@@ -225,6 +225,23 @@ class ServerSpec extends SparkTestBase {
     }
   }
 
+  test("a GET point read answers on the driver with the body Spark's job renders") {
+    withServer() { (_, base) =>
+      val read = "/?query=" + java.net.URLEncoder.encode(
+        "SELECT doc_id, text, source, n_chars FROM documents WHERE doc_id = 7;", "UTF-8")
+      get(base, read)
+      val (driver, jobs) = jobsDuring(get(base, read))
+      assert(driver.statusCode() == 200, driver.body())
+      assert(jobs.isEmpty, jobs)
+      assert(driver.body().startsWith("""[{"doc_id":7,"""), driver.body())
+      // a budget below the file's size: Spark's path, the same bytes
+      val (forced, forcedJobs) = jobsDuring(
+        scopedConf("spark.sql.files.openCostInBytes" -> "1")(get(base, read)))
+      assert(forcedJobs.nonEmpty)
+      assert(forced.statusCode() == 200 && forced.body() == driver.body())
+    }
+  }
+
   test("GET /health answers ok; unknown path is 404") {
     withServer() { (_, base) =>
       assert(get(base, "/health").statusCode() == 200)

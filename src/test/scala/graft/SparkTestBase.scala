@@ -34,6 +34,16 @@ trait SparkTestBase extends AnyFunSuite {
     try body(dir.toString) finally TempHygiene.deleteRecursively(dir)
   }
 
+  /** `body` with the session conf `pairs` set, each restored afterwards. */
+  def scopedConf[T](pairs: (String, String)*)(body: => T): T = {
+    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Runs `body` and returns its value with the (description, stage
     * names) of every Spark job it started. A sentinel job marks the end:
     * the listener bus delivers events in order, so once the sentinel is
