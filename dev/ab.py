@@ -2,7 +2,8 @@
 """Interleaved A/B of the perfbench workloads between two graft checkouts.
 
     python3 dev/ab.py <parent_dir> <change_dir> --workload pipeline \
-        --pairs 10 --seeds 1 2 3 [--seconds 8] [--trace 0] [--out ab.json]
+        --pairs 10 --seeds 1 2 3 [--seconds 8] [--trace 0] [--out ab.json] \
+        [--claim p50_ms]
 
 Each pair runs `python3 perfbench/run.py --workload W --seed S` once in each
 checkout, from that checkout's root, so each side builds and runs its own
@@ -13,7 +14,18 @@ seeds[i % len(seeds)].
 The report gives, for every end-to-end metric `BENCHMARK.json` declares:
 the median of each side, the parent's quartiles, the change's median
 relative to the parent's, the declared bound, and how many pairs the change
-won (better by the metric's direction). Below it, the same for each
+won (better by the metric's direction), and a verdict:
+
+- the `--claim` metric is `claim met` when the change wins at least nine
+  tenths of the pairs (ties count for neither side) and its median beats
+  the parent's by more than the parent's interquartile range, else
+  `claim not met`; a line below the table gives the counts;
+- every other metric is `unresolved` when the parent's interquartile range
+  is wider than the bound (relative to the parent's median) and not every
+  change run beats every parent run, else `over bound` when the change's
+  median is worse than the parent's by more than the bound, else `ok`.
+
+Below it, the same for each
 statement kind's warm median (seconds), parsed from perfbench's
 `per kind (cold s / warm median s / n)` stderr line. Then the
 correct/attempted/failed counts of each side and every raw run, with the
@@ -26,6 +38,7 @@ Nothing in either checkout is edited; perfbench's own caches
 """
 import argparse
 import json
+import math
 import os
 import statistics
 import subprocess
@@ -89,6 +102,25 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(m, a, b, wins, pairs, claim):
+    """The metric's verdict, by the rule in the module docstring."""
+    lower = m["better"] == "lower"
+    ma, mb = statistics.median(a), statistics.median(b)
+    q1, q3 = quartiles(a)
+    if m["name"] == claim:
+        gap = ma - mb if lower else mb - ma
+        met = wins >= math.ceil(0.9 * pairs) and gap > q3 - q1
+        return "claim met" if met else "claim not met"
+    bound = m.get("bound")
+    if bound is None or not ma:
+        return "ok"
+    all_better = max(b) < min(a) if lower else min(b) > max(a)
+    if (q3 - q1) / abs(ma) > bound and not all_better:
+        return "unresolved"
+    worse = (mb - ma) / abs(ma) if lower else (ma - mb) / abs(ma)
+    return "over bound" if worse > bound else "ok"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent_dir")
@@ -99,6 +131,7 @@ def main():
     ap.add_argument("--seconds", type=int, default=8)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", help="also write every run and the summary as JSON")
+    ap.add_argument("--claim", help="the end-to-end metric the change claims to improve")
     args = ap.parse_args()
 
     sides = {"parent": os.path.abspath(args.parent_dir),
@@ -125,7 +158,7 @@ def main():
           f"seconds {args.seconds}, trace {args.trace}")
     summary = {}
     print(f"{'metric':<14}{'parent_med':>12}{'parent_q1':>11}{'parent_q3':>11}"
-          f"{'change_med':>12}{'ratio':>8}{'bound':>7}{'wins':>7}")
+          f"{'change_med':>12}{'ratio':>8}{'bound':>7}{'wins':>7}  verdict")
     for m in e2e:
         name, lower = m["name"], m["better"] == "lower"
         a = [p["parent"]["metrics"][name] for p in ok if name in p["parent"]["metrics"]]
@@ -138,11 +171,20 @@ def main():
         ma, mb = statistics.median(a), statistics.median(b)
         q1, q3 = quartiles(a)
         ratio = mb / ma if ma else float("nan")
+        v = verdict(m, a, b, wins, len(ok), args.claim)
         summary[name] = {"parent_median": ma, "parent_q1": q1, "parent_q3": q3,
                          "change_median": mb, "ratio": ratio, "bound": m.get("bound"),
-                         "change_wins": wins, "pairs": len(ok)}
+                         "change_wins": wins, "pairs": len(ok), "verdict": v}
         print(f"{name:<14}{ma:>12.4g}{q1:>11.4g}{q3:>11.4g}{mb:>12.4g}{ratio:>8.3f}"
-              f"{m.get('bound', float('nan')):>7}{wins:>4}/{len(ok)}")
+              f"{m.get('bound', float('nan')):>7}{wins:>4}/{len(ok)}  {v}")
+        if name == args.claim:
+            claim_line = (f"claim {name}: {v}: change won {wins}/{len(ok)} pairs "
+                          f"(needs {math.ceil(0.9 * len(ok))}), median gain "
+                          f"{(ma - mb) if lower else (mb - ma):.4g} vs parent IQR "
+                          f"{q3 - q1:.4g}")
+    if args.claim:
+        print(claim_line if args.claim in summary
+              else f"claim {args.claim}: no such metric in both sides' runs")
     kinds = sorted({k for p in ok for side in ("parent", "change")
                     for k in p[side].get("kinds", {})})
     w = max([14] + [len(k) + 2 for k in kinds])

@@ -6,14 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.{CcCandidates, CcValid, CdcChunks, CharShingles, ContentFp, CosineSimilarity, CountMinAgg, CountMinEstimate, DenylistHits, DenylistMask, DotProduct, DupNgramFrac, Hamming128, Int8Quantize, IvfPqEncode, L2Norm, MinHashBands, MinHashSig, PqAdc, PqEncode, Q8Dot, Q8Scale, Q8Sum, SignBands, SimHash64, SrpBands, StopwordHits, TopK, TopTokenFrac, Ulid, WordShingles, ZOrder2}
 
 /** SparkSessionExtensions entry point: injects graft's native Catalyst
   * expressions into the SQL function registry, so `spark.sql` and
   * `call_function` can use them like built-ins (codegen included), plus
-  * graft's optimizer rules, the physical [[ParameterizeLiterals]] rule and
-  * the [[DriverCollect]] planner strategy.
+  * graft's optimizer rules, the [[DriverCollect]] planner strategy and the
+  * [[GraftExtensions.PhysicalHook]] ([[ParameterizeLiterals]] and the
+  * driver root above an adaptive plan).
   *
   * Register with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * or post-hoc via [[GraftExtensions.registerFunctions]].
@@ -26,12 +29,24 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
     // physical only: a session built without the extension (the bare
     // Verify/Bench session) has no hook to add it later and keeps its plans
-    ext.injectColumnar(_ => ParameterizeLiterals.Hook)
+    ext.injectColumnar(_ => GraftExtensions.PhysicalHook)
     ext.injectPlannerStrategy(_ => DriverCollect)
   }
 }
 
 object GraftExtensions {
+  /** Columnar rules run right before `CollapseCodegenStages`, both in the
+    * non-adaptive preparations and in AQE's post-stage-creation rules —
+    * the one extension point that sees every physical plan before its
+    * code is generated, and the root `AdaptiveSparkPlanExec` (as a leaf)
+    * before it runs. */
+  object PhysicalHook extends ColumnarRule {
+    override def preColumnarTransitions: Rule[SparkPlan] = new Rule[SparkPlan] {
+      override def apply(plan: SparkPlan): SparkPlan =
+        DriverCollect.wrapAdaptive(ParameterizeLiterals(plan))
+    }
+  }
+
   /** graft's Catalyst rewrites, in the order they are installed. */
   val optimizerRules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Li
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CodegenSupport, ColumnarRule, SparkPlan}
+import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** A non-null primitive literal whose generated code reads its value from
@@ -64,13 +64,5 @@ object ParameterizeLiterals extends Rule[SparkPlan] {
 
   def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
     case p: CodegenSupport if p.children.nonEmpty => p.mapExpressions(param)
-  }
-
-  /** Columnar rules run right before `CollapseCodegenStages`, both in the
-    * non-adaptive preparations and in AQE's post-stage-creation rules —
-    * the one extension point that sees every physical plan before its
-    * code is generated. */
-  object Hook extends ColumnarRule {
-    override def preColumnarTransitions: Rule[SparkPlan] = ParameterizeLiterals
   }
 }

@@ -32,9 +32,11 @@ import graft.sql.{EmdriveSession, EmdriveSql}
   * declarative (the SQL lowers to the same Catalyst plans as the library
   * calls), row rendering runs where the rows are read (`to_json(struct(*))`
   * runs inside codegen per partition and the driver concatenates strings;
-  * a small read — a projection, filter and limit over parquet files within
-  * `spark.sql.files.openCostInBytes` — is read and rendered on the driver
-  * with no Spark job, [[graft.plans.DriverCollect]]), and
+  * a small read — projections, filters, aggregates, ORDER BY and limits
+  * over parquet files within `spark.sql.files.openCostInBytes` — is read,
+  * aggregated, sorted and rendered on the driver with no Spark job,
+  * [[graft.plans.DriverCollect]]; aggregates and ORDER BY without LIMIT
+  * take that path only in a session built with `GraftExtensions`), and
   * materialization is BOUNDED: every result passes through `LIMIT maxRows`
   * before the one driver-side collect a serving boundary cannot avoid. A
   * `SELECT` without `LIMIT` over a 100 TB table answers with the first

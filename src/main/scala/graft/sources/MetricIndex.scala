@@ -121,9 +121,13 @@ object MetricIndex {
     *     found fewer than k rows) — is exact, ties at D included: every
     *     row at distance ≤ D lies inside that ball.
     *
-    * Each scan is a TakeOrdered collect of ≤ k rows; the answer comes back
-    * as a local relation, so the caller's action runs no further job (an
-    * ORDER BY on top sorts the rows in memory: [[graft.plans.LocalSort]]). */
+    * Each scan is a `TakeOrderedAndProject` collect of ≤ k rows. Over a
+    * layout whose pruned files fit the driver budget it runs no Spark job
+    * ([[graft.plans.DriverCollect]] sorts the rows on the driver), in a
+    * session built with or without the graft extension; a larger layout
+    * runs one job per scan. The answer comes back as a local relation, so
+    * the caller's action runs no further job (an ORDER BY on top sorts the
+    * rows in memory: [[graft.plans.LocalSort]]). */
   def knnQuery(layout: DataFrame, hashCol: String, probe: Long,
       k: Int): DataFrame = {
     require(k > 0, s"knnQuery requires k > 0, got $k")

@@ -1171,7 +1171,9 @@ private final class StatementRun(low: Lowering, dataDir: Option[String]) {
         WholeStageCodegenExec}
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       val cdf = lowerSelect(sel).groupBy().count()
-      val n = cdf.collect()(0).getLong(0)
+      // the counts below are the metrics of Spark's operators, so run
+      // Spark's plan even where a driver root would answer the count
+      val n = cdf.queryExecution.toRdd.map(_.getLong(0)).collect().head
       def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
         case a: AdaptiveSparkPlanExec => p +: nodes(a.executedPlan)
         case q: QueryStageExec => p +: nodes(q.plan)

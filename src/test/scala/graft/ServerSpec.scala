@@ -242,6 +242,24 @@ class ServerSpec extends SparkTestBase {
     }
   }
 
+  test("a GET GROUP BY … ORDER BY … LIMIT answers on the driver with the body Spark's jobs render") {
+    withServer() { (_, base) =>
+      val read = "/?query=" + java.net.URLEncoder.encode(
+        "SELECT source, COUNT(*) AS n, SUM(n_chars) AS total_chars, AVG(n_chars) AS avg_chars " +
+          "FROM documents WHERE lang = 'en' AND n_chars > 100 " +
+          "GROUP BY source ORDER BY total_chars DESC, source LIMIT 5;", "UTF-8")
+      get(base, read)
+      val (driver, jobs) = jobsDuring(get(base, read))
+      assert(driver.statusCode() == 200, driver.body())
+      assert(jobs.isEmpty, jobs)
+      assert(driver.body().startsWith("""[{"source":"""), driver.body())
+      val (forced, forcedJobs) = jobsDuring(
+        scopedConf("spark.sql.files.openCostInBytes" -> "1")(get(base, read)))
+      assert(forcedJobs.nonEmpty)
+      assert(forced.statusCode() == 200 && forced.body() == driver.body())
+    }
+  }
+
   test("GET /health answers ok; unknown path is 404") {
     withServer() { (_, base) =>
       assert(get(base, "/health").statusCode() == 200)
