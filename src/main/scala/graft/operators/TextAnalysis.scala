@@ -102,16 +102,21 @@ object TextAnalysis {
 
   /** The winnowing kernel over any (doc_id, text) relation — shared by
     * the q_winnow operator key and the `winnow` SQL table function
-    * (r15). Pure per-row codegen array ops: no explode, no shuffle. */
+    * (r15). Pure per-row codegen array ops: no explode, no shuffle.
+    * Words, gram hashes and the selection are each a column of their own
+    * projection: the window lambdas read them rather than inlining them,
+    * which would re-split the text per gram and rehash every gram per
+    * window (quadratic in the document's length). Each is read more than
+    * once, so `CollapseProject` keeps the projections apart. */
   private[graft] def winnowOver(docs: DataFrame): DataFrame = {
     val w = 4
-    val ws = split(col("text"), " ")
+    val ws = col("ws")
     val grams = when(size(ws) >= 3,
       transform(sequence(lit(0), size(ws) - 3),
         i => concat_ws(" ", element_at(ws, i + 1), element_at(ws, i + 2),
           element_at(ws, i + 3))))
       .otherwise(array().cast("array<string>"))
-    val hs = transform(grams, g => call_function("content_fp", g))
+    val hs = col("hs")
     val n = size(hs)
     val selected =
       when(n >= w,
@@ -119,12 +124,16 @@ object TextAnalysis {
           i => array_min(slice(hs, i + lit(1), lit(w))))))
         .when(n >= 1, array(array_min(hs)))
         .otherwise(array().cast("array<bigint>"))
-    docs.select(
-      col("doc_id"),
-      n.as("n_grams"),
-      size(selected).as("n_selected"),
-      aggregate(selected, lit(0L), (a, x) => a + x).as("fp_sum"),
-      array_min(selected).as("fp_min"))
+    val sel = col("sel")
+    docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), transform(grams, g => call_function("content_fp", g)).as("hs"))
+      .select(col("doc_id"), n.as("n_grams"), selected.as("sel"))
+      .select(
+        col("doc_id"),
+        col("n_grams"),
+        size(sel).as("n_selected"),
+        aggregate(sel, lit(0L), (a, x) => a + x).as("fp_sum"),
+        array_min(sel).as("fp_min"))
   }
 
   /** TF-IDF scoring: top term per document by tf·idf. Inverted document-
