@@ -1,7 +1,10 @@
 package graft.plans
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+
+import com.google.common.collect.{Ordering => GuavaOrdering}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -108,7 +111,8 @@ object DriverCollect extends SparkStrategy {
   *    `SortAggregateExec` uses, over rows grouped by their binary grouping
   *    key (it only compares keys for equality); with no grouping keys and
   *    no input it returns Spark's single row;
-  *  - sorts use `InterpretedOrdering` over the same `SortOrder`s.
+  *  - sorts use `InterpretedOrdering` over the same `SortOrder`s, and
+  *    TakeOrderedAndProject keeps only its top `n` rows, as Spark's does.
   * The reader is built once per (table schemas and options, read schema,
   * session conf) in the session registry, without pushed filters: every
   * data filter also stands in the `FilterExec` the node evaluates. (Spark's
@@ -186,11 +190,12 @@ object DriverCollectExec {
   /** The budget's cap for chains that aggregate or sort. The driver runs
     * those operators row by row, interpreted, on one thread, where Spark's
     * path runs them compiled on every core after a fixed cost of two jobs.
-    * `graft.Harness crossover` (GROUP BY … ORDER BY … LIMIT over a 4-file
-    * table whose every byte the statement reads, `local[4]`, 4 vCPU)
-    * measured medians of 185, 386 and 960 ms on the driver path against
-    * 212, 171 and 170 ms on Spark's path for 1.0, 3.9 and 15.7 MiB (a
-    * second run: 170, 344 and 1302 against 235, 170 and 207 ms), so the
+    * The test-source probe `graft.plans.DriverCrossover` (GROUP BY …
+    * ORDER BY … LIMIT over a 4-file table whose every byte the statement
+    * reads, `local[4]`, 4 vCPU) measured medians of 185, 386 and 960 ms on
+    * the driver path against 212, 171 and 170 ms on Spark's path for 1.0,
+    * 3.9 and 15.7 MiB (two more runs: 170, 344 and 1302 against 235, 170
+    * and 207 ms; 154, 361 and 1252 against 215, 154 and 195 ms), so the
     * crossover lies just above 1 MiB, below the 4 MiB default of the file
     * budget. (A point lookup's crossover lies between 4 and 14 MiB.) */
   private[plans] val GroupOrSortBudget: Long = 1L << 20
@@ -220,10 +225,13 @@ object DriverCollectExec {
         step(c, all = true)(it => (if (n >= 0) it.take(n) else it).drop(offset))
       case SortExec(order, global, c, _) =>
         step(c, all = global, groupsOrSorts = true)(sort(order, c.output))
-      // `n` counts the skipped `offset` rows, as in Spark's executeCollect
+      // a bounded top-k, Guava's `leastOf` as in Spark's own
+      // `takeOrdered`; `n` counts the skipped `offset` rows, as in Spark's
+      // executeCollect
       case TakeOrderedAndProjectExec(n, order, list, c, offset) =>
-        step(c, all = true, groupsOrSorts = true)(it =>
-          project(list, c.output)(sort(order, c.output)(it).take(n).drop(offset)))
+        step(c, all = true, groupsOrSorts = true)(it => project(list, c.output)(
+          GuavaOrdering.from(new InterpretedOrdering(order, c.output))
+            .leastOf(it.map(_.copy()).asJava, n).asScala.iterator.drop(offset)))
       case a: BaseAggregateExec if (a match {
             case _: HashAggregateExec | _: ObjectHashAggregateExec | _: SortAggregateExec => true
             case _ => false
@@ -284,13 +292,6 @@ object DriverCollectExec {
     }
   }
 
-  /** The rows the driver path returns for an executed plan, whatever the
-    * files' size: None when it is not a chain the node evaluates. */
-  private[graft] def driverRows(plan: SparkPlan): Option[Array[InternalRow]] = {
-    val p = plan match { case DriverCollectExec(c) => c; case other => other }
-    chain(p).map(run(_, Int.MaxValue, p.output)._1)
-  }
-
   /** The scan's files as the `FilePartition`s Spark's scan builds for them. */
   private def filePartitions(scan: FileSourceScanExec): Seq[FilePartition] = {
     val s = scan.relation.sparkSession
@@ -304,7 +305,7 @@ object DriverCollectExec {
 
   /** Read the chain's files on the driver and apply its operators, keeping
     * at most `n` rows, as UnsafeRows of `output`; with the bytes read. */
-  private def run(c: Chain, n: Int, output: Seq[Attribute]): (Array[InternalRow], Long) = {
+  private[plans] def run(c: Chain, n: Int, output: Seq[Attribute]): (Array[InternalRow], Long) = {
     val parts = filePartitions(c.scan)
     val read = reader(c.scan)
     val opened = mutable.ArrayBuffer.empty[Iterator[InternalRow]]

@@ -170,16 +170,30 @@ class DriverCollectSpec extends SparkTestBase {
     if (ordered) out else out.sortBy(_.mkString("\u0001"))
   }
 
-  /** Equal, or equal with every double within a relative `tol`. */
+  /** Equal value for value, doubles by `java.lang.Double.compare`; with
+    * `tol > 0`, two finite doubles that are not both zero may also differ
+    * by a relative `tol`. NaN, the infinities and the sign of zero always
+    * compare exactly. */
   private def same(a: Seq[Seq[Any]], b: Seq[Seq[Any]], tol: Double): Boolean =
     a.size == b.size && a.zip(b).forall { case (x, y) =>
       x.size == y.size && x.zip(y).forall {
         case (u: Double, v: Double) =>
-          u.equals(v) || (u.isNaN && v.isNaN) ||
-            math.abs(u - v) <= tol * math.max(math.abs(u), math.abs(v))
+          java.lang.Double.compare(u, v) == 0 ||
+            (tol > 0 && java.lang.Double.isFinite(u) && java.lang.Double.isFinite(v) &&
+              !(u == 0 && v == 0) &&
+              math.abs(u - v) <= tol * math.max(math.abs(u), math.abs(v)))
         case (u, v) => u == v
       }
     }
+
+  /** How the ScalaCheck property compares a statement's rows. */
+  private sealed trait Order
+  /** Project/Filter/LIMIT: in the order the plan reads the rows. */
+  private case object Read extends Order
+  /** An ORDER BY with a total tie-break. */
+  private case object Total extends Order
+  /** GROUP BY output, which has no defined order. */
+  private case object Grouped extends Order
 
   private val agg = "SELECT source, COUNT(*) AS n, SUM(n_chars) AS total_chars, " +
     "AVG(n_chars) AS avg_chars FROM documents WHERE lang = 'en' AND n_chars > 100 " +
@@ -354,48 +368,45 @@ class DriverCollectSpec extends SparkTestBase {
         val w = spark.createDataFrame(rows.asJava, schema).repartition(files).write
         (if (partitioned) w.partitionBy("p") else w).parquet(dir + "/t")
         spark.read.parquet(dir + "/t").createOrReplaceTempView("dc_t")
-        // (statement, rows in a total order)
         val statements = Seq(
-          s"SELECT * FROM dc_t WHERE k = $k0" -> false, // an int literal against a bigint column
-          "SELECT k, d, s FROM dc_t WHERE k IS NULL" -> false,
-          "SELECT k, d FROM dc_t WHERE d = 0.0" -> false,
-          "SELECT k, d FROM dc_t WHERE isnan(d) OR d = double('Infinity')" -> false,
-          "SELECT k, m * 2 AS m2, m, upper(s) AS u FROM dc_t WHERE m > 0" -> false,
-          s"SELECT s, dt, ts FROM dc_t WHERE dt >= DATE'1990-01-01' LIMIT $lim" -> false,
-          s"SELECT * FROM dc_t LIMIT $lim" -> false,
-          s"SELECT id, k FROM dc_t LIMIT $lim OFFSET 2" -> false,
-          "SELECT k, simhash64(split(s, ' ')) AS h FROM dc_t WHERE s IS NOT NULL" -> false,
-          "SELECT to_json(struct(*)) AS j FROM dc_t WHERE p = 1" -> false,
-          s"SELECT k, p FROM dc_t WHERE p >= 1 AND k > $k0 LIMIT 2" -> false,
+          s"SELECT * FROM dc_t WHERE k = $k0" -> Read, // an int literal against a bigint column
+          "SELECT k, d, s FROM dc_t WHERE k IS NULL" -> Read,
+          "SELECT k, d FROM dc_t WHERE d = 0.0" -> Read,
+          "SELECT k, d FROM dc_t WHERE isnan(d) OR d = double('Infinity')" -> Read,
+          "SELECT k, m * 2 AS m2, m, upper(s) AS u FROM dc_t WHERE m > 0" -> Read,
+          s"SELECT s, dt, ts FROM dc_t WHERE dt >= DATE'1990-01-01' LIMIT $lim" -> Read,
+          s"SELECT * FROM dc_t LIMIT $lim" -> Read,
+          s"SELECT id, k FROM dc_t LIMIT $lim OFFSET 2" -> Read,
+          "SELECT k, simhash64(split(s, ' ')) AS h FROM dc_t WHERE s IS NOT NULL" -> Read,
+          "SELECT to_json(struct(*)) AS j FROM dc_t WHERE p = 1" -> Read,
+          s"SELECT k, p FROM dc_t WHERE p >= 1 AND k > $k0 LIMIT 2" -> Read,
           // aggregates: NULL, NaN and ±0.0 keys; decimals; an empty global
           "SELECT k, COUNT(*) AS n, SUM(d) AS sd, AVG(m) AS am, MIN(s) AS mn, MAX(dt) AS mx, " +
-            "STDDEV_SAMP(d) AS sdv, SUM(m) AS sm FROM dc_t GROUP BY k" -> false,
-          "SELECT d, COUNT(*) AS n, MAX(id) AS mi FROM dc_t GROUP BY d" -> false,
-          s"SELECT p, SUM(m) AS sm, COUNT(s) AS cs FROM dc_t WHERE k > $k0 GROUP BY p" -> false,
+            "STDDEV_SAMP(d) AS sdv, SUM(m) AS sm FROM dc_t GROUP BY k" -> Grouped,
+          "SELECT d, COUNT(*) AS n, MAX(id) AS mi FROM dc_t GROUP BY d" -> Grouped,
+          s"SELECT p, SUM(m) AS sm, COUNT(s) AS cs FROM dc_t WHERE k > $k0 GROUP BY p" -> Grouped,
           "SELECT COUNT(*) AS n, SUM(k) AS sk, MAX(d) AS md, AVG(m) AS am FROM dc_t " +
-            "WHERE k > 100" -> false,
-          "SELECT COUNT(*) AS n, SUM(d) AS sd, MIN(ts) AS mt FROM dc_t" -> false,
+            "WHERE k > 100" -> Grouped,
+          "SELECT COUNT(*) AS n, SUM(d) AS sd, MIN(ts) AS mt FROM dc_t" -> Grouped,
           // an object-hash and a sort aggregate
           "SELECT k, array_sort(collect_list(s)) AS l, percentile(id, 0.5) AS pm " +
-            "FROM dc_t GROUP BY k" -> false,
-          "SELECT k, max_by(s, id) AS ms FROM dc_t GROUP BY k" -> false,
+            "FROM dc_t GROUP BY k" -> Grouped,
+          "SELECT k, max_by(s, id) AS ms FROM dc_t GROUP BY k" -> Grouped,
           // sorts, top-k with a total tie-break, LIMIT and OFFSET
-          "SELECT id, s, d FROM dc_t WHERE p >= 1 ORDER BY s ASC NULLS LAST, d DESC NULLS FIRST, id" -> true,
-          s"SELECT k, d, id FROM dc_t ORDER BY k DESC NULLS LAST, id LIMIT $lim" -> true,
-          s"SELECT k, d, id FROM dc_t ORDER BY d NULLS FIRST, id DESC LIMIT 4 OFFSET $lim" -> true,
+          "SELECT id, s, d FROM dc_t WHERE p >= 1 ORDER BY s ASC NULLS LAST, d DESC NULLS FIRST, id" -> Total,
+          s"SELECT k, d, id FROM dc_t ORDER BY k DESC NULLS LAST, id LIMIT $lim" -> Total,
+          s"SELECT k, d, id FROM dc_t ORDER BY d NULLS FIRST, id DESC LIMIT 4 OFFSET $lim" -> Total,
           "SELECT s, COUNT(*) AS n, SUM(k) AS sk FROM dc_t GROUP BY s " +
-            "ORDER BY n DESC, s NULLS FIRST LIMIT 3" -> true,
-          "SELECT k, SUM(m) AS sm FROM dc_t GROUP BY k ORDER BY k DESC NULLS FIRST" -> true,
+            "ORDER BY n DESC, s NULLS FIRST LIMIT 3" -> Total,
+          "SELECT k, SUM(m) AS sm FROM dc_t GROUP BY k ORDER BY k DESC NULLS FIRST" -> Total,
           // the server's shape over an aggregate
           "SELECT to_json(struct(*)) AS j FROM (SELECT k, SUM(m) AS sm, COUNT(*) AS n " +
-            "FROM dc_t GROUP BY k) LIMIT 10000" -> false)
+            "FROM dc_t GROUP BY k) LIMIT 10000" -> Grouped)
         // the driver path; Spark's own plan (the root's child) under the
         // same conf; and Spark's path forced by the budget. Spark's side
         // runs without parquet filter pushdown, whose dictionary filter
         // drops -0.0 rows from `d = 0.0` (see the spec above); the driver
-        // path reads without pushed filters. Float sums over more than one
-        // file may differ in the last bits with the order partials merge.
-        val tol = if (files > 1) 1e-12 else 0.0
+        // path reads without pushed filters.
         val dfs = statements.map { case (q, _) => spark.sql(q) }
         val (driver, jobs) = jobsDuring(dfs.map(df => df.collect().toSeq))
         val child = scopedConf(noPushdown)(dfs.map { df =>
@@ -409,17 +420,29 @@ class DriverCollectSpec extends SparkTestBase {
         val forced = scopedConf(sparkPath, noPushdown)(statements.map { case (q, _) =>
           spark.sql(q).collect().toSeq })
         val diffs = statements.indices.flatMap { i =>
-          val (q, ordered) = statements(i)
-          val d = canon(dfs(i), driver(i), ordered)
-          // a LIMIT without ORDER BY keeps whichever rows come first: the
-          // child packs the files as the driver does, but Spark's path under
-          // a budget that splits them differently is held to the count
-          val limited = q.contains("LIMIT") && !ordered
-          val childSame = same(d, canon(dfs(i), child(i), ordered), tol)
-          val forcedSame = if (limited) forced(i).size == driver(i).size
-            else same(d, canon(dfs(i), forced(i), ordered), tol)
-          (if (!childSame) Seq(s"$q: driver $d != plan ${child(i)}") else Nil) ++
-            (if (!forcedSame) Seq(s"$q: driver $d != forced ${forced(i)}") else Nil)
+          val (q, order) = statements(i)
+          def rows(of: Seq[Row], ordered: Boolean) = canon(dfs(i), of, ordered)
+          val (childSame, forcedSame) = order match {
+            // the child packs the files as the driver does; Spark's path
+            // under a budget that splits them differently returns the
+            // same rows, and under a LIMIT whichever come first
+            case Read =>
+              (same(rows(driver(i), true), rows(child(i), true), 0.0),
+                if (q.contains("LIMIT")) forced(i).size == driver(i).size
+                else same(rows(driver(i), false), rows(forced(i), false), 0.0))
+            case Total =>
+              (same(rows(driver(i), true), rows(child(i), true), 0.0),
+                same(rows(driver(i), true), rows(forced(i), true), 0.0))
+            // Spark's exchange orders groups by hash; float sums over more
+            // than one file may differ in the last bits with the order
+            // partials merge
+            case Grouped =>
+              val tol = if (files > 1) 1e-12 else 0.0
+              (same(rows(driver(i), false), rows(child(i), false), tol),
+                same(rows(driver(i), false), rows(forced(i), false), tol))
+          }
+          (if (!childSame) Seq(s"$q: driver ${driver(i)} != plan ${child(i)}") else Nil) ++
+            (if (!forcedSame) Seq(s"$q: driver ${driver(i)} != forced ${forced(i)}") else Nil)
         }
         (jobs.isEmpty :| s"driver path ran jobs: $jobs") &&
           (diffs.isEmpty :| diffs.mkString("; "))
